@@ -30,10 +30,12 @@ from . import serving
 
 
 def create_app(movies: Any):
-    """App factory: ``movies`` is the raw movies DataFrame or a
-    :class:`~.operators.movierec.MovieIndex` (production: build the index
-    once, pass it here, every request probes it). ``None`` models the
-    reference's lost-backend state."""
+    """App factory: ``movies`` is a loaded
+    :class:`~.operators.movierec.MovieIndex` (production: publish the
+    index offline, ``load_movie_index`` it once, pass it here; every
+    request is answered from process memory without a Spark job) or the
+    raw movies DataFrame (each request plans Spark frames). ``None``
+    models the reference's lost-backend state."""
     from flask import Flask, jsonify, request
 
     app = Flask("movie_api")

@@ -271,6 +271,8 @@ def ann_factor_topk(
     samp_rows = (
         itf.orderBy("id").limit(int(train_sample)).select("features").collect()
     )
+    if not samp_rows:
+        raise ValueError("ann_factor_topk: itemFactors is empty, no item to index")
     samp = np.array([list(r["features"]) for r in samp_rows], dtype=np.float64)
     kcodes = min(kcodes, max(2, len(samp)))
 

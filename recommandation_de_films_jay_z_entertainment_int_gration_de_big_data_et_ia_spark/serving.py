@@ -1,14 +1,16 @@
 """Serving-edge adapter: the reference's REST endpoints as pure
-request→DataFrame→JSON functions.
+request→(status, JSON) functions.
 
 Each function mirrors one Flask route of the reference API
 (``/root/reference/src/api.py``) — same request validation, same branch
 structure (400 / 404 / disambiguation / pagination clamps), same response
-JSON shape — but composes the engine's DataFrame operators
-(:mod:`.operators.movierec`) instead of Elasticsearch query DSL, and
-collects only the final top-k rows (the one legitimate driver
-materialization, SURVEY §3.3). A web framework would wrap these 1:1;
-none is imported here, so the engine core stays framework-free.
+JSON shape — but calls the engine's :mod:`.operators.movierec` flows
+instead of Elasticsearch query DSL. Against a loaded
+:class:`~.operators.movierec.MovieIndex` (production) every request is
+answered from process memory without a Spark job; against the raw movies
+DataFrame (the oracle path) each request plans and collects Spark
+frames. A web framework would wrap these 1:1; none is imported here, so
+the engine core stays framework-free.
 
 Endpoint ↔ reference map:
 
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators import movierec
@@ -37,18 +39,22 @@ from .operators.movierec import MovieIndex
 VERSION = "1.0.0"
 Response = tuple[int, dict[str, Any]]
 
-# Every endpoint accepts either the raw movies DataFrame (ad-hoc path)
-# or a prebuilt movierec.MovieIndex (the production serving path: each
-# request probes the persisted index instead of re-tokenizing the
-# corpus; responses are identical — tests/test_serving.py runs the
-# golden answers against BOTH inputs).
+# Every endpoint accepts either the raw movies DataFrame (the oracle
+# path) or a loaded movierec.MovieIndex (the production path, answered
+# from memory); responses are identical —
+# tests/test_serving_differential.py compares them request by request.
 
 
-def _doc(row: Row) -> dict[str, Any]:
-    """Row → ES ``_source`` document, with the reference ingest's
-    coercions: genres None→[] (elasticsearch_ingest.py:115-124),
+def _rows(hits) -> list:
+    """An index answer is already a list of documents; a frame is collected."""
+    return hits if isinstance(hits, list) else hits.collect()
+
+
+def _doc(row) -> dict[str, Any]:
+    """Row or document → ES ``_source`` document, with the reference
+    ingest's coercions: genres None→[] (elasticsearch_ingest.py:115-124),
     release_date falsy→None (:130)."""
-    d = row.asDict()
+    d = row if isinstance(row, dict) else row.asDict()
     return {
         "movieId": int(d["movieId"]),
         "title": str(d["title"]),
@@ -72,11 +78,11 @@ def recommend_endpoint(movies: DataFrame | MovieIndex, body: dict | None) -> Res
     status, hits = movierec.lookup_title(movies, movie_title, size=5)
     if status == "none":
         return 404, {"error": "Movie not found"}
-    rows = hits.collect()
+    rows = _rows(hits)
     if status == "ambiguous":
         return 200, {
             "message": "Multiple movies found, please select one",
-            "movies": [{"movieId": int(r.movieId), "title": r.title} for r in rows],
+            "movies": [{"movieId": int(r["movieId"]), "title": r["title"]} for r in rows],
         }
     movie = _doc(rows[0])
     if not movie["genres"]:
@@ -89,7 +95,7 @@ def recommend_endpoint(movies: DataFrame | MovieIndex, body: dict | None) -> Res
         )
     return 200, {
         "movie": movie,
-        "recommendations": [_doc(r) for r in recs.collect()],
+        "recommendations": [_doc(r) for r in _rows(recs)],
     }
 
 
@@ -102,12 +108,15 @@ def movie_endpoint(movies: DataFrame | MovieIndex, movie_id) -> Response:
     except (TypeError, ValueError) as e:
         return 500, {"error": f"Error retrieving movie: {e}"}
     frame = movierec.movie_frame(movies)
-    rows = (
-        frame.filter(frame["movieId"] == mid)
-        .select("movieId", "title", "release_date", "genres")
-        .limit(1)
-        .collect()
-    )
+    if isinstance(movies, MovieIndex):
+        rows = [frame[mid]] if mid in frame else []
+    else:
+        rows = (
+            frame.filter(frame["movieId"] == mid)
+            .select("movieId", "title", "release_date", "genres")
+            .limit(1)
+            .collect()
+        )
     if not rows:
         return 404, {"error": "Movie not found"}
     return 200, _doc(rows[0])
@@ -119,7 +128,8 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
     exactly: page < 1 → 1; size outside 1..100 → reset to the DEFAULT 10
     (not clamped to the bound); non-integer page/size hits the int() in
     the try block → the 500 branch. ``total`` is the full hit count
-    (hits.total.value), independent of the page window."""
+    (hits.total.value), independent of the page window: the ranked hits
+    are all in hand, so it is their length."""
     query = args.get("q")
     if not query:
         return 400, {"error": "Query parameter 'q' is required"}
@@ -130,50 +140,32 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
             page = 1
         if size < 1 or size > 100:
             size = 10
-
-        # one multi_match evaluation AND one Spark action serve both the
-        # page and the total (the ES reference gets hits + total from a
-        # single query too): the full hit count rides the page rows as a
-        # global count window instead of a separate count() job — at
-        # serving-request latency the per-job round-trip dominates, so
-        # halving the action count matters more than the single-partition
-        # exchange the window costs (the hit frame is catalog-bounded).
-        from pyspark.sql import Window
-
         hits = movierec.search_hits(movies, query)
-        page_rows = (
-            hits.withColumn(
-                "__total", F.count(F.lit(1)).over(Window.partitionBy(F.lit(1)))
-            )
-            .orderBy(F.desc("score"), F.asc("movieId"))
-            .offset((page - 1) * size)
-            .limit(size)
-            .select("movieId", "title", "release_date", "genres", "__total")
-            .collect()
-        )
-        if page_rows:
-            total = int(page_rows[0]["__total"])
-        else:
-            # page beyond the last hit (or zero hits): the window rode
-            # rows that don't exist — one count() fallback, same frame
-            total = hits.count()
+        if not isinstance(hits, list):
+            hits = hits.orderBy(F.desc("score"), F.asc("movieId")).select(
+                "movieId", "title", "release_date", "genres"
+            ).collect()
+        lo = (page - 1) * size
         return 200, {
-            "movies": [_doc(r) for r in page_rows],
+            "movies": [_doc(r) for r in hits[lo:lo + size]],
             "page": page,
             "size": size,
-            "total": total,
+            "total": len(hits),
         }
     except Exception as e:  # noqa: BLE001 — mirrors api.py:236-238
         return 500, {"error": f"Error during search: {e}"}
 
 
 def health_endpoint(movies: DataFrame | MovieIndex | None) -> Response:
-    """``GET /health`` (api.py:240-249). The backend liveness probe is a
-    1-row query against the movie frame (the engine's analog of
-    ``es.ping()``); the response keeps the reference's keys with
-    ``engine`` standing in for ``elasticsearch``."""
+    """``GET /health`` (api.py:240-249). A loaded index is live by
+    construction; for the movies frame the liveness probe is a 1-row
+    query (the engine's analog of ``es.ping()``). The response keeps the
+    reference's keys with ``engine`` standing in for ``elasticsearch``."""
     try:
-        ok = movies is not None and movierec.movie_frame(movies).limit(1).count() >= 0
+        ok = movies is not None and (
+            isinstance(movies, MovieIndex)
+            or movierec.movie_frame(movies).limit(1).count() >= 0
+        )
     except Exception:  # noqa: BLE001
         ok = False
     backend = "OK" if ok else "NOT CONNECTED"

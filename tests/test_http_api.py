@@ -3,8 +3,9 @@
 A werkzeug server hosts the Flask transport (http_api.create_app) on an
 ephemeral localhost port; plain urllib requests exercise every route and
 the reference's branch statuses (200 / 400 / 404 / disambiguation /
-503-unavailable / unknown-endpoint), against the index-backed serving
-path. Skips cleanly where flask or the reference data are absent."""
+503-unavailable / unknown-endpoint), against the serving index
+published and loaded back into memory. Skips cleanly where flask or the
+reference data are absent."""
 
 from __future__ import annotations
 
@@ -33,12 +34,13 @@ pytestmark = pytest.mark.skipif(
 
 
 @pytest.fixture(scope="module")
-def base_url(spark):
+def base_url(spark, tmp_path_factory):
     from werkzeug.serving import make_server
 
-    frame = pipelines.build_movie_index(spark, f"{DATA}/u.item").cache()
-    built = movierec.build_movie_index_tables(frame)
-    idx = movierec.MovieIndex(docs=built.docs.cache(), postings=built.postings.cache())
+    frame = pipelines.build_movie_index(spark, f"{DATA}/u.item")
+    index_dir = str(tmp_path_factory.mktemp("movieindex"))
+    movierec.write_movie_index(movierec.build_movie_index_tables(frame), index_dir)
+    idx = movierec.load_movie_index(spark, index_dir)
     server = make_server("127.0.0.1", 0, http_api.create_app(idx))
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()

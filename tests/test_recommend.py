@@ -232,6 +232,15 @@ def test_ann_topk_exact_when_budget_covers_catalog(spark, sf_dir):
     assert overlap / len(exact) >= 0.999
 
 
+def test_ann_topk_empty_item_factors_is_explicit(spark):
+    """No item factors: an explicit ValueError before codebook training,
+    not an obscure numpy failure inside it."""
+    uf = spark.createDataFrame([(1, [0.5] * 8)], "id int, features array<float>")
+    itf = spark.createDataFrame([], "id int, features array<float>")
+    with pytest.raises(ValueError, match="itemFactors is empty"):
+        REC.ann_factor_topk(uf, itf, rank=8, k=K)
+
+
 @pytest.mark.slow
 def test_ann_topk_recall_at_sf01(spark):
     """The pinned q402 recall contract: recall@5 vs exact

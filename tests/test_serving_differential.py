@@ -1,0 +1,345 @@
+"""The resident serving index against the raw-DataFrame oracle, on a
+generated catalog that needs no reference data.
+
+A seeded 2,000-movie catalog in the MovieLens u.item format
+(``perfbench/gen.py``) is published the production way — build → write
+→ load — and every endpoint's ``(status, JSON)`` on the loaded
+``MovieIndex`` must equal the raw movies frame's, for the benchmark's
+request stream and for the edge cases below. The loaded index must also
+answer without Spark jobs, stay a point-in-time snapshot of the published
+directory, and expand fuzzy terms with ``_lev_le`` exactly as Spark's
+``levenshtein`` would.
+"""
+
+from __future__ import annotations
+
+import json
+import sys
+import threading
+from collections import Counter
+
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from perfbench import checks, gen
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import (
+    pipelines,
+    serving,
+)
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
+    movierec,
+)
+
+SEED = 7
+N_MOVIES = 2_000
+N_REQUESTS = 40  # two blocks of the benchmark's 20-request mix
+
+
+@pytest.fixture(scope="module")
+def catalog(tmp_path_factory):
+    out = tmp_path_factory.mktemp("ml")
+    truth = gen.write_movielens(str(out), SEED, N_MOVIES)
+    return str(out / "u.item"), truth
+
+
+@pytest.fixture(scope="module")
+def raw(spark, catalog):
+    return pipelines.build_movie_index(spark, catalog[0]).cache()
+
+
+@pytest.fixture(scope="module")
+def index(spark, raw, tmp_path_factory):
+    index_dir = str(tmp_path_factory.mktemp("index"))
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), index_dir)
+    return movierec.load_movie_index(spark, index_dir)
+
+
+@pytest.fixture(scope="module")
+def words(catalog):
+    """Title words of the catalog, most frequent first."""
+    counts = Counter(
+        w for _m, title, _d, _g in catalog[1]["movies"] for w in gen.norm_title(title).split()
+        if not w.isdigit()
+    )
+    return [w for w, _n in counts.most_common()]
+
+
+def _call(movies, ep: str, arg):
+    if ep == "search":
+        resp = serving.search_endpoint(movies, arg)
+    elif ep == "recommend":
+        resp = serving.recommend_endpoint(movies, arg)
+    elif ep == "movie":
+        resp = serving.movie_endpoint(movies, arg)
+    else:
+        resp = serving.health_endpoint(movies)
+    return resp[0], json.loads(json.dumps(resp[1]))
+
+
+def _arg(req: tuple):
+    ep, _method, path, args, body, _exp = req
+    return {"search": args, "recommend": body, "movie": path.rsplit("/", 1)[1]}.get(ep)
+
+
+def test_stream_replies_equal_raw_path(raw, index, catalog):
+    """Every request of the benchmark's stream: the loaded index answers
+    exactly as the raw frame does, and as the generator's ground truth
+    says."""
+    stream, _props = gen.serve_requests(catalog[1], SEED, N_REQUESTS)
+    kinds = Counter(req[0] for req in stream)
+    assert set(kinds) == {"search", "recommend", "movie", "health"}
+    for req in stream:
+        got = _call(index, req[0], _arg(req))
+        assert got == _call(raw, req[0], _arg(req)), req
+        assert checks.serve_response(req, *got, catalog[1]["movies"]) == [], req
+
+
+def _genreless_unique(index, catalog) -> list[str]:
+    return [
+        title for _m, title, _d, genres in catalog[1]["movies"]
+        if not genres and movierec.lookup_title(index, title)[0] == "unique"
+    ]
+
+
+def test_edge_cases_equal_raw_path(raw, index, catalog, words):
+    common, other = words[0], words[1]
+    title = catalog[1]["movies"][0][1]
+    requests = [
+        ("search", {"q": ""}),
+        ("search", {}),
+        ("search", {"q": "   "}),
+        ("search", {"q": common, "page": "999"}),  # past the last hit
+        ("search", {"q": common, "size": "0"}),
+        ("search", {"q": common, "size": "200"}),
+        ("search", {"q": common, "size": "x"}),
+        ("search", {"q": common, "page": "y"}),
+        ("search", {"q": common, "page": "-3", "size": "3"}),
+        ("search", {"q": f"{common} {common}", "size": "100"}),  # repeated term
+        ("search", {"q": f"{common.upper()}, {other}!"}),  # case and punctuation
+        ("search", {"q": common[:-1] + "q"}),  # one-edit typo
+        ("search", {"q": "drama scifi"}),  # genre terms
+        ("search", {"q": "amélie 漢字 😀"}),  # non-ASCII, no hit
+        ("search", {"q": "ab"}),  # short term: fuzziness 0
+        ("movie", "abc"),
+        ("movie", "1.5"),
+        ("movie", "999999"),
+        ("movie", "0"),
+        ("movie", " 3 "),
+        ("recommend", None),
+        ("recommend", {}),
+        ("recommend", {"title": ""}),
+        ("recommend", {"title": "Zzqx nothing like it"}),
+        ("recommend", {"title": common}),  # ambiguous
+        ("recommend", {"title": title}),
+        ("health", None),
+    ]
+    genreless = _genreless_unique(index, catalog)
+    assert genreless, "catalog assumption: a genre-less movie with a unique title"
+    requests += [("recommend", {"title": t}) for t in genreless[:3]]
+    for ep, arg in requests:
+        assert _call(index, ep, arg) == _call(raw, ep, arg), (ep, arg)
+    status, body = _call(index, "recommend", {"title": genreless[0]})
+    assert status == 200 and body["movie"]["genres"] == [] and body["recommendations"]
+    status, body = _call(index, "recommend", {"title": common})
+    assert status == 200 and len(body["movies"]) > 1
+    status, body = _call(index, "search", {"q": common, "page": "999"})
+    assert status == 200 and body["movies"] == [] and body["total"] > 0
+
+
+def test_scores_equal_raw_path(raw, index, words, catalog):
+    """Beyond the page: every hit and its score, for search and both
+    recommendation paths, including a title with repeated long words."""
+    for q in (words[0], f"{words[1]} {words[2][:-1]}x drama", f"{words[3]} {words[3]}"):
+        want = [
+            (r.movieId, r.score)
+            for r in movierec.search_hits(raw, q)
+            .orderBy(F.desc("score"), F.asc("movieId")).collect()
+        ]
+        got = [(d["movieId"], d["score"]) for d in movierec.search_hits(index, q)]
+        assert got == want and got, q
+    long = [w for w in words if len(w) >= 4]
+    for title in (f"{long[0]} {long[0]} {long[1]} (1950)", f"{long[2].title()} ({long[2]})"):
+        want = [(r.movieId, r.score)
+                for r in movierec.recommend_by_title_keywords(raw, 1, title, k=20).collect()]
+        got = [(d["movieId"], d["score"])
+               for d in movierec.recommend_by_title_keywords(index, 1, title, k=20)]
+        assert got == want and got, title
+    genres = ["Comedy", "Drama", "Drama", "Western"]
+    want = [(r.movieId, r.score)
+            for r in movierec.recommend_by_genre_overlap(raw, 2, genres, k=30).collect()]
+    got = [(d["movieId"], d["score"])
+           for d in movierec.recommend_by_genre_overlap(index, 2, genres, k=30)]
+    assert got == want and got
+
+
+def test_null_fields_equal_raw_path(spark, tmp_path):
+    """Null titles, genres and release dates answer as on the frame path."""
+    raw = spark.createDataFrame(
+        [
+            (1, "Alpha Beta (1990)", "01-Jan-1990", ["Drama"]),
+            (2, None, None, None),
+            (3, "Alpha (1991)", "", []),
+            (4, "Beta Beta Gamma (1992)", None, ["Comedy", "Drama"]),
+        ],
+        "movieId int, title string, release_date string, genres array<string>",
+    )
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path))
+    index = movierec.load_movie_index(spark, str(tmp_path))
+    for ep, arg in [
+        ("search", {"q": "alpha"}),
+        ("search", {"q": "drama"}),
+        ("movie", "2"),
+        ("movie", "3"),
+        ("recommend", {"title": "Alpha Beta"}),
+        ("recommend", {"title": "Alpha (1991)"}),
+        ("recommend", {"title": "beta"}),
+    ]:
+        assert _call(index, ep, arg) == _call(raw, ep, arg), (ep, arg)
+
+
+def _jobs(spark, label: str, fn) -> int:
+    """Spark jobs ``fn`` starts, counted by job group."""
+    sc = spark.sparkContext
+    gid = f"serving-jobs-{label}"
+    sc.setJobGroup(gid, label)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_loaded_index_runs_no_spark_jobs(spark, raw, index, catalog, words):
+    """Every endpoint on a loaded index is answered from process memory.
+    The raw frame, run through the same probe, does start jobs, so the
+    probe can see them."""
+    genreless = _genreless_unique(index, catalog)[0]
+    requests = {
+        "search": ("search", {"q": f"{words[0]} {words[1][:-1]}x", "page": "2"}),
+        "search_miss": ("search", {"q": "qxzzqx"}),
+        "recommend": ("recommend", {"title": catalog[1]["movies"][0][1]}),
+        "recommend_ambiguous": ("recommend", {"title": words[0]}),
+        "recommend_keywords": ("recommend", {"title": genreless}),
+        "recommend_unknown": ("recommend", {"title": "Zzqx nothing"}),
+        "movie": ("movie", "5"),
+        "movie_unknown": ("movie", "999999"),
+        "health": ("health", None),
+    }
+    for label, (ep, arg) in requests.items():
+        assert _jobs(spark, label, lambda: _call(index, ep, arg)) == 0, label
+    assert _jobs(spark, "raw-search", lambda: _call(raw, "search", {"q": words[0]})) > 0
+
+
+def test_concurrent_requests_share_the_index(index, catalog):
+    """Request threads share one loaded index without locks: with more
+    threads than cores and a short switch interval, every reply equals the
+    single-threaded one."""
+    stream, _props = gen.serve_requests(catalog[1], SEED + 1, 40)
+    want = [_call(index, req[0], _arg(req)) for req in stream]
+    bad: list = []
+
+    def client(offset: int):
+        for i in range(len(stream)):
+            j = (i + offset) % len(stream)
+            if _call(index, stream[j][0], _arg(stream[j])) != want[j]:
+                bad.append(stream[j])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client, args=(5 * k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not bad, bad[:3]
+
+
+def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
+    """A loaded index keeps answering from its load-time snapshot while the
+    index directory is appended to — the paginated-session guarantee
+    (page N and N+1 see the same corpus) — and its ``docs`` frame reads
+    exactly the files the load read. A fresh load sees the append."""
+    tables = movierec.build_movie_index_tables(raw)
+    idx_dir = str(tmp_path / "movieindex")
+    movierec.write_movie_index(tables, idx_dir)
+
+    served = movierec.load_movie_index(spark, idx_dir)
+    q = words[0]
+    status, page1 = serving.search_endpoint(served, {"q": q, "page": "1", "size": "5"})
+    assert status == 200
+    total0 = page1["total"]
+    assert total0 > 10
+
+    # append 20 matching docs, with their postings, under shifted ids
+    ids = [d["movieId"] for d in movierec.search_hits(served, q)[:20]]
+    bump = F.col("movieId") + 100000
+    for name, frame in (("docs", tables.docs), ("postings", tables.postings)):
+        frame.filter(F.col("movieId").isin(ids)).withColumn("movieId", bump).write.mode(
+            "append").parquet(f"{idx_dir}/{name}.parquet")
+
+    status, page2 = serving.search_endpoint(served, {"q": q, "page": "2", "size": "5"})
+    assert status == 200
+    assert page2["total"] == total0, "the loaded index saw the append"
+    assert all(m["movieId"] < 100000 for m in page2["movies"])
+    assert {m["movieId"] for m in page1["movies"]}.isdisjoint(
+        {m["movieId"] for m in page2["movies"]})
+    assert served.docs.count() == N_MOVIES
+
+    fresh = movierec.load_movie_index(spark, idx_dir)
+    assert len(fresh.by_id) == fresh.docs.count() == N_MOVIES + 20
+    assert serving.search_endpoint(fresh, {"q": q})[1]["total"] == total0 + 20
+
+
+# Small alphabets make near strings likely; the non-ASCII letters cover
+# two-byte, three-byte and four-byte (non-BMP) UTF-8 code points.
+_WORD = st.text(alphabet="abcé漢😀", max_size=8)
+
+
+@st.composite
+def _near_pair(draw):
+    """A word and a copy with up to three random single-character edits."""
+    a = draw(_WORD)
+    b = list(a)
+    for _ in range(draw(st.integers(0, 3))):
+        i = draw(st.integers(0, len(b)))
+        c = draw(st.sampled_from("abé漢😀"))
+        op = draw(st.sampled_from(["insert", "delete", "replace"]))
+        if op == "insert" or not b:
+            b.insert(i, c)
+        elif op == "delete":
+            del b[min(i, len(b) - 1)]
+        else:
+            b[min(i, len(b) - 1)] = c
+    return a, "".join(b)
+
+
+def test_lev_le_matches_spark_levenshtein(spark):
+    """``_lev_le(a, b, d) == (levenshtein(a, b) <= d)`` against Spark's
+    built-in, for every fuzziness band d in 0..3 — which puts each pair
+    on both sides of the length-band exit. Hypothesis draws the pairs;
+    Spark scores all of them in one job."""
+    pairs: list[tuple[str, str]] = [
+        ("", ""), ("", "a"), ("a", ""), ("", "abc"), ("ab", "ba"), ("abc", "abcd"),
+        ("abcd", "ab"), ("kitten", "sitting"), ("é", "e"), ("漢", "😀"), ("😀a", "a😀"),
+        ("amélie", "amelie"), ("naïve", "naive"),
+    ]
+
+    @settings(max_examples=400, deadline=None, database=None,
+              suppress_health_check=list(HealthCheck))
+    @given(pair=st.one_of(st.tuples(_WORD, _WORD), _near_pair()))
+    def collect(pair):
+        pairs.append(pair)
+
+    collect()
+    frame = spark.createDataFrame(pairs, "a string, b string")
+    dist = frame.select("a", "b", F.levenshtein("a", "b").alias("d")).collect()
+    assert len(dist) == len(pairs)
+    bad = [(r.a, r.b, d, r.d) for r in dist for d in range(4)
+           if movierec._lev_le(r.a, r.b, d) != (r.d <= d)]
+    assert not bad, bad[:10]

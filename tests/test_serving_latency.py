@@ -3,9 +3,9 @@ task 4): the four endpoints' cached-index (hot-serving) p95 must stay
 within generous per-endpoint bounds. The bounds are ~4x the quiet-host
 measurements — loose enough for a noisy hypervisor window, tight enough
 that the real failure mode (a per-request corpus re-tokenize or index
-rebuild, which multiplies latency ~10x) cannot pass. The per-request
-plan discipline itself is enforced structurally in
-tests/test_serving.py::test_serving_index_probe_plans."""
+rebuild, which multiplies latency ~10x) cannot pass. That a loaded index
+answers every endpoint without a Spark job is enforced structurally in
+tests/test_serving_differential.py::test_loaded_index_runs_no_spark_jobs."""
 
 from __future__ import annotations
 
