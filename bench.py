@@ -16,14 +16,6 @@ default        full catalog, N_RUNS (>=3) timed runs per query after a cold
                total so it is comparable with BENCH_r01/r02.
 --headline     only the headline subset (fast iteration loop).
 --runs N       override run count (default 3).
---cache-tables opt-in catalog-run table cache (round-9 verdict task 6):
-               persists each base-table scan MEMORY_AND_DISK on first
-               load so the 398-query catalog stops re-reading the same
-               parquet hundreds of times — the build-once-query-many
-               posture of a hot storage tier at 100 TB. Per-query
-               results are byte-identical (same rows, different scan
-               node); correctness runs never set it. Reported in the
-               json as "cache_tables" so artifacts are self-describing.
 
 Each query is executed with a noop-sink write that forces full evaluation
 without driver materialization of the payload. The streaming row
@@ -209,9 +201,6 @@ def _cpu_ref_1t() -> float:
 def main() -> None:
     args = sys.argv[1:]
     headline_only = "--headline" in args
-    cache_tables = "--cache-tables" in args
-    if cache_tables:
-        os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
     n_runs = 3
     if "--runs" in args:
         n_runs = max(2, int(args[args.index("--runs") + 1]))
@@ -375,7 +364,6 @@ def main() -> None:
         "headline_ext_total": round(sum(mins[n] for n in ext_names), 3),
         "streaming_attribution_sec": mins.get("q87_streaming_attribution"),
         "full_catalog": not headline_only,
-        "cache_tables": cache_tables,
         "full_total": round(sum(mins.values()), 3),
         "n_queries": len(mins),
         # CPU-steal instrumentation (round-8 verdict task 1): whole-bench
@@ -418,13 +406,7 @@ def main() -> None:
         # artifact below.
         "queries": {n: mins[n] for n in HEADLINE if n in mins},
         "per_query_file": (
-            "BENCH_headline_local.json"
-            if headline_only
-            else (
-                "BENCH_full_cached_local.json"
-                if cache_tables
-                else "BENCH_full_local.json"
-            )
+            "BENCH_headline_local.json" if headline_only else "BENCH_full_local.json"
         ),
     }
     # Full per-query detail goes to a side artifact, NOT stdout: the driver

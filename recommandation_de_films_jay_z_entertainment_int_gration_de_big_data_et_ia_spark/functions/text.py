@@ -153,11 +153,3 @@ def simhash_hex(tok: Column, bits: int = 16) -> Column:
     return F.concat_ws(
         "", F.transform(votes, lambda v: F.when(v > 0, F.lit("1")).otherwise(F.lit("0")))
     )
-
-
-def stopword_count(tok: Column) -> Column:
-    return F.size(F.filter(tok, lambda t: t.isin(*STOPWORDS)))
-
-
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))

@@ -1,18 +1,4 @@
 """Operator library: relational core, search, dedup, similarity,
-recommendation, multimodal. Import submodules directly for the full
-surface; the most-used entry points are re-exported here."""
-
-from .relational import (  # noqa: F401
-    anti_join,
-    collect_list_sorted,
-    histogram,
-    join_broadcast_dim,
-    null_drop,
-    one_hot_to_names,
-    paginate,
-    salted_agg,
-    semi_join,
-    topk_global,
-    topk_per_group,
-    unpivot,
-)
+recommendation, multimodal. Import the submodule that holds an operator
+(``from .operators import relational as R``); this package re-exports
+nothing."""

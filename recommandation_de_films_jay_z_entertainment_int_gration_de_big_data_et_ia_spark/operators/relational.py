@@ -18,24 +18,12 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# Projections / casts (P1–P6; reference preprocessing.py:16-20)
+# Projections (P2; reference preprocessing.py:16-20)
 # ---------------------------------------------------------------------------
 
 def project(df: DataFrame, *cols: str | Column) -> DataFrame:
     """P2 column projection — Catalyst prunes the scan to these columns."""
     return df.select(*cols)
-
-
-def rename_positional(df: DataFrame, names: Sequence[str]) -> DataFrame:
-    """P1 positional rename (reference ``toDF(*columns)``)."""
-    return df.toDF(*names)
-
-
-def cast_columns(df: DataFrame, casts: dict[str, str]) -> DataFrame:
-    """P3 explicit casts, applied in one ``select`` (single projection node)."""
-    return df.select(
-        *[F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c) for c in df.columns]
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -89,17 +77,18 @@ def unpivot(df: DataFrame, ids: Sequence[str], value_cols: Sequence[str],
     return df.selectExpr(*ids, expr)
 
 
-def one_hot_to_names(df: DataFrame, id_col: str, flag_cols: Sequence[str],
+def one_hot_to_names(df: DataFrame, flag_cols: Sequence[str],
                      out_col: str = "genres") -> DataFrame:
-    """The reference's genre rebuild (elasticsearch_ingest.py:48-67) without
-    any shuffle at all: filter+transform over an inline array of
-    (name, flag) structs — no unpivot, no groupBy, no collect_list.
+    """The reference's genre rebuild (elasticsearch_ingest.py:48-67) as a
+    per-row column: ``df`` plus ``out_col``, the names of the ``flag_cols``
+    set to ``"1"``, built by filter+transform over an inline array of
+    (name, flag) structs — no unpivot, no groupBy, no join, no shuffle.
 
     ``out_col`` is sorted, so results are deterministic (SURVEY §7.3).
     """
     entries = F.array(*[F.struct(F.lit(c).alias("name"), F.col(c).alias("flag")) for c in flag_cols])
     names = F.transform(F.filter(entries, lambda e: e["flag"] == "1"), lambda e: e["name"])
-    return df.select(id_col, F.array_sort(names).alias(out_col))
+    return df.withColumn(out_col, F.array_sort(names))
 
 
 # ---------------------------------------------------------------------------

@@ -371,7 +371,6 @@ def cross_doc_span_excise(
     text_col: str,
     n: int = 5,
     min_docs: int = 3,
-    broadcast_threshold: int | None = None,
     materialize: bool = False,
     keep_first: bool = False,
     max_excised_per_gram: int | None = None,
@@ -433,10 +432,7 @@ def cross_doc_span_excise(
     extra distinct exchange): on a boilerplate-saturated corpus (every
     doc fully templated — the sf1 replicated-corpus stress) the
     interval fold keeps per-doc work O(len + occurrences), where the
-    naive per-position covered-set reconstruction is O(len²). Set
-    ``broadcast_threshold=0`` to force a shuffle join for a
-    pathological corpus whose boilerplate set outgrows the broadcast
-    limit (the plan stays one extra shuffle, still never all-pairs).
+    naive per-position covered-set reconstruction is O(len²).
     The positional n-gram frame feeds BOTH the boilerplate aggregate
     and the coverage join — Catalyst evaluates the explode twice (the
     branches prune differently, so the exchanges are not reuse-equal);
@@ -493,9 +489,7 @@ def cross_doc_span_excise(
         # paired with materialize=True to avoid re-running the n-gram
         # explode on the probe side as well.
         boiler = boiler.localCheckpoint(eager=True)
-    if broadcast_threshold != 0:
-        boiler = F.broadcast(boiler)
-    hits = g.join(boiler, "gh")
+    hits = g.join(F.broadcast(boiler), "gh")
     if keep_first:
         hits = hits.filter(
             ~(

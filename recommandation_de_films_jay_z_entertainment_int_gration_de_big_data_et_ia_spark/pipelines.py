@@ -21,41 +21,33 @@ from .operators.relational import join_broadcast_dim, null_drop, one_hot_to_name
 from .sources.readers import GENRES_100K, read_movies, read_ratings
 
 
+_GENRE_NAMES = [g for g in GENRES_100K if g != "unknown"]
+
+
 def preprocess(spark: SparkSession, ratings_path: str, movies_path: str) -> DataFrame:
     """The reference preprocessing job (src/preprocessing.py:4-24):
     ratings ⋈ movies with both genre representations from §1.4 — the
     canonical name-array (``genres``) plus the reference's flag-array
-    artifact (``genres_flags``)."""
+    artifact (``genres_flags``). Both are per-row expressions over one
+    u.item scan, so each rating joins each u.item row of its movie once."""
     ratings = null_drop(read_ratings(spark, ratings_path))
-    movies = read_movies(spark, movies_path)
-    flag_cols = [g for g in GENRES_100K]
-    movies_sel = movies.select(
-        F.col("movieId").cast("int").alias("movieId"),
-        "title",
-        "release_date",
-        F.array(*flag_cols).alias("genres_flags"),
+    movies = one_hot_to_names(read_movies(spark, movies_path), _GENRE_NAMES).select(
+        "movieId", "title", "release_date", F.array(*GENRES_100K).alias("genres_flags"), "genres"
     )
-    names = one_hot_to_names(
-        movies, "movieId", [g for g in GENRES_100K if g != "unknown"], out_col="genres"
-    ).withColumn("movieId", F.col("movieId").cast("int"))
-    movies_full = movies_sel.join(names, "movieId")
-    return join_broadcast_dim(ratings, movies_full, on="movieId")
+    return join_broadcast_dim(ratings, movies, on="movieId")
 
 
 def build_movie_index(spark: SparkSession, movies_path: str) -> DataFrame:
     """The reference's ES ingest frame (elasticsearch_ingest.py:24-84):
     movies with genre name-arrays + num_genres — no unpivot shuffle at all
-    (single-pass array ops replace 18 filter+union branches), no collect,
-    ready for any sink. Arrays are sorted for determinism."""
-    movies = read_movies(spark, movies_path)
-    names = one_hot_to_names(
-        movies, "movieId", [g for g in GENRES_100K if g != "unknown"], out_col="genres"
+    (single-pass array ops replace 18 filter+union branches), no join, no
+    collect, ready for any sink. Arrays are sorted for determinism."""
+    movies = one_hot_to_names(read_movies(spark, movies_path), _GENRE_NAMES)
+    # a row without a movieId matches no movie: its genres stay null
+    genres = F.when(F.col("movieId").isNotNull(), F.col("genres"))
+    return movies.select(
+        "movieId", "title", "release_date", genres.alias("genres"), F.size(genres).alias("num_genres")
     )
-    base = movies.select(
-        F.col("movieId").cast("int").alias("movieId"), "title", "release_date"
-    )
-    idx = join_broadcast_dim(base, names.withColumn("movieId", F.col("movieId").cast("int")), on="movieId", how="left")
-    return idx.withColumn("num_genres", F.size("genres"))
 
 
 def train_recommendations(spark: SparkSession, processed: DataFrame, k: int = 10) -> DataFrame:

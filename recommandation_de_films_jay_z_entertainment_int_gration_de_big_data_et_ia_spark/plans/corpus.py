@@ -1099,11 +1099,6 @@ def q267_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("gram"),
     )
-    # r12: per-doc argmax as an AGGREGATE min(struct(-cnt, gram)) —
-    # field-by-field struct order IS (cnt DESC, gram ASC), so this is
-    # value-identical to the old row_number window while replacing its
-    # per-doc sort with a hash aggregate (guide §2.4: the window's
-    # exchange stays, the Sort goes).
     # r12 NEGATIVE RESULT (measured and reverted): replacing this window
     # with a per-doc min(struct(-cnt, gram)) aggregate does NOT remove
     # the sort — struct min is not hash-aggregatable, so it compiles to
@@ -1142,11 +1137,6 @@ def q267_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast") — AQE can promote to broadcast from accurate runtime
     # sizes but cannot demote an initial-plan broadcast. Never
     # broadcast a frame that grows with the corpus.
-    # r12: the per-position dedup rides the per-doc collect_set (one
-    # exchange) instead of distinct + join-back + groupBy (two exchanges
-    # and a per-POSITION join row volume); dup_chars folds against the
-    # doc's own tk array in the final join — one row per doc crosses
-    # the join instead of one per covered position.
     # r12 NEGATIVE RESULT (measured and reverted): folding the
     # per-position dedup into a per-doc collect_set + an interpreted
     # aggregate() over the cover set measured clearly SLOWER in

@@ -10,24 +10,9 @@ DataFrames so Catalyst can push filters/projections into the scan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 # MovieLens-100k shapes from the reference (kept as engine-supported sources;
 # reference: src/preprocessing.py:6-16, src/elasticsearch_ingest.py:15-27).
@@ -75,26 +60,34 @@ def read_movies(spark: SparkSession, path: str) -> DataFrame:
     return read_delimited(spark, path, MOVIES_SCHEMA, sep="|")
 
 
-def _ntz_as_utc(col_name: str) -> F.Column:
-    """TIMESTAMP_NTZ -> TIMESTAMP_LTZ anchoring the naive wall-clock to
-    UTC, independent of the session timezone (NTZ-minus-NTZ is pure
-    wall-clock arithmetic; ``timestamp_micros`` is defined from epoch)."""
-    micros = F.expr(
-        f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', {col_name})"
-    )
-    return F.timestamp_micros(micros)
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize an events frame's ``ts`` to a UTC-anchored TIMESTAMP_LTZ
+    regardless of how the file was written. Batch (``load_table``) and
+    streaming (``streaming.windows``) readers all go through here, so
+    their plans share one expression. The caller reads the file with
+    ``spark.sql.legacy.parquet.nanosAsLong`` on.
 
+    - TIMESTAMP(NANOS) files are rejected by the Spark parquet reader
+      unless nanos are read as long; they are truncated to microsecond
+      timestamps — the same truncation DuckDB applies.
+    - timestamp[us] files (no UTC adjustment) arrive as TIMESTAMP_NTZ,
+      which Spark 4 refuses to cast to numeric; the wall-clock is pinned
+      to UTC via pure NTZ arithmetic — ``timestampdiff(MICROSECOND,
+      NTZ-epoch, ts)`` then ``timestamp_micros`` — which is exactly
+      DuckDB's ``epoch()`` interpretation of a naive timestamp. NB:
+      ``to_utc_timestamp`` would NOT work here: it coerces NTZ→LTZ
+      through the SESSION timezone first, silently shifting every epoch
+      by the session offset on non-UTC drivers (caught by
+      tests/test_timezone.py).
+    """
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        micros = F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
+        return df.withColumn("ts", F.timestamp_micros(micros))
+    return df
 
-# Opt-in catalog-run table cache (round-9 verdict task 6): a full-
-# catalog bench run reads `documents`/`lineitem`/... hundreds of times;
-# with SPARK_GRAFT_CACHE_TABLES=1 each (session, sf_dir, table) scan is
-# persisted MEMORY_AND_DISK on first load and every later query plans on
-# the in-memory relation instead of re-scanning parquet — the build-
-# once-query-many posture a 100-TB deployment gets from a hot storage
-# tier. OFF by default: correctness runs (driver gate, check_parity,
-# pytest) never set the flag, so their plans stay the pinned
-# parquet-scan shapes.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 # Tables whose consumers are dominated by per-row expression work
 # (text tokenization/hash folds, embedding vector folds) rather than
@@ -103,36 +96,6 @@ _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 # un-spread: shuffling raw fact rows costs more than their single-task
 # partial aggregation (measured 0.30 -> 1.17 s on a q01-class agg).
 _EXPANSION_HEAVY_TABLES = {"documents", "embeddings"}
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Stable identity for a live session. ``id(spark)`` is unsafe here:
-    CPython reuses object ids after GC, so a stopped-and-collected
-    session's cache entries (DataFrames bound to a dead JVM context)
-    could be served to an unrelated new session. ``applicationId`` is
-    unique per SparkContext launch and changes when a context is
-    stopped/recreated, which also naturally orphans (rather than
-    resurrects) stale entries."""
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # stopped session: never cache-hit against it
-        return f"dead-{id(spark)}"
-
-
-def clear_table_cache(spark: SparkSession | None = None) -> None:
-    """Drop cached tables (all sessions, or one). Unpersists best-effort
-    so executor memory is released, then forgets the entries — callers
-    stopping a session should invoke this to keep the process-lifetime
-    cache bounded."""
-    keys = list(_TABLE_CACHE)
-    sel = None if spark is None else _session_key(spark)
-    for k in keys:
-        if sel is None or k[0] == sel:
-            try:
-                _TABLE_CACHE[k].unpersist()
-            except Exception:
-                pass
-            del _TABLE_CACHE[k]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str, *, spread: bool = True) -> DataFrame:
@@ -144,33 +107,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, *, spread: bool = Tr
     composite-pagination contract is literally "ONE exchange") gain
     nothing from the fan-out and would pay a full-row shuffle for it.
 
-    ``events.parquet``'s ``ts`` is normalized to a UTC-anchored
-    TIMESTAMP_LTZ regardless of how the fixture was written:
-
-    - TIMESTAMP(NANOS) fixtures are rejected by the Spark parquet reader;
-      we read nanos as long (legacy conf) and truncate to microsecond
-      timestamps — the same truncation DuckDB applies.
-    - timestamp[us] fixtures (no UTC adjustment) arrive as TIMESTAMP_NTZ,
-      which Spark 4 refuses to cast to numeric; we pin the wall-clock to
-      UTC via pure NTZ arithmetic — ``timestampdiff(MICROSECOND,
-      NTZ-epoch, ts)`` then ``timestamp_micros`` — which is exactly
-      DuckDB's ``epoch()`` interpretation of a naive timestamp. NB:
-      ``to_utc_timestamp`` would NOT work here: it coerces NTZ→LTZ
-      through the SESSION timezone first, silently shifting every epoch
-      by the session offset on non-UTC drivers (caught by
-      tests/test_timezone.py).
+    ``events.parquet``'s ``ts`` goes through ``normalize_event_ts``.
     """
-    cache_on = os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1"
-    key = (_session_key(spark), sf_dir, f"{name}|spread={spread}")
-    if cache_on and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-            df = df.withColumn("ts", _ntz_as_utc("ts"))
+        df = normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if spread and name in _EXPANSION_HEAVY_TABLES:
@@ -188,16 +129,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, *, spread: bool = Tr
         from ..functions.plan import spread_small_scan
 
         df = spread_small_scan(df)
-    if cache_on:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _TABLE_CACHE[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def pit_snapshot(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -18,6 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.readers import normalize_event_ts
+
+
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """Probe the on-disk schema of the events fixture with a batch footer
     read. Fixtures have shipped ``ts`` as both TIMESTAMP(NANOS) (read as
@@ -29,25 +32,18 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as an unbounded stream (file source; at scale this is the
-    same code over a Kafka/object-store source). ``ts`` is normalized to
-    a UTC-anchored TIMESTAMP_LTZ exactly like ``sources.readers.load_table``
-    so streaming and batch plans share expressions."""
+    same code over a Kafka/object-store source). ``ts`` is normalized by
+    ``sources.readers.normalize_event_ts``, as in ``load_table``, so
+    streaming and batch plans share expressions."""
     schema = _events_raw_schema(spark, sf_dir)
     # file-source streaming needs a directory: point at sf_dir and glob
     # down to the single events file.
-    raw = (
+    return normalize_event_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        from ..sources.readers import _ntz_as_utc
-
-        return raw.withColumn("ts", _ntz_as_utc("ts"))
-    return raw
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -286,17 +282,11 @@ def foreachbatch_upsert_run(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         schema = spark.read.parquet(src_dir).schema
-        raw = (
+        raw = normalize_event_ts(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        if isinstance(schema["ts"].dataType, T.LongType):
-            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-            from ..sources.readers import _ntz_as_utc
-
-            raw = raw.withColumn("ts", _ntz_as_utc("ts"))
 
         def upsert(batch_df: DataFrame, batch_id: int) -> None:
             apply_upsert_batch(batch_df, state_dir)

@@ -7,7 +7,7 @@ Protocol = the r10/r11 sweep: same-session sf1 base (min of 2, warm JVM)
 then ONE sf10 run per query (each long enough that noise share is small),
 with per-run steal%. Appends JSONL rows compatible with
 scripts/sf10_ratios.py / scripts/pin_sf10_rows.py:
-  {"query":..., "cold":..., "warm":..., "base":..., "steal_warm":...,
+  {"query":..., "warm":..., "base":..., "steal_warm":...,
    "steal_base":..., "rows":...}
 
 Usage: python scripts/sf10_sweep.py OUT.jsonl q215_common_neighbors ...
@@ -69,7 +69,7 @@ def main() -> None:
                 warm, steal_warm = run(name, SF10)
                 rows = queries[name](spark, SF10).count()
                 rec = {
-                    "query": name, "cold": warm, "warm": warm, "base": base,
+                    "query": name, "warm": warm, "base": base,
                     "steal_warm": steal_warm, "steal_base": steal_base,
                     "rows": rows,
                 }

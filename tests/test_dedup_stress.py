@@ -95,18 +95,6 @@ def test_dedup_clusters_runs_to_convergence_on_long_chain(spark):
     assert got == {(i, 0) for i in range(61)}
 
 
-def test_dedup_clusters_warns_on_exhausted_budget(spark):
-    import warnings
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "id_a long, id_b long"
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        D.dedup_clusters(chain, max_iterations=3).collect()
-    assert any("UNCONFIRMED" in str(x.message) for x in w)
-
-
 def test_incremental_dedup_gates(spark):
     """Synthetic check of both gates: an exact copy of a corpus doc and a
     near-copy (one word changed in a long boilerplate text) must be

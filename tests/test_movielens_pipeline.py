@@ -69,3 +69,23 @@ def test_train_recommendations_behavioral(spark, ml_paths):
     assert set(pdf.columns) == {"userId", "movieId", "predicted_rating"}
     assert (pdf.groupby("userId").size() <= 2).all()
     assert pdf["predicted_rating"].notna().all()
+
+
+def test_preprocess_duplicate_movie_id_joins_once_per_item_row(spark, tmp_path):
+    """u.item listing movie 1 twice: each rating of movie 1 joins each of
+    its two u.item rows once (2 rows), as the reference's single join
+    does; a u.item self-join would square that to 4."""
+    mpath, rpath = str(tmp_path / "u.item"), str(tmp_path / "u.data")
+    with open(mpath, "w") as f:
+        f.write("\n".join(MOVIES + [MOVIES[0]]) + "\n")
+    with open(rpath, "w") as f:
+        f.write("\n".join(RATINGS) + "\n")
+    rows = pipelines.preprocess(spark, rpath, mpath).collect()
+    by_user = {}
+    for r in rows:
+        by_user.setdefault((r.userId, r.movieId), []).append(r)
+    assert len(by_user[(1, 1)]) == 2 and len(by_user[(2, 1)]) == 2
+    assert len(rows) == len(RATINGS) + 2
+    assert all(sorted(r.genres) == ["Animation", "Childrens", "Comedy"] for r in by_user[(1, 1)])
+    index = pipelines.build_movie_index(spark, mpath).collect()
+    assert sorted(r.movieId for r in index) == [1, 1, 2, 3]

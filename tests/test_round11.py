@@ -1,5 +1,5 @@
-"""Round-11 regression tests: the ADVICE fixes (partitioned PIT
-snapshots, session-keyed table cache) plus new-entry probes."""
+"""Round-11 regression tests: the ADVICE fix for partitioned PIT
+snapshots plus new-entry probes."""
 
 from __future__ import annotations
 
@@ -7,9 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources.readers import (
-    _session_key,
-    clear_table_cache,
-    load_table,
     pit_snapshot,
     write_parquet,
 )
@@ -62,24 +59,3 @@ def test_pit_snapshot_single_file_table(spark, sf_dir, tmp_path):
         pa.table({"doc_id": [1, 2, 3]}), str(tmp_path / "one.parquet")
     )
     assert pit_snapshot(spark, str(tmp_path), "one").count() == 3
-
-
-def test_table_cache_keyed_by_application_id(spark, sf_dir, monkeypatch):
-    """ADVICE r10 (low): id(spark) can be reused after GC; applicationId
-    is stable per context and distinguishes dead sessions."""
-    key = _session_key(spark)
-    assert key == spark.sparkContext.applicationId
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_TABLES", "1")
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources import (
-        readers,
-    )
-
-    clear_table_cache()
-    a = load_table(spark, sf_dir, "region")
-    b = load_table(spark, sf_dir, "region")
-    assert a is b
-    # key carries the spread variant since the r11 q255 opt-out, so a
-    # spread=False consumer can never be served a spread frame
-    assert (key, sf_dir, "region|spread=True") in readers._TABLE_CACHE
-    clear_table_cache(spark)
-    assert not readers._TABLE_CACHE

@@ -381,12 +381,11 @@ def test_upsert_state_probe_accepts_file_uri(spark, sf_dir, tmp_path):
 
 
 def test_latest_per_key_multibatch_equals_batch(spark, sf_dir, tmp_path):
-    """r12 focused test for the user-grouped latest_per_key state layout
-    (one applyInPandasWithState group per USER, per-type array state):
+    """latest_per_key keeps one scalar state row per (user, type) key:
     a TWO-batch drain, read-side compacted by max-(ts_us, event_id) —
     the documented CDC-log read pattern — must equal the batch
     latest-per-(user, type) window. Exercises state carry across
-    batches and the all-types re-emission."""
+    batches."""
     from pyspark.sql import Window
     from pyspark.sql import types as T
 

@@ -5,7 +5,7 @@ The driver evaluates the catalog on a VANILLA SparkSession (host-default
 timezone, whatever that is), while DuckDB's ``epoch()`` reads a naive
 timestamp as UTC. The engine therefore anchors ``events.ts`` to UTC at
 the source via the NTZ-arithmetic rebase in ``sources/readers.py``
-(``_ntz_as_utc``: ``timestampdiff`` from the NTZ epoch +
+(``normalize_event_ts``: ``timestampdiff`` from the NTZ epoch +
 ``timestamp_micros`` — NOT ``to_utc_timestamp``, which would shift the
 value through the session timezone) and does all bucketing in epoch
 arithmetic, never calendar truncation. These
