@@ -129,7 +129,9 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
     (not clamped to the bound); non-integer page/size hits the int() in
     the try block → the 500 branch. ``total`` is the full hit count
     (hits.total.value), independent of the page window: the ranked hits
-    are all in hand, so it is their length."""
+    are all in hand, so it is their length. On a loaded index only the
+    page's documents are built; the rest stay ``(score, movieId)``
+    pairs."""
     query = args.get("q")
     if not query:
         return 400, {"error": "Query parameter 'q' is required"}
@@ -140,17 +142,21 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
             page = 1
         if size < 1 or size > 100:
             size = 10
-        hits = movierec.search_hits(movies, query)
-        if not isinstance(hits, list):
-            hits = hits.orderBy(F.desc("score"), F.asc("movieId")).select(
-                "movieId", "title", "release_date", "genres"
-            ).collect()
         lo = (page - 1) * size
+        if isinstance(movies, MovieIndex):
+            pairs = movierec.ranked_pairs(movierec.search_scores(movies, query))
+            rows = [movies.by_id[mid] for _s, mid in pairs[lo:lo + size]]
+            total = len(pairs)
+        else:
+            hits = movierec.search_hits(movies, query).orderBy(
+                F.desc("score"), F.asc("movieId")
+            ).select("movieId", "title", "release_date", "genres").collect()
+            rows, total = hits[lo:lo + size], len(hits)
         return 200, {
-            "movies": [_doc(r) for r in hits[lo:lo + size]],
+            "movies": [_doc(r) for r in rows],
             "page": page,
             "size": size,
-            "total": len(hits),
+            "total": total,
         }
     except Exception as e:  # noqa: BLE001 — mirrors api.py:236-238
         return 500, {"error": f"Error during search: {e}"}

@@ -7,8 +7,8 @@ A seeded 2,000-movie catalog in the MovieLens u.item format
 ``MovieIndex`` must equal the raw movies frame's, for the benchmark's
 request stream and for the edge cases below. The loaded index must also
 answer without Spark jobs, stay a point-in-time snapshot of the published
-directory, and expand fuzzy terms with ``_lev_le`` exactly as Spark's
-``levenshtein`` would.
+directory, and expand fuzzy terms with its vectorized kernel exactly as
+the scalar ``_lev_le`` does, which in turn matches Spark's ``levenshtein``.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_s
 )
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
     movierec,
+    search,
 )
 
 SEED = 7
@@ -83,16 +84,22 @@ def _arg(req: tuple):
     return {"search": args, "recommend": body, "movie": path.rsplit("/", 1)[1]}.get(ep)
 
 
-def test_stream_replies_equal_raw_path(raw, index, catalog):
+@pytest.fixture(scope="module")
+def stream_oracle(raw, catalog):
+    """The benchmark's request stream with the raw frame's reply to each."""
+    stream, _props = gen.serve_requests(catalog[1], SEED, N_REQUESTS)
+    return [(req, _call(raw, req[0], _arg(req))) for req in stream]
+
+
+def test_stream_replies_equal_raw_path(stream_oracle, index, catalog):
     """Every request of the benchmark's stream: the loaded index answers
     exactly as the raw frame does, and as the generator's ground truth
     says."""
-    stream, _props = gen.serve_requests(catalog[1], SEED, N_REQUESTS)
-    kinds = Counter(req[0] for req in stream)
+    kinds = Counter(req[0] for req, _want in stream_oracle)
     assert set(kinds) == {"search", "recommend", "movie", "health"}
-    for req in stream:
+    for req, want in stream_oracle:
         got = _call(index, req[0], _arg(req))
-        assert got == _call(raw, req[0], _arg(req)), req
+        assert got == want, req
         assert checks.serve_response(req, *got, catalog[1]["movies"]) == [], req
 
 
@@ -343,3 +350,99 @@ def test_lev_le_matches_spark_levenshtein(spark):
     bad = [(r.a, r.b, d, r.d) for r in dist for d in range(4)
            if movierec._lev_le(r.a, r.b, d) != (r.d <= d)]
     assert not bad, bad[:10]
+
+
+def test_search_request_path_does_not_scan_with_lev_le(stream_oracle, index, monkeypatch):
+    """The index path expands with the vectorized kernel only: the scalar
+    ``_lev_le`` is never called while the benchmark's searches run, and
+    the replies still equal the raw-frame oracle's."""
+    searches = [(req, want) for req, want in stream_oracle if req[0] == "search"]
+    assert len(searches) == 20
+    calls = []
+    scalar = movierec._lev_le
+    monkeypatch.setattr(movierec, "_lev_le", lambda *a: calls.append(a) or scalar(*a))
+    got = [_call(index, "search", _arg(req)) for req, _want in searches]
+    assert not calls, len(calls)
+    assert got == [want for _req, want in searches]
+
+
+def test_index_without_fuzzy_terms_answers(spark, tmp_path):
+    """Null titles and no genres leave one posting, the empty genres
+    term, which no query term is close enough to: the index builds,
+    writes and loads, and ``/search`` answers 200 with no hit, as the
+    raw frame does."""
+    raw = spark.createDataFrame(
+        [(1, None, None, None), (2, None, "01-Jan-1990", [])],
+        "movieId int, title string, release_date string, genres array<string>")
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path))
+    index = movierec.load_movie_index(spark, str(tmp_path))
+    assert set(index.terms) == {("genres_text", "")}
+    for q in ("alpha", "a", "drama 漢字 😀"):
+        got = _call(index, "search", {"q": q})
+        assert got == _call(raw, "search", {"q": q}) == (
+            200, {"movies": [], "page": 1, "size": 10, "total": 0}), q
+
+
+def test_empty_catalog_file_answers(spark, tmp_path):
+    """An empty u.item publishes an index with zero postings; it loads
+    and ``/search`` answers 200 with no hit, as the raw frame does."""
+    (tmp_path / "u.item").write_text("")
+    raw = pipelines.build_movie_index(spark, str(tmp_path / "u.item"))
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path / "index"))
+    index = movierec.load_movie_index(spark, str(tmp_path / "index"))
+    assert not index.postings and not index.buckets
+    got = _call(index, "search", {"q": "alpha"})
+    assert got == _call(raw, "search", {"q": "alpha"}) == (
+        200, {"movies": [], "page": 1, "size": 10, "total": 0})
+
+
+def _assert_expansion_exact(keys, qt: str) -> None:
+    """The kernel's expansion of ``qt`` equals the scalar scan's, with no
+    key twice."""
+    d = search.auto_fuzziness(qt)
+    got = movierec._expand(movierec._term_buckets(keys), qt, d)
+    assert len(got) == len(set(got)), qt
+    assert set(got) == {k for k in keys if movierec._lev_le(k[1], qt, d)}, (qt, d)
+
+
+# Code points of one, two, three and four UTF-8 bytes, and a lone
+# surrogate, which plain UTF-32 encoding refuses.
+_CHAR = st.sampled_from(["a", "b", "c", "é", "漢", "😀", "\ud800"])
+
+
+def _text(min_size: int, max_size: int):
+    return st.lists(_CHAR, min_size=min_size, max_size=max_size).map("".join)
+
+
+@settings(max_examples=300, deadline=None, database=None,
+          suppress_health_check=list(HealthCheck))
+@given(words=st.lists(_text(0, 14), max_size=30), qt=_text(1, 12), cut=st.integers(0, 11))
+def test_vectorized_expansion_matches_lev_le(words, qt, cut):
+    """Random dictionaries and query terms of length 1-12, so every AUTO
+    band (0, 1, 2) is drawn. The dictionary always holds the empty term
+    and, for each length within three of the query term's, a prefix or
+    an extension of it: its distance is the length difference, so both
+    edges of the length band are on both sides of the cut-off."""
+    m = len(qt)
+    near = [qt[:n] if n <= m else qt + qt[cut % m] * (n - m) for n in range(max(0, m - 3), m + 4)]
+    keys = {("title", "")} | {(f, w) for w in words + near for f in ("title", "genres_text")}
+    _assert_expansion_exact(keys, qt)
+    longest = max(len(t) for _f, t in keys)
+    _assert_expansion_exact(keys, qt + "a" * (longest + 3 - m))  # beyond every term
+
+
+def test_vectorized_expansion_on_generated_catalog(index, catalog):
+    """Every query term of the benchmark's stream on the 2k catalog, and
+    a one-edit and a two-edit variant of each, expand as ``_lev_le``
+    says, against the loaded index's own buckets."""
+    stream, _props = gen.serve_requests(catalog[1], SEED, N_REQUESTS)
+    qts = {qt for req in stream if req[0] == "search"
+           for qt in req[3].get("q", "").lower().split()}
+    assert len(qts) > 10
+    keys = list(index.terms)
+    for qt in sorted(qts):
+        for variant in (qt, qt[:-1] + "q", "z" + qt[1:] + "é", "\ud800" + qt[2:]):
+            d = search.auto_fuzziness(variant)
+            got = movierec._expand(index.buckets, variant, d)
+            assert sorted(got) == sorted(
+                k for k in keys if movierec._lev_le(k[1], variant, d)), variant
