@@ -4,7 +4,8 @@ The reference trains ALS on (userId, movieId, rating) and materializes
 top-10-per-user (``src/model.py:10-15``). Here:
 
 - :func:`train_als` — MLlib ALS with a FIXED seed (the reference leaves the
-  seed unset, which breaks reproducibility; §7.3 risk table);
+  seed unset, which breaks reproducibility; §7.3 risk table) and user/item
+  blocks sized to the input files, one per MiB up to MLlib's 10;
 - :func:`als_recommendations` — ``recommendForAllUsers(k)`` flattened via
   explode + struct access (the reference's N2/N3 operators);
 - :func:`popular_unseen` — a deterministic, oracle-checkable collaborative
@@ -21,6 +22,31 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# MLlib's numUserBlocks / numItemBlocks default, and the input bytes per block
+_ALS_MAX_BLOCKS = 10
+_ALS_BLOCK_BYTES = 1 << 20
+
+
+def _als_blocks(ratings: DataFrame) -> int:
+    """ALS user and item block count for ``ratings``: one per MiB of its
+    input files, between 1 and MLlib's default of 10 (the default when the
+    frame has no input files). File lengths come from the Hadoop
+    ``FileSystem``, as in ``readers.pit_snapshot``; no Spark job runs.
+    ``inputFiles()`` gives percent-escaped URIs, so each path is built
+    from a ``java.net.URI`` (a space or ``%`` in a directory name)."""
+    files = ratings.inputFiles()
+    if not files:
+        return _ALS_MAX_BLOCKS
+    jvm = ratings.sparkSession._jvm
+    conf = ratings.sparkSession._jsc.hadoopConfiguration()
+    cap = _ALS_MAX_BLOCKS * _ALS_BLOCK_BYTES
+    total = 0
+    for f in files:
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f))
+        total += path.getFileSystem(conf).getFileStatus(path).getLen()
+        if total >= cap:
+            break
+    return max(1, min(_ALS_MAX_BLOCKS, -(-total // _ALS_BLOCK_BYTES)))
 
 
 def train_als(
@@ -35,9 +61,29 @@ def train_als(
 ):
     """M1: ALS matrix factorization (reference config: maxIter=10,
     regParam=0.01, default rank 10 — model.py:10-11 — trimmed here for the
-    test harness; every iteration is a pair of distributed solves)."""
+    test harness; every iteration is a pair of distributed solves).
+
+    User and item blocks are sized to the input (:func:`_als_blocks`): one
+    per MiB of the ratings' input files, between 1 and 10. MLlib's fixed
+    10 × 10 grid runs 10 tasks in every stage of every solve and 100
+    cross-join tasks in ``recommendForAllUsers``; on a small input that
+    is mostly per-task overhead. The count comes from the data, not the
+    host's cores, because MLlib seeds each block's initial factors by
+    block id: the block count is part of the seeded model, and sizing by
+    input gives the same model on every host. A frame without input
+    files keeps MLlib's 10 blocks, the parallelism for a large in-memory
+    input: one from ``createDataFrame`` or ``localCheckpoint``, and any
+    cached or persisted frame, since ``inputFiles()`` reads the
+    cache-substituted plan (an uncached read whose plan matches a cached
+    one in the session too). So the block count, and with it the seeded
+    model, can follow the session's cache state; e.g.
+    ``examples/movielens_demo.py`` caches ``processed`` before training
+    and runs the 10 × 10 grid. The known under-estimate is a frame whose
+    rows multiply after the scan, such as a many-to-many join: it is
+    sized by the bytes it reads, not the rows it yields."""
     from pyspark.ml.recommendation import ALS
 
+    blocks = _als_blocks(ratings)
     als = ALS(
         userCol=user_col,
         itemCol=item_col,
@@ -47,6 +93,8 @@ def train_als(
         regParam=reg_param,
         seed=seed,
         coldStartStrategy="drop",
+        numUserBlocks=blocks,
+        numItemBlocks=blocks,
     )
     return als.fit(ratings)
 

@@ -3,10 +3,13 @@ on a MovieLens-100k-shaped fixture."""
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
 
+from perfbench import gen
+from perfbench.spans import SparkCounter
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import pipelines
 
 FIXTURE_DIR = os.path.join(os.path.dirname(__file__), ".fixtures")
@@ -89,3 +92,32 @@ def test_preprocess_duplicate_movie_id_joins_once_per_item_row(spark, tmp_path):
     assert all(sorted(r.genres) == ["Animation", "Childrens", "Comedy"] for r in by_user[(1, 1)])
     index = pipelines.build_movie_index(spark, mpath).collect()
     assert sorted(r.movieId for r in index) == [1, 1, 2, 3]
+
+
+def test_train_recommendations_task_count_fits_small_input(spark, tmp_path):
+    """A MovieLens-100k-sized input (943 users, 1,682 movies, 28k ratings,
+    ~0.4 MB of parquet) trains in 1 × 1 ALS blocks: training plus the
+    top-10 collect completes under 100 Spark tasks, where MLlib's fixed
+    10 × 10 grid runs about 350. Every user still gets 10 finite recs."""
+    truth = gen.write_movielens(str(tmp_path / "ml"), 1, 1682, 943, (20, 40))
+    processed = str(tmp_path / "processed.parquet")
+    pipelines.preprocess(
+        spark, str(tmp_path / "ml" / "u.data"), str(tmp_path / "ml" / "u.item")
+    ).write.parquet(processed)
+    frame = spark.read.parquet(processed)
+
+    counter = SparkCounter(spark)
+    gid = counter.group("train-recs-tasks")
+    try:
+        rows = pipelines.train_recommendations(spark, frame).collect()
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    _jobs, tasks, _failed = counter.counts(gid)
+    assert 0 < tasks < 100, tasks
+
+    per_user: dict = {}
+    for r in rows:
+        assert math.isfinite(r.predicted_rating), r
+        per_user[r.userId] = per_user.get(r.userId, 0) + 1
+    assert sorted(per_user) == truth["users"] and len(per_user) == 943
+    assert set(per_user.values()) == {10}

@@ -12,6 +12,7 @@ and row count.
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,8 +27,8 @@ from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_s
 K = 5
 
 
-def _fit_recs(spark, sf_dir, seed=42):
-    ratings = _ratings(spark, sf_dir)
+def _fit_recs(spark, sf_dir, seed=42, ratings=None):
+    ratings = _ratings(spark, sf_dir) if ratings is None else ratings
     model = REC.train_als(ratings, "user", "item", "rating", rank=8, max_iter=5, seed=seed)
     return ratings, REC.als_recommendations(model, k=K)
 
@@ -44,12 +45,62 @@ def test_als_exactly_k_rows_per_user_and_finite_predictions(spark, sf_dir):
     assert set(per_user) == {r.user for r in ratings.select("user").distinct().collect()}
 
 
-def test_als_seeded_rerun_is_identical(spark, sf_dir):
-    _, a = _fit_recs(spark, sf_dir, seed=42)
-    _, b = _fit_recs(spark, sf_dir, seed=42)
+# each side of the block rule: the sf0.001 parquet inputs (1 block) and
+# the same ratings checkpointed, with no input files (MLlib's 10 blocks)
+@pytest.mark.parametrize(
+    "no_files, blocks", [(False, 1), (True, 10)], ids=["files", "no_files"]
+)
+def test_als_seeded_rerun_is_identical(spark, sf_dir, no_files, blocks):
+    ratings = _ratings(spark, sf_dir)
+    if no_files:
+        ratings = ratings.localCheckpoint()
+    assert REC._als_blocks(ratings) == blocks
+    _, a = _fit_recs(spark, sf_dir, seed=42, ratings=ratings)
+    _, b = _fit_recs(spark, sf_dir, seed=42, ratings=ratings)
     ra = sorted((r.user, r.item, round(r.predicted_rating, 5)) for r in a.collect())
     rb = sorted((r.user, r.item, round(r.predicted_rating, 5)) for r in b.collect())
     assert ra == rb
+
+
+def test_als_blocks_one_per_mib_of_input_files(spark, tmp_path):
+    """The block count is the input files' summed length in MiB, rounded
+    up and capped at MLlib's 10; it lists files, it runs no job."""
+    # inputFiles() percent-escapes a space or '%' in the path
+    small = str(tmp_path / "my dir%41" / "small.parquet")
+    spark.range(1000).select(
+        F.col("id").cast("int").alias("user"), F.lit(1.0).cast("float").alias("rating")
+    ).coalesce(1).write.parquet(small)
+    assert REC._als_blocks(spark.read.parquet(small)) == 1
+
+    # random doubles do not compress: ~1.6 MB over 4 part files < 1 MiB each
+    multi = str(tmp_path / "multi.parquet")
+    spark.range(0, 200_000, 1, 4).select(F.rand(1).alias("rating")).write.parquet(multi)
+    parts = [os.path.join(multi, f) for f in os.listdir(multi) if f.startswith("part-")]
+    sizes = [os.path.getsize(f) for f in parts]
+    assert len(parts) == 4 and max(sizes) < 1 << 20 < sum(sizes)
+    assert REC._als_blocks(spark.read.parquet(multi)) == math.ceil(sum(sizes) / (1 << 20))
+
+    sf01 = _ratings(spark, "/root/testdata/sf0.1")
+    sc = spark.sparkContext
+    sc.setJobGroup("als-blocks", "als-blocks")
+    try:
+        assert REC._als_blocks(sf01) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("als-blocks") == []
+
+
+# (a localCheckpoint frame is the [no_files] case of the seeded-rerun test)
+@pytest.mark.parametrize("source", ["createDataFrame", "cache"])
+def test_als_blocks_default_without_input_files(spark, sf_dir, source):
+    ratings = _ratings(spark, sf_dir)
+    if source == "createDataFrame":
+        frame = spark.createDataFrame(ratings.limit(50).collect(), ratings.schema)
+    else:
+        frame = ratings.cache()
+    assert frame.inputFiles() == []
+    assert REC._als_blocks(frame) == 10
+    ratings.unpersist()
 
 
 def test_als_heldout_rmse_below_slack(spark, sf_dir):
