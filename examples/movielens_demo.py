@@ -5,7 +5,7 @@ against the reference's own MovieLens-100k data on this engine alone
 
 Reference equivalents exercised:
   spark-submit preprocessing.py        → pipelines.preprocess
-  spark-submit elasticsearch_ingest.py → pipelines.build_movie_index (+ JSONL sink)
+  spark-submit elasticsearch_ingest.py → pipelines.build_movie_index
   spark-submit model.py               → pipelines.train_recommendations
   POST /recommend                      → serving.recommend_endpoint
   GET  /search?q=...                   → serving.search_endpoint
@@ -34,7 +34,9 @@ def main() -> None:
     spark = get_spark("movielens-demo")
 
     print("== preprocess (ratings ⋈ movies) ==")
-    processed = pipelines.preprocess(spark, f"{data}/u.data", f"{data}/u.item").cache()
+    # not cached: ALS sizes its blocks from the frame's input files, and a
+    # cached frame has none (operators/recommend.train_als)
+    processed = pipelines.preprocess(spark, f"{data}/u.data", f"{data}/u.item")
     print(f"rows={processed.count()}, users={processed.select('userId').distinct().count()}")
 
     print("\n== movie index (genre name-arrays, no unpivot shuffle) ==")

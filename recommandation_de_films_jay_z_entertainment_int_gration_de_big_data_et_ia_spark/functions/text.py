@@ -59,13 +59,14 @@ def md5_hex(col: Column) -> Column:
     return F.md5(col)
 
 
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """MinHash signature as an array of ``num_hashes`` hex-string minima.
+def minhash_band_keys(shingles: Column, num_hashes: int, bands: int) -> Column:
+    """Array of ``bands`` LSH band keys (concatenated MinHash signature rows).
 
-    Permutation *i* is simulated by hashing ``'i|shingle'`` with md5 and
-    taking the lexicographic minimum — a standard min-wise scheme that is
-    exactly reproducible in SQL. Lexicographic min over uniformly
-    distributed hex strings is equivalent to numeric min over the hashes.
+    The signature is ``num_hashes`` hex-string minima. Permutation *i* is
+    simulated by hashing ``'i|shingle'`` with md5 and taking the
+    lexicographic minimum — a standard min-wise scheme that is exactly
+    reproducible in SQL. Lexicographic min over uniformly distributed hex
+    strings is equivalent to numeric min over the hashes.
 
     Hash family: permutation i = chunk ``i % 4`` (8 hex chars) of
     ``md5(str(i // 4) + '|' + shingle)`` — 4 independent 32-bit hashes per
@@ -76,30 +77,11 @@ def minhash_signature(shingles: Column, num_hashes: int) -> Column:
 
     SQL mirror (per i): ``list_sort(list_transform(sh, s ->
     substr(md5('<i//4>|' || s), <(i%4)*8 + 1>, 8)))[1]``.
-    """
-    n_md5 = (num_hashes + 3) // 4
 
-    def _chunks(s: Column) -> Column:
-        hashes = [F.md5(F.concat(F.lit(f"{k}|"), s)) for k in range(n_md5)]
-        return F.array(
-            *[F.substring(hashes[i // 4], (i % 4) * 8 + 1, 8) for i in range(num_hashes)]
-        )
-
-    init = F.array_repeat(F.lit("~"), num_hashes)  # '~' sorts after all hex chars
-    return F.aggregate(
-        F.transform(shingles, _chunks),
-        init,
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
-    )
-
-
-def minhash_band_keys(shingles: Column, num_hashes: int, bands: int) -> Column:
-    """Array of ``bands`` LSH band keys (concatenated signature rows).
-
-    Built inside the signature fold's ``finish`` lambda so the signature
-    accumulator is bound ONCE — extracting keys from a separate
-    ``minhash_signature`` column would re-inline (and re-evaluate) the
-    whole fold per key under projection collapsing.
+    Keys are built inside the signature fold's ``finish`` lambda so the
+    signature accumulator is bound ONCE — extracting keys from a separate
+    signature column would re-inline (and re-evaluate) the whole fold per
+    key under projection collapsing.
     """
     assert num_hashes % bands == 0
     rows = num_hashes // bands

@@ -13,8 +13,8 @@ a list of documents from process memory, without a Spark job:
   (api.py:121-135): keyword `should` clauses from title words longer than
   3 chars, minimum_should_match=1, ranked by match count.
 - :func:`search_hits` — ``GET /search`` (api.py:197-221): fuzzy
-  multi_match over title^3 + genres; :func:`search_movies` adds offset
-  pagination on the frame path, and :func:`search_scores` gives the
+  multi_match over title^3 + genres, before pagination (which
+  ``serving.search_endpoint`` applies); :func:`search_scores` gives the
   unranked scores on an index.
 
 Spark builds and publishes the index (:func:`build_movie_index_tables` →
@@ -330,21 +330,6 @@ def search_hits(movies: DataFrame | MovieIndex, query: str) -> DataFrame | list[
         terms,
         fuzzy=True,
     ).filter(F.col("score") > 0)
-
-
-def search_movies(movies: DataFrame, query: str, page: int = 1, size: int = 10) -> DataFrame:
-    """Fuzzy multi_match (title^3, genres^1, AUTO fuzziness) + pagination
-    clamps (page ≥ 1, size 1..100) over the movies frame."""
-    scored = search_hits(movies, query)
-    page = max(1, page)
-    size = min(max(1, size), 100)
-    lo = (page - 1) * size
-    return (
-        scored.orderBy(F.desc("score"), F.asc("movieId"))
-        .offset(lo)
-        .limit(size)
-        .select("movieId", "title", "release_date", "genres", "score")
-    )
 
 
 def write_movie_index(tables: MovieIndexTables, index_dir: str) -> None:

@@ -17,8 +17,6 @@ top-10-per-user (``src/model.py:10-15``). Here:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -76,11 +74,9 @@ def train_als(
     cached or persisted frame, since ``inputFiles()`` reads the
     cache-substituted plan (an uncached read whose plan matches a cached
     one in the session too). So the block count, and with it the seeded
-    model, can follow the session's cache state; e.g.
-    ``examples/movielens_demo.py`` caches ``processed`` before training
-    and runs the 10 × 10 grid. The known under-estimate is a frame whose
-    rows multiply after the scan, such as a many-to-many join: it is
-    sized by the bytes it reads, not the rows it yields."""
+    model, can follow the session's cache state. The known under-estimate
+    is a frame whose rows multiply after the scan, such as a many-to-many
+    join: it is sized by the bytes it reads, not the rows it yields."""
     from pyspark.ml.recommendation import ALS
 
     blocks = _als_blocks(ratings)

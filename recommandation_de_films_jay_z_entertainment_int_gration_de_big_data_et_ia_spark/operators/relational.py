@@ -18,15 +18,6 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# Projections (P2; reference preprocessing.py:16-20)
-# ---------------------------------------------------------------------------
-
-def project(df: DataFrame, *cols: str | Column) -> DataFrame:
-    """P2 column projection — Catalyst prunes the scan to these columns."""
-    return df.select(*cols)
-
-
-# ---------------------------------------------------------------------------
 # Filters (F1–F2; reference preprocessing.py:9, elasticsearch_ingest.py:51)
 # ---------------------------------------------------------------------------
 

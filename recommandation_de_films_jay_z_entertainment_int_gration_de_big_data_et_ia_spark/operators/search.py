@@ -113,6 +113,18 @@ def bool_query(
 # in whole-stage codegen. At 100 TB the stats frame is still one row.
 # ---------------------------------------------------------------------------
 
+def _bm25_parts(
+    tf: Column, dfreq: Column, n: Column, avgdl: Column, k1: float, b: float
+) -> tuple[Column, Column, Column]:
+    """One BM25 term's ``(idf, tf·(k1+1), denom)`` over double columns,
+    with the document length in ``__dl``. Callers combine the three
+    themselves: the sites associate the product differently, and a
+    different association is a different double."""
+    idf = F.log((n - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5)) + F.lit(1.0))
+    denom = tf + F.lit(k1) * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * (F.col("__dl").cast("double") / avgdl))
+    return idf, tf * F.lit(k1 + 1.0), denom
+
+
 def bm25_score(
     df: DataFrame,
     text_col: str,
@@ -150,10 +162,10 @@ def bm25_score(
     total = F.lit(0.0)
     for i, t in enumerate(query_terms):
         tf = F.size(F.filter(toks, _eq(t))).cast("double")
-        dfreq = F.col(f"__df_{i}").cast("double")
-        idf = F.log((F.col("__n").cast("double") - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5)) + F.lit(1.0))
-        denom = tf + F.lit(k1) * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * (F.col("__dl").cast("double") / avgdl))
-        total = total + idf * ((tf * F.lit(k1 + 1.0)) / denom)
+        idf, num, denom = _bm25_parts(
+            tf, F.col(f"__df_{i}").cast("double"), F.col("__n").cast("double"), avgdl, k1, b
+        )
+        total = total + idf * (num / denom)
     scored = scored.withColumn(score_col, F.round(total * F.lit(boost), 4))
     drop = [toks, "__dl", "__n", "__sumdl"] + [f"__df_{i}" for i in range(len(query_terms))]
     return scored.drop(*drop)
@@ -271,6 +283,38 @@ def fuzzy_expand_terms(
     return hits.select("f", "term", "df")
 
 
+def _multi_field_bm25_fold(
+    matched: DataFrame, fields: dict[str, float], id_col: str, k1: float, b: float, score_col: str
+) -> DataFrame:
+    """The shared tail of the ``multi_match_bm25*`` paths: ``matched``
+    carries ``(__id, f, term, tf, __dl, df, n, sumdl)`` per matched
+    (doc, field ordinal, expanded term); each row's contribution is
+    weighted by its field's boost, and per-doc totals left-fold in
+    sorted (f, term, contrib) order so scores are reproducible
+    bit-for-bit."""
+    boosts = list(fields.values())
+    boost = F.lit(float(boosts[0]))
+    for fi in range(1, len(boosts)):
+        boost = F.when(F.col("f") == fi, F.lit(float(boosts[fi]))).otherwise(boost)
+    n = F.col("n").cast("double")
+    idf, num, denom = _bm25_parts(
+        F.col("tf").cast("double"), F.col("df").cast("double"), n,
+        F.col("sumdl").cast("double") / n, k1, b,
+    )
+    contrib = (boost * idf * num / denom).alias("contrib")
+    return (
+        matched.select("__id", "f", "term", contrib)
+        .groupBy("__id")
+        .agg(F.array_sort(F.collect_list(F.struct("f", "term", "contrib"))).alias("__cs"))
+        .select(
+            F.col("__id").alias(id_col),
+            F.round(
+                F.aggregate("__cs", F.lit(0.0), lambda acc, s: acc + s["contrib"]), 4
+            ).alias(score_col),
+        )
+    )
+
+
 def multi_match_bm25(
     df: DataFrame,
     id_col: str,
@@ -306,9 +350,8 @@ def multi_match_bm25(
     With a single field, boost 1.0 and ``fuzzy=False`` this reduces to
     :func:`bm25_score` on the docs that contain at least one query term
     (guarded by tests/test_reference_parity.py)."""
-    field_items = list(fields.items())
     expl_parts, stats_parts = [], []
-    for fi, (fld, _boost) in enumerate(field_items):
+    for fi, fld in enumerate(fields):
         toked = df.select(
             F.col(id_col).alias("__id"), tokens(fld).alias("__tk")
         ).withColumn("__dl", F.size("__tk"))
@@ -358,28 +401,7 @@ def multi_match_bm25(
         tfs.join(F.broadcast(exp), ["f", "term"])
         .join(F.broadcast(stats), ["f"])
     )
-    boost = F.lit(float(field_items[0][1]))
-    for fi in range(1, len(field_items)):
-        boost = F.when(F.col("f") == fi, F.lit(float(field_items[fi][1]))).otherwise(boost)
-    tf = F.col("tf").cast("double")
-    dfreq = F.col("df").cast("double")
-    n = F.col("n").cast("double")
-    avgdl = F.col("sumdl").cast("double") / n
-    idf = F.log((n - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5)) + F.lit(1.0))
-    denom = tf + F.lit(k1) * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * (F.col("__dl").cast("double") / avgdl))
-    contrib = (boost * idf * (tf * F.lit(k1 + 1.0)) / denom).alias("contrib")
-    per_term = matched.select("__id", "f", "term", contrib)
-    folded = (
-        per_term.groupBy("__id")
-        .agg(F.array_sort(F.collect_list(F.struct("f", "term", "contrib"))).alias("__cs"))
-        .select(
-            F.col("__id").alias(id_col),
-            F.round(
-                F.aggregate("__cs", F.lit(0.0), lambda acc, s: acc + s["contrib"]), 4
-            ).alias(score_col),
-        )
-    )
-    return folded
+    return _multi_field_bm25_fold(matched, fields, id_col, k1, b, score_col)
 
 
 def field_tokens(df: DataFrame, id_col: str, fields: dict[str, float]) -> DataFrame:
@@ -446,7 +468,6 @@ def multi_match_bm25_indexed(
     when vocab/stats are parquet-backed (the S7 index-DDL replacement,
     reference ``src/elasticsearch_ingest.py:92-105``).
     """
-    field_items = list(fields.items())
     # index frames are keyed by field NAME (build_multimatch_index);
     # translate to THIS query's ordinals so a fields dict ordered
     # differently from the one used at build time still scores each term
@@ -478,27 +499,7 @@ def multi_match_bm25_indexed(
         .filter(F.col("tf") > 0)
         .join(F.broadcast(stats), ["f"])
     )
-    boost = F.lit(float(field_items[0][1]))
-    for fi in range(1, len(field_items)):
-        boost = F.when(F.col("f") == fi, F.lit(float(field_items[fi][1]))).otherwise(boost)
-    tf = F.col("tf").cast("double")
-    dfreq = F.col("df").cast("double")
-    n = F.col("n").cast("double")
-    avgdl = F.col("sumdl").cast("double") / n
-    idf = F.log((n - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5)) + F.lit(1.0))
-    denom = tf + F.lit(k1) * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * (F.col("__dl").cast("double") / avgdl))
-    contrib = (boost * idf * (tf * F.lit(k1 + 1.0)) / denom).alias("contrib")
-    per_term = matched.select("__id", "f", "term", contrib)
-    return (
-        per_term.groupBy("__id")
-        .agg(F.array_sort(F.collect_list(F.struct("f", "term", "contrib"))).alias("__cs"))
-        .select(
-            F.col("__id").alias(id_col),
-            F.round(
-                F.aggregate("__cs", F.lit(0.0), lambda acc, s: acc + s["contrib"]), 4
-            ).alias(score_col),
-        )
-    )
+    return _multi_field_bm25_fold(matched, fields, id_col, k1, b, score_col)
 
 
 def more_like_this(

@@ -43,6 +43,21 @@ def query_vector(df: DataFrame, id_col: str, vec_col: str, target_id) -> DataFra
     )
 
 
+def _query_cosine_topk(
+    cand: DataFrame, id_col: str, vec_col: str, k: int, score_col: str
+) -> DataFrame:
+    """Rank ``cand`` (rows carrying the broadcast ``__qvec`` / ``__qnorm``
+    query row) by cosine to the query rounded to 4: the top ``k`` by
+    score desc, id asc — ``orderBy().limit()`` compiles to
+    TakeOrderedAndProject, no global sort."""
+    score = F.round(
+        dot(F.col(vec_col), F.col("__qvec")) / (norm(F.col(vec_col)) * F.col("__qnorm")), 4
+    )
+    return cand.select(id_col, score.alias(score_col)).orderBy(
+        F.desc(score_col), F.asc(id_col)
+    ).limit(k)
+
+
 def cosine_topk(
     df: DataFrame, id_col: str, vec_col: str, target_id, k: int = 10, score_col: str = "score"
 ) -> DataFrame:
@@ -54,15 +69,8 @@ def cosine_topk(
     candidate); the same double math as the oracle, just not repeated.
     """
     q = query_vector(df, id_col, vec_col, target_id)
-    score = F.round(
-        dot(F.col(vec_col), F.col("__qvec")) / (norm(F.col(vec_col)) * F.col("__qnorm")), 4
-    )
-    scored = (
-        df.filter(F.col(id_col) != F.lit(target_id))
-        .crossJoin(F.broadcast(q))
-        .select(id_col, score.alias(score_col))
-    )
-    return scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
+    cand = df.filter(F.col(id_col) != F.lit(target_id)).crossJoin(F.broadcast(q))
+    return _query_cosine_topk(cand, id_col, vec_col, k, score_col)
 
 
 def hyperplane_bucket(vec_col: Column, planes: int = 4, table: int = 0) -> Column:
@@ -116,11 +124,7 @@ def cosine_topk_lsh(
     cand = bucketed.crossJoin(F.broadcast(q)).filter(
         any_table_match & (F.col(id_col) != F.lit(target_id))
     )
-    score = F.round(
-        dot(F.col(vec_col), F.col("__qvec")) / (norm(F.col(vec_col)) * F.col("__qnorm")), 4
-    )
-    scored = cand.select(id_col, score.alias(score_col))
-    return scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
+    return _query_cosine_topk(cand, id_col, vec_col, k, score_col)
 
 
 def _centroid_frame(df: DataFrame, id_col: str, vec_col: str, nlist: int) -> DataFrame:
@@ -195,15 +199,11 @@ def cosine_topk_ivf(
         norm(F.col(vec_col)).alias("__qnorm"),
         probe.alias("__qprobes"),
     )
-    score = F.round(
-        dot(F.col(vec_col), F.col("__qvec")) / (norm(F.col(vec_col)) * F.col("__qnorm")), 4
-    )
     cand = indexed.crossJoin(F.broadcast(q)).filter(
         F.array_contains(F.col("__qprobes"), F.col("__cell"))
         & (F.col(id_col) != F.lit(target_id))
     )
-    scored = cand.select(id_col, score.alias(score_col))
-    return scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
+    return _query_cosine_topk(cand, id_col, vec_col, k, score_col)
 
 
 def embedding_neardup_pairs(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokens
+from .search import _bm25_parts, field_tokens
 
 
 def build_docfreq_index(df: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
@@ -63,8 +64,6 @@ def build_multimatch_index(
     and broadcast at query time — the engine's S7 "index DDL" for
     multi-field search (reference ``src/elasticsearch_ingest.py:92-105``).
     """
-    from .search import field_tokens
-
     name_of = _ordinal_to_name(fields)
     toked = field_tokens(df, id_col, fields).withColumn("field", name_of)
     vocab = (
@@ -121,11 +120,8 @@ def bm25_with_index(
     for t in query_terms:
         tf = F.size(F.filter(F.col("__tk"), _eq(t))).cast("double")
         dfreq = F.coalesce(F.col("__dfmap").getItem(t).cast("double"), F.lit(0.0))
-        idf = F.log(
-            (F.col("n_docs").cast("double") - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5)) + F.lit(1.0)
-        )
-        denom = tf + F.lit(k1) * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * (F.col("__dl").cast("double") / avgdl))
-        total = total + idf * ((tf * F.lit(k1 + 1.0)) / denom)
+        idf, num, denom = _bm25_parts(tf, dfreq, F.col("n_docs").cast("double"), avgdl, k1, b)
+        total = total + idf * (num / denom)
     return (
         scored.withColumn(score_col, F.round(total, 4))
         .drop("__tk", "__dl", "n_docs", "sum_dl", "__dfmap")

@@ -2,11 +2,32 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
 from .catalog import register
+
+
+def lineitem_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(l_orderkey, parts)``: each order's co-purchase basket, its
+    sorted distinct ``l_partkey`` array (the oracles'
+    ``list_sort(list_distinct(list(l_partkey)))``)."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return li.groupBy("l_orderkey").agg(
+        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
+    )
+
+
+def basket_pairs(a: str = "a", b: str = "b") -> Column:
+    """Every unordered pair of the sorted distinct array column ``parts``
+    as an array of ``struct(x AS a, y AS b)`` with ``x < y``: element i
+    pairs with the slice after it, so no pair is generated twice or
+    filtered away."""
+    return F.expr(
+        "flatten(transform(parts, (a, i) ->"
+        f" transform(slice(parts, i + 2, size(parts)), b -> struct(a AS {a}, b AS {b}))))"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -354,15 +375,11 @@ def q72_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q73_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
+    pairs = (
+        lineitem_baskets(spark, sf_dir)
+        .select(F.explode(basket_pairs("part_a", "part_b")).alias("p"))
+        .select("p.part_a", "p.part_b")
     )
-    pair_expr = F.expr(
-        "flatten(transform(parts, (a, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), b -> struct(a AS part_a, b AS part_b))))"
-    )
-    pairs = baskets.select(F.explode(pair_expr).alias("p")).select("p.part_a", "p.part_b")
     return (
         pairs.groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("support"))
@@ -460,7 +477,6 @@ def q74_pandas_udf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q75_item_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # baskets feeds BOTH the pair explode and the popularity count, and
     # popularity derives from exploding the already-distinct parts
     # arrays — value-identical to DISTINCT(l_orderkey, l_partkey)
@@ -471,15 +487,9 @@ def q75_item_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one job — recompute overlaps for free, a pin only serializes. The
     # committed plan therefore shows the baskets subtree replayed per
     # consumer (4 lineitem scans), traded for zero materialization.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(parts, (a, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), b -> struct(a AS part_a, b AS part_b))))"
-    )
+    baskets = lineitem_baskets(spark, sf_dir)
     support = (
-        baskets.select(F.explode(pair_expr).alias("p"))
+        baskets.select(F.explode(basket_pairs("part_a", "part_b")).alias("p"))
         .select("p.part_a", "p.part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("sup"))
@@ -823,16 +833,9 @@ def _pr_oracle() -> str:
 
 @register("q126_pagerank_copurchase", oracle=_pr_oracle())
 def q126_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(parts, (a, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), b -> struct(a AS a, b AS b))))"
-    )
+    baskets = lineitem_baskets(spark, sf_dir)
     pairs = (
-        baskets.select(F.explode(pair_expr).alias("p"))
+        baskets.select(F.explode(basket_pairs()).alias("p"))
         .select("p.a", "p.b")
         .distinct()
         # Lineage pin (guide §3.3 "materialise an intermediate to truncate
@@ -1023,16 +1026,9 @@ _TRI_MIN_SUP = 2
     """,
 )
 def q146_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(parts, (a, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), b -> struct(a AS a, b AS b))))"
-    )
+    baskets = lineitem_baskets(spark, sf_dir)
     edges = (
-        baskets.select(F.explode(pair_expr).alias("p"))
+        baskets.select(F.explode(basket_pairs()).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("sup"))
         .filter(F.col("sup") >= _TRI_MIN_SUP)
@@ -1307,16 +1303,9 @@ _KHOP_EDGE_CTE = f"""
     """,
 )
 def q161_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(parts, (a, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), b -> struct(a AS a, b AS b))))"
-    )
+    baskets = lineitem_baskets(spark, sf_dir)
     directed = (
-        baskets.select(F.explode(pair_expr).alias("p"))
+        baskets.select(F.explode(basket_pairs()).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("sup"))
         .filter(F.col("sup") >= _TRI_MIN_SUP)
@@ -1378,22 +1367,15 @@ def q161_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q169_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
+    baskets = lineitem_baskets(spark, sf_dir)
     n = baskets.groupBy().agg(F.count(F.lit(1)).alias("n_baskets"))
     item = (
         baskets.select(F.explode("parts").alias("item"))
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("sup_i"))
     )
-    pair_expr = F.expr(
-        "flatten(transform(parts, (a, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), b -> struct(a AS a, b AS b))))"
-    )
     pair = (
-        baskets.select(F.explode(pair_expr).alias("p"))
+        baskets.select(F.explode(basket_pairs()).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("sup"))
         .filter(F.col("sup") >= _TRI_MIN_SUP)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+from .analytics_ext import lineitem_baskets
 from .catalog import register
 
 _FUZZY_MAX_DIST = 4
@@ -1146,15 +1147,11 @@ def q185_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q186_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as D
-    from .dedup import BANDS, MAX_BUCKET, NUM_HASHES
+    from .dedup import lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     sh = D.doc_shingles(docs, "doc_id", "text", 3)
-    cand = D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS),
-        "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    cand = lsh_pairs(sh)
     sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("__sa"))
     sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("__sb"))
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
@@ -1996,15 +1993,11 @@ def q198_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q199_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import STOPWORDS, tokens
     from ..operators import dedup as D
-    from .dedup import BANDS, MAX_BUCKET, NUM_HASHES
+    from .dedup import lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS),
-        "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    pairs = lsh_pairs(sh)
     clusters = D.dedup_clusters(pairs)  # (node, cluster_id)
     tk = docs.select("doc_id", tokens("text").alias("tk"))
     n_tokens = F.size("tk")
@@ -2944,10 +2937,7 @@ _CN_FANOUT, _CN_FANIN = 20, 50
     """,
 )
 def q215_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
+    baskets = lineitem_baskets(spark, sf_dir)
     # Generate each unordered pair ONCE (a < b): support is symmetric,
     # so exploding both directions only to re-count them doubles the
     # rows through the explode and the (a, b) shuffle — the ~630M-row
@@ -3820,15 +3810,11 @@ def q228_basket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q229_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as D
-    from .dedup import BANDS, MAX_BUCKET, NUM_HASHES
+    from .dedup import lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS),
-        "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    pairs = lsh_pairs(sh)
     sa = docs.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa"))
     sb = docs.select(F.col("doc_id").alias("id_b"), F.col("source").alias("sb"))
     return (
@@ -4065,15 +4051,11 @@ def q232_popularity_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q233_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as D
-    from .dedup import BANDS, MAX_BUCKET, NUM_HASHES
+    from .dedup import lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS),
-        "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    pairs = lsh_pairs(sh)
     clusters = D.dedup_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("size"))
     return sizes.groupBy("size").agg(
@@ -4718,10 +4700,7 @@ _TRI_MIN_SUP = 2
     """,
 )
 def q270_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
+    baskets = lineitem_baskets(spark, sf_dir)
     pair_expr = F.expr(
         "flatten(transform(parts, a -> transform(filter(parts, b -> b > a),"
         " b -> struct(a AS a, b AS b))))"

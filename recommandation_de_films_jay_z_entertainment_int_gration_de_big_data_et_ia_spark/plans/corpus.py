@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from ..sources.readers import load_table
 from .catalog import register
-from .textstats import TOKS_SQL
+from .textstats import TOKS_SQL, md5_split_bucket
 
 # ---------------------------------------------------------------------------
 # q106 — unigram LM quality score: avg token log-probability under the
@@ -644,10 +644,7 @@ _SPLIT_H_SQL = (
 )
 def q127_split_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    hexd = "0123456789abcdef"
-    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
-    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
-    h = h1.cast("bigint") * 16 + h2.cast("bigint")
+    h = md5_split_bucket()
     s = docs.select(
         "source", F.when(h < 204, "train").otherwise("eval").alias("split")
     )

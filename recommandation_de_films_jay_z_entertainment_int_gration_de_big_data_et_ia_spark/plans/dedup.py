@@ -24,7 +24,7 @@ NUM_HASHES, BANDS = 8, 4
 # quadratic pair explosion — see operators.dedup.lsh_candidate_pairs).
 MAX_BUCKET = 200
 
-# Mirror of functions.text.minhash_signature's chunked hash family:
+# Mirror of functions.text.minhash_band_keys' chunked hash family:
 # hash i = 8-hex-char chunk (i%4) of md5('<i//4>|' || shingle).
 _SIG_COLS = ", ".join(
     f"list_sort(list_transform(sh, s -> substr(md5('{i // 4}|' || s), {(i % 4) * 8 + 1}, 8)))[1] AS h{i}"
@@ -48,6 +48,17 @@ pairs AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM bkept a JOIN bkept b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
 """
+
+
+def lsh_pairs(sh: DataFrame) -> DataFrame:
+    """The catalog's LSH candidate pairs ``(id_a, id_b)`` over
+    ``doc_shingles`` output keyed by ``doc_id``: NUM_HASHES × BANDS
+    MinHash bands, buckets capped at MAX_BUCKET (``LSH_PAIRS_CTE``'s
+    Spark side)."""
+    return D.lsh_candidate_pairs(
+        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS), "doc_id",
+        max_bucket=MAX_BUCKET,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -79,10 +90,7 @@ def q31_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q32_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    return D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS), "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    return lsh_pairs(sh)
 
 
 # ---------------------------------------------------------------------------
@@ -179,10 +187,7 @@ def q35_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q78_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS), "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    pairs = lsh_pairs(sh)
     return D.dedup_clusters(pairs)
 
 
@@ -220,21 +225,17 @@ splits AS (
     """,
 )
 def q81_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .textstats import md5_split_bucket
+
     docs = load_table(spark, sf_dir, "documents")
     # r12 NEGATIVE RESULT: pinning sh (consumed by bands + both verify
     # sides) measured FLAT in interleaved A/B (min 2.97 unpinned vs
     # 3.04 pinned) — the three replays are parallel stage inputs of one
     # job, the r11 parallel-consumer class. Deliberately unpinned.
     sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS), "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    pairs = lsh_pairs(sh)
     verified = D.jaccard_verify(pairs, sh, "doc_id")
-    hexd = "0123456789abcdef"
-    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
-    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
-    h = h1.cast("bigint") * 16 + h2.cast("bigint")
+    h = md5_split_bucket()
     splits = docs.select(
         "doc_id",
         F.when(h < 204, "train").when(h < 230, "val").otherwise("test").alias("split"),
@@ -277,10 +278,7 @@ def q81_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q90_neardup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = D.lsh_candidate_pairs(
-        D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS), "doc_id",
-        max_bucket=MAX_BUCKET,
-    )
+    pairs = lsh_pairs(sh)
     clusters = D.dedup_clusters(pairs)
     losers = clusters.filter(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias("doc_id")

@@ -7,7 +7,7 @@ here and mirrored verbatim in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, distinct_tokens_sorted, normalize_text, tokens
@@ -17,6 +17,16 @@ from .catalog import register
 NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
 TOKS_SQL = f"regexp_split_to_array({NORM_SQL}, ' +')"
 STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
+
+
+def md5_split_bucket() -> Column:
+    """``doc_id``'s hash-split bucket in 0..255: the first two hex digits
+    of ``md5(doc_id)`` as ``h1 * 16 + h2`` (the oracles'
+    ``strpos('0123456789abcdef', …)`` form)."""
+    hexd = "0123456789abcdef"
+    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
+    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
+    return h1.cast("bigint") * 16 + h2.cast("bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -212,10 +222,7 @@ def q79_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q80_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    hexd = "0123456789abcdef"
-    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
-    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
-    h = (h1.cast("bigint") * 16 + h2.cast("bigint"))
+    h = md5_split_bucket()
     split = (
         F.when(h < 204, "train").when(h < 230, "val").otherwise("test")
     )
@@ -303,10 +310,7 @@ def q86_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("doc_id", F.col("st.n_tokens").alias("n_tokens"))
     )
-    hexd = "0123456789abcdef"
-    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
-    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
-    h = h1.cast("bigint") * 16 + h2.cast("bigint")
+    h = md5_split_bucket()
     split = F.when(h < 204, "train").when(h < 230, "val").otherwise("test")
     return (
         kept.select(split.alias("split"), "doc_id", "n_tokens")
@@ -455,10 +459,7 @@ def q93_quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(0.5) * F.least(stop_ratio * F.lit(10.0), F.lit(1.0)),
         4,
     )
-    hexd = "0123456789abcdef"
-    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
-    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
-    h = h1.cast("bigint") * 16 + h2.cast("bigint")
+    h = md5_split_bucket()
     kept = docs.select(
         "doc_id", "lang", n_tokens.alias("n_tokens"), quality.alias("quality"), h.alias("h")
     ).filter(F.col("h").cast("double") / F.lit(256.0) < F.col("quality"))

@@ -744,3 +744,33 @@ def test_dsir_scores_equal_bruteforce(spark, texts, flags):
         for r in dsir_scores(docs, F.col("is_t")).collect()
     }
     assert got == want
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    arrays=st.lists(
+        st.sets(st.integers(-(2**63), 2**63 - 1), max_size=30), min_size=1, max_size=8
+    )
+)
+def test_basket_pairs_equal_combinations(spark, arrays):
+    """The catalog's shared unordered-pair expression (q73, q75, q126,
+    q146, q161, q169) against ``itertools.combinations`` on sorted
+    distinct int64 arrays, in both struct namings. Every example adds the
+    empty and a 1-element array, and all its arrays are evaluated in one
+    Spark job."""
+    from itertools import combinations
+
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext import (
+        basket_pairs,
+    )
+
+    rows = [sorted(s) for s in [set(), {7}, *arrays]]
+    df = spark.createDataFrame(list(enumerate(rows)), "id int, parts array<bigint>")
+    got = {
+        r.id: ([(p.a, p.b) for p in r.ab], [(p.part_a, p.part_b) for p in r.part_ab])
+        for r in df.select(
+            "id", basket_pairs().alias("ab"), basket_pairs("part_a", "part_b").alias("part_ab")
+        ).collect()
+    }
+    want = {i: (list(combinations(r, 2)),) * 2 for i, r in enumerate(rows)}
+    assert got == want

@@ -28,15 +28,14 @@ from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_s
 )
 
 DATA = "/root/reference/data"
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(f"{DATA}/u.item"), reason="reference data not present"
-)
 
 
 @pytest.fixture(scope="module")
 def base_url(spark, tmp_path_factory):
     from werkzeug.serving import make_server
 
+    if not os.path.exists(f"{DATA}/u.item"):
+        pytest.skip("reference data not present")
     frame = pipelines.build_movie_index(spark, f"{DATA}/u.item")
     index_dir = str(tmp_path_factory.mktemp("movieindex"))
     movierec.write_movie_index(movierec.build_movie_index_tables(frame), index_dir)
