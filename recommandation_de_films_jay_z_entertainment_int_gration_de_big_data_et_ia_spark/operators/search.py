@@ -182,24 +182,30 @@ def multi_match_score(
     ``title^3, genres``): per field, each query term contributes its boost
     if it (fuzzily, AUTO bands) matches a token of that field; total score
     is the sum. Presence-based scoring — deterministic and SQL-mirrorable;
-    BM25 ranking is available separately via :func:`bm25_score`."""
-    def _fuzzy(term_str: str, dist: int):
-        return lambda x: F.levenshtein(x, F.lit(term_str)) <= dist
+    BM25 ranking is available separately via :func:`bm25_score`.
 
-    # tokenize each field ONCE into a temp column — inlining tokens(fld)
-    # per query term would re-run the regexp split |terms| times per row
-    out = df
-    tok_cols = {}
-    for i, fld in enumerate(fields):
-        tok_cols[fld] = f"__mm_toks_{i}"
-        out = out.withColumn(tok_cols[fld], tokens(fld))
-    total = F.lit(0.0)
-    for fld, boost in fields.items():
-        for t in query_terms:
-            d = auto_fuzziness(t) if fuzzy else 0
-            hit = F.exists(F.col(tok_cols[fld]), _fuzzy(t, d))
-            total = total + hit.cast("int").cast("double") * F.lit(boost)
-    return out.withColumn(score_col, F.round(total, 4)).drop(*tok_cols.values())
+    The sum is one ``aggregate`` over an array of ``(term, fuzziness)``
+    structs, so the expression does not grow with the query: a sum
+    unrolled per term and field nests two levels per pair and overflows
+    the JVM stack at a few hundred terms. Each field is tokenized once
+    per row, into the fold's zero value; a token column read inside the
+    lambda would be inlined by Catalyst and re-split for every term."""
+    q = F.array(*[
+        F.struct(F.lit(t).alias("t"), F.lit(auto_fuzziness(t) if fuzzy else 0).alias("d"))
+        for t in query_terms
+    ]).cast("array<struct<t:string,d:int>>")
+    toks = [f"toks_{i}" for i in range(len(fields))]
+    zero = F.struct(*[tokens(fld).alias(c) for fld, c in zip(fields, toks)], F.lit(0.0).alias("s"))
+
+    def add_term(acc: Column, e: Column) -> Column:
+        s = acc["s"]
+        for c, boost in zip(toks, fields.values()):
+            hit = F.exists(acc[c], lambda x: F.levenshtein(x, e["t"]) <= e["d"])
+            s = s + hit.cast("int").cast("double") * F.lit(boost)
+        return acc.withField("s", s)
+
+    total = F.aggregate(q, zero, add_term, lambda acc: acc["s"])
+    return df.withColumn(score_col, F.round(total, 4))
 
 
 def fuzzy_expand_terms(

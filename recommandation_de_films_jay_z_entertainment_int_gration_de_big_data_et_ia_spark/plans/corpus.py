@@ -701,8 +701,10 @@ def q127_split_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q153_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import atexit
     import hashlib
     import os
+    import shutil
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     h1 = (F.col("doc_id") * F.lit(2654435761) + F.lit(40503)) % F.lit(_M32)
@@ -722,6 +724,8 @@ def q153_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         root,
         f"shard_export_{hashlib.md5(f'{sf_dir}:{os.getpid()}'.encode()).hexdigest()[:8]}",
     )
+    # the returned frame reads the export lazily, so it lives until exit
+    atexit.register(shutil.rmtree, path, True)
     (
         ordered.repartition("shard")
         .sortWithinPartitions("shard", "pos")

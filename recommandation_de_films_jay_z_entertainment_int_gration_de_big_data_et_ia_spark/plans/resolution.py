@@ -283,8 +283,10 @@ def bucketed_table(spark: SparkSession, df: DataFrame, name: str, key: str) -> D
     DRIVER PROCESS's cwd and may be read-only or unexpected on a vanilla
     driver session. A stale path from a previous process (the in-memory
     catalog does not survive restarts, the files do) is cleared first —
-    otherwise saveAsTable fails with LOCATION_ALREADY_EXISTS."""
+    otherwise saveAsTable fails with LOCATION_ALREADY_EXISTS. The path is
+    removed when the process exits."""
     if not spark.catalog.tableExists(name):
+        import atexit
         import os
         import shutil
 
@@ -296,6 +298,7 @@ def bucketed_table(spark: SparkSession, df: DataFrame, name: str, key: str) -> D
         path = os.path.join(root, name)
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, path, True)
         (
             df.write.bucketBy(_BKT_BUCKETS, key)
             .sortBy(key)

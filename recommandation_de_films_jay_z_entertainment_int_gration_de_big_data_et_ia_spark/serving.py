@@ -38,6 +38,9 @@ from .operators.movierec import MovieIndex
 
 VERSION = "1.0.0"
 Response = tuple[int, dict[str, Any]]
+# Lucene's default maxClauseCount: a /search with more distinct terms is
+# refused, as Elasticsearch refuses it with ``too_many_clauses``
+MAX_QUERY_TERMS = 1024
 
 # Every endpoint accepts either the raw movies DataFrame (the oracle
 # path) or a loaded movierec.MovieIndex (the production path, answered
@@ -128,14 +131,19 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
     exactly: page < 1 → 1; size outside 1..100 → reset to the DEFAULT 10
     (not clamped to the bound); non-integer page/size hits the int() in
     the try block → the 500 branch. ``total`` is the full hit count
-    (hits.total.value), independent of the page window: the ranked hits
-    are all in hand, so it is their length. On a loaded index only the
-    page's documents are built; the rest stay ``(score, movieId)``
-    pairs."""
+    (hits.total.value), independent of the page window. A query with
+    more than :data:`MAX_QUERY_TERMS` distinct terms is refused through
+    the 500 branch before either backend plans anything. On a loaded
+    index only the page's documents are built."""
     query = args.get("q")
     if not query:
         return 400, {"error": "Query parameter 'q' is required"}
     try:
+        n_terms = len(set(query.lower().split()))
+        if n_terms > MAX_QUERY_TERMS:
+            raise ValueError(
+                f"too_many_clauses: {n_terms} distinct query terms, "
+                f"more than {MAX_QUERY_TERMS}")
         page = int(args.get("page", 1))
         size = int(args.get("size", 10))
         if page < 1:
@@ -144,9 +152,7 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
             size = 10
         lo = (page - 1) * size
         if isinstance(movies, MovieIndex):
-            pairs = movierec.ranked_pairs(movierec.search_scores(movies, query))
-            rows = [movies.by_id[mid] for _s, mid in pairs[lo:lo + size]]
-            total = len(pairs)
+            rows, total = movierec.search_page(movies, query, lo, size)
         else:
             hits = movierec.search_hits(movies, query).orderBy(
                 F.desc("score"), F.asc("movieId")

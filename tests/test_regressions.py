@@ -256,3 +256,42 @@ def test_with_once_semantics_and_barrier(spark):
         s = line.strip()
         if "Filter" in s and "split" in s:
             raise AssertionError(f"with_once barrier breached: {s[:160]}")
+
+
+_TMP_DIRS_SCRIPT = """
+import json, os, sys
+sys.path.insert(0, {root!r})
+import __spark_entry__ as m
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.session import get_spark
+
+def listing():
+    # the shared .tmp/bucketed root itself is not per-process
+    return {{os.path.join(d, n) for d in ({tmp!r}, os.path.join({tmp!r}, "bucketed"))
+            if os.path.isdir(d) for n in os.listdir(d) if n != "bucketed"}}
+
+before = listing()
+spark = get_spark("tmp-dirs", extra_conf={{"spark.sql.shuffle.partitions": "8"}})
+for name in ("q153_shard_manifest", "q144_bucketed_join"):
+    m.queries()[name](spark, {sf!r}).collect()
+print(json.dumps(sorted(listing() - before)))
+"""
+
+
+def test_q153_q144_leave_no_tmp_dirs(sf_dir):
+    """q153's shard export and q144's bucketed tables are per-process
+    directories under ``.tmp``: a process that builds and collects both
+    creates them, and they are gone once it exits."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(TMP)
+    proc = subprocess.run(
+        [sys.executable, "-c", _TMP_DIRS_SCRIPT.format(root=root, tmp=TMP, sf=sf_dir)],
+        capture_output=True, text=True, timeout=600, cwd=root,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    created = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert any("shard_export_" in p for p in created), created
+    assert sum("bkt_" in p for p in created) == 2, created
+    assert [p for p in created if os.path.exists(p)] == []

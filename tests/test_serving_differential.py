@@ -9,15 +9,24 @@ request stream and for the edge cases below. The loaded index must also
 answer without Spark jobs, stay a point-in-time snapshot of the published
 directory, and expand fuzzy terms with its vectorized kernel exactly as
 the scalar ``_lev_le`` does, which in turn matches Spark's ``levenshtein``.
+Each request kernel (bag-distance prefilter, genre bincount, postings
+title probe, top-k) is pinned by Hypothesis to the scan it replaced, on
+indexes built in Python without Spark, and no endpoint may iterate every
+document.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
+import re
 import sys
 import threading
 from collections import Counter
+from operator import itemgetter
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -446,3 +455,238 @@ def test_vectorized_expansion_on_generated_catalog(index, catalog):
             got = movierec._expand(index.buckets, variant, d)
             assert sorted(got) == sorted(
                 k for k in keys if movierec._lev_le(k[1], variant, d)), variant
+
+
+# ---- the request kernels against the scans they replace ----------------
+
+# "a", "A", "!", "á", "ā" and "\x81" all fall in bin 1 (code point mod 32),
+# so a bag bound that forgot the binning would see them as different; "q"
+# shares bin 1 only mod 16.
+_BIN_CHAR = st.sampled_from(["a", "A", "!", "á", "ā", "\x81", "q", "b", "漢", "😀"])
+
+
+def _bin_text(min_size: int, max_size: int):
+    return st.lists(_BIN_CHAR, min_size=min_size, max_size=max_size).map("".join)
+
+
+def _bag_distance(a: str, b: str) -> int:
+    """The binned bag distance by its definition, over Counters."""
+    ca, cb = Counter(ord(c) % 32 for c in a), Counter(ord(c) % 32 for c in b)
+    return max(sum((ca - cb).values()), sum((cb - ca).values()))
+
+
+def _distance(a: str, b: str) -> int:
+    return next(d for d in range(len(a) + len(b) + 1) if movierec._lev_le(a, b, d))
+
+
+@settings(max_examples=300, deadline=None, database=None,
+          suppress_health_check=list(HealthCheck))
+@given(terms=st.lists(_bin_text(0, 8), min_size=1, max_size=6), qt=_bin_text(0, 8))
+def test_bag_bound_is_binned_bag_distance(terms, qt):
+    """``_bag_bound`` is the binned bag distance, both directions of the
+    multiset difference included, and never exceeds the edit distance."""
+    for n in {len(t) for t in terms}:
+        same = [t for t in terms if len(t) == n]
+        rows = movierec._codes("".join(same)).reshape(len(same), n)
+        got = movierec._bag_bound(movierec._hist(rows), movierec._hist(movierec._codes(qt)[None, :])[0],
+                                  len(qt), n)
+        assert got.tolist() == [_bag_distance(t, qt) for t in same], (same, qt)
+        assert all(b <= _distance(t, qt) for b, t in zip(got.tolist(), same))
+
+
+@settings(max_examples=300, deadline=None, database=None,
+          suppress_health_check=list(HealthCheck))
+@given(words=st.lists(_bin_text(0, 10), max_size=25), qt=_bin_text(1, 9),
+       perms=st.lists(st.permutations(range(9)), max_size=4), d=st.integers(0, 3))
+def test_prefiltered_expansion_matches_lev_le(words, qt, perms, d):
+    """The prefiltered expansion accepts exactly the terms ``_lev_le``
+    accepts, with characters that share a bin and with anagrams of the
+    query term: same length and same bag, so the bound passes them all
+    to the edit-distance pass."""
+    anagrams = ["".join(qt[i] for i in p if i < len(qt)) for p in perms]
+    keys = {("title", w) for w in words + anagrams + [qt]}
+    got = movierec._expand(movierec._term_buckets(keys), qt, d)
+    assert len(got) == len(set(got))
+    assert set(got) == {k for k in keys if movierec._lev_le(k[1], qt, d)}, (qt, d)
+
+
+def _norm(text: str) -> str:
+    return re.sub(r"[^a-z0-9]+", " ", text.lower()).strip()
+
+
+def _python_index(docs: list[tuple]) -> movierec.MovieIndex:
+    """A loaded index over ``(movieId, title, genres)`` rows, with the
+    published tables built in Python the way the Spark build writes them:
+    distinct tokens of the normalized title and genres text (an empty
+    text is the one token ``""``), and ``" " + normalized title + " "``."""
+    rows = [
+        {"movieId": mid, "title": title, "release_date": None, "genres": genres,
+         "__title_norm": None if title is None else f" {_norm(title)} "}
+        for mid, title, genres in docs
+    ]
+    postings = [
+        (field, term, mid)
+        for mid, title, genres in docs
+        for field, text in (("title", title), ("genres_text", " ".join(genres or ())))
+        if text is not None
+        for term in sorted(set(_norm(text).split(" ")))
+    ]
+    schema = pa.schema([("movieId", pa.int32()), ("title", pa.string()),
+                        ("release_date", pa.string()), ("genres", pa.list_(pa.string())),
+                        ("__title_norm", pa.string())])
+    post = pa.table({"field": [p[0] for p in postings], "term": [p[1] for p in postings],
+                     "movieId": pa.array([p[2] for p in postings], pa.int32())})
+    return movierec.MovieIndex(
+        docs=None, **movierec._index_arrays(pa.Table.from_pylist(rows, schema), post))
+
+
+_GENRES = ["Action", "Comedy", "Drama", "Sci-Fi", "Children's"]
+_TITLE_WORDS = st.sampled_from(["star", "wars", "the", "a", "Star!", "(1977)", "...", "", "é"])
+_TITLE = st.one_of(st.none(), st.lists(_TITLE_WORDS, max_size=4).map(" ".join))
+_DOCS = st.lists(
+    st.tuples(st.integers(1, 60), _TITLE,
+              st.one_of(st.none(), st.lists(st.sampled_from(_GENRES), max_size=4))),
+    max_size=25, unique_by=itemgetter(0))
+
+
+@settings(max_examples=200, deadline=None, database=None,
+          suppress_health_check=list(HealthCheck))
+@given(docs=_DOCS, genres=st.lists(st.sampled_from(_GENRES + ["Western", "drama"]), max_size=5),
+       movie_id=st.integers(0, 60), k=st.integers(0, 30))
+def test_genre_overlap_kernel_matches_set_scan(docs, genres, movie_id, k):
+    """The genre-postings bincount ranks as the per-document set
+    intersection did: duplicate query or document genres count once,
+    unknown genres count nothing and the source movie is excluded."""
+    index = _python_index(docs)
+    want = set(genres)
+    scan = sorted(
+        ((mid, len(want & set(g or ()))) for mid, _t, g in docs if mid != movie_id),
+        key=lambda p: (-p[1], p[0]))
+    got = movierec.recommend_by_genre_overlap(index, movie_id, genres, k)
+    assert [(d["movieId"], d["score"]) for d in got] == [p for p in scan if p[1]][:k]
+
+
+@settings(max_examples=200, deadline=None, database=None,
+          suppress_health_check=list(HealthCheck))
+@given(docs=_DOCS, words=st.lists(_TITLE_WORDS, max_size=4),
+       extra=st.sampled_from(["", " ", "!!", "--", "star star", "wars wars wars"]),
+       size=st.integers(1, 6))
+def test_title_probe_matches_substring_scan(docs, words, extra, size):
+    """The postings-first title probe finds the documents the full
+    substring scan over ``title_norm`` finds, in movieId order, for
+    empty, punctuation-only and repeated-token phrases and null titles."""
+    index = _python_index(docs)
+    for phrase in (" ".join(words), extra, f"{extra} {' '.join(words)}"):
+        needle = f" {_norm(phrase)} "
+        scan = sorted(mid for mid, title, _g in docs
+                      if title is not None and needle in f" {_norm(title)} ")[:size]
+        status, hits = movierec.lookup_title(index, phrase, size)
+        assert [d["movieId"] for d in hits] == scan, phrase
+        assert status == ("none", "unique", "ambiguous")[min(len(scan), 2)], phrase
+
+
+@settings(max_examples=300, deadline=None, database=None,
+          suppress_health_check=list(HealthCheck))
+@given(scores=st.lists(st.sampled_from([0, 0, 1, 2, 2, 3.0, 4.0]), max_size=40),
+       k=st.integers(0, 45))
+def test_top_k_matches_full_sort(scores, k):
+    """``_top`` is the full sort's first ``k`` nonzero positions (score
+    desc, position asc), ties at the k-th score included, for every k up
+    to past the hit count."""
+    s = np.asarray(scores, np.float64)
+    ranked = sorted(np.flatnonzero(s).tolist(), key=lambda p: (-s[p], p))
+    assert movierec._top(s, k).tolist() == ranked[:k]
+
+
+@settings(max_examples=100, deadline=None, database=None,
+          suppress_health_check=list(HealthCheck))
+@given(docs=_DOCS, q=st.lists(st.sampled_from(["star", "stars", "war", "drama", "the", "a", "é"]),
+                              max_size=5),
+       page=st.integers(0, 8), size=st.integers(1, 4))
+def test_search_page_matches_scan(docs, q, page, size):
+    """A ``/search`` page is the full ranking of the ``_lev_le`` scan over
+    the terms dictionary, sliced, pages past ``total`` included."""
+    index = _python_index(docs)
+    query = " ".join(q)
+    scores: Counter = Counter()
+    for qt in query.split():
+        d = search.auto_fuzziness(qt)
+        for field, boost in (("title", 3.0), ("genres_text", 1.0)):
+            hit = set().union(*(index.postings[k] for k in index.terms
+                                if k[0] == field and movierec._lev_le(k[1], qt, d)))
+            for p in hit:
+                scores[index.ids[p]] += boost
+    ranked = sorted(scores, key=lambda mid: (-scores[mid], mid))
+    rows, total = movierec.search_page(index, query, page * size, size)
+    assert total == len(ranked)
+    assert [r["movieId"] for r in rows] == ranked[page * size:(page + 1) * size]
+
+
+class _NoScanDict(dict):
+    """A dict that answers lookups but raises on iteration."""
+
+    def _scan(self, *_a):
+        raise AssertionError("an endpoint iterated every document")
+
+    __iter__ = keys = values = items = _scan
+
+
+class _CountedTuple(tuple):
+    """A tuple that counts its reads by index and raises on iteration."""
+
+    reads = 0
+
+    def __getitem__(self, i):
+        type(self).reads += 1
+        return super().__getitem__(i)
+
+    def _scan(self, *_a):
+        raise AssertionError("an endpoint iterated every title")
+
+    __iter__ = __contains__ = index = count = _scan
+
+
+def test_stream_never_scans_every_document(stream_oracle, index, catalog, monkeypatch):
+    """No endpoint touches every document: the benchmark's stream and the
+    genre-less keyword path, served from an index whose ``by_id`` and
+    ``title_norm`` raise on iteration, answer exactly as the raw frame
+    does, and no request reads even a tenth of the titles by position."""
+    guarded = dataclasses.replace(
+        index, by_id=_NoScanDict(index.by_id), title_norm=_CountedTuple(index.title_norm))
+    with pytest.raises(AssertionError):
+        list(guarded.by_id)
+    with pytest.raises(AssertionError):
+        list(guarded.title_norm)
+    requests = [(req[0], _arg(req), want) for req, want in stream_oracle] + [
+        ("recommend", {"title": t}, _call(index, "recommend", {"title": t}))
+        for t in _genreless_unique(index, catalog)[:2]]
+    for ep, arg, want in requests:
+        monkeypatch.setattr(_CountedTuple, "reads", 0)
+        assert _call(guarded, ep, arg) == want, (ep, arg)
+        assert _CountedTuple.reads < N_MOVIES // 10, (ep, arg, _CountedTuple.reads)
+
+
+def test_query_term_cap_on_both_backends(spark, tmp_path, monkeypatch):
+    """``/search`` answers up to 1,024 distinct query terms and refuses
+    1,025 through its 500 branch, with equal replies from the index and
+    the raw frame; a term repeated in one request is expanded once."""
+    raw = spark.createDataFrame(
+        [(1, "Alpha Beta (1990)", "01-Jan-1990", ["Drama"]), (2, "Gamma", None, ["Comedy"])],
+        "movieId int, title string, release_date string, genres array<string>")
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path))
+    index = movierec.load_movie_index(spark, str(tmp_path))
+    fillers = [f"zq{i:04d}" for i in range(serving.MAX_QUERY_TERMS)]
+    at_cap = " ".join(["alphx", "drama"] + fillers[:serving.MAX_QUERY_TERMS - 2] + ["drama"])
+    over = " ".join(["alphx", "drama"] + fillers[:serving.MAX_QUERY_TERMS - 1])
+    got = _call(index, "search", {"q": at_cap})
+    assert got == _call(raw, "search", {"q": at_cap})
+    assert got[0] == 200 and [m["movieId"] for m in got[1]["movies"]] == [1]
+    got = _call(index, "search", {"q": over})
+    assert got == _call(raw, "search", {"q": over})
+    assert got[0] == 500 and "too_many_clauses" in got[1]["error"]
+
+    expanded = []
+    kernel = movierec._expand
+    monkeypatch.setattr(movierec, "_expand", lambda b, qt, d: expanded.append(qt) or kernel(b, qt, d))
+    assert _call(index, "search", {"q": "drama Drama alpha drama"})[1]["total"] == 1
+    assert sorted(expanded) == ["alpha", "drama"]
