@@ -5,7 +5,10 @@ against the reference's own MovieLens-100k data on this engine alone
 
 Reference equivalents exercised:
   spark-submit preprocessing.py        → pipelines.preprocess
-  spark-submit elasticsearch_ingest.py → pipelines.build_movie_index
+  spark-submit elasticsearch_ingest.py → pipelines.build_movie_index, then
+                                         movierec.build_movie_index_tables →
+                                         write_movie_index (publish) and
+                                         load_movie_index (serve)
   spark-submit model.py               → pipelines.train_recommendations
   POST /recommend                      → serving.recommend_endpoint
   GET  /search?q=...                   → serving.search_endpoint
@@ -18,6 +21,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -26,6 +30,7 @@ from pyspark.sql import functions as F
 import json
 
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import pipelines, serving
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import movierec
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.session import get_spark
 
 
@@ -40,8 +45,15 @@ def main() -> None:
     print(f"rows={processed.count()}, users={processed.select('userId').distinct().count()}")
 
     print("\n== movie index (genre name-arrays, no unpivot shuffle) ==")
-    index = pipelines.build_movie_index(spark, f"{data}/u.item").cache()
-    index.orderBy("movieId").show(3, truncate=60)
+    movies = pipelines.build_movie_index(spark, f"{data}/u.item")
+    movies.orderBy("movieId").show(3, truncate=60)
+
+    # publish offline, then serve every request from the loaded index,
+    # which holds the whole index in memory
+    with tempfile.TemporaryDirectory(prefix="movieindex-") as index_dir:
+        movierec.write_movie_index(movierec.build_movie_index_tables(movies), index_dir)
+        index = movierec.load_movie_index(spark, index_dir)
+    print(f"published and loaded {len(index.by_id)} movies, {len(index.terms)} terms")
 
     print("== POST /recommend {'title': 'Toy Story'} ==")
     code, body = serving.recommend_endpoint(index, {"title": "Toy Story"})

@@ -31,11 +31,13 @@ from . import serving
 
 def create_app(movies: Any):
     """App factory: ``movies`` is a loaded
-    :class:`~.operators.movierec.MovieIndex` (production: publish the
-    index offline, ``load_movie_index`` it once, pass it here; every
-    request is answered from process memory without a Spark job) or the
-    raw movies DataFrame (each request plans Spark frames). ``None``
-    models the reference's lost-backend state."""
+    :class:`~.operators.movieindex.MovieIndex` (production: publish the
+    index offline, ``movierec.load_movie_index`` it once, pass it here;
+    every request is answered by the :mod:`.operators.movieindex` flows
+    from process memory without a Spark job) or the raw movies DataFrame
+    (the :mod:`.operators.movierec` oracle flows plan Spark frames per
+    request); :func:`serving.backend` picks the flows once per request.
+    ``None`` models the reference's lost-backend state."""
     from flask import Flask, jsonify, request
 
     app = Flask("movie_api")

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokens
+from .movieindex import auto_fuzziness
 
 
 def with_tokens(df: DataFrame, text_col: str, out: str = "toks") -> DataFrame:
@@ -70,12 +71,6 @@ def keyword_match_count(tok_col: Column, words: Sequence[str], min_len: int = 4)
         hit = F.array_contains(tok_col, w).cast("int")
         total = hit if total is None else total + hit
     return total
-
-
-def auto_fuzziness(term_str: str) -> int:
-    """ES ``fuzziness: AUTO`` bands (public rule)."""
-    n = len(term_str)
-    return 0 if n <= 2 else (1 if n <= 5 else 2)
 
 
 def fuzzy_match(tok_col: Column, query_term: str, max_dist: int | None = None) -> Column:

@@ -4,13 +4,13 @@ request→(status, JSON) functions.
 Each function mirrors one Flask route of the reference API
 (``/root/reference/src/api.py``) — same request validation, same branch
 structure (400 / 404 / disambiguation / pagination clamps), same response
-JSON shape — but calls the engine's :mod:`.operators.movierec` flows
-instead of Elasticsearch query DSL. Against a loaded
-:class:`~.operators.movierec.MovieIndex` (production) every request is
-answered from process memory without a Spark job; against the raw movies
-DataFrame (the oracle path) each request plans and collects Spark
-frames. A web framework would wrap these 1:1; none is imported here, so
-the engine core stays framework-free.
+JSON shape — but calls the engine's flows instead of Elasticsearch query
+DSL. Each request picks its flows once (:func:`backend`): those of
+:mod:`.operators.movieindex` answer a loaded ``MovieIndex`` (production)
+from memory without a Spark job, and the oracle flows of
+:mod:`.operators.movierec` plan Spark frames over the raw movies frame;
+the replies are identical (tests/test_serving_differential.py). A web
+framework would wrap these 1:1; none is imported here.
 
 Endpoint ↔ reference map:
 
@@ -28,13 +28,13 @@ Documents use the ES ``_source`` shape the reference indexes
 
 from __future__ import annotations
 
+from types import ModuleType
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .operators import movierec
-from .operators.movierec import MovieIndex
+from .operators import movieindex, movierec
+from .operators.movieindex import MovieIndex
 
 VERSION = "1.0.0"
 Response = tuple[int, dict[str, Any]]
@@ -42,22 +42,17 @@ Response = tuple[int, dict[str, Any]]
 # refused, as Elasticsearch refuses it with ``too_many_clauses``
 MAX_QUERY_TERMS = 1024
 
-# Every endpoint accepts either the raw movies DataFrame (the oracle
-# path) or a loaded movierec.MovieIndex (the production path, answered
-# from memory); responses are identical —
-# tests/test_serving_differential.py compares them request by request.
+
+def backend(movies: DataFrame | MovieIndex) -> ModuleType:
+    """The flow module that answers for ``movies``: the index flows for a
+    loaded index, the raw-frame oracle flows for the movies frame."""
+    return movieindex if isinstance(movies, MovieIndex) else movierec
 
 
-def _rows(hits) -> list:
-    """An index answer is already a list of documents; a frame is collected."""
-    return hits if isinstance(hits, list) else hits.collect()
-
-
-def _doc(row) -> dict[str, Any]:
-    """Row or document → ES ``_source`` document, with the reference
-    ingest's coercions: genres None→[] (elasticsearch_ingest.py:115-124),
+def _doc(d: dict) -> dict[str, Any]:
+    """Document → ES ``_source`` document, with the reference ingest's
+    coercions: genres None→[] (elasticsearch_ingest.py:115-124),
     release_date falsy→None (:130)."""
-    d = row if isinstance(row, dict) else row.asDict()
     return {
         "movieId": int(d["movieId"]),
         "title": str(d["title"]),
@@ -71,35 +66,29 @@ def recommend_endpoint(movies: DataFrame | MovieIndex, body: dict | None) -> Res
     disambiguation branches, then genre-overlap recommendations — or the
     title-keyword fallback when the movie has no genres, with keywords
     taken from the REQUEST title (api.py:124), words longer than 3 chars,
-    minimum_should_match=1."""
-    if not body:
+    minimum_should_match=1. A body that is not a JSON object is invalid
+    and a title that is not a string is missing, as 400s."""
+    if not body or not isinstance(body, dict):
         return 400, {"error": "Invalid JSON"}
     movie_title = body.get("title")
-    if not movie_title:
+    if not movie_title or not isinstance(movie_title, str):
         return 400, {"error": "Title is required"}
 
-    status, hits = movierec.lookup_title(movies, movie_title, size=5)
+    flows = backend(movies)
+    status, hits = flows.lookup_title(movies, movie_title, size=5)
     if status == "none":
         return 404, {"error": "Movie not found"}
-    rows = _rows(hits)
     if status == "ambiguous":
         return 200, {
             "message": "Multiple movies found, please select one",
-            "movies": [{"movieId": int(r["movieId"]), "title": r["title"]} for r in rows],
+            "movies": [{"movieId": int(r["movieId"]), "title": r["title"]} for r in hits],
         }
-    movie = _doc(rows[0])
+    movie = _doc(hits[0])
     if not movie["genres"]:
-        recs = movierec.recommend_by_title_keywords(
-            movies, movie["movieId"], movie_title, k=5, min_len=4
-        )
+        recs = flows.recommend_by_title_keywords(movies, movie["movieId"], movie_title, k=5, min_len=4)
     else:
-        recs = movierec.recommend_by_genre_overlap(
-            movies, movie["movieId"], movie["genres"], k=5
-        )
-    return 200, {
-        "movie": movie,
-        "recommendations": [_doc(r) for r in _rows(recs)],
-    }
+        recs = flows.recommend_by_genre_overlap(movies, movie["movieId"], movie["genres"], k=5)
+    return 200, {"movie": movie, "recommendations": [_doc(r) for r in recs]}
 
 
 def movie_endpoint(movies: DataFrame | MovieIndex, movie_id) -> Response:
@@ -110,19 +99,10 @@ def movie_endpoint(movies: DataFrame | MovieIndex, movie_id) -> Response:
         mid = int(str(movie_id))
     except (TypeError, ValueError) as e:
         return 500, {"error": f"Error retrieving movie: {e}"}
-    frame = movierec.movie_frame(movies)
-    if isinstance(movies, MovieIndex):
-        rows = [frame[mid]] if mid in frame else []
-    else:
-        rows = (
-            frame.filter(frame["movieId"] == mid)
-            .select("movieId", "title", "release_date", "genres")
-            .limit(1)
-            .collect()
-        )
-    if not rows:
+    doc = backend(movies).movie_by_id(movies, mid)
+    if doc is None:
         return 404, {"error": "Movie not found"}
-    return 200, _doc(rows[0])
+    return 200, _doc(doc)
 
 
 def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
@@ -133,13 +113,12 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
     the try block → the 500 branch. ``total`` is the full hit count
     (hits.total.value), independent of the page window. A query with
     more than :data:`MAX_QUERY_TERMS` distinct terms is refused through
-    the 500 branch before either backend plans anything. On a loaded
-    index only the page's documents are built."""
+    the 500 branch before either backend plans anything."""
     query = args.get("q")
     if not query:
         return 400, {"error": "Query parameter 'q' is required"}
     try:
-        n_terms = len(set(query.lower().split()))
+        n_terms = len(set(movieindex.query_terms(query)))
         if n_terms > MAX_QUERY_TERMS:
             raise ValueError(
                 f"too_many_clauses: {n_terms} distinct query terms, "
@@ -150,14 +129,7 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
             page = 1
         if size < 1 or size > 100:
             size = 10
-        lo = (page - 1) * size
-        if isinstance(movies, MovieIndex):
-            rows, total = movierec.search_page(movies, query, lo, size)
-        else:
-            hits = movierec.search_hits(movies, query).orderBy(
-                F.desc("score"), F.asc("movieId")
-            ).select("movieId", "title", "release_date", "genres").collect()
-            rows, total = hits[lo:lo + size], len(hits)
+        rows, total = backend(movies).search_page(movies, query, (page - 1) * size, size)
         return 200, {
             "movies": [_doc(r) for r in rows],
             "page": page,
@@ -169,21 +141,16 @@ def search_endpoint(movies: DataFrame | MovieIndex, args: dict) -> Response:
 
 
 def health_endpoint(movies: DataFrame | MovieIndex | None) -> Response:
-    """``GET /health`` (api.py:240-249). A loaded index is live by
-    construction; for the movies frame the liveness probe is a 1-row
-    query (the engine's analog of ``es.ping()``). The response keeps the
-    reference's keys with ``engine`` standing in for ``elasticsearch``."""
+    """``GET /health`` (api.py:240-249): the backend's ``ping`` (the
+    engine's analog of ``es.ping()``). The response keeps the reference's
+    keys with ``engine`` standing in for ``elasticsearch``."""
     try:
-        ok = movies is not None and (
-            isinstance(movies, MovieIndex)
-            or movierec.movie_frame(movies).limit(1).count() >= 0
-        )
+        ok = movies is not None and backend(movies).ping(movies)
     except Exception:  # noqa: BLE001
         ok = False
-    backend = "OK" if ok else "NOT CONNECTED"
     return (200 if ok else 503), {
         "status": "OK",
-        "engine": backend,
+        "engine": "OK" if ok else "NOT CONNECTED",
         "version": VERSION,
     }
 

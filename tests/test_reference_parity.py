@@ -74,27 +74,25 @@ def test_recommend_flow_toy_story(movie_index):
     """POST /recommend equivalent (api.py:74-158) on real data."""
     status, hits = movierec.lookup_title(movie_index, "Toy Story", size=5)
     assert status == "unique"
-    hit = hits.collect()[0]
-    assert hit.movieId == 1
-    recs = movierec.recommend_by_genre_overlap(movie_index, hit.movieId, list(hit.genres), k=5)
-    rows = recs.collect()
+    hit = hits[0]
+    assert hit["movieId"] == 1
+    rows = movierec.recommend_by_genre_overlap(movie_index, hit["movieId"], list(hit["genres"]), k=5)
     assert len(rows) == 5
-    assert all(r.movieId != 1 for r in rows)
-    assert all(set(r.genres) & {"Animation", "Childrens", "Comedy"} for r in rows)
+    assert all(r["movieId"] != 1 for r in rows)
+    assert all(set(r["genres"]) & {"Animation", "Childrens", "Comedy"} for r in rows)
     # ranking is by overlap desc: top hit shares all 3 genres
-    assert rows[0].score == 3
+    assert rows[0]["score"] == 3
 
 
 def test_recommend_disambiguation_branch(movie_index):
     status, hits = movierec.lookup_title(movie_index, "Star", size=5)
     assert status == "ambiguous"
-    assert 1 < hits.count() <= 5
+    assert 1 < len(hits) <= 5
 
 
 def test_recommend_keyword_fallback(movie_index):
-    recs = movierec.recommend_by_title_keywords(movie_index, 1, "Toy Story (1995)", k=5)
-    rows = recs.collect()
-    assert rows and all(r.movieId != 1 for r in rows)
+    rows = movierec.recommend_by_title_keywords(movie_index, 1, "Toy Story (1995)", k=5)
+    assert rows and all(r["movieId"] != 1 for r in rows)
 
 
 def test_search_fuzzy_pagination(movie_index):

@@ -19,7 +19,9 @@ from __future__ import annotations
 
 import dataclasses
 import json
+import os
 import re
+import subprocess
 import sys
 import threading
 from collections import Counter
@@ -38,6 +40,7 @@ from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_s
     serving,
 )
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
+    movieindex,
     movierec,
     search,
 )
@@ -60,9 +63,14 @@ def raw(spark, catalog):
 
 
 @pytest.fixture(scope="module")
-def index(spark, raw, tmp_path_factory):
-    index_dir = str(tmp_path_factory.mktemp("index"))
-    movierec.write_movie_index(movierec.build_movie_index_tables(raw), index_dir)
+def index_dir(raw, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("index"))
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), out)
+    return out
+
+
+@pytest.fixture(scope="module")
+def index(spark, index_dir):
     return movierec.load_movie_index(spark, index_dir)
 
 
@@ -115,7 +123,7 @@ def test_stream_replies_equal_raw_path(stream_oracle, index, catalog):
 def _genreless_unique(index, catalog) -> list[str]:
     return [
         title for _m, title, _d, genres in catalog[1]["movies"]
-        if not genres and movierec.lookup_title(index, title)[0] == "unique"
+        if not genres and movieindex.lookup_title(index, title)[0] == "unique"
     ]
 
 
@@ -149,6 +157,10 @@ def test_edge_cases_equal_raw_path(raw, index, catalog, words):
         ("recommend", {"title": "Zzqx nothing like it"}),
         ("recommend", {"title": common}),  # ambiguous
         ("recommend", {"title": title}),
+        ("recommend", [1]),  # valid JSON, not an object
+        ("recommend", "x"),
+        ("recommend", {"title": 5}),  # a title that is not a string
+        ("recommend", {"title": ["a"]}),
         ("health", None),
     ]
     genreless = _genreless_unique(index, catalog)
@@ -156,6 +168,10 @@ def test_edge_cases_equal_raw_path(raw, index, catalog, words):
     requests += [("recommend", {"title": t}) for t in genreless[:3]]
     for ep, arg in requests:
         assert _call(index, ep, arg) == _call(raw, ep, arg), (ep, arg)
+    for body in ([1], "x"):
+        assert _call(index, "recommend", body) == (400, {"error": "Invalid JSON"}), body
+    for body in ({"title": 5}, {"title": ["a"]}):
+        assert _call(index, "recommend", body) == (400, {"error": "Title is required"}), body
     status, body = _call(index, "recommend", {"title": genreless[0]})
     assert status == 200 and body["movie"]["genres"] == [] and body["recommendations"]
     status, body = _call(index, "recommend", {"title": common})
@@ -167,27 +183,20 @@ def test_edge_cases_equal_raw_path(raw, index, catalog, words):
 def test_scores_equal_raw_path(raw, index, words, catalog):
     """Beyond the page: every hit and its score, for search and both
     recommendation paths, including a title with repeated long words."""
+    def scored(hits):
+        return [(d["movieId"], d["score"]) for d in hits]
+
     for q in (words[0], f"{words[1]} {words[2][:-1]}x drama", f"{words[3]} {words[3]}"):
-        want = [
-            (r.movieId, r.score)
-            for r in movierec.search_hits(raw, q)
-            .orderBy(F.desc("score"), F.asc("movieId")).collect()
-        ]
-        got = [(d["movieId"], d["score"]) for d in movierec.search_hits(index, q)]
-        assert got == want and got, q
+        scores = movieindex._search_scores(index, q)
+        got = scored(movieindex._hits(index, scores, movieindex._top(scores, len(index.ids))))
+        assert got == scored(movierec.search_hits(raw, q)) and got, q
     long = [w for w in words if len(w) >= 4]
     for title in (f"{long[0]} {long[0]} {long[1]} (1950)", f"{long[2].title()} ({long[2]})"):
-        want = [(r.movieId, r.score)
-                for r in movierec.recommend_by_title_keywords(raw, 1, title, k=20).collect()]
-        got = [(d["movieId"], d["score"])
-               for d in movierec.recommend_by_title_keywords(index, 1, title, k=20)]
-        assert got == want and got, title
+        got = scored(movieindex.recommend_by_title_keywords(index, 1, title, k=20))
+        assert got == scored(movierec.recommend_by_title_keywords(raw, 1, title, k=20)) and got, title
     genres = ["Comedy", "Drama", "Drama", "Western"]
-    want = [(r.movieId, r.score)
-            for r in movierec.recommend_by_genre_overlap(raw, 2, genres, k=30).collect()]
-    got = [(d["movieId"], d["score"])
-           for d in movierec.recommend_by_genre_overlap(index, 2, genres, k=30)]
-    assert got == want and got
+    got = scored(movieindex.recommend_by_genre_overlap(index, 2, genres, k=30))
+    assert got == scored(movierec.recommend_by_genre_overlap(raw, 2, genres, k=30)) and got
 
 
 def test_null_fields_equal_raw_path(spark, tmp_path):
@@ -293,7 +302,7 @@ def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
     assert total0 > 10
 
     # append 20 matching docs, with their postings, under shifted ids
-    ids = [d["movieId"] for d in movierec.search_hits(served, q)[:20]]
+    ids = [d["movieId"] for d in movieindex.search_page(served, q, 0, 20)[0]]
     bump = F.col("movieId") + 100000
     for name, frame in (("docs", tables.docs), ("postings", tables.postings)):
         frame.filter(F.col("movieId").isin(ids)).withColumn("movieId", bump).write.mode(
@@ -310,6 +319,45 @@ def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
     fresh = movierec.load_movie_index(spark, idx_dir)
     assert len(fresh.by_id) == fresh.docs.count() == N_MOVIES + 20
     assert serving.search_endpoint(fresh, {"q": q})[1]["total"] == total0 + 20
+
+
+_NO_SPARK = """
+import json, sys
+sys.modules["pyspark"] = None  # any pyspark import now raises ImportError
+import pyarrow.dataset as ds
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
+    movieindex)
+index_dir, calls = sys.argv[1], json.load(sys.stdin)
+tables = [ds.dataset(f"{index_dir}/{name}.parquet", format="parquet").to_table(columns=cols)
+          for name, cols in (("docs", ["movieId", "title", "release_date", "genres", "__title_norm"]),
+                             ("postings", ["field", "term", "movieId"]))]
+index = movieindex.MovieIndex(docs=None, **movieindex._index_arrays(*tables))
+print(json.dumps([getattr(movieindex, flow)(index, *args) for flow, args in calls]))
+"""
+
+
+def test_index_flows_need_no_pyspark(index_dir, index, catalog, words):
+    """A process where ``pyspark`` cannot be imported builds the index
+    from the published directory with pyarrow, and its flows answer
+    exactly as on the index that ``movierec.load_movie_index`` loaded."""
+    mid, title, _d, genres = next(m for m in catalog[1]["movies"] if m[3])
+    genreless = _genreless_unique(index, catalog)[0]
+    calls = [
+        ("lookup_title", [title]), ("lookup_title", [words[0]]), ("lookup_title", ["Zzqx nothing"]),
+        ("recommend_by_genre_overlap", [mid, genres, 5]),
+        ("recommend_by_title_keywords", [1, genreless, 5]),
+        ("search_page", [f"{words[0]} {words[1][:-1]}x", 0, 10]), ("search_page", [words[2], 5, 5]),
+        ("search_page", ["qxzzqx", 0, 10]),
+        ("movie_by_id", [mid]), ("movie_by_id", [999_999]),
+    ]
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_SPARK, index_dir], input=json.dumps(calls),
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    want = json.loads(json.dumps([getattr(movieindex, flow)(index, *args) for flow, args in calls]))
+    assert json.loads(proc.stdout) == want
+    assert want[0][1] and want[1][0] == "ambiguous" and want[3] and want[5][0] and want[8], want
 
 
 # Small alphabets make near strings likely; the non-ASCII letters cover
@@ -409,7 +457,7 @@ def _assert_expansion_exact(keys, qt: str) -> None:
     """The kernel's expansion of ``qt`` equals the scalar scan's, with no
     key twice."""
     d = search.auto_fuzziness(qt)
-    got = movierec._expand(movierec._term_buckets(keys), qt, d)
+    got = movieindex._expand(movieindex._term_buckets(keys), qt, d)
     assert len(got) == len(set(got)), qt
     assert set(got) == {k for k in keys if movierec._lev_le(k[1], qt, d)}, (qt, d)
 
@@ -452,7 +500,7 @@ def test_vectorized_expansion_on_generated_catalog(index, catalog):
     for qt in sorted(qts):
         for variant in (qt, qt[:-1] + "q", "z" + qt[1:] + "é", "\ud800" + qt[2:]):
             d = search.auto_fuzziness(variant)
-            got = movierec._expand(index.buckets, variant, d)
+            got = movieindex._expand(index.buckets, variant, d)
             assert sorted(got) == sorted(
                 k for k in keys if movierec._lev_le(k[1], variant, d)), variant
 
@@ -487,8 +535,8 @@ def test_bag_bound_is_binned_bag_distance(terms, qt):
     multiset difference included, and never exceeds the edit distance."""
     for n in {len(t) for t in terms}:
         same = [t for t in terms if len(t) == n]
-        rows = movierec._codes("".join(same)).reshape(len(same), n)
-        got = movierec._bag_bound(movierec._hist(rows), movierec._hist(movierec._codes(qt)[None, :])[0],
+        rows = movieindex._codes("".join(same)).reshape(len(same), n)
+        got = movieindex._bag_bound(movieindex._hist(rows), movieindex._hist(movieindex._codes(qt)[None, :])[0],
                                   len(qt), n)
         assert got.tolist() == [_bag_distance(t, qt) for t in same], (same, qt)
         assert all(b <= _distance(t, qt) for b, t in zip(got.tolist(), same))
@@ -505,7 +553,7 @@ def test_prefiltered_expansion_matches_lev_le(words, qt, perms, d):
     to the edit-distance pass."""
     anagrams = ["".join(qt[i] for i in p if i < len(qt)) for p in perms]
     keys = {("title", w) for w in words + anagrams + [qt]}
-    got = movierec._expand(movierec._term_buckets(keys), qt, d)
+    got = movieindex._expand(movieindex._term_buckets(keys), qt, d)
     assert len(got) == len(set(got))
     assert set(got) == {k for k in keys if movierec._lev_le(k[1], qt, d)}, (qt, d)
 
@@ -514,7 +562,7 @@ def _norm(text: str) -> str:
     return re.sub(r"[^a-z0-9]+", " ", text.lower()).strip()
 
 
-def _python_index(docs: list[tuple]) -> movierec.MovieIndex:
+def _python_index(docs: list[tuple]) -> movieindex.MovieIndex:
     """A loaded index over ``(movieId, title, genres)`` rows, with the
     published tables built in Python the way the Spark build writes them:
     distinct tokens of the normalized title and genres text (an empty
@@ -536,8 +584,8 @@ def _python_index(docs: list[tuple]) -> movierec.MovieIndex:
                         ("__title_norm", pa.string())])
     post = pa.table({"field": [p[0] for p in postings], "term": [p[1] for p in postings],
                      "movieId": pa.array([p[2] for p in postings], pa.int32())})
-    return movierec.MovieIndex(
-        docs=None, **movierec._index_arrays(pa.Table.from_pylist(rows, schema), post))
+    return movieindex.MovieIndex(
+        docs=None, **movieindex._index_arrays(pa.Table.from_pylist(rows, schema), post))
 
 
 _GENRES = ["Action", "Comedy", "Drama", "Sci-Fi", "Children's"]
@@ -562,7 +610,7 @@ def test_genre_overlap_kernel_matches_set_scan(docs, genres, movie_id, k):
     scan = sorted(
         ((mid, len(want & set(g or ()))) for mid, _t, g in docs if mid != movie_id),
         key=lambda p: (-p[1], p[0]))
-    got = movierec.recommend_by_genre_overlap(index, movie_id, genres, k)
+    got = movieindex.recommend_by_genre_overlap(index, movie_id, genres, k)
     assert [(d["movieId"], d["score"]) for d in got] == [p for p in scan if p[1]][:k]
 
 
@@ -580,7 +628,7 @@ def test_title_probe_matches_substring_scan(docs, words, extra, size):
         needle = f" {_norm(phrase)} "
         scan = sorted(mid for mid, title, _g in docs
                       if title is not None and needle in f" {_norm(title)} ")[:size]
-        status, hits = movierec.lookup_title(index, phrase, size)
+        status, hits = movieindex.lookup_title(index, phrase, size)
         assert [d["movieId"] for d in hits] == scan, phrase
         assert status == ("none", "unique", "ambiguous")[min(len(scan), 2)], phrase
 
@@ -595,7 +643,7 @@ def test_top_k_matches_full_sort(scores, k):
     to past the hit count."""
     s = np.asarray(scores, np.float64)
     ranked = sorted(np.flatnonzero(s).tolist(), key=lambda p: (-s[p], p))
-    assert movierec._top(s, k).tolist() == ranked[:k]
+    assert movieindex._top(s, k).tolist() == ranked[:k]
 
 
 @settings(max_examples=100, deadline=None, database=None,
@@ -617,7 +665,7 @@ def test_search_page_matches_scan(docs, q, page, size):
             for p in hit:
                 scores[index.ids[p]] += boost
     ranked = sorted(scores, key=lambda mid: (-scores[mid], mid))
-    rows, total = movierec.search_page(index, query, page * size, size)
+    rows, total = movieindex.search_page(index, query, page * size, size)
     assert total == len(ranked)
     assert [r["movieId"] for r in rows] == ranked[page * size:(page + 1) * size]
 
@@ -686,7 +734,7 @@ def test_query_term_cap_on_both_backends(spark, tmp_path, monkeypatch):
     assert got[0] == 500 and "too_many_clauses" in got[1]["error"]
 
     expanded = []
-    kernel = movierec._expand
-    monkeypatch.setattr(movierec, "_expand", lambda b, qt, d: expanded.append(qt) or kernel(b, qt, d))
+    kernel = movieindex._expand
+    monkeypatch.setattr(movieindex, "_expand", lambda b, qt, d: expanded.append(qt) or kernel(b, qt, d))
     assert _call(index, "search", {"q": "drama Drama alpha drama"})[1]["total"] == 1
     assert sorted(expanded) == ["alpha", "drama"]
