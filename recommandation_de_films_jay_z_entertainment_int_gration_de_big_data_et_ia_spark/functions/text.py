@@ -10,7 +10,10 @@ exact same computation is expressible in ANSI SQL for the DuckDB oracle:
   ``hash()`` (Spark murmur3 ≠ DuckDB's hash)
 
 These are the building blocks for the search operators (SURVEY §2.8) and
-the dedup/fingerprint extensions.
+the dedup/fingerprint extensions. Each rule's DuckDB SQL twin
+(``NORM_SQL``, ``TOKS_SQL``, ``SHINGLES_SQL``, ``STOP_SQL``,
+``MD5_SPLIT_BUCKET_SQL``) is defined next to it, and the catalog's
+oracles use these names instead of spelling the SQL again.
 """
 
 from __future__ import annotations
@@ -19,14 +22,28 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Small English stopword list used by language-ID and quality scoring.
-# Fixed and public-domain; keep in sync with the oracle SQL literal.
+# Fixed and public-domain; STOP_SQL is its oracle literal.
 STOPWORDS = ("the", "a", "an", "of", "and", "to", "in", "is", "it", "for")
+STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 
 
 def normalize_text(col: Column | str) -> Column:
     """lower + collapse non-alphanumerics to single spaces + trim."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(F.lower(c), r"[^a-z0-9]+", " "))
+
+
+def norm_sql(col: str = "text") -> str:
+    """DuckDB twin of ``normalize_text`` (its regexp_replace needs 'g')."""
+    return f"trim(regexp_replace(lower({col}), '[^a-z0-9]+', ' ', 'g'))"
+
+
+def toks_sql(col: str = "text") -> str:
+    """DuckDB twin of ``tokens``."""
+    return f"regexp_split_to_array({norm_sql(col)}, ' +')"
+
+
+NORM_SQL, TOKS_SQL = norm_sql(), toks_sql()
 
 
 def tokens(col: Column | str) -> Column:
@@ -47,16 +64,44 @@ def distinct_tokens_sorted(col: Column | str) -> Column:
 def word_shingles(tok: Column, n: int) -> Column:
     """n-gram word shingles: space-joined windows of ``n`` consecutive tokens.
 
-    SQL mirror: ``list_transform(range(1, len(t)-n+2), i -> array_to_string(t[i:i+n-1], ' '))``.
-    Documents shorter than ``n`` tokens yield a single shingle of the whole text.
+    SQL twin: ``word_shingles_sql(n)``. Documents shorter than ``n``
+    tokens yield a single shingle of the whole text.
     """
     idx = F.sequence(F.lit(1), F.greatest(F.size(tok) - F.lit(n - 1), F.lit(1)))
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tok, i, n)))
 
 
+def word_shingles_sql(n: int) -> str:
+    """DuckDB twin of ``word_shingles(tk, n)`` over a token array ``tk``."""
+    return (
+        f"list_transform(range(1, greatest(len(tk)-{n - 1}, 1)+1),"
+        f" i -> array_to_string(tk[i:i+{n - 1}], ' '))"
+    )
+
+
+# The dedup family's distinct 3-word shingles.
+SHINGLES_SQL = f"list_distinct({word_shingles_sql(3)})"
+
+
 def md5_hex(col: Column) -> Column:
     """Portable content hash (md5 hex string — identical in DuckDB)."""
     return F.md5(col)
+
+
+def md5_split_bucket() -> Column:
+    """``doc_id``'s hash-split bucket in 0..255: the first two hex digits
+    of ``md5(doc_id)`` as ``h1 * 16 + h2``. SQL twin:
+    ``MD5_SPLIT_BUCKET_SQL``."""
+    hexd = "0123456789abcdef"
+    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
+    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
+    return h1.cast("bigint") * 16 + h2.cast("bigint")
+
+
+MD5_SPLIT_BUCKET_SQL = (
+    "CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16"
+    " + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT)"
+)
 
 
 def minhash_band_keys(shingles: Column, num_hashes: int, bands: int) -> Column:

@@ -42,6 +42,12 @@ def auto_fuzziness(term_str: str) -> int:
     return 0 if n <= 2 else (1 if n <= 5 else 2)
 
 
+def normalize_phrase(s: str) -> str:
+    """Python twin of ``functions.text.normalize_text``: lowercase,
+    non-alphanumeric runs to one space, trimmed."""
+    return re.sub(r"[^a-z0-9]+", " ", s.lower()).strip()
+
+
 def query_terms(query: str) -> list[str]:
     """The terms of a ``GET /search`` query, repeats kept."""
     return query.lower().split()
@@ -236,7 +242,7 @@ def lookup_title(index: MovieIndex, title_query: str, size: int = 5) -> tuple[st
     The hits are the first ``size`` documents in movieId order. An empty
     phrase has the one token ``""``, as Spark's ``split`` gives an empty
     title."""
-    norm = re.sub(r"[^a-z0-9]+", " ", title_query.lower()).strip()
+    norm = normalize_phrase(title_query)
     needle = f" {norm} "
     lists = sorted((index.postings.get(("title", t), _NONE) for t in set(norm.split(" "))), key=len)
     pos = lists[0]

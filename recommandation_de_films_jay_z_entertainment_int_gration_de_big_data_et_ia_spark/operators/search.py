@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokens
-from .movieindex import auto_fuzziness
+from .movieindex import auto_fuzziness, normalize_phrase
 
 
 def with_tokens(df: DataFrame, text_col: str, out: str = "toks") -> DataFrame:
@@ -52,11 +52,8 @@ def phrase_match(text_col: str | Column, phrase: str) -> Column:
     token-boundary substring match on the normalized text. Analysis
     (lowercase+strip punctuation) is applied to both sides, like Lucene's
     analyzer does."""
-    import re
-
-    norm_phrase = re.sub(r"[^a-z0-9]+", " ", phrase.lower()).strip()
     hay = F.concat(F.lit(" "), normalize_text(text_col), F.lit(" "))
-    return hay.contains(f" {norm_phrase} ")
+    return hay.contains(f" {normalize_phrase(phrase)} ")
 
 
 def keyword_match_count(tok_col: Column, words: Sequence[str], min_len: int = 4) -> Column:

@@ -30,6 +30,17 @@ def basket_pairs(a: str = "a", b: str = "b") -> Column:
     )
 
 
+# The SQL side of ``lineitem_baskets`` and of ``basket_pairs`` exploded
+# as ``(part_a, part_b)`` rows.
+BASKETS_CTE = """baskets AS (
+      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
+      FROM lineitem GROUP BY l_orderkey)"""
+BASKET_PAIRS_CTE = f"""{BASKETS_CTE},
+    pairs AS (
+      SELECT p1.part AS part_a, p2.part AS part_b
+      FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
+      WHERE p1.part < p2.part)"""
+
 # ---------------------------------------------------------------------------
 # q60 — exact percentiles per group (Spark `percentile` ≡ DuckDB
 # `quantile_cont`: both linearly interpolate at p·(n−1))
@@ -231,19 +242,19 @@ def q65_running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # drained result as a batch frame. Complete mode emits every window, and
 # since round 4 the streaming agg uses the exact-DECIMAL sum discipline,
 # so the drained output is bit-identical to batch q44 — which is exactly
-# the oracle below (same SQL as q44). The last rows-only streaming entry
+# the oracle below (q44 registers it too). The last rows-only streaming entry
 # is retired; tests/test_streaming.py still proves the equivalence
 # end-to-end.
-@register(
-    "q66_streaming_tumbling",
-    oracle="""
+TUMBLING_ORACLE = """
     SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start_s, event_type,
            COUNT(*) AS n_events,
            ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
     FROM events
     GROUP BY window_start_s, event_type
-    """,
-)
+    """
+
+
+@register("q66_streaming_tumbling", oracle=TUMBLING_ORACLE)
 def q66_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
@@ -361,14 +372,8 @@ def q72_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q73_cooccurrence",
-    oracle="""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
-    pairs AS (
-      SELECT p1.part AS part_a, p2.part AS part_b
-      FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
-      WHERE p1.part < p2.part)
+    oracle=f"""
+    WITH {BASKET_PAIRS_CTE}
     SELECT part_a, part_b, COUNT(*) AS support
     FROM pairs GROUP BY part_a, part_b
     HAVING COUNT(*) >= 2
@@ -448,14 +453,8 @@ def q74_pandas_udf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q75_item_item_similarity",
-    oracle="""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
-    pairs AS (
-      SELECT p1.part AS part_a, p2.part AS part_b
-      FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
-      WHERE p1.part < p2.part),
+    oracle=f"""
+    WITH {BASKET_PAIRS_CTE},
     support AS (SELECT part_a, part_b, COUNT(*) AS sup FROM pairs GROUP BY part_a, part_b),
     pop AS (SELECT part, COUNT(*) AS pop FROM (SELECT DISTINCT l_orderkey, l_partkey AS part FROM lineitem) GROUP BY part),
     sym AS (
@@ -798,10 +797,8 @@ _PR_ITERS = 3
 
 
 def _pr_oracle() -> str:
-    pair_cte = """
-    baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
+    pair_cte = f"""
+    {BASKETS_CTE},
     pairs AS (
       SELECT DISTINCT p1.part AS a, p2.part AS b
       FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
@@ -1006,9 +1003,7 @@ _TRI_MIN_SUP = 2
 @register(
     "q146_triangle_count",
     oracle=f"""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
+    WITH {BASKETS_CTE},
     pairs AS (
       SELECT p1.part AS a, p2.part AS b, COUNT(*) AS sup
       FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
@@ -1271,9 +1266,7 @@ def q158_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as plain CTEs. Frontier/visited frames stay node-sized (<< edges).
 # ---------------------------------------------------------------------------
 _KHOP_EDGE_CTE = f"""
-    baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
+    {BASKETS_CTE},
     pairs AS (
       SELECT p1.part AS a, p2.part AS b, COUNT(*) AS sup
       FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
@@ -1346,9 +1339,7 @@ def q161_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q169_association_rules",
     oracle=f"""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
+    WITH {BASKETS_CTE},
     n AS (SELECT COUNT(*) AS n_baskets FROM baskets),
     item AS (
       SELECT u.part AS item, COUNT(*) AS sup_i
@@ -1409,9 +1400,7 @@ def q169_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # key — at 100 TB this is the nightly compaction that bounds table
 # growth; at read time the same window is the "current state" view.
 # ---------------------------------------------------------------------------
-@register(
-    "q170_snapshot_compaction",
-    oracle="""
+LATEST_PER_KEY_ORACLE = """
     SELECT user_id, event_type, event_id AS last_event_id,
            epoch_us(ts) // 1000000 AS last_ts_s,
            ROUND(value, 6) AS last_value
@@ -1420,8 +1409,10 @@ def q169_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    ORDER BY ts DESC, event_id DESC) AS rn
       FROM events)
     WHERE rn = 1
-    """,
-)
+    """
+
+
+@register("q170_snapshot_compaction", oracle=LATEST_PER_KEY_ORACLE)
 def q170_snapshot_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 

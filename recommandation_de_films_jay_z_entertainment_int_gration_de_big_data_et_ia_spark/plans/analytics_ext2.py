@@ -13,8 +13,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import (
+    MD5_SPLIT_BUCKET_SQL,
+    NORM_SQL,
+    STOP_SQL,
+    STOPWORDS,
+    TOKS_SQL,
+    md5_hex,
+    normalize_text,
+    tokens,
+)
 from ..sources.readers import load_table
-from .analytics_ext import lineitem_baskets
+from .analytics_ext import (
+    BASKET_PAIRS_CTE,
+    BASKETS_CTE,
+    LATEST_PER_KEY_ORACLE,
+    lineitem_baskets,
+)
 from .catalog import register
 
 _FUZZY_MAX_DIST = 4
@@ -632,23 +647,20 @@ def q178_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the documented SNM trade-off: boundary pairs across blocks are missed,
 # exactly as bucket-boundary pairs are missed by LSH banding.
 # Token/normalization spec is shared with the dedup family
-# (functions.text.normalize_text / plans.dedup.NORM_SQL).
+# (functions.text.normalize_text / NORM_SQL).
 # ---------------------------------------------------------------------------
 _SNM_WINDOW = 3
 _SNM_THRESHOLD = 0.2
-from .dedup import NORM_SQL as _SNM_NORM_SQL  # noqa: E402
-from .dedup import TOKS_SQL as _SNM_TOKS_SQL  # noqa: E402
-from .dedup import LSH_PAIRS_CTE as _LSH_PAIRS_CTE  # noqa: E402
-_LSH_PAIRS_CTE_REC = _LSH_PAIRS_CTE.replace('WITH ', 'WITH RECURSIVE ', 1)
-from .textstats import STOP_SQL as _STOP_SQL  # noqa: E402
+from .dedup import CLUSTER_ID_SQL, COMPONENTS_CTE, LSH_PAIRS_CTE  # noqa: E402
+from . import textstats  # noqa: E402,F401  (keeps the catalog's registration order)
 
 
 @register(
     "q179_sorted_neighborhood",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SNM_NORM_SQL} AS sk,
-             list_distinct({_SNM_TOKS_SQL}) AS tk
+      SELECT doc_id, {NORM_SQL} AS sk,
+             list_distinct({TOKS_SQL}) AS tk
       FROM documents),
     p AS (
       SELECT doc_id AS id_a, tk AS tk_a,
@@ -672,8 +684,6 @@ from .textstats import STOP_SQL as _STOP_SQL  # noqa: E402
     """,
 )
 def q179_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import normalize_text, tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         normalize_text(F.col("text")).alias("sk"),
@@ -988,7 +998,7 @@ def q183_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q184_bigram_perplexity",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SNM_TOKS_SQL} AS tk FROM documents),
+    WITH t AS (SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     bg AS (
       SELECT doc_id, tk[i] AS a, tk[i+1] AS b
       FROM t, UNNEST(range(1, greatest(len(tk) - 1, 0) + 1)) AS u(i)
@@ -1009,8 +1019,6 @@ def q183_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q184_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens(F.col("text")).alias("tk")
     )
@@ -1065,7 +1073,7 @@ _VOCAB_N = 500
 @register(
     "q185_vocab_coverage",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SNM_TOKS_SQL} AS tk FROM documents),
+    WITH t AS (SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     tok AS (SELECT doc_id, u.t AS token FROM t, UNNEST(tk) AS u(t)),
     df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY token),
     vocab AS (
@@ -1085,8 +1093,6 @@ _VOCAB_N = 500
     """,
 )
 def q185_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens(F.col("text")).alias("tk")
     )
@@ -1132,7 +1138,7 @@ def q185_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q186_containment_pairs",
     oracle=f"""
-    {_LSH_PAIRS_CTE}
+    {LSH_PAIRS_CTE}
     SELECT id_a, id_b,
            ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
                  / CAST(len(sa.sh) AS DOUBLE), 4) AS containment_a,
@@ -1376,7 +1382,7 @@ def q189_keep_last_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q190_pmi_cooccurrence",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SNM_TOKS_SQL} AS tk FROM documents),
+    WITH t AS (SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     grams AS (
       SELECT CASE WHEN tk[i] < tk[i+1] THEN tk[i] ELSE tk[i+1] END AS a,
              CASE WHEN tk[i] < tk[i+1] THEN tk[i+1] ELSE tk[i] END AS b
@@ -1401,8 +1407,6 @@ def q189_keep_last_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q190_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(tokens(F.col("text")).alias("tk"))
     pair_expr = F.expr(
         "flatten(transform(tk, (x, i) -> filter(transform(sequence(1, 2), d ->"
@@ -1961,21 +1965,14 @@ def q198_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q199_dedup_keep_best",
     oracle=f"""
-    {_LSH_PAIRS_CTE_REC},
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    reach AS (
-      SELECT a AS node, b AS reachable FROM edges
-      UNION
-      SELECT r.node, e.b FROM reach r JOIN edges e ON r.reachable = e.a),
+    {COMPONENTS_CTE},
     comp AS (
-      SELECT node, LEAST(node, MIN(reachable)) AS cluster_id
+      SELECT node, {CLUSTER_ID_SQL} AS cluster_id
       FROM reach GROUP BY node),
     quality AS (
       SELECT doc_id,
              ROUND(0.5 * least(CAST(len(tk) AS DOUBLE) / 100.0, 1.0)
-                   + 0.5 * least((CAST(len(list_filter(tk, x -> list_contains({_STOP_SQL}, x))) AS DOUBLE)
+                   + 0.5 * least((CAST(len(list_filter(tk, x -> list_contains({STOP_SQL}, x))) AS DOUBLE)
                                   / CAST(len(tk) AS DOUBLE)) * 10.0, 1.0), 4) AS quality
       FROM t),
     ranked AS (
@@ -1991,14 +1988,10 @@ def q198_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q199_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import STOPWORDS, tokens
-    from ..operators import dedup as D
-    from .dedup import lsh_pairs
+    from .dedup import lsh_clusters
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = lsh_pairs(sh)
-    clusters = D.dedup_clusters(pairs)  # (node, cluster_id)
+    clusters = lsh_clusters(docs)  # (node, cluster_id)
     tk = docs.select("doc_id", tokens("text").alias("tk"))
     n_tokens = F.size("tk")
     nstop = F.size(F.filter(F.col("tk"), lambda t: t.isin(*STOPWORDS)))
@@ -2280,7 +2273,7 @@ def q203_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q204_lexical_diversity",
     oracle=f"""
-    WITH t AS (SELECT source, {_SNM_TOKS_SQL} AS tk FROM documents),
+    WITH t AS (SELECT source, {TOKS_SQL} AS tk FROM documents),
     tok AS (SELECT source, u.t AS token FROM t, UNNEST(tk) AS u(t)),
     cnt AS (SELECT source, token, COUNT(*) AS k FROM tok GROUP BY source, token)
     SELECT source,
@@ -2293,8 +2286,6 @@ def q203_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q204_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "source", tokens(F.col("text")).alias("tk")
     )
@@ -2385,10 +2376,9 @@ def q205_churn_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q206_srm_check",
-    oracle="""
+    oracle=f"""
     WITH h AS (
-      SELECT CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16
-             + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT) AS h
+      SELECT {MD5_SPLIT_BUCKET_SQL} AS h
       FROM documents),
     b AS (SELECT CASE WHEN h < 204 THEN 'train' WHEN h < 230 THEN 'val' ELSE 'test' END AS split
           FROM h),
@@ -2640,19 +2630,7 @@ def q210_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a single-batch drain), and the result is bit-identical to batch
 # q170 — which IS the oracle.
 # ---------------------------------------------------------------------------
-@register(
-    "q211_streaming_latest",
-    oracle="""
-    SELECT user_id, event_type, event_id AS last_event_id,
-           epoch_us(ts) // 1000000 AS last_ts_s,
-           ROUND(value, 6) AS last_value
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                                   ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events)
-    WHERE rn = 1
-    """,
-)
+@register("q211_streaming_latest", oracle=LATEST_PER_KEY_ORACLE)
 def q211_streaming_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
@@ -2900,9 +2878,7 @@ _CN_FANOUT, _CN_FANIN = 20, 50
 @register(
     "q215_common_neighbors",
     oracle=f"""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
+    WITH {BASKETS_CTE},
     rawpairs AS (
       SELECT p1.part AS a, p2.part AS b
       FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
@@ -3025,14 +3001,8 @@ def q215_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q216_rec_coverage",
-    oracle="""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
-    pairs AS (
-      SELECT p1.part AS part_a, p2.part AS part_b
-      FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
-      WHERE p1.part < p2.part),
+    oracle=f"""
+    WITH {BASKET_PAIRS_CTE},
     support AS (SELECT part_a, part_b, COUNT(*) AS sup FROM pairs GROUP BY part_a, part_b),
     pop AS (SELECT part, COUNT(*) AS pop FROM (SELECT DISTINCT l_orderkey, l_partkey AS part FROM lineitem) GROUP BY part),
     sym AS (
@@ -3109,7 +3079,7 @@ def q216_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q217_doc_keywords",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SNM_TOKS_SQL} AS tk FROM documents),
+    WITH t AS (SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     tok AS (SELECT doc_id, u.t AS term FROM t, UNNEST(tk) AS u(t)),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
     df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY term),
@@ -3127,8 +3097,6 @@ def q216_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q217_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens(F.col("text")).alias("tk")
     )
@@ -3427,10 +3395,10 @@ def q221_cluster_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q222_dup_rate_by_source",
-    oracle="""
+    oracle=f"""
     WITH h AS (
       SELECT doc_id, source,
-             md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS ch
+             md5({NORM_SQL}) AS ch
       FROM documents),
     within AS (
       SELECT source, ch, COUNT(*) AS n FROM h GROUP BY source, ch),
@@ -3445,8 +3413,6 @@ def q221_cluster_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q222_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import md5_hex, normalize_text
-
     docs = load_table(spark, sf_dir, "documents")
     h = docs.select("doc_id", "source", md5_hex(normalize_text(F.col("text"))).alias("ch"))
     within = h.groupBy("source", "ch").agg(F.count(F.lit(1)).alias("n"))
@@ -3797,7 +3763,7 @@ def q228_basket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q229_source_overlap",
     oracle=f"""
-    {_LSH_PAIRS_CTE},
+    {LSH_PAIRS_CTE},
     src AS (SELECT doc_id, source FROM documents)
     SELECT least(sa.source, sb.source) AS source_a,
            greatest(sa.source, sb.source) AS source_b,
@@ -3893,10 +3859,10 @@ def q230_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q231_langid_confusion",
     oracle=f"""
-    WITH t AS (SELECT lang, {_SNM_TOKS_SQL} AS tk FROM documents),
+    WITH t AS (SELECT lang, {TOKS_SQL} AS tk FROM documents),
     lab AS (
       SELECT CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS actual,
-             CASE WHEN CAST(len(list_filter(tk, x -> list_contains({_STOP_SQL}, x))) AS DOUBLE)
+             CASE WHEN CAST(len(list_filter(tk, x -> list_contains({STOP_SQL}, x))) AS DOUBLE)
                        / CAST(len(tk) AS DOUBLE) > 0.02 THEN 'en' ELSE 'other' END AS predicted
       FROM t),
     cells AS (SELECT actual, predicted, COUNT(*) AS n FROM lab GROUP BY actual, predicted),
@@ -3916,8 +3882,6 @@ def q230_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q231_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import STOPWORDS, tokens
-
     docs = load_table(spark, sf_dir, "documents").select("lang", tokens("text").alias("tk"))
     nstop = F.size(F.filter(F.col("tk"), lambda t: t.isin(*STOPWORDS)))
     ratio = nstop.cast("double") / F.size("tk").cast("double")
@@ -3955,10 +3919,8 @@ def q231_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q232_popularity_bias",
-    oracle="""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
+    oracle=f"""
+    WITH {BASKETS_CTE},
     prs AS (
       SELECT p1.part AS part_a, p2.part AS part_b
       FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
@@ -4031,16 +3993,9 @@ def q232_popularity_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q233_cluster_size_histogram",
     oracle=f"""
-    {_LSH_PAIRS_CTE_REC},
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    reach AS (
-      SELECT a AS node, b AS reachable FROM edges
-      UNION
-      SELECT r.node, e.b FROM reach r JOIN edges e ON r.reachable = e.a),
+    {COMPONENTS_CTE},
     comp AS (
-      SELECT node, LEAST(node, MIN(reachable)) AS cluster_id
+      SELECT node, {CLUSTER_ID_SQL} AS cluster_id
       FROM reach GROUP BY node),
     sizes AS (SELECT cluster_id, COUNT(*) AS size FROM comp GROUP BY cluster_id)
     SELECT CAST(size AS BIGINT) AS size,
@@ -4050,13 +4005,9 @@ def q232_popularity_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q233_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup as D
-    from .dedup import lsh_pairs
+    from .dedup import lsh_clusters
 
-    docs = load_table(spark, sf_dir, "documents")
-    sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = lsh_pairs(sh)
-    clusters = D.dedup_clusters(pairs)
+    clusters = lsh_clusters(load_table(spark, sf_dir, "documents"))
     sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("size"))
     return sizes.groupBy("size").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_clusters"),
@@ -4210,19 +4161,7 @@ def q241_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch in tests/test_streaming.py), so the final state equals batch
 # q211/q170 semantics — which IS the oracle.
 # ---------------------------------------------------------------------------
-@register(
-    "q242_stream_upsert_sink",
-    oracle="""
-    SELECT user_id, event_type, event_id AS last_event_id,
-           epoch_us(ts) // 1000000 AS last_ts_s,
-           ROUND(value, 6) AS last_value
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                                   ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events)
-    WHERE rn = 1
-    """,
-)
+@register("q242_stream_upsert_sink", oracle=LATEST_PER_KEY_ORACLE)
 def q242_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
@@ -4662,9 +4601,7 @@ _TRI_MIN_SUP = 2
 @register(
     "q270_triangle_count",
     oracle=f"""
-    WITH baskets AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS parts
-      FROM lineitem GROUP BY l_orderkey),
+    WITH {BASKETS_CTE},
     rawpairs AS (
       SELECT p1.part AS a, p2.part AS b
       FROM baskets, UNNEST(parts) AS p1(part), UNNEST(parts) AS p2(part)
@@ -4796,7 +4733,7 @@ def q270_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q273_ccnet_ppl_buckets",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_SNM_TOKS_SQL} AS tk FROM documents),
+    WITH t AS (SELECT doc_id, lang, {TOKS_SQL} AS tk FROM documents),
     bg AS (
       SELECT doc_id, tk[i] AS a, tk[i+1] AS b
       FROM t, UNNEST(range(1, greatest(len(tk) - 1, 0) + 1)) AS u(i)
@@ -4831,8 +4768,6 @@ def q270_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q273_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", tokens(F.col("text")).alias("tk")
     )

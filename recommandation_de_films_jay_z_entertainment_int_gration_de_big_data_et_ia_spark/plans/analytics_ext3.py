@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import TOKS_SQL, distinct_tokens_sorted, tokens
 from ..sources.readers import load_table
 from .catalog import register
 
@@ -546,7 +547,7 @@ _REGEXP_Q = "^s[a-z]*[knt]$"
 @register(
     "q297_regexp_query",
     oracle=f"""
-    WITH d AS (SELECT doc_id, list_sort(list_filter(list_distinct({{toks}}),
+    WITH d AS (SELECT doc_id, list_sort(list_filter(list_distinct({TOKS_SQL}),
                  x -> regexp_matches(x, '{_REGEXP_Q}'))) AS hits
                FROM documents)
     SELECT doc_id,
@@ -554,11 +555,9 @@ _REGEXP_Q = "^s[a-z]*[knt]$"
            array_to_string(hits, ',') AS matched_terms
     FROM d WHERE len(hits) > 0
     ORDER BY doc_id
-    """.format(toks="regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')"),
+    """,
 )
 def q297_regexp_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     hits = F.array_sort(
         F.filter(F.array_distinct(tokens("text")), lambda x: x.rlike(_REGEXP_Q))
     )
@@ -589,8 +588,7 @@ _MBP_PREFIX = "st"
     oracle=f"""
     WITH d AS (
       SELECT doc_id,
-             list_distinct(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')) AS ts
+             list_distinct({TOKS_SQL}) AS ts
       FROM documents),
     m AS (
       SELECT doc_id,
@@ -604,8 +602,6 @@ _MBP_PREFIX = "st"
     """,
 )
 def q298_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     ts = F.array_distinct(tokens("text"))
     pref = F.array_sort(F.filter(ts, lambda x: x.startswith(_MBP_PREFIX)))
     d = load_table(spark, sf_dir, "documents").select(
@@ -644,8 +640,7 @@ _SPAN_SLOP = 3
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +') AS tk
+             {TOKS_SQL} AS tk
       FROM documents),
     pos AS (
       SELECT doc_id,
@@ -668,8 +663,6 @@ _SPAN_SLOP = 3
     """,
 )
 def q299_span_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -800,12 +793,11 @@ def q300_frequent_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q301_categorize_text",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id,
              array_to_string(list_transform(
-               regexp_split_to_array(trim(regexp_replace(lower(text),
-                 '[^a-z0-9]+', ' ', 'g')), ' +')[1:5],
+               {TOKS_SQL}[1:5],
                x -> CASE WHEN regexp_matches(x, '^[0-9]+$') THEN '#' ELSE x END),
                ' ') AS category
       FROM documents)
@@ -815,8 +807,6 @@ def q300_frequent_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q301_categorize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     sig = F.concat_ws(
         " ",
         F.transform(
@@ -852,8 +842,7 @@ _BATCH_ROWS = 32
     oracle=f"""
     WITH t AS (
       SELECT lang, doc_id,
-             CAST(len(regexp_split_to_array(trim(regexp_replace(lower(text),
-               '[^a-z0-9]+', ' ', 'g')), ' +')) AS BIGINT) AS n_tok
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n_tok
       FROM documents),
     r AS (
       SELECT lang, n_tok,
@@ -871,8 +860,6 @@ _BATCH_ROWS = 32
     """,
 )
 def q302_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "lang", "doc_id", F.size(tokens("text")).cast("bigint").alias("n_tok")
     )
@@ -917,13 +904,12 @@ def q302_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q303_tokenizer_fertility",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT lang,
              CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]'))
                AS BIGINT) AS n_bpe,
-             CAST(len(regexp_split_to_array(trim(regexp_replace(lower(text),
-               '[^a-z0-9]+', ' ', 'g')), ' +')) AS BIGINT) AS n_ws,
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n_ws,
              CAST(length(text) AS BIGINT) AS n_chars
       FROM documents)
     SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -935,8 +921,6 @@ def q302_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q303_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "lang",
         F.size(F.expr(r"regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)"))
@@ -980,13 +964,10 @@ _CURR_STAGES = 4
     oracle=f"""
     WITH t AS (
       SELECT lang, doc_id,
-             CAST(len(regexp_split_to_array(trim(regexp_replace(lower(text),
-               '[^a-z0-9]+', ' ', 'g')), ' +')) AS BIGINT) AS n_tok,
-             ROUND(CAST(len(list_distinct(regexp_split_to_array(trim(
-               regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')))
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n_tok,
+             ROUND(CAST(len(list_distinct({TOKS_SQL}))
                AS DOUBLE)
-               / len(regexp_split_to_array(trim(regexp_replace(lower(text),
-               '[^a-z0-9]+', ' ', 'g')), ' +')), 4) AS ttr
+               / len({TOKS_SQL}), 4) AS ttr
       FROM documents),
     c AS (
       SELECT lang, n_tok, ttr,
@@ -1003,8 +984,6 @@ _CURR_STAGES = 4
     """,
 )
 def q304_quality_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     tk = tokens("text")
     t = load_table(spark, sf_dir, "documents").select(
         "lang",
@@ -1348,21 +1327,17 @@ _LOOKUP_DOC = 42
     "q311_terms_lookup",
     oracle=f"""
     WITH lu AS (
-      SELECT list_distinct(regexp_split_to_array(trim(regexp_replace(lower(text),
-               '[^a-z0-9]+', ' ', 'g')), ' +')) AS terms
+      SELECT list_distinct({TOKS_SQL}) AS terms
       FROM documents WHERE doc_id = {_LOOKUP_DOC}),
     d AS (
       SELECT doc_id,
-             CAST(len(list_intersect(list_distinct(regexp_split_to_array(trim(
-               regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')),
+             CAST(len(list_intersect(list_distinct({TOKS_SQL}),
                lu.terms)) AS BIGINT) AS n_overlap
       FROM documents, lu WHERE doc_id <> {_LOOKUP_DOC})
     SELECT doc_id, n_overlap FROM d WHERE n_overlap > 0 ORDER BY doc_id
     """,
 )
 def q311_terms_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import distinct_tokens_sorted
-
     docs = load_table(spark, sf_dir, "documents")
     lu = docs.filter(F.col("doc_id") == _LOOKUP_DOC).select(
         distinct_tokens_sorted("text").alias("terms")
@@ -1397,8 +1372,7 @@ _RF_PIVOT = 200
     oracle=f"""
     WITH t AS (
       SELECT doc_id, n_chars,
-             CAST(len(list_filter(regexp_split_to_array(trim(regexp_replace(
-               lower(text), '[^a-z0-9]+', ' ', 'g')), ' +'), x -> x = 'spark'))
+             CAST(len(list_filter({TOKS_SQL}, x -> x = 'spark'))
                AS BIGINT) AS tf
       FROM documents)
     SELECT doc_id, tf, CAST(n_chars AS BIGINT) AS n_chars,
@@ -1408,8 +1382,6 @@ _RF_PIVOT = 200
     """,
 )
 def q312_script_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.col("n_chars").cast("bigint").alias("n_chars"),

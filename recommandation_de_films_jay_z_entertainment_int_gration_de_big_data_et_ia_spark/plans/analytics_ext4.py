@@ -20,22 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import TOKS_SQL, normalize_text, tokens
 from ..sources.readers import load_table
 from .analytics_ext2 import _md5_16bit_sql
 from .catalog import register
 from .similarity import _dot_sql as _dot_sql_ext4
 
-# DuckDB mirror of functions.text.tokens() — keep in sync.
-_TOKS_SQL = (
-    "regexp_split_to_array(trim(regexp_replace(lower(text), "
-    "'[^a-z0-9]+', ' ', 'g')), ' +')"
-)
-
 
 def _tf_sql(term: str) -> str:
     return (
-        f"CAST(len(list_filter({_TOKS_SQL}, x -> x = '{term}')) AS BIGINT)"
+        f"CAST(len(list_filter({TOKS_SQL}, x -> x = '{term}')) AS BIGINT)"
     )
 
 
@@ -45,8 +39,6 @@ def _tf_col(term: str) -> F.Column:
     # text are exactly token boundaries, so the count is identical to
     # size(filter(tokens(text), x = term)) for any [a-z0-9]+ term —
     # and it stays cheap even when Catalyst inlines it into a Filter.
-    from ..functions.text import normalize_text
-
     assert term.replace("'", "") == term and term.isalnum(), term
     return F.regexp_count(
         normalize_text(F.col("text")), F.lit(f"\\b{term}\\b")
@@ -178,8 +170,8 @@ _FIM_MIN_TOKENS = 8
     "q316_fim_transform",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks,
-             CAST(len({_TOKS_SQL}) AS BIGINT) AS n_tokens
+      SELECT doc_id, {TOKS_SQL} AS toks,
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n_tokens
       FROM documents),
     c AS (
       SELECT doc_id, toks, n_tokens,
@@ -352,7 +344,7 @@ def _positions_sql(term: str) -> str:
     "q318_intervals_query",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     p AS (
       SELECT doc_id,
              {_positions_sql(_IV_TERMS[0])} AS pa,
@@ -874,7 +866,7 @@ _SN_WINDOW = 2  # pre = post = 2
     "q325_span_not",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     p AS (
       SELECT doc_id,
              list_filter(list_transform(toks, (x, i) ->
@@ -1091,10 +1083,10 @@ _RE_K = 10
     WITH hits AS (
       SELECT term, doc_id, lang = 'en' AS rel,
              ROW_NUMBER() OVER (PARTITION BY term
-               ORDER BY len(list_filter({_TOKS_SQL}, x -> x = term)) DESC,
+               ORDER BY len(list_filter({TOKS_SQL}, x -> x = term)) DESC,
                         doc_id) AS rank
       FROM documents, (SELECT UNNEST({list(_RE_TERMS)!r}) AS term)
-      WHERE len(list_filter({_TOKS_SQL}, x -> x = term)) > 0)
+      WHERE len(list_filter({TOKS_SQL}, x -> x = term)) > 0)
     SELECT term,
            CAST(COUNT(*) AS BIGINT) AS n_ret,
            ROUND(CAST(SUM(CASE WHEN rel THEN 1 ELSE 0 END) AS DOUBLE)
@@ -1168,7 +1160,7 @@ def q328_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q329_prefix_cache_audit",
     oracle=f"""
     WITH t AS (
-      SELECT source, doc_id, {_TOKS_SQL} AS toks FROM documents),
+      SELECT source, doc_id, {TOKS_SQL} AS toks FROM documents),
     lagged AS (
       SELECT source, doc_id, toks,
              lag(toks) OVER (PARTITION BY source ORDER BY doc_id) AS prev
@@ -1263,7 +1255,7 @@ def q329_prefix_cache_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            COALESCE(lang, '(all)') AS lang,
            CAST(GROUPING(source) * 2 + GROUPING(lang) AS BIGINT) AS lvl,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(len({_TOKS_SQL})) AS BIGINT) AS tokens
+           CAST(SUM(len({TOKS_SQL})) AS BIGINT) AS tokens
     FROM documents GROUP BY ROLLUP(source, lang)
     ORDER BY lvl, source, lang
     """,
@@ -1384,7 +1376,7 @@ _SQS_PHRASE = ("hash", "join")
     "q332_simple_query_string",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     s AS (
       SELECT doc_id,
              CAST(len(list_filter(toks, x -> x = '{_SQS_PLUS}')) AS BIGINT) AS plus_tf,
@@ -1505,7 +1497,7 @@ _SO_SLOP = 3
     "q334_span_or_near",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     p AS (
       SELECT doc_id,
              list_concat(
@@ -1779,7 +1771,7 @@ def q337_name_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q338_max_repeat_run",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     s AS (
       SELECT doc_id, toks,
              list_filter(list_transform(toks, (x, i) ->
@@ -2021,7 +2013,7 @@ _ST_FG_LANG = "en"
     "q341_significant_text",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang = '{_ST_FG_LANG}' AS fg, UNNEST(list_distinct({_TOKS_SQL})) AS token
+      SELECT doc_id, lang = '{_ST_FG_LANG}' AS fg, UNNEST(list_distinct({TOKS_SQL})) AS token
       FROM documents),
     df AS (
       SELECT token,
@@ -2203,7 +2195,7 @@ _PK_CTX = 128
     oracle=f"""
     WITH t AS (
       SELECT source, doc_id,
-             CAST(len({_TOKS_SQL}) AS BIGINT) AS n_toks
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n_toks
       FROM documents),
     c AS (
       SELECT source, doc_id, n_toks,

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import TOKS_SQL, tokens
 from ..operators.relational import scripted_metric, top_hits
 from ..sources.readers import load_table
 from .catalog import register
@@ -451,8 +452,7 @@ _RS_QW, _RS_RQW = 1.0, 2.0
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +') AS tk
+             {TOKS_SQL} AS tk
       FROM documents),
     scored AS (
       SELECT doc_id, tk,
@@ -474,8 +474,6 @@ _RS_QW, _RS_RQW = 1.0, 2.0
     """,
 )
 def q352_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -541,8 +539,7 @@ _SC_GAP = 3
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +') AS tk
+             {TOKS_SQL} AS tk
       FROM documents),
     pos AS (
       SELECT doc_id,
@@ -570,8 +567,6 @@ _SC_GAP = 3
     """,
 )
 def q353_span_containing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -708,8 +703,7 @@ from .analytics_ext2 import _md5_16bit_sql  # noqa: E402  (corpus md5 pattern)
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             len(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +'))
+             len({TOKS_SQL})
                AS n
       FROM documents),
     s AS (
@@ -734,8 +728,6 @@ from .analytics_ext2 import _md5_16bit_sql  # noqa: E402  (corpus md5 pattern)
     """,
 )
 def q355_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(tokens("text")).alias("n")
     )
@@ -789,8 +781,7 @@ _CT_HEAD, _CT_OVERHEAD, _CT_EOS, _CT_CTX = 8, 2, 1, 512
     oracle=f"""
     WITH t AS (
       SELECT source,
-             len(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +'))
+             len({TOKS_SQL})
                AS n
       FROM documents),
     s AS (
@@ -812,8 +803,6 @@ _CT_HEAD, _CT_OVERHEAD, _CT_EOS, _CT_CTX = 8, 2, 1, 512
     """,
 )
 def q356_chat_template_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "source", F.size(tokens("text")).alias("n")
     )
@@ -984,8 +973,7 @@ _SC_VALUES = ", ".join(f"({b_}, {r_})" for b_, r_ in _SC_CONFIGS)
     oracle=f"""
     WITH t AS (
       SELECT source, doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +') AS tk
+             {TOKS_SQL} AS tk
       FROM documents),
     g AS (
       SELECT doc_id,
@@ -1011,8 +999,6 @@ _SC_VALUES = ", ".join(f"({b_}, {r_})" for b_, r_ in _SC_CONFIGS)
     """,
 )
 def q358_lsh_s_curve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -1165,8 +1151,7 @@ _TV_K = 5
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +') AS tk
+             {TOKS_SQL} AS tk
       FROM documents),
     tf AS (
       SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
@@ -1191,8 +1176,6 @@ _TV_K = 5
     """,
 )
 def q360_term_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -1282,8 +1265,7 @@ _TB_FLOOR = 0.2
     oracle=f"""
     WITH per AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(len(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')))
+             CAST(SUM(len({TOKS_SQL}))
                AS BIGINT) AS avail_tokens,
              CAST(SUM(CAST(n_chars AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
                AS proxy
@@ -1316,8 +1298,6 @@ _TB_FLOOR = 0.2
     """,
 )
 def q362_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "n_chars", F.size(tokens("text")).alias("n_tok")
     )
@@ -1400,8 +1380,7 @@ _TL_MARKERS = ("assistant", "endoftext", "spark", "stream")
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +') AS tk
+             {TOKS_SQL} AS tk
       FROM documents),
     hits AS (
       SELECT m.marker,
@@ -1421,8 +1400,6 @@ _TL_MARKERS = ("assistant", "endoftext", "spark", "stream")
     """,
 )
 def q363_template_leak_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -1615,11 +1592,10 @@ def q365_metric_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q366_dataset_card",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT source, lang, n_chars, md5(text) AS fp,
-             len(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +'))
+             len({TOKS_SQL})
                AS n_tok
       FROM documents),
     base AS (
@@ -1643,8 +1619,6 @@ def q365_metric_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q366_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "source",
         "lang",
@@ -1702,8 +1676,7 @@ _VC_LADDER = (10, 50, 100, 500)
     "q367_vocab_coverage_curve",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest(regexp_split_to_array(
-        trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')) AS tk
+      SELECT unnest({TOKS_SQL}) AS tk
       FROM documents),
     cnt AS (SELECT tk, COUNT(*) AS c FROM tok GROUP BY tk),
     ranked AS (
@@ -1724,8 +1697,6 @@ _VC_LADDER = (10, 50, 100, 500)
     """,
 )
 def q367_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     cnt = (
         load_table(spark, sf_dir, "documents")
         .select(F.explode(tokens("text")).alias("tk"))
@@ -1782,12 +1753,11 @@ def q367_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q368_tokenizer_drift",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT source,
              len(string_split(trim(text), ' ')) AS n_old,
-             len(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +'))
+             len({TOKS_SQL})
                AS n_new
       FROM documents)
     SELECT source,
@@ -1801,8 +1771,6 @@ def q367_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q368_tokenizer_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "source",
         F.size(F.split(F.trim("text"), " ")).alias("n_old"),
@@ -1873,8 +1841,7 @@ def _bg_term_sql(t: str, i: int, spark_dialect: bool = False) -> str:
     oracle=f"""
     WITH dd AS (
       SELECT doc_id,
-             regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')
+             {TOKS_SQL}
                AS toks
       FROM documents),
     dl AS (SELECT doc_id, toks, len(toks) AS dl FROM dd),
@@ -1899,8 +1866,6 @@ def _bg_term_sql(t: str, i: int, spark_dialect: bool = False) -> str:
     """,
 )
 def q369_bm25_param_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("toks")
     ).withColumn("dl", F.size("toks"))
@@ -2017,9 +1982,7 @@ _CP_SYS, _CP_TURN, _CP_HDR, _CP_CTX = 6, 12, 2, 256
     oracle=f"""
     WITH t AS (
       SELECT source, doc_id,
-             CAST(len(regexp_split_to_array(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               ' +')) AS BIGINT) AS n
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n
       FROM documents),
     d AS (
       SELECT source, doc_id, n,
@@ -2057,8 +2020,6 @@ _CP_SYS, _CP_TURN, _CP_HDR, _CP_CTX = 6, 12, 2, 256
     """,
 )
 def q371_chat_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", F.size(tokens("text")).cast("bigint").alias("n")
     )
@@ -2396,8 +2357,8 @@ def q376_constant_score_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT source, doc_id,
-             CAST(len({{toks}}) AS BIGINT) AS n,
-             CAST(len(list_distinct({{toks}})) AS BIGINT) AS nd
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n,
+             CAST(len(list_distinct({TOKS_SQL})) AS BIGINT) AS nd
       FROM documents),
     w AS (
       SELECT source, doc_id, n, nd,
@@ -2417,11 +2378,9 @@ def q376_constant_score_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(SUM(chosen_n - rejected_n) AS DOUBLE) / COUNT(*), 4)
              AS mean_len_gap
     FROM p GROUP BY source ORDER BY source
-    """.replace("{toks}", "regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')"),
+    """,
 )
 def q377_preference_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
@@ -2697,13 +2656,11 @@ def q380_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q381_best_of_n_audit",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT source, doc_id,
-             CAST(len(regexp_split_to_array(trim(regexp_replace(lower(text),
-               '[^a-z0-9]+', ' ', 'g')), ' +')) AS BIGINT) AS n,
-             CAST(len(list_distinct(regexp_split_to_array(trim(regexp_replace(
-               lower(text), '[^a-z0-9]+', ' ', 'g')), ' +'))) AS BIGINT) AS nd
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n,
+             CAST(len(list_distinct({TOKS_SQL})) AS BIGINT) AS nd
       FROM documents),
     w AS (
       SELECT source, doc_id, n, nd,
@@ -2737,8 +2694,6 @@ def q380_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q381_best_of_n_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "source",
         "doc_id",

@@ -23,14 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import TOKS_SQL, tokens
 from ..operators.querystring import (
     KeywordField,
     TokenField,
     compile_query_string,
 )
 from ..sources.readers import load_table
-from .analytics_ext4 import _TOKS_SQL
 from .catalog import register
 
 # ---------------------------------------------------------------------------
@@ -72,7 +71,7 @@ _QS_MATCH_DUCK, _QS_SCORE_DUCK = compile_query_string(
     "q382_query_string",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, source, {_TOKS_SQL} AS toks FROM documents)
+      SELECT doc_id, lang, source, {TOKS_SQL} AS toks FROM documents)
     SELECT doc_id, ROUND({_QS_SCORE_DUCK}, 4) AS score
     FROM t WHERE {_QS_MATCH_DUCK}
     ORDER BY score DESC, doc_id LIMIT 20
@@ -119,7 +118,7 @@ _MPP_PREFIX = "k"
     "q383_match_phrase_prefix",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     h AS (
       SELECT doc_id,
              list_filter(list_transform(tk, (x, i) ->
@@ -183,7 +182,7 @@ _SW_GAP = 3
     "q384_span_within",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     pos AS (
       SELECT doc_id,
              list_filter(list_transform(tk, (x, i) ->
@@ -271,7 +270,7 @@ _SM_SLOP = 2
     "q385_span_multi",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     pos AS (
       SELECT doc_id,
              list_filter(list_transform(tk, (x, i) ->

@@ -35,9 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import TOKS_SQL, normalize_text, tokens
 from ..sources.readers import load_table
-from .analytics_ext4 import _TOKS_SQL, _tf_col, _tf_sql
+from .analytics_ext4 import _tf_col, _tf_sql
 from .catalog import register
 
 # ---------------------------------------------------------------------------
@@ -67,7 +67,7 @@ _RF_SIG_PIVOT_SQ = 3600  # sigmoid pivot 60 tokens, squared
       SELECT doc_id,
              {_tf_sql(_RF_TERM)} AS tf,
              CAST(n_chars AS BIGINT) AS nch,
-             CAST(len({_TOKS_SQL}) AS BIGINT) AS n
+             CAST(len({TOKS_SQL}) AS BIGINT) AS n
       FROM documents)
     SELECT doc_id,
            ROUND(CAST(tf AS DOUBLE)
@@ -177,8 +177,6 @@ def q390_sparse_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(acc, e) -> acc + e.value * coalesce(element_at("
         f"map_filter(dv, (k, v) -> v >= {_SV_PRUNE_MIN}), e.key), CAST(0 AS BIGINT)))"
     )
-    from ..functions.text import normalize_text
-
     # The score>0 filter runs AFTER the top-k, not before: filtered
     # before, Catalyst pushes it below the projections and inlines the
     # whole score expression into an INTERPRETED Filter (re-evaluating
@@ -567,11 +565,7 @@ def _bt_oracle() -> str:
     np AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS np FROM wins),
     games AS MATERIALIZED (SELECT i, CAST(SUM(n_ij) AS BIGINT) AS games FROM e GROUP BY 1),
     p0 AS MATERIALIZED (SELECT i, CAST(1.0 AS DOUBLE) AS p FROM wins)
-    """.replace(
-        "{toks}",
-        "regexp_split_to_array(trim(regexp_replace(lower(text), "
-        "'[^a-z0-9]+', ' ', 'g')), ' +')",
-    )
+    """.replace("{toks}", TOKS_SQL)
     iters = []
     for k in range(_BT_ITERS):
         iters.append(f"""
@@ -739,7 +733,7 @@ def q394_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tc AS (
       SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM (SELECT UNNEST({_TOKS_SQL}) AS tok FROM documents)
+      FROM (SELECT UNNEST({TOKS_SQL}) AS tok FROM documents)
       GROUP BY 1),
     pairs AS (
       SELECT substr(tok, CAST(i AS INTEGER), 1) AS left_sym,

@@ -30,9 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import TOKS_SQL, tokens
 from ..sources.readers import load_table
-from .analytics_ext4 import _TOKS_SQL
 from .catalog import register
 
 # ---------------------------------------------------------------------------
@@ -63,7 +62,7 @@ _PS_TOP = 5
 def _ps_oracle() -> str:
     pos_rows = ", ".join(f"({i}, '{t}')" for i, t in enumerate(_PS_PHRASE))
     return f"""
-    WITH t AS MATERIALIZED (SELECT {_TOKS_SQL} AS tk FROM documents),
+    WITH t AS MATERIALIZED (SELECT {TOKS_SQL} AS tk FROM documents),
     uni AS MATERIALIZED (
       SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT unnest(tk) AS tok FROM t) GROUP BY 1),
@@ -217,7 +216,7 @@ _GQ_STOPWORDS = ("the", "a")
     "q397_gopher_quality_rules",
     oracle=f"""
     WITH t AS (
-      SELECT source, {_TOKS_SQL} AS tk FROM documents),
+      SELECT source, {TOKS_SQL} AS tk FROM documents),
     m AS (
       SELECT source,
              CAST(len(tk) AS BIGINT) AS n,
@@ -326,7 +325,7 @@ _RT_LO, _RT_HI = 530, 565  # cpt_x100 range filter
     oracle=f"""
     WITH t AS (
       SELECT source,
-             (100 * CAST(n_chars AS BIGINT)) // CAST(len({_TOKS_SQL}) AS BIGINT)
+             (100 * CAST(n_chars AS BIGINT)) // CAST(len({TOKS_SQL}) AS BIGINT)
                AS cpt_x100
       FROM documents),
     h AS (SELECT * FROM t WHERE cpt_x100 BETWEEN {_RT_LO} AND {_RT_HI})
@@ -392,7 +391,7 @@ _ST_K = 3
     "q399_doc_stitching",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     e AS (
       SELECT doc_id,
              array_to_string(tk[1:{_ST_K}], ' ') AS pre,

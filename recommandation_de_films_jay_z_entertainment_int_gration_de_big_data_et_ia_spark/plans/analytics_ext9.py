@@ -33,9 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.plan import with_once
-from ..functions.text import tokens
+from ..functions.text import TOKS_SQL, tokens
 from ..sources.readers import load_table
-from .analytics_ext4 import _TOKS_SQL
 from .catalog import register
 
 # ---------------------------------------------------------------------------
@@ -182,7 +181,7 @@ def _iv2_alt_sql(pa: str, pb: str) -> str:
 
 _IV2_ORACLE = f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+      SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     p AS (
       SELECT doc_id,
              {_iv2_positions_sql(_IV2_ALT1[0])} AS pa,

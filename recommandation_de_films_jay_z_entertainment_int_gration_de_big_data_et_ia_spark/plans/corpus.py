@@ -29,10 +29,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import (
+    MD5_SPLIT_BUCKET_SQL,
+    TOKS_SQL,
+    md5_split_bucket,
+    tokens,
+    word_shingles,
+    word_shingles_sql,
+)
 from ..sources.readers import load_table
 from .catalog import register
-from .textstats import TOKS_SQL, md5_split_bucket
 
 # ---------------------------------------------------------------------------
 # q106 — unigram LM quality score: avg token log-probability under the
@@ -326,10 +332,7 @@ def q109_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BOILER_N = 5
 _BOILER_K = 3
 # 5-gram occurrences (NOT distinct — the fraction is over occurrences).
-_SH5_SQL = (
-    "list_transform(range(1, greatest(len(tk)-4, 1)+1),"
-    " i -> array_to_string(tk[i:i+4], ' '))"
-)
+_SH5_SQL = word_shingles_sql(_BOILER_N)
 
 
 @register(
@@ -348,8 +351,6 @@ _SH5_SQL = (
     """,
 )
 def q110_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import word_shingles
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -398,10 +399,7 @@ def q110_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # side is never shuffled in full.
 # ---------------------------------------------------------------------------
 _DECON_N = 8
-_SH8_SQL = (
-    "list_distinct(list_transform(range(1, greatest(len(tk)-7, 1)+1),"
-    " i -> array_to_string(tk[i:i+7], ' ')))"
-)
+_SH8_SQL = f"list_distinct({word_shingles_sql(_DECON_N)})"
 
 
 @register(
@@ -417,8 +415,6 @@ _SH8_SQL = (
     """,
 )
 def q111_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import word_shingles
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -542,8 +538,6 @@ def q115_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q123_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import word_shingles
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 97 != 0)
@@ -612,17 +606,11 @@ def q123_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # come from a window over that already-aggregated frame. The corpus is
 # shuffled once.
 # ---------------------------------------------------------------------------
-_SPLIT_H_SQL = (
-    "CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16"
-    " + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT)"
-)
-
-
 @register(
     "q127_split_drift_kl",
     oracle=f"""
     WITH s AS (
-      SELECT source, CASE WHEN {_SPLIT_H_SQL} < 204 THEN 'train' ELSE 'eval' END AS split
+      SELECT source, CASE WHEN {MD5_SPLIT_BUCKET_SQL} < 204 THEN 'train' ELSE 'eval' END AS split
       FROM documents),
     c AS (SELECT source,
                  COUNT(*) FILTER (WHERE split = 'train') + 1 AS n_train,
@@ -1646,8 +1634,6 @@ _NOV_BATCH = 100
     """,
 )
 def q284_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens, word_shingles
-
     t = load_table(spark, sf_dir, "documents").select(
         # floor-div matches the oracle's // exactly (round-6 ADVICE:
         # float-div-then-cast truncates toward zero and loses precision

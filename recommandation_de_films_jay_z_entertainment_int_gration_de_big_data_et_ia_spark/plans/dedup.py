@@ -7,17 +7,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import (
+    MD5_SPLIT_BUCKET_SQL,
+    NORM_SQL,
+    SHINGLES_SQL,
+    TOKS_SQL,
+    md5_split_bucket,
+    tokens,
+)
 from ..operators import dedup as D
 from ..sources.readers import load_table
 from .catalog import register
 
-NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-TOKS_SQL = f"regexp_split_to_array({NORM_SQL}, ' +')"
-# 3-word shingles over the token array `tk` (mirrors functions.text.word_shingles).
-SHINGLES_SQL = (
-    "list_distinct(list_transform(range(1, greatest(len(tk)-2, 1)+1),"
-    " i -> array_to_string(tk[i:i+2], ' ')))"
-)
 NUM_HASHES, BANDS = 8, 4
 # Mega-bucket cap threaded through the operator AND the oracle (buckets
 # with more than MAX_BUCKET members carry no blocking signal and cost
@@ -59,6 +60,28 @@ def lsh_pairs(sh: DataFrame) -> DataFrame:
         D.minhash_bands(sh, "doc_id", num_hashes=NUM_HASHES, bands=BANDS), "doc_id",
         max_bucket=MAX_BUCKET,
     )
+
+
+# Connected components of the LSH pair graph: the recursive closure
+# `reach` over the undirected `edges`; a node's cluster id is
+# CLUSTER_ID_SQL over its `reach` rows (``lsh_clusters``' oracle).
+COMPONENTS_CTE = f"""{LSH_PAIRS_CTE.replace("WITH ", "WITH RECURSIVE ", 1)},
+    edges AS (
+      SELECT id_a AS a, id_b AS b FROM pairs
+      UNION SELECT id_b, id_a FROM pairs),
+    reach AS (
+      SELECT a AS node, b AS reachable FROM edges
+      UNION
+      SELECT r.node, e.b FROM reach r JOIN edges e ON r.reachable = e.a)"""
+CLUSTER_ID_SQL = "LEAST(node, MIN(reachable))"
+
+
+def lsh_clusters(docs: DataFrame) -> DataFrame:
+    """``(node, cluster_id)``: the min-label connected components of the
+    LSH pairs over ``docs``' 3-word shingles (``COMPONENTS_CTE``'s Spark
+    side). Takes the loaded frame so a caller that reuses ``docs``
+    scans it once."""
+    return D.dedup_clusters(lsh_pairs(D.doc_shingles(docs, "doc_id", "text", n=3)))
 
 
 # ---------------------------------------------------------------------------
@@ -172,23 +195,13 @@ def q35_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q78_dedup_clusters",
     oracle=f"""
-    {LSH_PAIRS_CTE.replace("WITH ", "WITH RECURSIVE ", 1)},
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    reach AS (
-      SELECT a AS node, b AS reachable FROM edges
-      UNION
-      SELECT r.node, e.b FROM reach r JOIN edges e ON r.reachable = e.a)
-    SELECT node, LEAST(node, MIN(reachable)) AS cluster_id
+    {COMPONENTS_CTE}
+    SELECT node, {CLUSTER_ID_SQL} AS cluster_id
     FROM reach GROUP BY node
     """,
 )
 def q78_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = lsh_pairs(sh)
-    return D.dedup_clusters(pairs)
+    return lsh_clusters(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -197,13 +210,12 @@ def q78_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hygiene check for training corpora, composed from the dedup + split
 # operators.
 # ---------------------------------------------------------------------------
-_SPLIT_SQL = """
+_SPLIT_SQL = f"""
 splits AS (
   SELECT doc_id,
          CASE WHEN h < 204 THEN 'train' WHEN h < 230 THEN 'val' ELSE 'test' END AS split
   FROM (SELECT doc_id,
-               CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16
-               + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT) AS h
+               {MD5_SPLIT_BUCKET_SQL} AS h
         FROM documents))
 """
 
@@ -225,8 +237,6 @@ splits AS (
     """,
 )
 def q81_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textstats import md5_split_bucket
-
     docs = load_table(spark, sf_dir, "documents")
     # r12 NEGATIVE RESULT: pinning sh (consumed by bands + both verify
     # sides) measured FLAT in interleaved A/B (min 2.97 unpinned vs
@@ -260,27 +270,17 @@ def q81_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q90_neardup_apply",
     oracle=f"""
-    {LSH_PAIRS_CTE.replace("WITH ", "WITH RECURSIVE ", 1)},
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    reach AS (
-      SELECT a AS node, b AS reachable FROM edges
-      UNION
-      SELECT r.node, e.b FROM reach r JOIN edges e ON r.reachable = e.a),
+    {COMPONENTS_CTE},
     losers AS (
       SELECT node FROM reach GROUP BY node
-      HAVING LEAST(node, MIN(reachable)) != node)
+      HAVING {CLUSTER_ID_SQL} != node)
     SELECT doc_id, strlen(text) AS n_bytes FROM documents
     WHERE doc_id NOT IN (SELECT node FROM losers)
     """,
 )
 def q90_neardup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = D.doc_shingles(docs, "doc_id", "text", n=3)
-    pairs = lsh_pairs(sh)
-    clusters = D.dedup_clusters(pairs)
-    losers = clusters.filter(F.col("node") != F.col("cluster_id")).select(
+    losers = lsh_clusters(docs).filter(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias("doc_id")
     )
     return docs.join(losers, "doc_id", "left_anti").select(
@@ -435,8 +435,6 @@ def q252_ppjoin_high_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is quadratic in corpus size (~1M pairs at sf0.1 unsliced) — the
     # entry demonstrates rational-threshold exactness, not volume; q237
     # carries the scale story on discriminative shingle sets.
-    from ..functions.text import tokens
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)

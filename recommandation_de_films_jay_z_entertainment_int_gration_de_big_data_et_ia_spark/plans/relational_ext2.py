@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import NORM_SQL
 from ..operators import dedup as D
 from ..sources.readers import load_table
 from .catalog import register
@@ -18,12 +19,12 @@ from .catalog import register
 # ---------------------------------------------------------------------------
 @register(
     "q36_dedup_apply",
-    oracle="""
+    oracle=f"""
     WITH u AS (SELECT doc_id, text FROM documents
                UNION ALL SELECT doc_id + 10000, text FROM documents),
     survivors AS (
       SELECT MIN(doc_id) AS doc_id
-      FROM u GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))
+      FROM u GROUP BY md5({NORM_SQL}))
     SELECT u.doc_id, strlen(u.text) AS n_bytes
     FROM u JOIN survivors s ON u.doc_id = s.doc_id
     """,

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import NORM_SQL, TOKS_SQL, normalize_text, tokens
 from ..sources.readers import load_table
 from .catalog import register
 
@@ -198,16 +199,14 @@ def incremental_agg_merge(mv: DataFrame, delta: DataFrame) -> DataFrame:
 # 1/(K+1) threshold, so both qualifying and non-qualifying tokens exist.
 # ---------------------------------------------------------------------------
 _MG_K = 30
-_NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"  # DuckDB
-_NORM_SPARK = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '))"  # Spark (global by default)
 
 
 @register(
     "q142_heavy_hitters",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest(regexp_split_to_array({_NORM_SQL}, ' +')) AS token
-      FROM documents WHERE {_NORM_SQL} <> ''),
+      SELECT unnest({TOKS_SQL}) AS token
+      FROM documents WHERE {NORM_SQL} <> ''),
     c AS (SELECT token, COUNT(*) AS cnt FROM toks GROUP BY token),
     n AS (SELECT SUM(cnt) AS n FROM c)
     SELECT token, cnt FROM c, n WHERE cnt * {_MG_K + 1} > n
@@ -216,8 +215,8 @@ _NORM_SPARK = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '))"  # Spark (g
 def q142_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = (
-        docs.filter(F.expr(_NORM_SPARK) != "")
-        .select(F.split(F.expr(_NORM_SPARK), " +").alias("ts"))
+        docs.filter(normalize_text("text") != "")
+        .select(tokens("text").alias("ts"))
         .select(F.explode("ts").alias("token"))
     )
     candidates = misra_gries_candidates(toks, "token", _MG_K).select("token")

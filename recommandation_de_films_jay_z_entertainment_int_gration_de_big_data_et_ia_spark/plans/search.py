@@ -10,13 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import NORM_SQL, TOKS_SQL, normalize_text, tokens, toks_sql
 from ..operators import search as S
 from ..sources.readers import load_table
 from .catalog import register
 
-# SQL mirror of functions.text tokenization.
-NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-TOKS_SQL = f"regexp_split_to_array({NORM_SQL}, ' +')"
 DOCS_CTE = f"WITH d AS (SELECT doc_id, text, lang, source, n_chars, {TOKS_SQL} AS toks FROM documents)"
 
 
@@ -139,9 +137,7 @@ def _bm25_term_sql(t: str, i: int) -> str:
     return f"{idf} * (({tf} * {2.2!r}) / {denom})"
 
 
-@register(
-    "q26_search_bm25",
-    oracle=f"""
+_BM25_ORACLE = f"""
     WITH dd AS (SELECT doc_id, {TOKS_SQL} AS toks, len({TOKS_SQL}) AS dl FROM documents),
     stats AS (
       SELECT COUNT(*) AS n, SUM(dl) AS sumdl,
@@ -152,8 +148,10 @@ def _bm25_term_sql(t: str, i: int) -> str:
     FROM dd CROSS JOIN stats
     ORDER BY score DESC, doc_id ASC
     LIMIT 10
-    """,
-)
+    """
+
+
+@register("q26_search_bm25", oracle=_BM25_ORACLE)
 def q26_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     scored = S.bm25_score(docs, "text", list(_BM25_TERMS))
@@ -167,7 +165,7 @@ def q26_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q27_search_multimatch",
     oracle=f"""
     WITH d AS (SELECT doc_id, {TOKS_SQL} AS toks,
-                      regexp_split_to_array(trim(regexp_replace(lower(source), '[^a-z0-9]+', ' ', 'g')), ' +') AS stoks
+                      {toks_sql("source")} AS stoks
                FROM documents)
     SELECT * FROM (
     SELECT doc_id,
@@ -235,21 +233,7 @@ def q30_match_all_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replacement: stats persisted once per corpus snapshot, corpus scanned
 # once per query batch). Same oracle as q26 — scores must be identical.
 # ---------------------------------------------------------------------------
-@register(
-    "q68_search_bm25_indexed",
-    oracle=f"""
-    WITH dd AS (SELECT doc_id, {TOKS_SQL} AS toks, len({TOKS_SQL}) AS dl FROM documents),
-    stats AS (
-      SELECT COUNT(*) AS n, SUM(dl) AS sumdl,
-             {', '.join(f"SUM(CASE WHEN list_contains(toks, '{t}') THEN 1 ELSE 0 END) AS df{i}" for i, t in enumerate(_BM25_TERMS))}
-      FROM dd)
-    SELECT doc_id,
-           ROUND(({' + '.join(_bm25_term_sql(t, i) for i, t in enumerate(_BM25_TERMS))}) * 1.0, 4) AS score
-    FROM dd CROSS JOIN stats
-    ORDER BY score DESC, doc_id ASC
-    LIMIT 10
-    """,
-)
+@register("q68_search_bm25_indexed", oracle=_BM25_ORACLE)
 def q68_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textindex import bm25_with_index, build_docfreq_index
 
@@ -289,11 +273,9 @@ def q69_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textindex import build_docfreq_index
 
-    from ..functions.text import tokens as _tokens
-
     docs = load_table(spark, sf_dir, "documents")
     docfreq, totals = build_docfreq_index(docs, "text")
-    toked = docs.filter(F.col("doc_id") < 50).select("doc_id", _tokens("text").alias("tk"))
+    toked = docs.filter(F.col("doc_id") < 50).select("doc_id", tokens("text").alias("tk"))
     tf = (
         toked.select("doc_id", F.explode("tk").alias("term"))
         .groupBy("doc_id", "term")
@@ -329,13 +311,8 @@ def q69_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sums.
 # ---------------------------------------------------------------------------
 _MM_TERMS = ("sprak", "window")  # AUTO distances: 1 and 2
-_MM_SRC_TOKS = "regexp_split_to_array(trim(regexp_replace(lower(source), '[^a-z0-9]+', ' ', 'g')), ' +')"
-
-
-@register(
-    "q96_search_multimatch_bm25",
-    oracle=f"""
-    WITH d0 AS (SELECT doc_id, {_MM_SRC_TOKS} AS tk FROM documents),
+_MM_BM25_ORACLE = f"""
+    WITH d0 AS (SELECT doc_id, {toks_sql("source")} AS tk FROM documents),
     d1 AS (SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     e AS (
       SELECT 0 AS f, doc_id, len(tk) AS dl, unnest(tk) AS term FROM d0
@@ -380,8 +357,10 @@ _MM_SRC_TOKS = "regexp_split_to_array(trim(regexp_replace(lower(source), '[^a-z0
       FROM m GROUP BY doc_id)
     SELECT doc_id, ROUND(s, 4) AS score FROM folded
     ORDER BY score DESC, doc_id ASC LIMIT 10
-    """,
-)
+    """
+
+
+@register("q96_search_multimatch_bm25", oracle=_MM_BM25_ORACLE)
 def q96_search_multimatch_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     scored = S.multi_match_bm25(
@@ -390,61 +369,12 @@ def q96_search_multimatch_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
 
 
-# q96's oracle text is reused verbatim for q97: the prebuilt index holds
+# q97 registers q96's oracle (_MM_BM25_ORACLE): the prebuilt index holds
 # exactly the per-field vocabulary/df and corpus stats the inline path
 # derives, so the indexed scorer must reproduce the same scores
 # bit-for-bit (additionally guarded by
 # tests/test_reference_parity.py::test_multimatch_indexed_matches_inline).
-@register(
-    "q97_search_multimatch_indexed",
-    oracle=f"""
-    WITH d0 AS (SELECT doc_id, {_MM_SRC_TOKS} AS tk FROM documents),
-    d1 AS (SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
-    e AS (
-      SELECT 0 AS f, doc_id, len(tk) AS dl, unnest(tk) AS term FROM d0
-      UNION ALL
-      SELECT 1 AS f, doc_id, len(tk) AS dl, unnest(tk) AS term FROM d1),
-    stats AS (
-      SELECT 0 AS f, COUNT(*) AS n, SUM(len(tk)) AS sumdl FROM d0
-      UNION ALL
-      SELECT 1 AS f, COUNT(*) AS n, SUM(len(tk)) AS sumdl FROM d1),
-    vocab AS (SELECT f, term, COUNT(DISTINCT doc_id) AS df FROM e GROUP BY f, term),
-    exp AS (
-      -- ES's max_expansions=50 cut, applied per (field, query term):
-      -- rank candidates (edit distance ASC, term ASC) — the engine's
-      -- deterministic stand-in for Lucene's boost-ranked enumeration
-      -- bound (operators/search.py fuzzy_expand_terms).
-      SELECT f, term, df FROM (
-        SELECT f, term, df, row_number() OVER (
-          PARTITION BY f ORDER BY levenshtein(term, 'sprak') ASC, term ASC) AS rn
-        FROM vocab WHERE levenshtein(term, 'sprak') <= 1) WHERE rn <= 50
-      UNION ALL
-      SELECT f, term, df FROM (
-        SELECT f, term, df, row_number() OVER (
-          PARTITION BY f ORDER BY levenshtein(term, 'window') ASC, term ASC) AS rn
-        FROM vocab WHERE levenshtein(term, 'window') <= 2) WHERE rn <= 50),
-    tfs AS (SELECT f, doc_id, dl, term, COUNT(*) AS tf FROM e GROUP BY f, doc_id, dl, term),
-    m AS (
-      SELECT t.doc_id, t.f, t.term,
-             (CASE WHEN t.f = 0 THEN 3.0 ELSE 1.0 END)
-             * ln((CAST(s.n AS DOUBLE) - CAST(x.df AS DOUBLE) + 0.5)
-                  / (CAST(x.df AS DOUBLE) + 0.5) + 1.0)
-             * (CAST(t.tf AS DOUBLE) * 2.2)
-               / (CAST(t.tf AS DOUBLE)
-                  + 1.2 * ((1.0 - 0.75) + 0.75 * (CAST(t.dl AS DOUBLE)
-                    / (CAST(s.sumdl AS DOUBLE) / CAST(s.n AS DOUBLE))))) AS contrib
-      FROM tfs t
-        JOIN exp x ON t.f = x.f AND t.term = x.term
-        JOIN stats s ON s.f = t.f),
-    folded AS (
-      SELECT doc_id,
-             list_reduce(list_prepend(0.0, list(contrib ORDER BY f, term, contrib)),
-                         (x, y) -> x + y) AS s
-      FROM m GROUP BY doc_id)
-    SELECT doc_id, ROUND(s, 4) AS score FROM folded
-    ORDER BY score DESC, doc_id ASC LIMIT 10
-    """,
-)
+@register("q97_search_multimatch_indexed", oracle=_MM_BM25_ORACLE)
 def q97_search_multimatch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q96's /search semantic against the prebuilt per-field index: the
     query-time plan scans the corpus ONCE (index tables supply the
@@ -754,8 +684,6 @@ _HL_TERM = "spark"
     """,
 )
 def q246_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import normalize_text
-
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select("doc_id", normalize_text(F.col("text")).alias("nt"))
     m = d.withColumn("pos", F.locate(_HL_TERM, F.col("nt"))).filter(F.col("pos") > 0)
@@ -945,7 +873,7 @@ def _bounded_exp_sql() -> str:
 @register(
     "q251_search_fuzzy_bounded",
     oracle=f"""
-    WITH d0 AS (SELECT doc_id, {_MM_SRC_TOKS} AS tk FROM documents),
+    WITH d0 AS (SELECT doc_id, {toks_sql("source")} AS tk FROM documents),
     d1 AS (SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
     e AS (
       SELECT 0 AS f, doc_id, len(tk) AS dl, unnest(tk) AS term FROM d0
@@ -1029,8 +957,6 @@ _SIG_FG_LANG = "fr"
     """,
 )
 def q254_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "lang", F.explode(F.array_distinct(tokens("text"))).alias("term")
@@ -1209,8 +1135,6 @@ def q257_field_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q258_adjacency_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     f = docs.select(
         (F.col("lang") == "en").cast("int").alias("a"),
@@ -1449,8 +1373,6 @@ _MLT_MQT = 10
     """,
 )
 def q272_more_like_this_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens("text").alias("tk"))
     tfs = (
@@ -1537,8 +1459,6 @@ _RARE_MAX_DF = 2
     """,
 )
 def q277_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -1590,8 +1510,6 @@ _SPAN_END = 10
     """,
 )
 def q278_span_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens("text").alias("tk")
     )
@@ -1643,8 +1561,6 @@ _TERMS_SET = ("join", "scan", "window", "batch")
     """,
 )
 def q282_terms_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     qterms = F.array(*[F.lit(t) for t in _TERMS_SET])
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1688,8 +1604,6 @@ _WILDCARD_RE = "^sc.*n$"
     """,
 )
 def q283_wildcard_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     hits = F.array_sort(
         F.filter(
             F.array_distinct(tokens("text")),

@@ -10,13 +10,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import TOKS_SQL
 from ..operators import similarity as SIM
 from ..operators.similarity import cosine
 from ..sources.readers import load_table
 from .catalog import register
 from .search import _BM25_TERMS as _HY_TERMS
 from .search import _bm25_term_sql as _hy_term_sql
-from .search import TOKS_SQL as _HY_TOKS
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -235,7 +235,7 @@ _RRF_K0, _RRF_DEPTH = 60, 100
 @register(
     "q105_hybrid_retrieval_rrf",
     oracle=f"""
-    WITH dd AS (SELECT doc_id, {_HY_TOKS} AS toks, len({_HY_TOKS}) AS dl
+    WITH dd AS (SELECT doc_id, {TOKS_SQL} AS toks, len({TOKS_SQL}) AS dl
                 FROM documents WHERE doc_id != 0),
     stats AS (
       SELECT COUNT(*) AS n, SUM(dl) AS sumdl,

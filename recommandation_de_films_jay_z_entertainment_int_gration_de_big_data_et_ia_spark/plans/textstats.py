@@ -7,26 +7,22 @@ here and mirrored verbatim in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import STOPWORDS, distinct_tokens_sorted, normalize_text, tokens
+from ..functions.text import (
+    MD5_SPLIT_BUCKET_SQL,
+    NORM_SQL,
+    STOP_SQL,
+    STOPWORDS,
+    TOKS_SQL,
+    distinct_tokens_sorted,
+    md5_split_bucket,
+    normalize_text,
+    tokens,
+)
 from ..sources.readers import load_table
 from .catalog import register
-
-NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-TOKS_SQL = f"regexp_split_to_array({NORM_SQL}, ' +')"
-STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
-
-
-def md5_split_bucket() -> Column:
-    """``doc_id``'s hash-split bucket in 0..255: the first two hex digits
-    of ``md5(doc_id)`` as ``h1 * 16 + h2`` (the oracles'
-    ``strpos('0123456789abcdef', …)`` form)."""
-    hexd = "0123456789abcdef"
-    h1 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
-    h2 = F.instr(F.lit(hexd), F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) - 1
-    return h1.cast("bigint") * 16 + h2.cast("bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -158,10 +154,10 @@ def q43_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q70_bpe_token_count",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
            len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_bpe,
-           len(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +')) AS n_ws
+           len({TOKS_SQL}) AS n_ws
     FROM documents
     """,
 )
@@ -208,13 +204,12 @@ def q79_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q80_train_val_test_split",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
       SELECT doc_id,
              CASE WHEN h < 204 THEN 'train' WHEN h < 230 THEN 'val' ELSE 'test' END AS split
       FROM (SELECT doc_id,
-                   CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16
-                   + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT) AS h
+                   {MD5_SPLIT_BUCKET_SQL} AS h
             FROM documents))
     SELECT split, COUNT(*) AS n, CAST(MIN(doc_id) AS BIGINT) AS min_id
     FROM assigned GROUP BY split
@@ -257,8 +252,7 @@ def q80_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, n_tokens,
              CASE WHEN h < 204 THEN 'train' WHEN h < 230 THEN 'val' ELSE 'test' END AS split
       FROM (SELECT doc_id, n_tokens,
-                   CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16
-                   + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT) AS h
+                   {MD5_SPLIT_BUCKET_SQL} AS h
             FROM kept))
     SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
@@ -438,8 +432,7 @@ def q89_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     g AS (SELECT doc_id, lang, n_tokens,
                  ROUND(0.5 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
                        + 0.5 * least(stop_ratio * 10.0, 1.0), 4) AS quality,
-                 (CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16
-                  + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT)) AS h
+                 ({MD5_SPLIT_BUCKET_SQL}) AS h
           FROM s)
     SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_kept,
            CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens
@@ -706,7 +699,7 @@ _FH_H_SQL = (
     "q156_feature_hashing",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(regexp_split_to_array({NORM_SQL}, ' +')) AS t
+      SELECT doc_id, unnest({TOKS_SQL}) AS t
       FROM documents WHERE {NORM_SQL} <> ''),
     tf AS (
       SELECT doc_id, {_FH_H_SQL} % {_FH_BUCKETS} AS idx, COUNT(*) AS tf
@@ -718,7 +711,7 @@ _FH_H_SQL = (
 )
 def q156_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.expr("trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '))")
+    norm = normalize_text("text")
     toks = docs.filter(norm != "").select(
         "doc_id", F.explode(F.split(norm, " +")).alias("t")
     )

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+from ..streaming.windows import session_stats
+from .analytics_ext import TUMBLING_ORACLE
 from .catalog import register
 
 DEC = "decimal(18,4)"
@@ -28,15 +30,7 @@ SUM_VALUE_SQL = "ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)"
 # ---------------------------------------------------------------------------
 # Tumbling 1-hour windows per event_type
 # ---------------------------------------------------------------------------
-@register(
-    "q44_tumbling_window",
-    oracle=f"""
-    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start_s, event_type,
-           COUNT(*) AS n_events, {SUM_VALUE_SQL} AS sum_value
-    FROM events
-    GROUP BY window_start_s, event_type
-    """,
-)
+@register("q44_tumbling_window", oracle=TUMBLING_ORACLE)
 def q44_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
@@ -104,15 +98,7 @@ def q45_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q46_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
-        .agg(
-            F.min(F.col("ts").cast("long")).alias("session_start_s"),
-            F.count(F.lit(1)).alias("n_events"),
-            (F.max(F.col("ts").cast("long")) - F.min(F.col("ts").cast("long"))).alias("duration_s"),
-        )
-        .select("user_id", "session_start_s", "n_events", "duration_s")
-    )
+    return session_stats(ev, "30 minutes")
 
 
 # ---------------------------------------------------------------------------
@@ -1174,17 +1160,7 @@ def q240_dynamic_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_type") == "view", "30 minutes")
         .otherwise("15 minutes")
     )
-    return (
-        ev.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
-        .agg(
-            F.min(F.col("ts").cast("long")).alias("session_start_s"),
-            F.count(F.lit(1)).alias("n_events"),
-            (F.max(F.col("ts").cast("long")) - F.min(F.col("ts").cast("long"))).alias(
-                "duration_s"
-            ),
-        )
-        .select("user_id", "session_start_s", "n_events", "duration_s")
-    )
+    return session_stats(ev, gap)
 
 
 # ---------------------------------------------------------------------------

@@ -7,10 +7,11 @@ structure (400 / 404 / disambiguation / pagination clamps), same response
 JSON shape — but calls the engine's flows instead of Elasticsearch query
 DSL. Each request picks its flows once (:func:`backend`): those of
 :mod:`.operators.movieindex` answer a loaded ``MovieIndex`` (production)
-from memory without a Spark job, and the oracle flows of
-:mod:`.operators.movierec` plan Spark frames over the raw movies frame;
-the replies are identical (tests/test_serving_differential.py). A web
-framework would wrap these 1:1; none is imported here.
+from memory without a Spark job (this module and :mod:`.http_api`
+import no pyspark), and the oracle flows of :mod:`.operators.movierec`
+plan Spark frames over the raw movies frame; the replies are identical
+(tests/test_serving_differential.py). A web framework would wrap these
+1:1; none is imported here.
 
 Endpoint ↔ reference map:
 
@@ -29,12 +30,13 @@ Documents use the ES ``_source`` shape the reference indexes
 from __future__ import annotations
 
 from types import ModuleType
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
-from pyspark.sql import DataFrame
-
-from .operators import movieindex, movierec
+from .operators import movieindex
 from .operators.movieindex import MovieIndex
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 VERSION = "1.0.0"
 Response = tuple[int, dict[str, Any]]
@@ -45,8 +47,14 @@ MAX_QUERY_TERMS = 1024
 
 def backend(movies: DataFrame | MovieIndex) -> ModuleType:
     """The flow module that answers for ``movies``: the index flows for a
-    loaded index, the raw-frame oracle flows for the movies frame."""
-    return movieindex if isinstance(movies, MovieIndex) else movierec
+    loaded index, the raw-frame oracle flows for the movies frame. Only
+    the latter imports pyspark, so a server of a loaded index runs
+    without it."""
+    if isinstance(movies, MovieIndex):
+        return movieindex
+    from .operators import movierec
+
+    return movierec
 
 
 def _doc(d: dict) -> dict[str, Any]:

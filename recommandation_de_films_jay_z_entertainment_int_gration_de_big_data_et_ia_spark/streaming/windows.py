@@ -14,7 +14,7 @@ merging session state store.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -110,16 +110,9 @@ def run_stream_to_memory(
             agg.sparkSession.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def attribution_join(views: DataFrame, clicks: DataFrame) -> DataFrame:
-    """Stream-stream event-time interval join: each click matches the same
-    user's views in the preceding 30 minutes (click attribution).
-
-    Both sides carry watermarks so the join state store can evict: a
-    buffered view can be dropped once the click-side watermark passes
-    view_ts + 30 min. The identical expression runs in batch (tested
-    equivalence) — in batch it is the bucketed-range-join shape; in
-    streaming Spark maintains keyed state per user.
-    """
+def _interval_join(views: DataFrame, clicks: DataFrame, how: str) -> DataFrame:
+    """Watermarked views ⋈ clicks of the same user within
+    [view_ts, view_ts + 30 min): ``attribution_join``'s join, by ``how``."""
     v = views.select(
         F.col("user_id"),
         F.col("event_id").alias("view_id"),
@@ -134,23 +127,33 @@ def attribution_join(views: DataFrame, clicks: DataFrame) -> DataFrame:
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
     ).withWatermark("click_ts", "2 hours")
-    return (
-        v.join(
-            c,
-            [
-                F.col("user_id") == F.col("click_user_id"),
-                F.col("click_ts") >= F.col("view_ts"),
-                F.col("click_ts") < F.col("view_ts") + F.expr("interval 30 minutes"),
-            ],
-            "inner",
-        )
-        .select(
-            "user_id",
-            "view_id",
-            "click_id",
-            F.col("view_ts").cast("long").alias("view_ts_s"),
-            F.col("click_ts").cast("long").alias("click_ts_s"),
-        )
+    return v.join(
+        c,
+        [
+            F.col("user_id") == F.col("click_user_id"),
+            F.col("click_ts") >= F.col("view_ts"),
+            F.col("click_ts") < F.col("view_ts") + F.expr("interval 30 minutes"),
+        ],
+        how,
+    )
+
+
+def attribution_join(views: DataFrame, clicks: DataFrame) -> DataFrame:
+    """Stream-stream event-time interval join: each click matches the same
+    user's views in the preceding 30 minutes (click attribution).
+
+    Both sides carry watermarks so the join state store can evict: a
+    buffered view can be dropped once the click-side watermark passes
+    view_ts + 30 min. The identical expression runs in batch (tested
+    equivalence) — in batch it is the bucketed-range-join shape; in
+    streaming Spark maintains keyed state per user.
+    """
+    return _interval_join(views, clicks, "inner").select(
+        "user_id",
+        "view_id",
+        "click_id",
+        F.col("view_ts").cast("long").alias("view_ts_s"),
+        F.col("click_ts").cast("long").alias("click_ts_s"),
     )
 
 
@@ -205,9 +208,15 @@ def session_counts(
     watermark horizon per user, and availableNow's final eviction batch
     flushes everything the watermark has passed.
     """
+    return session_stats(events.withWatermark("ts", watermark), gap)
+
+
+def session_stats(events: DataFrame, gap: str | Column) -> DataFrame:
+    """Per-user ``session_window(ts, gap)`` sessions as ``(user_id,
+    session_start_s, n_events, duration_s)``: the aggregate shared by
+    ``session_counts`` and the batch q46/q240."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("sw"))
+        events.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
         .agg(
             F.min(F.col("ts").cast("long")).alias("session_start_s"),
             F.count(F.lit(1)).alias("n_events"),
@@ -235,25 +244,7 @@ def attribution_join_left(views: DataFrame, clicks: DataFrame) -> DataFrame:
     State: the view side buffers only views whose window the watermark
     has not closed — bounded by the interval + delay horizon per key.
     """
-    v = views.select(
-        F.col("user_id"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    ).withWatermark("view_ts", "2 hours")
-    c = clicks.select(
-        F.col("user_id").alias("click_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", "2 hours")
-    return v.join(
-        c,
-        [
-            F.col("user_id") == F.col("click_user_id"),
-            F.col("click_ts") >= F.col("view_ts"),
-            F.col("click_ts") < F.col("view_ts") + F.expr("interval 30 minutes"),
-        ],
-        "leftOuter",
-    ).select("user_id", "view_id", "click_id")
+    return _interval_join(views, clicks, "leftOuter").select("user_id", "view_id", "click_id")
 
 
 def foreachbatch_upsert_run(

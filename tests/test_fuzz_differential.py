@@ -11,6 +11,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.functions.text import (
+    NORM_SQL,
+    TOKS_SQL,
     normalize_text,
     tokens,
 )
@@ -54,12 +56,10 @@ def test_normalize_and_tokenize_match_duckdb(spark, duck, texts):
     want = {
         r[0]: (r[1], r[2], r[3])
         for r in duck.execute(
-            """
-            SELECT id,
-                   trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm,
-                   array_to_string(regexp_split_to_array(
-                     trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' +'), chr(1)) AS toks,
-                   md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
+            f"""
+            SELECT id, {NORM_SQL} AS norm,
+                   array_to_string({TOKS_SQL}, chr(1)) AS toks,
+                   md5({NORM_SQL}) AS fp
             FROM t
             """
         ).fetchall()
@@ -71,7 +71,7 @@ def test_normalize_and_tokenize_match_duckdb(spark, duck, texts):
 @given(texts=TEXTS)
 def test_minhash_band_keys_match_duckdb(spark, duck, texts):
     """The LSH band-key construction (chunked md5 minhash) against its SQL
-    mirror from plans/dedup.py, on generated text."""
+    mirror from plans/dedup.py and functions/text.py, on generated text."""
     import pandas as pd
     from pyspark.sql import functions as F2
 
@@ -79,9 +79,10 @@ def test_minhash_band_keys_match_duckdb(spark, duck, texts):
         doc_shingles,
         minhash_bands,
     )
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.dedup import (
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.functions.text import (
         SHINGLES_SQL,
-        TOKS_SQL,
+    )
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.dedup import (
         _BANDS_UNION,
         _SIG_COLS,
     )
@@ -111,7 +112,6 @@ def test_simhash_matches_duckdb(spark, duck, texts):
         simhash_fingerprints,
     )
     from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.dedup import (
-        TOKS_SQL,
         _simhash_sql,
     )
 

@@ -551,9 +551,12 @@ def test_misra_gries_superset_guarantee_any_partitioning(spark, sf_dir):
     (the exact-recount filter makes the sketch a pruning device only)."""
     from pyspark.sql import functions as F
 
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.functions.text import (
+        normalize_text,
+        tokens,
+    )
     from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.resolution import (
         _MG_K,
-        _NORM_SPARK,
         misra_gries_candidates,
     )
     from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources.readers import (
@@ -562,8 +565,8 @@ def test_misra_gries_superset_guarantee_any_partitioning(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     toks = (
-        docs.filter(F.expr(_NORM_SPARK) != "")
-        .select(F.split(F.expr(_NORM_SPARK), " +").alias("ts"))
+        docs.filter(normalize_text("text") != "")
+        .select(tokens("text").alias("ts"))
         .select(F.explode("ts").alias("token"))
     )
     n = toks.count()

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.functions.text import (
+    TOKS_SQL,
     tokens,
 )
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators.querystring import (
@@ -37,11 +38,6 @@ FIELDS = {
     "lang": KeywordField("lang"),
     "source": KeywordField("source"),
 }
-
-_TOKS_SQL = (
-    "regexp_split_to_array(trim(regexp_replace(lower(text), "
-    "'[^a-z0-9]+', ' ', 'g')), ' +')"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -180,7 +176,7 @@ def test_random_queries_dual_backend_parity(spark, sf_dir):
             "doc_id", F.round(F.expr(ss), 4).alias("score")
         )
         want = duck.execute(
-            f"WITH t AS (SELECT doc_id, lang, source, {_TOKS_SQL} AS toks "
+            f"WITH t AS (SELECT doc_id, lang, source, {TOKS_SQL} AS toks "
             f"FROM documents) "
             f"SELECT doc_id, ROUND({sd}, 4) AS score FROM t WHERE {md}"
         ).df()

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from perfbench import checks, gen
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import (
+    http_api,
     pipelines,
     serving,
 )
@@ -325,21 +326,27 @@ _NO_SPARK = """
 import json, sys
 sys.modules["pyspark"] = None  # any pyspark import now raises ImportError
 import pyarrow.dataset as ds
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import http_api
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
     movieindex)
-index_dir, calls = sys.argv[1], json.load(sys.stdin)
+index_dir, (calls, requests) = sys.argv[1], json.load(sys.stdin)
 tables = [ds.dataset(f"{index_dir}/{name}.parquet", format="parquet").to_table(columns=cols)
           for name, cols in (("docs", ["movieId", "title", "release_date", "genres", "__title_norm"]),
                              ("postings", ["field", "term", "movieId"]))]
 index = movieindex.MovieIndex(docs=None, **movieindex._index_arrays(*tables))
-print(json.dumps([getattr(movieindex, flow)(index, *args) for flow, args in calls]))
+client = http_api.create_app(index).test_client()
+print(json.dumps([[getattr(movieindex, flow)(index, *args) for flow, args in calls],
+                  [[r.status_code, r.get_json()] for r in (client.open(path, method=m, query_string=q, json=b)
+                                                           for m, path, q, b in requests)]]))
 """
 
 
 def test_index_flows_need_no_pyspark(index_dir, index, catalog, words):
     """A process where ``pyspark`` cannot be imported builds the index
-    from the published directory with pyarrow, and its flows answer
+    from the published directory with pyarrow, and its flows, and the
+    HTTP app's /search, /recommend, /movie/<id> and /health, answer
     exactly as on the index that ``movierec.load_movie_index`` loaded."""
+    pytest.importorskip("flask")
     mid, title, _d, genres = next(m for m in catalog[1]["movies"] if m[3])
     genreless = _genreless_unique(index, catalog)[0]
     calls = [
@@ -350,14 +357,28 @@ def test_index_flows_need_no_pyspark(index_dir, index, catalog, words):
         ("search_page", ["qxzzqx", 0, 10]),
         ("movie_by_id", [mid]), ("movie_by_id", [999_999]),
     ]
+    requests = [
+        ("GET", "/search", {"q": f"{words[0]} {words[1][:-1]}x"}, None),
+        ("GET", "/search", {"q": words[2], "page": "2", "size": "5"}, None),
+        ("POST", "/recommend", None, {"title": title}), ("POST", "/recommend", None, {"title": genreless}),
+        ("POST", "/recommend", None, {"title": words[0]}), ("POST", "/recommend", None, {"title": "Zzqx nothing"}),
+        ("GET", f"/movie/{mid}", None, None), ("GET", "/movie/999999", None, None), ("GET", "/health", None, None),
+    ]
     proc = subprocess.run(
-        [sys.executable, "-c", _NO_SPARK, index_dir], input=json.dumps(calls),
+        [sys.executable, "-c", _NO_SPARK, index_dir], input=json.dumps([calls, requests]),
         capture_output=True, text=True, timeout=300,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     assert proc.returncode == 0, proc.stderr[-3000:]
+    got_flows, got_http = json.loads(proc.stdout)
     want = json.loads(json.dumps([getattr(movieindex, flow)(index, *args) for flow, args in calls]))
-    assert json.loads(proc.stdout) == want
+    assert got_flows == want
     assert want[0][1] and want[1][0] == "ambiguous" and want[3] and want[5][0] and want[8], want
+    client = http_api.create_app(index).test_client()
+    want_http = [[r.status_code, r.get_json()] for r in (client.open(path, method=m, query_string=q, json=b)
+                                                         for m, path, q, b in requests)]
+    assert got_http == want_http
+    assert [s for s, _body in want_http] == [200, 200, 200, 200, 200, 404, 200, 404, 200], want_http
+    assert want_http[0][1]["movies"] and want_http[4][1]["movies"], want_http
 
 
 # Small alphabets make near strings likely; the non-ASCII letters cover
