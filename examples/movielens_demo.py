@@ -53,7 +53,7 @@ def main() -> None:
     with tempfile.TemporaryDirectory(prefix="movieindex-") as index_dir:
         movierec.write_movie_index(movierec.build_movie_index_tables(movies), index_dir)
         index = movierec.load_movie_index(spark, index_dir)
-    print(f"published and loaded {len(index.by_id)} movies, {len(index.terms)} terms")
+    print(f"published and loaded {len(index.ids)} movies, {len(index.terms)} terms")
 
     print("== POST /recommend {'title': 'Toy Story'} ==")
     code, body = serving.recommend_endpoint(index, {"title": "Toy Story"})

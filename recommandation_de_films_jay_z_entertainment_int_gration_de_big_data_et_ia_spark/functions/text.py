@@ -104,6 +104,14 @@ MD5_SPLIT_BUCKET_SQL = (
 )
 
 
+def md5_hex_int_sql(expr: str, digits: int) -> str:
+    """DuckDB SQL: the first ``digits`` hex digits of ``md5(expr)`` read
+    as an integer in ``0 .. 16 ** digits - 1``, parenthesized."""
+    return "(" + " + ".join(
+        f"(strpos('0123456789abcdef', substr(md5({expr}), {i + 1}, 1)) - 1) * {16 ** (digits - 1 - i)}"
+        for i in range(digits)) + ")"
+
+
 def minhash_band_keys(shingles: Column, num_hashes: int, bands: int) -> Column:
     """Array of ``bands`` LSH band keys (concatenated MinHash signature rows).
 

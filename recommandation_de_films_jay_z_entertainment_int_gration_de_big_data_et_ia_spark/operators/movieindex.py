@@ -3,8 +3,10 @@ without Spark: this module imports numpy, and pyarrow to load.
 
 :func:`.movierec.load_movie_index` reads a published index into a
 :class:`MovieIndex` of ``int32`` postings over document positions
-(movieIds ascending, so position order is the movieId tie-break). Each
-flow takes only that index and answers from process memory:
+(movieIds ascending, so position order is the movieId tie-break), with
+the documents left in the loaded Arrow columns and decoded only for the
+hits a flow returns. Each flow takes only that index and answers from
+process memory:
 :func:`lookup_title` and the two recommend flows (``POST /recommend``,
 api.py:91-149), :func:`search_page` (``GET /search``, api.py:197-221) and
 :func:`movie_by_id` (``GET /movie/<id>``). Every flow is one ``bincount``
@@ -25,6 +27,7 @@ terms and the keywords.
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 from collections import Counter
 from dataclasses import dataclass
 from itertools import islice
@@ -145,6 +148,33 @@ def _expand(buckets: TermBuckets, qt: str, d: int) -> list[tuple[str, str]]:
     return hits
 
 
+class _Column:
+    """A zero-copy view of a loaded Arrow string or ``list<string>``
+    column: its offsets, its values (the UTF-8 data buffer, or the list
+    values as codes into ``names``, their dictionary) and its validity, as
+    memoryviews, whose reads give Python objects without numpy scalars. A
+    value is decoded when its position is read; a null reads ``None``."""
+
+    __slots__ = ("offsets", "values", "names", "valid")
+
+    def __init__(self, arr):
+        self.valid = memoryview(arr.is_valid().to_numpy(zero_copy_only=False))
+        if arr.type.num_fields:  # list<string>
+            values = arr.values.dictionary_encode(null_encoding="encode")
+            self.offsets, self.values = memoryview(arr.offsets.to_numpy()), memoryview(values.indices.to_numpy())
+            self.names = tuple(values.dictionary.to_pylist())
+        else:
+            _validity, offsets, data = arr.buffers()
+            self.offsets = memoryview(np.frombuffer(offsets, np.int32, len(arr) + 1, arr.offset * 4))
+            self.values, self.names = memoryview(data), None
+
+    def __getitem__(self, p: int) -> str | list | None:
+        if not self.valid[p]:
+            return None
+        v = self.values[self.offsets[p]:self.offsets[p + 1]]
+        return str(v, "utf-8") if self.names is None else [self.names[c] for c in v.tolist()]
+
+
 @dataclass(frozen=True)
 class MovieIndex:
     """The LOADED form: a published index held in serving-process memory,
@@ -152,10 +182,12 @@ class MovieIndex:
     is answered by numpy kernels over document positions, with no Spark
     job and no scan of every document.
 
-    - ``ids`` — the movieId at each document position, ascending;
-    - ``by_id`` — movieId → ``{movieId, title, release_date, genres}``;
-    - ``title_norm`` — the ``__title_norm`` phrase-probe string by
-      position, ``None`` for a null title;
+    - ``ids`` — the movieId at each document position, ascending, as
+      ``int64``;
+    - ``columns`` — the published docs columns by name (``title``,
+      ``release_date``, ``genres`` and the ``__title_norm`` phrase-probe
+      string) as :class:`_Column` views over the loaded Arrow buffers; a
+      document is decoded only when it is returned (:func:`_document`);
     - ``postings`` — ``(field, term)`` → the sorted ``int32`` positions
       of the documents holding the term; its keys are ``terms``, the
       terms dictionary;
@@ -166,19 +198,18 @@ class MovieIndex:
     - ``docs`` — a Spark frame over exactly the docs files the load read,
       for offline inspection, or ``None``; no request touches it.
 
-    At 25k movies (7.1k terms, 116k postings) the numpy arrays take
-    1.3 MB; the documents, their dict and the title strings take most of
-    the rest (tracemalloc: 19.8 MB in all). The structures are never mutated
-    after the load, so concurrent request threads share them without
-    locks, and the copy is its own point-in-time snapshot: a later
-    rebuild or append of the index directory is invisible until the next
-    load.
+    At 25k movies (7.1k terms, 116k postings) the index holds 3.4 MB of
+    Python heap (tracemalloc), most of it the terms dictionary and its
+    postings; the document columns stay in Arrow memory. The structures
+    are never mutated after the load, so concurrent request threads share
+    them without locks, and the copy is its own point-in-time snapshot: a
+    later rebuild or append of the index directory is invisible until the
+    next load.
     """
 
     docs: object
     ids: np.ndarray
-    by_id: dict[int, dict]
-    title_norm: tuple[str | None, ...]
+    columns: dict[str, _Column]
     postings: dict[tuple[str, str], np.ndarray]
     genres: dict[str, np.ndarray]
     buckets: TermBuckets
@@ -216,18 +247,31 @@ def _top(scores: np.ndarray, k: int) -> np.ndarray:
     return hit[np.lexsort((hit, -s))]
 
 
+def _document(index: MovieIndex, p: int) -> dict:
+    """The ``{movieId, title, release_date, genres}`` document at
+    position ``p``, decoded from the columns."""
+    c = index.columns
+    return {"movieId": int(index.ids[p]), "title": c["title"][p],
+            "release_date": c["release_date"][p], "genres": c["genres"][p]}
+
+
 def _hits(index: MovieIndex, scores: np.ndarray, pos: np.ndarray) -> list[dict]:
     """The documents at ``pos`` with their score."""
-    return [
-        {**index.by_id[mid], "score": s}
-        for mid, s in zip(index.ids[pos].tolist(), scores[pos].tolist())
-    ]
+    return [{**_document(index, p), "score": s} for p, s in zip(pos.tolist(), scores[pos].tolist())]
+
+
+def _position(index: MovieIndex, movie_id: int) -> int | None:
+    """The document position of ``movie_id``, or ``None``. A binary
+    search in Python, as ``np.searchsorted`` would release the GIL to the
+    other request threads for a one-key search."""
+    p = bisect_left(index.ids, movie_id)
+    return p if p < len(index.ids) and index.ids[p] == movie_id else None
 
 
 def _without(index: MovieIndex, scores: np.ndarray, movie_id: int) -> np.ndarray:
     """``scores`` with the source movie's zeroed (the ``must_not`` self)."""
-    p = np.searchsorted(index.ids, movie_id)
-    if p < len(index.ids) and index.ids[p] == movie_id:
+    p = _position(index, movie_id)
+    if p is not None:
         scores[p] = 0
     return scores
 
@@ -248,8 +292,8 @@ def lookup_title(index: MovieIndex, title_query: str, size: int = 5) -> tuple[st
     pos = lists[0]
     for other in lists[1:]:
         pos = np.intersect1d(pos, other, assume_unique=True)
-    pos = list(islice((p for p in pos.tolist() if needle in index.title_norm[p]), size))
-    hits = [dict(index.by_id[mid]) for mid in index.ids[pos].tolist()]
+    title_norm = index.columns["__title_norm"]
+    hits = [_document(index, p) for p in islice((p for p in pos.tolist() if needle in title_norm[p]), size)]
     return match_status(len(hits)), hits
 
 
@@ -301,12 +345,13 @@ def search_page(index: MovieIndex, query: str, lo: int, size: int) -> tuple[list
     count of all hits."""
     scores = _search_scores(index, query)
     pos = _top(scores, lo + size)[lo:]
-    return [index.by_id[mid] for mid in index.ids[pos].tolist()], int(np.count_nonzero(scores))
+    return [_document(index, p) for p in pos.tolist()], int(np.count_nonzero(scores))
 
 
 def movie_by_id(index: MovieIndex, movie_id: int) -> dict | None:
     """The document of ``movie_id``, or ``None``."""
-    return index.by_id.get(movie_id)
+    p = _position(index, movie_id)
+    return None if p is None else _document(index, p)
 
 
 def ping(index: MovieIndex) -> bool:
@@ -314,53 +359,49 @@ def ping(index: MovieIndex) -> bool:
     return True
 
 
-def _grouped(table, keys: list[str]) -> dict:
-    """The distinct ``pos`` values of ``table`` grouped by its ``keys``
-    columns, as sorted read-only ``int32`` arrays: Arrow groups, numpy
-    sorts once and splits, with no per-posting Python loop."""
-    g = table.group_by(keys, use_threads=False).aggregate([("pos", "distinct")])
-    lists = g["pos_distinct"].combine_chunks()
-    offsets = lists.offsets.to_numpy() - lists.offsets[0].as_py()
-    vals = lists.flatten().to_numpy()
-    group = np.repeat(np.arange(len(g)), np.diff(offsets))
-    vals = vals[np.lexsort((vals, group))].astype(np.int32)
+def _grouped(keys: np.ndarray, pos: np.ndarray) -> tuple[list[int], list[np.ndarray]]:
+    """The distinct ``keys`` and, for each, its distinct ``pos`` values as
+    a sorted read-only ``int32`` array: one ``np.unique`` over
+    ``key << 32 | pos`` sorts and deduplicates, and a split at each change
+    of key groups, with no per-posting Python loop."""
+    u = np.unique((keys.astype(np.int64) << 32) | pos)
+    k = u >> 32
+    vals = (u & 0xFFFFFFFF).astype(np.int32)
     vals.flags.writeable = False
-    names = zip(*(g[k].to_pylist() for k in keys)) if len(keys) > 1 else g[keys[0]].to_pylist()
-    return dict(zip(names, np.split(vals, offsets[1:-1])))
+    starts = np.flatnonzero(np.diff(k, prepend=-1))
+    return k[starts].tolist(), np.split(vals, starts[1:])
 
 
 def _index_arrays(docs, postings) -> dict:
     """Every :class:`MovieIndex` field but ``docs``, from the Arrow docs
     and postings tables. Documents take dense positions in movieId order
-    (the first row of a repeated movieId wins); a posting of an unknown
-    movieId is dropped."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    docs = docs.sort_by("movieId")
+    (the first row of a repeated movieId wins, a row without one is
+    dropped); a posting of an unknown movieId is dropped. The postings and
+    genres are grouped by their dictionary codes (:func:`_grouped`)."""
+    docs = docs.filter(docs["movieId"].is_valid()).sort_by("movieId")
     mids = docs["movieId"].to_numpy()
     first = np.ones(len(mids), bool)
     first[1:] = mids[1:] != mids[:-1]
-    docs, ids = docs.filter(pa.array(first)), mids[first]
-    c = docs.to_pydict()
-    by_id = {
-        mid: {"movieId": mid, "title": title, "release_date": date, "genres": genres}
-        for mid, title, date, genres in zip(c["movieId"], c["title"], c["release_date"], c["genres"])
-    }
+    docs, ids = docs.filter(first), mids[first].astype(np.int64)
+    columns = {name: _Column(docs[name].combine_chunks())
+               for name in ("title", "release_date", "genres", "__title_norm")}
     pmids = postings["movieId"].to_numpy()
     pos = np.searchsorted(ids, pmids)
     known = pos < len(ids)
     known[known] = ids[pos[known]] == pmids[known]
-    postings = postings.append_column("pos", pa.array(pos)).filter(pa.array(known))
-    postings = _grouped(postings, ["field", "term"])
-    genres = docs["genres"].combine_chunks()
-    genre_pos = pa.table({"genre": pc.list_flatten(genres), "pos": pc.list_parent_indices(genres)})
+    field, term = (postings[k].combine_chunks().dictionary_encode() for k in ("field", "term"))
+    nt = len(term.dictionary)
+    keys, lists = _grouped((field.indices.to_numpy().astype(np.int64) * nt + term.indices.to_numpy())[known],
+                           pos[known])
+    fields, terms = field.dictionary.to_pylist(), term.dictionary.to_pylist()
+    postings = {(fields[k // nt], terms[k % nt]): v for k, v in zip(keys, lists)}
+    g = columns["genres"]
+    keys, lists = _grouped(np.asarray(g.values[g.offsets[0]:g.offsets[-1]]),
+                           np.repeat(np.arange(len(ids)), np.diff(g.offsets)))
     return {
         "ids": ids,
-        "by_id": by_id,
-        # a null title never phrase-matches, as in the oracle
-        "title_norm": tuple(c["__title_norm"]),
+        "columns": columns,
         "postings": postings,
-        "genres": _grouped(genre_pos, ["genre"]),
+        "genres": {g.names[k]: v for k, v in zip(keys, lists)},
         "buckets": _term_buckets(postings),
     }

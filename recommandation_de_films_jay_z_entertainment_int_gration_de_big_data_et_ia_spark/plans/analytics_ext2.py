@@ -20,6 +20,7 @@ from ..functions.text import (
     STOPWORDS,
     TOKS_SQL,
     md5_hex,
+    md5_hex_int_sql,
     normalize_text,
     tokens,
 )
@@ -545,17 +546,9 @@ def q177_int8_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CMS_D, _CMS_W = 4, 256
 
 
-def _md5_16bit_sql(expr: str) -> str:
-    # 16-bit int from the first 4 hex chars of md5(expr) (corpus.py pattern).
-    return " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5({expr}), {i + 1}, 1)) - 1) * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-
-
 def _cms_bucket_sql(j: int) -> str:
     key_expr = f"'{j}|' || CAST(l_partkey AS VARCHAR)"
-    return f"(({_md5_16bit_sql(key_expr)}) % {_CMS_W})"
+    return f"({md5_hex_int_sql(key_expr, 4)} % {_CMS_W})"
 
 
 def _cms_bucket_col(j: int) -> F.Column:
@@ -1677,7 +1670,7 @@ _BLOOM_K, _BLOOM_M = 3, 4096
 
 def _bloom_pos_sql(j: int, key: str) -> str:
     key_expr = f"'{j}|' || CAST({key} AS VARCHAR)"
-    return f"(({_md5_16bit_sql(key_expr)}) % {_BLOOM_M})"
+    return f"({md5_hex_int_sql(key_expr, 4)} % {_BLOOM_M})"
 
 
 def _bloom_pos_col(j: int, key: F.Column) -> F.Column:
@@ -4331,27 +4324,16 @@ _BOOT_B = 40
 _BOOT_T = (24113, 48226, 60281, 64292)
 
 
-def _boot_h_sql(expr: str) -> str:
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef', substr(md5({expr}), {i + 1}, 1)) - 1) * {16 ** (3 - i)}"
-            for i in range(4)
-        )
-        + ")"
-    )
-
-
 @register(
     "q249_poisson_bootstrap",
     oracle=f"""
     WITH rep AS (SELECT unnest(range(0, {_BOOT_B})) AS r),
     drawn AS (
       SELECT o.o_orderpriority, rep.r,
-             CASE WHEN {_boot_h_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)")} < {_BOOT_T[0]} THEN 0
-                  WHEN {_boot_h_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)")} < {_BOOT_T[1]} THEN 1
-                  WHEN {_boot_h_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)")} < {_BOOT_T[2]} THEN 2
-                  WHEN {_boot_h_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)")} < {_BOOT_T[3]} THEN 3
+             CASE WHEN {md5_hex_int_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)", 4)} < {_BOOT_T[0]} THEN 0
+                  WHEN {md5_hex_int_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)", 4)} < {_BOOT_T[1]} THEN 1
+                  WHEN {md5_hex_int_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)", 4)} < {_BOOT_T[2]} THEN 2
+                  WHEN {md5_hex_int_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)", 4)} < {_BOOT_T[3]} THEN 3
                   ELSE 4 END AS cnt,
              CAST(o_totalprice AS DECIMAL(18,4)) AS price
       FROM orders o CROSS JOIN rep),
@@ -4859,18 +4841,6 @@ _NEG_K = 5
 _NEG_DRAWS = 15  # K * 3 over-draw
 
 
-def _md5_32bit_sql(expr: str) -> str:
-    # 32-bit int from the first 8 hex chars of md5(expr).
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef', substr(md5({expr}), {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-            for i in range(8)
-        )
-        + ")"
-    )
-
-
 @register(
     "q279_negative_sampling",
     oracle=f"""
@@ -4879,7 +4849,7 @@ def _md5_32bit_sql(expr: str) -> str:
     mx AS (SELECT MAX(p_partkey) AS m FROM part),
     users AS (SELECT DISTINCT o_custkey AS user_id FROM orders),
     cand AS (SELECT user_id, u.j,
-                    ({_md5_32bit_sql("CAST(user_id AS VARCHAR) || '|' || CAST(u.j AS VARCHAR)")}
+                    ({md5_hex_int_sql("CAST(user_id AS VARCHAR) || '|' || CAST(u.j AS VARCHAR)", 8)}
                      % (SELECT m FROM mx)) + 1 AS item
              FROM users, UNNEST(range(0, {_NEG_DRAWS})) AS u(j)),
     neg AS (SELECT c.user_id, c.item, MIN(c.j) AS j

@@ -20,9 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKS_SQL, normalize_text, tokens
+from ..functions.text import TOKS_SQL, md5_hex_int_sql, normalize_text, tokens
 from ..sources.readers import load_table
-from .analytics_ext2 import _md5_16bit_sql
 from .catalog import register
 from .similarity import _dot_sql as _dot_sql_ext4
 
@@ -176,7 +175,7 @@ _FIM_MIN_TOKENS = 8
     c AS (
       SELECT doc_id, toks, n_tokens,
              CAST(n_tokens // 4 AS BIGINT) AS span_len,
-             CAST(2 + ({_md5_16bit_sql("CAST(doc_id AS VARCHAR)")})
+             CAST(2 + {md5_hex_int_sql("CAST(doc_id AS VARCHAR)", 4)}
                   % (n_tokens - (n_tokens // 4) - 1) AS BIGINT) AS fim_start
       FROM t WHERE n_tokens >= {_FIM_MIN_TOKENS})
     SELECT doc_id, n_tokens, fim_start, span_len,

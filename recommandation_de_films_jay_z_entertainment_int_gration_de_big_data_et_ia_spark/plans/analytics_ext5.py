@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKS_SQL, tokens
+from ..functions.text import TOKS_SQL, md5_hex_int_sql, tokens
 from ..operators.relational import scripted_metric, top_hits
 from ..sources.readers import load_table
 from .catalog import register
@@ -695,9 +695,6 @@ def q354_geo_line(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shape (100 TB): entirely scan-local (one projection computes the
 # whole spans array row-locally); the only shuffle is the display sort.
 # ---------------------------------------------------------------------------
-from .analytics_ext2 import _md5_16bit_sql  # noqa: E402  (corpus md5 pattern)
-
-
 @register(
     "q355_span_corruption",
     oracle=f"""
@@ -715,7 +712,7 @@ from .analytics_ext2 import _md5_16bit_sql  # noqa: E402  (corpus md5 pattern)
       SELECT doc_id, n, n_spans,
              list_transform(range(1, n_spans + 1), k ->
                (k - 1) * stride
-               + ({_md5_16bit_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(k AS VARCHAR)")})
+               + {md5_hex_int_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(k AS VARCHAR)", 4)}
                  % (stride - 3)) AS starts
       FROM s)
     SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKS_SQL, tokens
+from ..functions.text import TOKS_SQL, md5_hex_int_sql, tokens
 from ..operators.querystring import (
     KeywordField,
     TokenField,
@@ -358,10 +358,8 @@ _RS_CUT = 6554  # ~0.1 * 65536 — effective sampling probability
 
 
 def _rs_draw_sql() -> str:
-    from .analytics_ext2 import _md5_16bit_sql
-
     key = f"'{_RS_SEED}' || CAST(doc_id AS VARCHAR)"
-    return f"(({_md5_16bit_sql(key)}) < {_RS_CUT})"
+    return f"({md5_hex_int_sql(key, 4)} < {_RS_CUT})"
 
 
 @register(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.text import (
     MD5_SPLIT_BUCKET_SQL,
     TOKS_SQL,
+    md5_hex_int_sql,
     md5_split_bucket,
     tokens,
     word_shingles,
@@ -446,15 +447,6 @@ def q111_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffling the corpus.
 # ---------------------------------------------------------------------------
 _WS_K = 100
-# 16-bit integer from the first 4 hex chars of md5(doc_id).
-_WS_H_SQL = (
-    "("
-    + " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), {i+1}, 1)) - 1) * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-    + ")"
-)
 
 
 @register(
@@ -462,7 +454,7 @@ _WS_H_SQL = (
     oracle=f"""
     WITH k AS (
       SELECT doc_id, n_chars,
-             ROUND(ln((CAST({_WS_H_SQL} AS DOUBLE) + 0.5) / 65536.0)
+             ROUND(ln((CAST({md5_hex_int_sql("CAST(doc_id AS VARCHAR)", 4)} AS DOUBLE) + 0.5) / 65536.0)
                    / CAST(n_chars AS DOUBLE), 8) AS key
       FROM documents)
     SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars, key
@@ -1390,10 +1382,6 @@ def q274_token_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _DSIR_B = 256
 _DSIR_K = 100
-_DSIR_BUCKET_SQL = (
-    "((strpos('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(token), 2, 1)) - 1)"
-)
 
 
 def dsir_scores(
@@ -1455,7 +1443,7 @@ def dsir_scores(
     "q275_dsir_resample",
     oracle=f"""
     WITH t AS (SELECT doc_id, lang, unnest({TOKS_SQL}) AS token FROM documents),
-    bk AS (SELECT doc_id, lang, {_DSIR_BUCKET_SQL} AS b FROM t),
+    bk AS (SELECT doc_id, lang, {md5_hex_int_sql("token", 2)} AS b FROM t),
     dist AS (SELECT b, COUNT(*) AS r_cnt,
                     COUNT(*) FILTER (WHERE lang = 'en') AS t_cnt
              FROM bk GROUP BY b),

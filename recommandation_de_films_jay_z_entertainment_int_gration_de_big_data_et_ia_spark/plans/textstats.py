@@ -17,6 +17,7 @@ from ..functions.text import (
     STOPWORDS,
     TOKS_SQL,
     distinct_tokens_sorted,
+    md5_hex_int_sql,
     md5_split_bucket,
     normalize_text,
     tokens,
@@ -685,14 +686,6 @@ def q104_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # + one (doc, bucket) shuffle.
 # ---------------------------------------------------------------------------
 _FH_BUCKETS = 64
-_FH_H_SQL = (
-    "("
-    + " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(t), {i + 1}, 1)) - 1) * {16 ** (3 - i)}"
-        for i in range(4)
-    )
-    + ")"
-)
 
 
 @register(
@@ -702,7 +695,7 @@ _FH_H_SQL = (
       SELECT doc_id, unnest({TOKS_SQL}) AS t
       FROM documents WHERE {NORM_SQL} <> ''),
     tf AS (
-      SELECT doc_id, {_FH_H_SQL} % {_FH_BUCKETS} AS idx, COUNT(*) AS tf
+      SELECT doc_id, {md5_hex_int_sql("t", 4)} % {_FH_BUCKETS} AS idx, COUNT(*) AS tf
       FROM toks GROUP BY doc_id, idx)
     SELECT doc_id,
            string_agg(CAST(idx AS VARCHAR) || ':' || CAST(tf AS VARCHAR), ' ' ORDER BY idx) AS features

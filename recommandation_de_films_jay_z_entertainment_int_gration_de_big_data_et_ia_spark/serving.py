@@ -43,6 +43,8 @@ Response = tuple[int, dict[str, Any]]
 # Lucene's default maxClauseCount: a /search with more distinct terms is
 # refused, as Elasticsearch refuses it with ``too_many_clauses``
 MAX_QUERY_TERMS = 1024
+# the movieIds a backend can hold: signed 64-bit, as Spark's LongType
+MOVIE_IDS = range(-2**63, 2**63)
 
 
 def backend(movies: DataFrame | MovieIndex) -> ModuleType:
@@ -102,12 +104,13 @@ def recommend_endpoint(movies: DataFrame | MovieIndex, body: dict | None) -> Res
 def movie_endpoint(movies: DataFrame | MovieIndex, movie_id) -> Response:
     """``GET /movie/<id>`` (api.py:164-184): exact-id lookup. A
     non-numeric id makes the reference's ES term query throw, surfacing
-    as its 500 branch — mirrored here."""
+    as its 500 branch — mirrored here. An id outside :data:`MOVIE_IDS`
+    holds no movie, and is answered 404 before either backend runs."""
     try:
         mid = int(str(movie_id))
     except (TypeError, ValueError) as e:
         return 500, {"error": f"Error retrieving movie: {e}"}
-    doc = backend(movies).movie_by_id(movies, mid)
+    doc = backend(movies).movie_by_id(movies, mid) if mid in MOVIE_IDS else None
     if doc is None:
         return 404, {"error": "Movie not found"}
     return 200, _doc(doc)

@@ -18,17 +18,20 @@ document.
 from __future__ import annotations
 
 import dataclasses
+import gc
 import json
 import os
 import re
 import subprocess
 import sys
 import threading
+import tracemalloc
 from collections import Counter
 from operator import itemgetter
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -152,6 +155,9 @@ def test_edge_cases_equal_raw_path(raw, index, catalog, words):
         ("movie", "999999"),
         ("movie", "0"),
         ("movie", " 3 "),
+        ("movie", str(2**63)),  # past signed 64-bit: Py4J cannot pass it as a long
+        ("movie", str(10**30)),
+        ("movie", str(-2**63 - 1)),
         ("recommend", None),
         ("recommend", {}),
         ("recommend", {"title": ""}),
@@ -286,6 +292,27 @@ def test_concurrent_requests_share_the_index(index, catalog):
     assert not bad, bad[:3]
 
 
+def test_loaded_index_heap_per_movie(index_dir):
+    """The loaded index keeps its documents in the Arrow columns it read:
+    the Python heap it holds (tracemalloc) stays under 320 bytes per movie
+    of the test catalog (about 170 here), so per-document Python objects
+    cannot come back unnoticed (a dict, a title and a genre list per movie
+    took about 810)."""
+    tables = [ds.dataset(f"{index_dir}/{name}.parquet", format="parquet").to_table(columns=cols)
+              for name, cols in (("docs", ["movieId", "title", "release_date", "genres", "__title_norm"]),
+                                 ("postings", ["field", "term", "movieId"]))]
+    gc.collect()
+    tracemalloc.start()
+    try:
+        loaded = movieindex.MovieIndex(docs=None, **movieindex._index_arrays(*tables))
+        gc.collect()
+        held = tracemalloc.get_traced_memory()[0]
+    finally:
+        tracemalloc.stop()
+    assert len(loaded.ids) == N_MOVIES
+    assert held / N_MOVIES < 320, held
+
+
 def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
     """A loaded index keeps answering from its load-time snapshot while the
     index directory is appended to — the paginated-session guarantee
@@ -318,7 +345,7 @@ def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
     assert served.docs.count() == N_MOVIES
 
     fresh = movierec.load_movie_index(spark, idx_dir)
-    assert len(fresh.by_id) == fresh.docs.count() == N_MOVIES + 20
+    assert len(fresh.ids) == fresh.docs.count() == N_MOVIES + 20
     assert serving.search_endpoint(fresh, {"q": q})[1]["total"] == total0 + 20
 
 
@@ -609,6 +636,16 @@ def _python_index(docs: list[tuple]) -> movieindex.MovieIndex:
         docs=None, **movieindex._index_arrays(pa.Table.from_pylist(rows, schema), post))
 
 
+def test_rows_without_movie_id_hold_no_document():
+    """A docs row and postings without a movieId are dropped at load:
+    ``ids`` stays sorted and the other documents answer as before."""
+    index = _python_index([(2, "Beta", ["Drama"]), (None, "Beta", ["Drama"]), (1, "Alpha", None)])
+    assert index.ids.tolist() == [1, 2]
+    assert [d["movieId"] for d in movieindex.search_page(index, "beta", 0, 10)[0]] == [2]
+    assert movieindex.lookup_title(index, "beta")[0] == "unique"
+    assert index.genres["Drama"].tolist() == [1]
+
+
 _GENRES = ["Action", "Comedy", "Drama", "Sci-Fi", "Children's"]
 _TITLE_WORDS = st.sampled_from(["star", "wars", "the", "a", "Star!", "(1977)", "...", "", "é"])
 _TITLE = st.one_of(st.none(), st.lists(_TITLE_WORDS, max_size=4).map(" ".join))
@@ -691,48 +728,49 @@ def test_search_page_matches_scan(docs, q, page, size):
     assert [r["movieId"] for r in rows] == ranked[page * size:(page + 1) * size]
 
 
-class _NoScanDict(dict):
-    """A dict that answers lookups but raises on iteration."""
+class _NoScanColumn:
+    """A document column view that answers reads by position but raises
+    on iteration."""
 
-    def _scan(self, *_a):
+    def __init__(self, column):
+        self.column = column
+
+    def __getitem__(self, p):
+        return self.column[p]
+
+    def __iter__(self):
         raise AssertionError("an endpoint iterated every document")
 
-    __iter__ = keys = values = items = _scan
 
-
-class _CountedTuple(tuple):
-    """A tuple that counts its reads by index and raises on iteration."""
+class _CountedColumn(_NoScanColumn):
+    """A :class:`_NoScanColumn` that counts its reads by position."""
 
     reads = 0
 
-    def __getitem__(self, i):
+    def __getitem__(self, p):
         type(self).reads += 1
-        return super().__getitem__(i)
-
-    def _scan(self, *_a):
-        raise AssertionError("an endpoint iterated every title")
-
-    __iter__ = __contains__ = index = count = _scan
+        return super().__getitem__(p)
 
 
 def test_stream_never_scans_every_document(stream_oracle, index, catalog, monkeypatch):
     """No endpoint touches every document: the benchmark's stream and the
-    genre-less keyword path, served from an index whose ``by_id`` and
-    ``title_norm`` raise on iteration, answer exactly as the raw frame
-    does, and no request reads even a tenth of the titles by position."""
-    guarded = dataclasses.replace(
-        index, by_id=_NoScanDict(index.by_id), title_norm=_CountedTuple(index.title_norm))
-    with pytest.raises(AssertionError):
-        list(guarded.by_id)
-    with pytest.raises(AssertionError):
-        list(guarded.title_norm)
+    genre-less keyword path, served from an index whose document columns
+    raise on iteration, answer exactly as the raw frame does, and no
+    request reads even a tenth of the ``__title_norm`` strings by
+    position."""
+    guarded = dataclasses.replace(index, columns={
+        name: (_CountedColumn if name == "__title_norm" else _NoScanColumn)(col)
+        for name, col in index.columns.items()})
+    for col in guarded.columns.values():
+        with pytest.raises(AssertionError):
+            list(col)
     requests = [(req[0], _arg(req), want) for req, want in stream_oracle] + [
         ("recommend", {"title": t}, _call(index, "recommend", {"title": t}))
         for t in _genreless_unique(index, catalog)[:2]]
     for ep, arg, want in requests:
-        monkeypatch.setattr(_CountedTuple, "reads", 0)
+        monkeypatch.setattr(_CountedColumn, "reads", 0)
         assert _call(guarded, ep, arg) == want, (ep, arg)
-        assert _CountedTuple.reads < N_MOVIES // 10, (ep, arg, _CountedTuple.reads)
+        assert _CountedColumn.reads < N_MOVIES // 10, (ep, arg, _CountedColumn.reads)
 
 
 def test_query_term_cap_on_both_backends(spark, tmp_path, monkeypatch):
