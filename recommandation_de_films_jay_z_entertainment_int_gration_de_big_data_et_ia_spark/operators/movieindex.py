@@ -13,11 +13,12 @@ api.py:91-149), :func:`search_page` (``GET /search``, api.py:197-221) and
 over the concatenated postings of the query's terms or genres
 (:func:`_bincount`) and one ``argpartition`` top-k (:func:`_top`). The
 title probe intersects the postings of the phrase's tokens before any
-substring test. Fuzzy expansion drops the terms whose binned bag distance
-exceeds the fuzziness (:func:`_bag_bound`, a lower bound on the edit
-distance), then runs one vectorized edit-distance pass over the rest
-(:func:`_expand`), exact to the scalar reference ``movierec._lev_le``.
-All ranking is score desc, movieId asc.
+substring test. Fuzzy expansion probes the deletion variants that the
+publish wrote for every term (:class:`Variants`, FastSS: Bocek, Hunt and
+Stiller, 2007) with the query term's own variants, one ``searchsorted``,
+and verifies each candidate with the banded edit-distance check
+:func:`_lev_le` (:func:`_expand`); no request scans the terms
+dictionary. All ranking is score desc, movieId asc.
 
 The raw-frame oracle flows in :mod:`.movierec` import the rules both
 backends share from here: the fuzziness bands, the boosts, the query
@@ -27,15 +28,17 @@ terms and the keywords.
 from __future__ import annotations
 
 import re
+import zlib
 from bisect import bisect_left
 from collections import Counter
+from collections.abc import Iterable
 from dataclasses import dataclass
 from itertools import islice
 
 import numpy as np
+import pyarrow as pa
 
 SEARCH_FIELDS: dict[str, float] = {"title": 3.0, "genres_text": 1.0}
-_BINS = 32  # code points mod 32: the histogram bins of the bag-distance bound
 _NONE = np.empty(0, np.int32)
 
 
@@ -67,85 +70,59 @@ def match_status(n: int) -> str:
     return "none" if n == 0 else ("unique" if n == 1 else "ambiguous")
 
 
-def _codes(s: str) -> np.ndarray:
-    """The code points of ``s`` as ``int32`` — any ``str``, lone
-    surrogates included, as ``movierec._lev_le`` compares them."""
-    return np.fromiter(map(ord, s), np.int32, len(s))
+def _lev_le(a: str, b: str, d: int) -> bool:
+    """``levenshtein(a, b) <= d`` matching Spark's built-in exactly
+    (unit-cost edit distance over code points): the verifier of
+    :func:`_expand`. Each row holds only the band ``|i - j| <= d`` of the
+    table, as a dict by column; a cell outside it exceeds ``d`` and reads
+    ``d + 1``. A row whose band all exceeds ``d`` ends the scan, so a
+    check costs ``O(len(a) * d)``."""
+    if abs(len(a) - len(b)) > d:
+        return False
+    if a == b:
+        return True
+    far = d + 1
+    prev = {j: j for j in range(min(d, len(b)) + 1)}
+    for i, ca in enumerate(a, 1):
+        cur = {0: i} if i <= d else {}
+        for j in range(max(1, i - d), min(len(b), i + d) + 1):
+            cur[j] = min(prev.get(j, far) + 1, cur.get(j - 1, far) + 1, prev.get(j - 1, far) + (ca != b[j - 1]))
+        if min(cur.values(), default=far) > d:
+            return False
+        prev = cur
+    return prev.get(len(b), far) <= d
 
 
-def _hist(codes: np.ndarray) -> np.ndarray:
-    """Per row of ``codes`` (terms × characters), how many code points
-    fall in each bin mod 32, as ``int16``. A count is capped at the
-    ``int16`` maximum, which can only lower :func:`_bag_bound`."""
-    k, n = codes.shape
-    rows = np.arange(k, dtype=np.int64)[:, None] * _BINS
-    counts = np.bincount((rows + codes % _BINS).ravel(), minlength=k * _BINS)
-    return np.minimum(counts, np.iinfo(np.int16).max).astype(np.int16).reshape(k, _BINS)
+MAX_DELETIONS = 2  # the variant table serves fuzziness 0..2, AUTO's bands
+MAX_VARIANT_LEN = 64  # a longer term publishes no variants
 
 
-def _bag_bound(hist: np.ndarray, qhist: np.ndarray, m: int, n: int) -> np.ndarray:
-    """The binned bag distance between each length-``n`` term (a row of
-    ``hist``) and a length-``m`` query term: ``max(|T − Q|, |Q − T|)``
-    over the binned multisets, where ``|Q − T| = |T − Q| + m − n``.
-    Merging characters into bins can only shrink a multiset difference,
-    and bag distance never exceeds edit distance, so this is a lower
-    bound on the edit distance."""
-    return np.maximum(hist - qhist, 0).sum(axis=1, dtype=np.int32) + max(0, m - n)
+def variant_key(v: str) -> int:
+    """The published key of a deletion variant: its length over the CRC-32
+    of its UTF-8 (lone surrogates passed through). Two variants sharing a
+    key only add a candidate, which :func:`_lev_le` then drops."""
+    return (len(v) << 32) | zlib.crc32(v.encode("utf-8", "surrogatepass"))
 
 
-TermBuckets = dict[int, tuple[tuple[tuple[str, str], ...], np.ndarray, np.ndarray]]
+def deletion_variants(term: str, d: int = MAX_DELETIONS) -> dict[str, int]:
+    """Every string made from ``term`` by deleting at most ``d`` of its
+    characters, with the fewest deletions that make it."""
+    found, level = {term: 0}, {term}
+    for k in range(1, d + 1):
+        level = {v[:i] + v[i + 1:] for v in level for i in range(len(v))}.difference(found)
+        found.update(dict.fromkeys(level, k))
+    return found
 
 
-def _term_buckets(keys) -> TermBuckets:
-    """The terms dictionary sorted by length: term length → (the
-    ``(field, term)`` keys of that length, their code points as an
-    ``int32`` (length, n) array with one column per term, and their
-    :func:`_hist` rows). A bucket holds terms of one length only, so
-    nothing is padded; the arrays take 4 bytes per dictionary character
-    and 64 bytes per term. The arrays are read-only."""
-    by_len: dict[int, list[tuple[str, str]]] = {}
-    for key in keys:
-        by_len.setdefault(len(key[1]), []).append(key)
-    buckets: TermBuckets = {}
-    for n, ks in sorted(by_len.items()):
-        rows = _codes("".join(t for _f, t in ks)).reshape(len(ks), n)
-        codes, hist = np.ascontiguousarray(rows.T), _hist(rows)
-        codes.flags.writeable = hist.flags.writeable = False
-        buckets[n] = (tuple(ks), codes, hist)
-    return buckets
-
-
-def _expand(buckets: TermBuckets, qt: str, d: int) -> list[tuple[str, str]]:
-    """The keys whose term is within ``d`` edits of ``qt`` — exactly the
-    keys ``movierec._lev_le`` accepts. Per term length in ``len(qt) ± d``,
-    :func:`_bag_bound` first drops the terms that cannot be within
-    ``d``; one vectorized edit-distance pass then decides the rest.
-
-    Each bucket row (one character position across the kept terms)
-    advances the whole DP table, held as ``P[j] = D[j] - j`` for query
-    position ``j``. Within a row, ``D[j] = min(best[j], D[j-1] + 1)``
-    unrolls to ``D[j] = j + cummin_k(best[k] - k)``, so the sequential
-    inner loop becomes one ``minimum.accumulate``."""
-    q = _codes(qt)
-    m = len(qt)
-    qhist = _hist(q[None, :])[0]
-    q = q[:, None]
-    hits: list[tuple[str, str]] = []
-    for n in range(max(0, m - d), m + d + 1):
-        if n not in buckets:
-            continue
-        keys, codes, hist = buckets[n]
-        kept = np.flatnonzero(_bag_bound(hist, qhist, m, n) <= d)
-        if not len(kept):
-            continue
-        p = np.zeros((m + 1, len(kept)), np.int32)
-        for i, c in enumerate(codes[:, kept], 1):
-            best = np.empty_like(p)
-            best[0] = i
-            np.minimum(p[1:] + 1, p[:-1] - (q == c), out=best[1:])
-            p = np.minimum.accumulate(best, axis=0, out=best)
-        hits.extend(keys[k] for k in kept[p[m] <= d - m])
-    return hits
+def variant_table(terms: Iterable[str]) -> pa.Table:
+    """The publish's rule: a ``(key, term, deletions)`` row for each of
+    the :func:`deletion_variants` of each term of at most
+    :data:`MAX_VARIANT_LEN` code points, sorted by key."""
+    rows = [(variant_key(v), t, k) for t in terms if len(t) <= MAX_VARIANT_LEN
+            for v, k in deletion_variants(t).items()]
+    key, term, deletions = zip(*rows) if rows else ((), (), ())
+    return pa.table({"key": pa.array(key, pa.int64()), "term": pa.array(term, pa.string()),
+                     "deletions": pa.array(deletions, pa.int8())}).sort_by("key")
 
 
 class _Column:
@@ -176,6 +153,61 @@ class _Column:
 
 
 @dataclass(frozen=True)
+class Variants:
+    """The terms dictionary's deletion variants (FastSS), as zero-copy
+    views of the loaded variant table: ``keys`` (:func:`variant_key`,
+    ascending, ``int64``), ``codes`` (each variant's term, ``int32``
+    codes into ``words``, the distinct terms as a :class:`_Column`) and
+    ``deletions`` (``int8``); ``long``, the terms longer than
+    :data:`MAX_VARIANT_LEN`, which have none; and ``longest``, the
+    length of the longest term with variants, or -1."""
+
+    keys: np.ndarray
+    codes: np.ndarray
+    deletions: np.ndarray
+    words: _Column
+    long: tuple[str, ...]
+    longest: int
+
+
+def _variants(table: pa.Table, terms: list[str]) -> Variants:
+    """:class:`Variants` over a ``(key, term, deletions)`` variant table
+    sorted by key, and ``terms``, the postings' terms dictionary."""
+    keys = table["key"].combine_chunks().to_numpy()
+    if np.any(keys[1:] < keys[:-1]):
+        raise ValueError("the variant table is not sorted by key")
+    term = table["term"].combine_chunks().dictionary_encode()
+    return Variants(
+        keys=keys, codes=term.indices.to_numpy(), deletions=table["deletions"].combine_chunks().to_numpy(),
+        words=_Column(term.dictionary),
+        long=tuple(t for t in terms if len(t) > MAX_VARIANT_LEN),
+        longest=int(keys[-1] >> 32) if len(keys) else -1,
+    )
+
+
+def _expand(variants: Variants, qt: str, d: int) -> list[str]:
+    """The terms within ``d`` edits of ``qt``, each once — exactly the
+    terms :func:`_lev_le` accepts. A term within ``d`` edits of ``qt``
+    shares a string with it that each reaches by at most ``d`` deletions,
+    so the candidates are the terms with a variant of at most ``d``
+    deletions keyed as one of ``qt``'s own variants (one ``searchsorted``),
+    and :func:`_lev_le` verifies each. The long terms are verified
+    directly; a query term more than ``d`` longer than every term with
+    variants generates none."""
+    if d > MAX_DELETIONS:
+        raise ValueError(f"fuzziness {d}: the variant table holds at most {MAX_DELETIONS} deletions")
+    hits = [t for t in variants.long if _lev_le(t, qt, d)]
+    if len(qt) - d > variants.longest:
+        return hits
+    q = np.fromiter(map(variant_key, deletion_variants(qt, d)), np.int64)
+    lo, hi = np.split(np.searchsorted(variants.keys, np.concatenate([q, q + 1])), 2)
+    n = hi - lo
+    rows = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
+    codes = np.unique(variants.codes[rows[variants.deletions[rows] <= d]])
+    return hits + [t for t in map(variants.words.__getitem__, codes.tolist()) if _lev_le(t, qt, d)]
+
+
+@dataclass(frozen=True)
 class MovieIndex:
     """The LOADED form: a published index held in serving-process memory,
     the way Lucene holds its terms dictionary and postings. Every request
@@ -193,14 +225,15 @@ class MovieIndex:
       terms dictionary;
     - ``genres`` — genre → the sorted ``int32`` positions of the
       documents listing it;
-    - ``buckets`` — the terms dictionary sorted by length for fuzzy
-      expansion, built by :func:`_term_buckets`;
+    - ``variants`` — the terms dictionary's published deletion variants,
+      which fuzzy expansion probes (:class:`Variants`);
     - ``docs`` — a Spark frame over exactly the docs files the load read,
       for offline inspection, or ``None``; no request touches it.
 
-    At 25k movies (7.1k terms, 116k postings) the index holds 3.4 MB of
-    Python heap (tracemalloc), most of it the terms dictionary and its
-    postings; the document columns stay in Arrow memory. The structures
+    At 25k movies (7.1k terms, 116k postings, 161k variants) the index
+    holds 2.7 MB of Python heap (tracemalloc), most of it the terms
+    dictionary and its postings; the document columns and the variant
+    arrays stay in Arrow memory. The structures
     are never mutated after the load, so concurrent request threads share
     them without locks, and the copy is its own point-in-time snapshot: a
     later rebuild or append of the index directory is invisible until the
@@ -212,7 +245,7 @@ class MovieIndex:
     columns: dict[str, _Column]
     postings: dict[tuple[str, str], np.ndarray]
     genres: dict[str, np.ndarray]
-    buckets: TermBuckets
+    variants: Variants
 
     @property
     def terms(self):
@@ -229,14 +262,16 @@ def _bincount(n: int, groups, weights=None) -> np.ndarray:
     return np.bincount(ids, weights, minlength=n)
 
 
-def _top(scores: np.ndarray, k: int) -> np.ndarray:
+def _top(scores: np.ndarray, k: int) -> tuple[np.ndarray, int]:
     """The positions of the ``k`` highest nonzero ``scores``, ranked
     score desc, position (so movieId) asc, without sorting every hit:
     ``argpartition`` finds the k-th score, every higher score is kept,
-    and the ties at it are taken in position order."""
-    if k <= 0:
-        return _NONE
+    and the ties at it are taken in position order. Also the count of
+    nonzero scores."""
     hit = np.flatnonzero(scores)
+    total = len(hit)
+    if k <= 0:
+        return _NONE, total
     s = scores[hit]
     if k < len(hit):
         kth = s[np.argpartition(-s, k - 1)[k - 1]]
@@ -244,7 +279,7 @@ def _top(scores: np.ndarray, k: int) -> np.ndarray:
         ties = np.flatnonzero(s == kth)[: k - len(above)]
         keep = np.concatenate([above, ties])
         hit, s = hit[keep], s[keep]
-    return hit[np.lexsort((hit, -s))]
+    return hit[np.lexsort((hit, -s))], total
 
 
 def _document(index: MovieIndex, p: int) -> dict:
@@ -304,7 +339,7 @@ def recommend_by_genre_overlap(index: MovieIndex, movie_id: int, genres: list[st
     genres."""
     groups = [index.genres[g] for g in set(genres) if g in index.genres]
     scores = _without(index, _bincount(len(index.ids), groups), movie_id)
-    return _hits(index, scores, _top(scores, k))
+    return _hits(index, scores, _top(scores, k)[0])
 
 
 def recommend_by_title_keywords(index: MovieIndex, movie_id: int, title: str, k: int = 5,
@@ -316,26 +351,26 @@ def recommend_by_title_keywords(index: MovieIndex, movie_id: int, title: str, k:
     groups = [index.postings[("title", w)] for w in keywords(title, min_len)
               if ("title", w) in index.postings]
     scores = _without(index, _bincount(len(index.ids), groups), movie_id)
-    return _hits(index, scores, _top(scores, k))
+    return _hits(index, scores, _top(scores, k)[0])
 
 
 def _search_scores(index: MovieIndex, query: str) -> np.ndarray:
     """The ``GET /search`` score of every document position.
 
     This is Lucene's fuzzy plan: each distinct query term expands once
-    against the length-sorted terms dictionary (:func:`_expand`), and a
-    doc scores boost × (#query-term occurrences fuzzily present in the
+    against the terms dictionary's deletion variants (:func:`_expand`),
+    and a doc scores boost × (#query-term occurrences fuzzily present in the
     field) — the oracle's semantics — through one :func:`_bincount`. The
     scores are sums of 3.0 and 1.0, exact in binary float, so they equal
     the oracle's 4-digit rounding."""
     groups, weights = [], []
     for qt, count in Counter(query_terms(query)).items():
-        found: dict[str, list[np.ndarray]] = {}
-        for key in _expand(index.buckets, qt, auto_fuzziness(qt)):
-            found.setdefault(key[0], []).append(index.postings[key])
-        for field, lists in found.items():
-            groups.append(lists[0] if len(lists) == 1 else np.unique(np.concatenate(lists)))
-            weights.append(SEARCH_FIELDS[field] * count)
+        terms = _expand(index.variants, qt, auto_fuzziness(qt))
+        for field, boost in SEARCH_FIELDS.items():
+            lists = [p for t in terms if (p := index.postings.get((field, t))) is not None]
+            if lists:
+                groups.append(lists[0] if len(lists) == 1 else np.unique(np.concatenate(lists)))
+                weights.append(boost * count)
     return _bincount(len(index.ids), groups, weights)
 
 
@@ -343,9 +378,8 @@ def search_page(index: MovieIndex, query: str, lo: int, size: int) -> tuple[list
     """Hits ``lo`` to ``lo + size`` of a ``GET /search`` (title^3,
     genres^1, AUTO fuzziness), ranked (score desc, movieId asc), and the
     count of all hits."""
-    scores = _search_scores(index, query)
-    pos = _top(scores, lo + size)[lo:]
-    return [_document(index, p) for p in pos.tolist()], int(np.count_nonzero(scores))
+    pos, total = _top(_search_scores(index, query), lo + size)
+    return [_document(index, p) for p in pos[lo:].tolist()], total
 
 
 def movie_by_id(index: MovieIndex, movie_id: int) -> dict | None:
@@ -372,12 +406,14 @@ def _grouped(keys: np.ndarray, pos: np.ndarray) -> tuple[list[int], list[np.ndar
     return k[starts].tolist(), np.split(vals, starts[1:])
 
 
-def _index_arrays(docs, postings) -> dict:
-    """Every :class:`MovieIndex` field but ``docs``, from the Arrow docs
-    and postings tables. Documents take dense positions in movieId order
-    (the first row of a repeated movieId wins, a row without one is
+def _index_arrays(docs, postings, variants=None) -> dict:
+    """Every :class:`MovieIndex` field but ``docs``, from the Arrow docs,
+    postings and variant tables. Documents take dense positions in movieId
+    order (the first row of a repeated movieId wins, a row without one is
     dropped); a posting of an unknown movieId is dropped. The postings and
-    genres are grouped by their dictionary codes (:func:`_grouped`)."""
+    genres are grouped by their dictionary codes (:func:`_grouped`). An
+    index assembled without Spark passes no ``variants``, and gets the
+    :func:`variant_table` of its postings' terms, the publish's rule."""
     docs = docs.filter(docs["movieId"].is_valid()).sort_by("movieId")
     mids = docs["movieId"].to_numpy()
     first = np.ones(len(mids), bool)
@@ -403,5 +439,5 @@ def _index_arrays(docs, postings) -> dict:
         "columns": columns,
         "postings": postings,
         "genres": {g.names[k]: v for k, v in zip(keys, lists)},
-        "buckets": _term_buckets(postings),
+        "variants": _variants(variant_table(terms) if variants is None else variants, terms),
     }

@@ -20,31 +20,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokens
 from . import search as S
-from .movieindex import SEARCH_FIELDS, MovieIndex, _index_arrays, keywords, match_status, query_terms
-
-
-def _lev_le(a: str, b: str, d: int) -> bool:
-    """``levenshtein(a, b) <= d`` matching Spark's built-in exactly
-    (unit-cost edit distance over code points), with the standard
-    length-band and row-minimum early exits; the scalar reference for
-    ``movieindex._expand``."""
-    if abs(len(a) - len(b)) > d:
-        return False
-    if a == b:
-        return True
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        row_min = i
-        for j, cb in enumerate(b, 1):
-            v = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-            cur.append(v)
-            if v < row_min:
-                row_min = v
-        if row_min > d:
-            return False
-        prev = cur
-    return prev[-1] <= d
+from .movieindex import SEARCH_FIELDS, MovieIndex, _index_arrays, keywords, match_status, query_terms, variant_table
+from .movieindex import _lev_le  # noqa: F401 — re-exported: the edit-distance rule callers read here
 
 
 @dataclass(frozen=True)
@@ -57,15 +34,25 @@ class MovieIndexTables:
       ``__title_norm`` phrase-probe column: the normalized title with one
       space on each side;
     - ``postings`` — the ``(field, term, movieId)`` distinct-token
-      inverted index over title and the flattened genres text.
+      inverted index over title and the flattened genres text;
+    - ``variants`` — the ``(key, term, deletions)`` deletion variants of
+      the distinct terms (``movieindex.variant_table``).
     """
 
     docs: DataFrame
     postings: DataFrame
+    variants: DataFrame
+
+
+def _variant_frames(batches):
+    """``mapInPandas`` body: the variant rows of each batch of terms."""
+    for batch in batches:
+        yield variant_table(batch["term"]).to_pandas()
 
 
 def build_movie_index_tables(movies: DataFrame) -> MovieIndexTables:
-    """One corpus scan per frame; the postings explode is map-side."""
+    """One corpus scan per frame; the postings explode is map-side, and
+    the variants are one ``mapInPandas`` over the distinct terms."""
     docs = movie_frame(movies).withColumn(
         "__title_norm", F.concat(F.lit(" "), normalize_text("title"), F.lit(" ")))
     tp = movies.select(
@@ -78,41 +65,53 @@ def build_movie_index_tables(movies: DataFrame) -> MovieIndexTables:
         F.explode(F.array_distinct(tokens("genres_text"))).alias("term"),
         "movieId",
     )
-    return MovieIndexTables(docs=docs, postings=tp.unionByName(gp))
+    postings = tp.unionByName(gp)
+    variants = postings.select("term").distinct().mapInPandas(
+        _variant_frames, "key long, term string, deletions byte")
+    return MovieIndexTables(docs=docs, postings=postings, variants=variants)
 
 
 def write_movie_index(tables: MovieIndexTables, index_dir: str) -> None:
-    """Publish the built index as ``docs.parquet`` and ``postings.parquet``
-    under ``index_dir`` (the offline build step)."""
+    """Publish the built index as ``docs.parquet``, ``postings.parquet``
+    and ``variants.parquet`` (one file sorted by key) under ``index_dir``
+    (the offline build step)."""
     tables.docs.write.mode("overwrite").parquet(f"{index_dir}/docs.parquet")
     tables.postings.write.mode("overwrite").parquet(f"{index_dir}/postings.parquet")
+    tables.variants.coalesce(1).sortWithinPartitions("key").write.mode("overwrite").parquet(
+        f"{index_dir}/variants.parquet")
 
 
 def load_movie_index(spark, index_dir: str) -> MovieIndex:
     """Read a published index once, with pyarrow, into serving-process
-    memory (``movieindex._index_arrays``). The docs and postings are read
-    from one file listing each, so the loaded copy is a point-in-time
-    snapshot of the directory. At 25k movies the arrays take about
-    0.07 s warm, and Spark's ``docs`` frame 0.04-0.06 s more."""
+    memory (``movieindex._index_arrays``). The docs, postings and variants
+    (their terms as the Parquet dictionary) are read from one file listing
+    each, so the loaded copy is a point-in-time snapshot of the directory;
+    one without ``variants.parquet`` raises ``FileNotFoundError`` naming
+    it. At 25k movies the arrays take about 0.05 s warm, and Spark's
+    ``docs`` frame 0.04-0.06 s more."""
     import pyarrow.dataset as ds
     from pyspark.sql.pandas.types import from_arrow_schema
 
     docs = ds.dataset(f"{index_dir}/docs.parquet", format="parquet")
     postings = ds.dataset(f"{index_dir}/postings.parquet", format="parquet")
+    variants = ds.dataset(f"{index_dir}/variants.parquet",
+                          format=ds.ParquetFileFormat(read_options={"dictionary_columns": ["term"]}))
     return MovieIndex(
         # the Arrow schema spares Spark a footer read to infer it
         docs=spark.read.schema(from_arrow_schema(docs.schema)).parquet(*docs.files),
         **_index_arrays(
             docs.to_table(columns=["movieId", "title", "release_date", "genres", "__title_norm"]),
             postings.to_table(columns=["field", "term", "movieId"]),
+            variants.to_table(columns=["key", "term", "deletions"]),
         ),
     )
 
 
 def movie_frame(movies: DataFrame) -> DataFrame:
     """The payload columns of the movies frame — the ES ``_source`` shape
-    every oracle flow answers with."""
-    return movies.select("movieId", "title", "release_date", "genres")
+    every oracle flow answers with — over the rows with a movieId, the
+    documents the loaded index holds."""
+    return movies.filter(F.col("movieId").isNotNull()).select("movieId", "title", "release_date", "genres")
 
 
 def _docs(frame: DataFrame) -> list[dict]:

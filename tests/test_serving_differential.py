@@ -7,12 +7,12 @@ A seeded 2,000-movie catalog in the MovieLens u.item format
 ``MovieIndex`` must equal the raw movies frame's, for the benchmark's
 request stream and for the edge cases below. The loaded index must also
 answer without Spark jobs, stay a point-in-time snapshot of the published
-directory, and expand fuzzy terms with its vectorized kernel exactly as
-the scalar ``_lev_le`` does, which in turn matches Spark's ``levenshtein``.
-Each request kernel (bag-distance prefilter, genre bincount, postings
-title probe, top-k) is pinned by Hypothesis to the scan it replaced, on
-indexes built in Python without Spark, and no endpoint may iterate every
-document.
+directory, and expand fuzzy terms from its published deletion variants
+exactly as a ``_lev_le`` scan of the terms dictionary does; ``_lev_le``
+in turn matches Spark's ``levenshtein``. Each request kernel (variant
+probe, genre bincount, postings title probe, top-k) is pinned by
+Hypothesis to the scan it replaced, on indexes built in Python without
+Spark, and no endpoint may iterate every document.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ import gc
 import json
 import os
 import re
+import shutil
 import subprocess
 import sys
 import threading
@@ -195,7 +196,7 @@ def test_scores_equal_raw_path(raw, index, words, catalog):
 
     for q in (words[0], f"{words[1]} {words[2][:-1]}x drama", f"{words[3]} {words[3]}"):
         scores = movieindex._search_scores(index, q)
-        got = scored(movieindex._hits(index, scores, movieindex._top(scores, len(index.ids))))
+        got = scored(movieindex._hits(index, scores, movieindex._top(scores, len(index.ids))[0]))
         assert got == scored(movierec.search_hits(raw, q)) and got, q
     long = [w for w in words if len(w) >= 4]
     for title in (f"{long[0]} {long[0]} {long[1]} (1950)", f"{long[2].title()} ({long[2]})"):
@@ -229,6 +230,55 @@ def test_null_fields_equal_raw_path(spark, tmp_path):
         ("recommend", {"title": "beta"}),
     ]:
         assert _call(index, ep, arg) == _call(raw, ep, arg), (ep, arg)
+
+
+def test_rows_without_movie_id_equal_raw_path(spark, tmp_path):
+    """A movies row without a movieId holds no document on either path:
+    the index drops it at load and the raw frame's flows skip it, so a
+    search finds only movie 1 and a lookup of the dropped title is a
+    404."""
+    raw = spark.createDataFrame(
+        [(1, "Alpha (1990)", None, None), (None, "Alpha Beta", None, None)],
+        "movieId int, title string, release_date string, genres array<string>")
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path))
+    index = movierec.load_movie_index(spark, str(tmp_path))
+    search_reply = _call(raw, "search", {"q": "alpha"})
+    assert _call(index, "search", {"q": "alpha"}) == search_reply
+    assert search_reply[0] == 200 and [m["movieId"] for m in search_reply[1]["movies"]] == [1]
+    recommend_reply = _call(raw, "recommend", {"title": "alpha beta"})
+    assert _call(index, "recommend", {"title": "alpha beta"}) == recommend_reply == (
+        404, {"error": "Movie not found"})
+
+
+def test_oversized_tokens_equal_raw_path(spark, tmp_path):
+    """A 5,000-character title token publishes no variant rows and is
+    verified directly, with the banded ``_lev_le``; a 10,000-character
+    query term generates no variants. Both answer as the raw frame does."""
+    token = "ab" * 2_500
+    raw = spark.createDataFrame(
+        [(1, f"Alpha {token} (1990)", None, ["Drama"]), (2, "Alpha Beta", None, None)],
+        "movieId int, title string, release_date string, genres array<string>")
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path))
+    published = ds.dataset(f"{tmp_path}/variants.parquet", format="parquet").to_table()
+    assert published.num_rows > 0
+    assert max(len(t) for t in published["term"].to_pylist()) <= movieindex.MAX_VARIANT_LEN
+    index = movierec.load_movie_index(spark, str(tmp_path))
+    assert index.variants.long == (token,)
+    for q in (token, "x" + token[1:], token[:-2], "alpha " + "b" * 10_000, "c" * 10_000):
+        got = _call(index, "search", {"q": q})
+        assert got == _call(raw, "search", {"q": q}), q[:12]
+    assert _call(index, "search", {"q": token[1:-1]})[1]["total"] == 1
+    assert _call(index, "search", {"q": "c" * 10_000})[1]["total"] == 0
+
+
+def test_index_without_variant_file_is_refused(spark, raw, tmp_path):
+    """An index directory published without ``variants.parquet`` does not
+    load: the error names the missing file."""
+    out = str(tmp_path / "index")
+    movierec.write_movie_index(movierec.build_movie_index_tables(raw.limit(20)), out)
+    shutil.rmtree(f"{out}/variants.parquet")
+    with pytest.raises(FileNotFoundError, match="variants.parquet"):
+        movierec.load_movie_index(spark, out)
 
 
 def _jobs(spark, label: str, fn) -> int:
@@ -457,17 +507,26 @@ def test_lev_le_matches_spark_levenshtein(spark):
     assert not bad, bad[:10]
 
 
+# at most this many ``_lev_le`` checks per query term: the probe's
+# candidates (at most 20 here), not the terms dictionary (about 700)
+_CHECKS_PER_TERM = 30
+
+
 def test_search_request_path_does_not_scan_with_lev_le(stream_oracle, index, monkeypatch):
-    """The index path expands with the vectorized kernel only: the scalar
-    ``_lev_le`` is never called while the benchmark's searches run, and
-    the replies still equal the raw-frame oracle's."""
+    """The index path verifies only the variant probe's candidates: while
+    the benchmark's searches run, ``_lev_le`` checks each query term
+    against at most :data:`_CHECKS_PER_TERM` terms, far fewer than the
+    terms dictionary holds, and the replies still equal the raw-frame
+    oracle's."""
     searches = [(req, want) for req, want in stream_oracle if req[0] == "search"]
     assert len(searches) == 20
+    assert len(index.terms) > 20 * _CHECKS_PER_TERM
     calls = []
-    scalar = movierec._lev_le
-    monkeypatch.setattr(movierec, "_lev_le", lambda *a: calls.append(a) or scalar(*a))
+    scalar = movieindex._lev_le
+    monkeypatch.setattr(movieindex, "_lev_le", lambda *a: calls.append(a) or scalar(*a))
     got = [_call(index, "search", _arg(req)) for req, _want in searches]
-    assert not calls, len(calls)
+    per_term = Counter(qt for _t, qt, _d in calls)
+    assert per_term and max(per_term.values()) <= _CHECKS_PER_TERM, per_term.most_common(3)
     assert got == [want for _req, want in searches]
 
 
@@ -495,24 +554,33 @@ def test_empty_catalog_file_answers(spark, tmp_path):
     raw = pipelines.build_movie_index(spark, str(tmp_path / "u.item"))
     movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path / "index"))
     index = movierec.load_movie_index(spark, str(tmp_path / "index"))
-    assert not index.postings and not index.buckets
+    assert not index.postings and not index.variants.long
+    assert len(index.variants.keys) == len(index.variants.codes) == len(index.variants.deletions) == 0
     got = _call(index, "search", {"q": "alpha"})
     assert got == _call(raw, "search", {"q": "alpha"}) == (
         200, {"movies": [], "page": 1, "size": 10, "total": 0})
 
 
-def _assert_expansion_exact(keys, qt: str) -> None:
-    """The kernel's expansion of ``qt`` equals the scalar scan's, with no
-    key twice."""
+def _variant_index(terms) -> movieindex.Variants:
+    """The variant index of a terms dictionary, built by the publish's
+    rule (``variant_table``) as ``_index_arrays`` builds it for
+    :func:`_python_index`."""
+    terms = sorted(set(terms))
+    return movieindex._variants(movieindex.variant_table(terms), terms)
+
+
+def _assert_expansion_exact(terms, qt: str) -> None:
+    """The probe's expansion of ``qt`` equals the scalar scan's, with no
+    term twice."""
     d = search.auto_fuzziness(qt)
-    got = movieindex._expand(movieindex._term_buckets(keys), qt, d)
+    got = movieindex._expand(_variant_index(terms), qt, d)
     assert len(got) == len(set(got)), qt
-    assert set(got) == {k for k in keys if movierec._lev_le(k[1], qt, d)}, (qt, d)
+    assert set(got) == {t for t in terms if movierec._lev_le(t, qt, d)}, (qt, d)
 
 
-# Code points of one, two, three and four UTF-8 bytes, and a lone
-# surrogate, which plain UTF-32 encoding refuses.
-_CHAR = st.sampled_from(["a", "b", "c", "é", "漢", "😀", "\ud800"])
+# Code points of one, two, three and four UTF-8 bytes. A published term is
+# UTF-8, so only a query term can hold a lone surrogate.
+_CHAR = st.sampled_from(["a", "b", "c", "é", "漢", "😀"])
 
 
 def _text(min_size: int, max_size: int):
@@ -527,83 +595,61 @@ def test_vectorized_expansion_matches_lev_le(words, qt, cut):
     band (0, 1, 2) is drawn. The dictionary always holds the empty term
     and, for each length within three of the query term's, a prefix or
     an extension of it: its distance is the length difference, so both
-    edges of the length band are on both sides of the cut-off."""
+    edges of the length band are on both sides of the cut-off. The query
+    term is also probed with a lone surrogate for its first character, and
+    lengthened beyond every term."""
     m = len(qt)
     near = [qt[:n] if n <= m else qt + qt[cut % m] * (n - m) for n in range(max(0, m - 3), m + 4)]
-    keys = {("title", "")} | {(f, w) for w in words + near for f in ("title", "genres_text")}
-    _assert_expansion_exact(keys, qt)
-    longest = max(len(t) for _f, t in keys)
-    _assert_expansion_exact(keys, qt + "a" * (longest + 3 - m))  # beyond every term
+    terms = {""} | set(words + near)
+    _assert_expansion_exact(terms, qt)
+    _assert_expansion_exact(terms, "\ud800" + qt[1:])
+    longest = max(len(t) for t in terms)
+    _assert_expansion_exact(terms, qt + "a" * (longest + 3 - m))  # beyond every term
 
 
 def test_vectorized_expansion_on_generated_catalog(index, catalog):
     """Every query term of the benchmark's stream on the 2k catalog, and
     a one-edit and a two-edit variant of each, expand as ``_lev_le``
-    says, against the loaded index's own buckets."""
+    says, against the loaded index's own published variants."""
     stream, _props = gen.serve_requests(catalog[1], SEED, N_REQUESTS)
     qts = {qt for req in stream if req[0] == "search"
            for qt in req[3].get("q", "").lower().split()}
     assert len(qts) > 10
-    keys = list(index.terms)
+    terms = {t for _f, t in index.terms}
     for qt in sorted(qts):
         for variant in (qt, qt[:-1] + "q", "z" + qt[1:] + "é", "\ud800" + qt[2:]):
             d = search.auto_fuzziness(variant)
-            got = movieindex._expand(index.buckets, variant, d)
-            assert sorted(got) == sorted(
-                k for k in keys if movierec._lev_le(k[1], variant, d)), variant
+            got = movieindex._expand(index.variants, variant, d)
+            assert sorted(got) == sorted(t for t in terms if movierec._lev_le(t, variant, d)), variant
 
 
 # ---- the request kernels against the scans they replace ----------------
 
-# "a", "A", "!", "á", "ā" and "\x81" all fall in bin 1 (code point mod 32),
-# so a bag bound that forgot the binning would see them as different; "q"
-# shares bin 1 only mod 16.
-_BIN_CHAR = st.sampled_from(["a", "A", "!", "á", "ā", "\x81", "q", "b", "漢", "😀"])
+# Case variants, punctuation and near code points: near strings and
+# anagrams of the query term are likely.
+_NEAR_CHAR = st.sampled_from(["a", "A", "!", "á", "ā", "\x81", "q", "b", "漢", "😀"])
 
 
-def _bin_text(min_size: int, max_size: int):
-    return st.lists(_BIN_CHAR, min_size=min_size, max_size=max_size).map("".join)
-
-
-def _bag_distance(a: str, b: str) -> int:
-    """The binned bag distance by its definition, over Counters."""
-    ca, cb = Counter(ord(c) % 32 for c in a), Counter(ord(c) % 32 for c in b)
-    return max(sum((ca - cb).values()), sum((cb - ca).values()))
-
-
-def _distance(a: str, b: str) -> int:
-    return next(d for d in range(len(a) + len(b) + 1) if movierec._lev_le(a, b, d))
+def _near_text(min_size: int, max_size: int):
+    return st.lists(_NEAR_CHAR, min_size=min_size, max_size=max_size).map("".join)
 
 
 @settings(max_examples=300, deadline=None, database=None,
           suppress_health_check=list(HealthCheck))
-@given(terms=st.lists(_bin_text(0, 8), min_size=1, max_size=6), qt=_bin_text(0, 8))
-def test_bag_bound_is_binned_bag_distance(terms, qt):
-    """``_bag_bound`` is the binned bag distance, both directions of the
-    multiset difference included, and never exceeds the edit distance."""
-    for n in {len(t) for t in terms}:
-        same = [t for t in terms if len(t) == n]
-        rows = movieindex._codes("".join(same)).reshape(len(same), n)
-        got = movieindex._bag_bound(movieindex._hist(rows), movieindex._hist(movieindex._codes(qt)[None, :])[0],
-                                  len(qt), n)
-        assert got.tolist() == [_bag_distance(t, qt) for t in same], (same, qt)
-        assert all(b <= _distance(t, qt) for b, t in zip(got.tolist(), same))
-
-
-@settings(max_examples=300, deadline=None, database=None,
-          suppress_health_check=list(HealthCheck))
-@given(words=st.lists(_bin_text(0, 10), max_size=25), qt=_bin_text(1, 9),
-       perms=st.lists(st.permutations(range(9)), max_size=4), d=st.integers(0, 3))
+@given(words=st.lists(_near_text(0, 10), max_size=25), qt=_near_text(1, 9),
+       perms=st.lists(st.permutations(range(9)), max_size=4), d=st.integers(0, 2))
 def test_prefiltered_expansion_matches_lev_le(words, qt, perms, d):
-    """The prefiltered expansion accepts exactly the terms ``_lev_le``
-    accepts, with characters that share a bin and with anagrams of the
-    query term: same length and same bag, so the bound passes them all
-    to the edit-distance pass."""
+    """The variant probe accepts exactly the terms ``_lev_le`` accepts,
+    for every fuzziness it serves (0..2), with anagrams of the query term,
+    which share all of its characters; a fuzziness of 3 is refused."""
     anagrams = ["".join(qt[i] for i in p if i < len(qt)) for p in perms]
-    keys = {("title", w) for w in words + anagrams + [qt]}
-    got = movieindex._expand(movieindex._term_buckets(keys), qt, d)
+    terms = set(words + anagrams + [qt])
+    variants = _variant_index(terms)
+    got = movieindex._expand(variants, qt, d)
     assert len(got) == len(set(got))
-    assert set(got) == {k for k in keys if movierec._lev_le(k[1], qt, d)}, (qt, d)
+    assert set(got) == {t for t in terms if movierec._lev_le(t, qt, d)}, (qt, d)
+    with pytest.raises(ValueError):
+        movieindex._expand(variants, qt, 3)
 
 
 def _norm(text: str) -> str:
@@ -614,7 +660,9 @@ def _python_index(docs: list[tuple]) -> movieindex.MovieIndex:
     """A loaded index over ``(movieId, title, genres)`` rows, with the
     published tables built in Python the way the Spark build writes them:
     distinct tokens of the normalized title and genres text (an empty
-    text is the one token ``""``), and ``" " + normalized title + " "``."""
+    text is the one token ``""``), ``" " + normalized title + " "``, and
+    the variants of the terms by the publish's rule (``_index_arrays``
+    builds them when it is given no variant table)."""
     rows = [
         {"movieId": mid, "title": title, "release_date": None, "genres": genres,
          "__title_norm": None if title is None else f" {_norm(title)} "}
@@ -701,7 +749,8 @@ def test_top_k_matches_full_sort(scores, k):
     to past the hit count."""
     s = np.asarray(scores, np.float64)
     ranked = sorted(np.flatnonzero(s).tolist(), key=lambda p: (-s[p], p))
-    assert movieindex._top(s, k).tolist() == ranked[:k]
+    top, total = movieindex._top(s, k)
+    assert top.tolist() == ranked[:k] and total == len(ranked)
 
 
 @settings(max_examples=100, deadline=None, database=None,
@@ -794,6 +843,6 @@ def test_query_term_cap_on_both_backends(spark, tmp_path, monkeypatch):
 
     expanded = []
     kernel = movieindex._expand
-    monkeypatch.setattr(movieindex, "_expand", lambda b, qt, d: expanded.append(qt) or kernel(b, qt, d))
+    monkeypatch.setattr(movieindex, "_expand", lambda v, qt, d: expanded.append(qt) or kernel(v, qt, d))
     assert _call(index, "search", {"q": "drama Drama alpha drama"})[1]["total"] == 1
     assert sorted(expanded) == ["alpha", "drama"]
