@@ -12,7 +12,7 @@ exact same computation is expressible in ANSI SQL for the DuckDB oracle:
 These are the building blocks for the search operators (SURVEY §2.8) and
 the dedup/fingerprint extensions. Each rule's DuckDB SQL twin
 (``NORM_SQL``, ``TOKS_SQL``, ``SHINGLES_SQL``, ``STOP_SQL``,
-``MD5_SPLIT_BUCKET_SQL``) is defined next to it, and the catalog's
+``MD5_SPLIT_BUCKET_SQL``, ``SPLIT_SQL``) is defined next to it, and the catalog's
 oracles use these names instead of spelling the SQL again.
 """
 
@@ -102,6 +102,16 @@ MD5_SPLIT_BUCKET_SQL = (
     "CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 16"
     " + CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT)"
 )
+
+
+def md5_split(h: Column) -> Column:
+    """The 80/10/10 train/val/test split of a 0..255 hash bucket ``h``
+    (``md5_split_bucket``): 204, 26 and 26 of the 256 buckets. SQL twin:
+    ``SPLIT_SQL``."""
+    return F.when(h < 204, "train").when(h < 230, "val").otherwise("test")
+
+
+SPLIT_SQL = "CASE WHEN h < 204 THEN 'train' WHEN h < 230 THEN 'val' ELSE 'test' END"
 
 
 def md5_hex_int_sql(expr: str, digits: int) -> str:

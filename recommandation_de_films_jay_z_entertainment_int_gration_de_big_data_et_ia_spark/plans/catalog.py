@@ -15,7 +15,10 @@ Determinism contract for oracle-checked queries:
 
 from __future__ import annotations
 
+import os
+import pkgutil
 from collections.abc import Callable
+from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,30 +39,18 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
+def query_number(name: str) -> int:
+    """``q26_search_bm25`` -> 26: the catalog's order key."""
+    return int(name[1:name.index("_")])
+
+
 def load_all() -> None:
-    """Import all plan modules so their queries register."""
-    from . import (  # noqa: F401
-        analytics_ext,
-        analytics_ext2,
-        analytics_ext3,
-        analytics_ext4,
-        analytics_ext5,
-        analytics_ext6,
-        analytics_ext7,
-        analytics_ext8,
-        analytics_ext9,
-        core,
-        core_ext,
-        corpus,
-        dedup,
-        ml,
-        multimodal,
-        relational_ext2,
-        resolution,
-        search,
-        similarity,
-        spatial,
-        tables,
-        textstats,
-        timeseries,
-    )
+    """Import every plan module so its queries register, then hold
+    ``QUERIES`` and ``ORACLES`` in ascending query number (in place:
+    callers keep references to both dicts)."""
+    for info in pkgutil.iter_modules([os.path.dirname(__file__)]):
+        import_module(f"{__package__}.{info.name}")
+    for table in (QUERIES, ORACLES):
+        entries = sorted(table.items(), key=lambda kv: query_number(kv[0]))
+        table.clear()
+        table.update(entries)

@@ -1644,3 +1644,478 @@ def q284_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("batch")
     )
+
+
+# ---------------------------------------------------------------------------
+# q273 — CCNet-style perplexity bucketing (Wenzek et al. 2020): per
+# language, documents split into head / middle / tail TERCILES by LM
+# perplexity — the standard quality stratification a multilingual corpus
+# pipeline applies before mixing (head = lowest perplexity = cleanest).
+# Perplexity is q184's add-one-smoothed bigram LM (same decimal-summed
+# lp discipline); thresholds are RANK-EXACT terciles — rank within
+# (lang) by (rounded ppl, doc_id), head = rank <= ceil(n/3), middle <=
+# ceil(2n/3) — integer arithmetic on both engines, no percentile-
+# function semantics to reconcile. Reports per (lang, bucket) counts and
+# the bucket's perplexity range.
+#
+# Shape (100 TB): the bigram/count joins are q184's (key-partitioned,
+# vocab 1-row broadcast); the tercile window shuffles once on lang (a
+# handful of partitions at any scale — if a lang is a hot partition,
+# rank via two-pass histogram instead; documented trade-off).
+# ---------------------------------------------------------------------------
+@register(
+    "q273_ccnet_ppl_buckets",
+    oracle=f"""
+    WITH t AS (SELECT doc_id, lang, {TOKS_SQL} AS tk FROM documents),
+    bg AS (
+      SELECT doc_id, tk[i] AS a, tk[i+1] AS b
+      FROM t, UNNEST(range(1, greatest(len(tk) - 1, 0) + 1)) AS u(i)
+      WHERE len(tk) >= 2),
+    c2 AS (SELECT a, b, COUNT(*) AS n2 FROM bg GROUP BY a, b),
+    c1 AS (SELECT a, COUNT(*) AS n1 FROM bg GROUP BY a),
+    v AS (SELECT COUNT(DISTINCT u.t) AS vocab FROM t, UNNEST(tk) AS u(t)),
+    terms AS (
+      SELECT bg.doc_id,
+             CAST(ROUND(ln((CAST(c2.n2 AS DOUBLE) + 1.0) / (CAST(c1.n1 AS DOUBLE) + v.vocab)), 12)
+                  AS DECIMAL(20,12)) AS lp
+      FROM bg JOIN c2 ON bg.a = c2.a AND bg.b = c2.b
+              JOIN c1 ON bg.a = c1.a
+              CROSS JOIN v),
+    ppl AS (
+      SELECT doc_id, ROUND(exp(-(CAST(SUM(lp) AS DOUBLE) / COUNT(*))), 4) AS p
+      FROM terms GROUP BY doc_id),
+    r AS (
+      SELECT t.lang, ppl.p,
+             ROW_NUMBER() OVER (PARTITION BY t.lang ORDER BY ppl.p, ppl.doc_id) AS rn,
+             COUNT(*) OVER (PARTITION BY t.lang) AS n
+      FROM ppl JOIN t ON ppl.doc_id = t.doc_id),
+    b AS (
+      SELECT lang, p,
+             CASE WHEN rn <= (n + 2) // 3 THEN 'head'
+                  WHEN rn <= (2 * n + 2) // 3 THEN 'middle'
+                  ELSE 'tail' END AS bucket
+      FROM r)
+    SELECT lang, bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           MIN(p) AS min_ppl, MAX(p) AS max_ppl
+    FROM b GROUP BY lang, bucket ORDER BY lang, bucket
+    """,
+)
+def q273_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", tokens(F.col("text")).alias("tk")
+    )
+    bg = (
+        docs.filter(F.size("tk") >= 2)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(slice(tk, 1, size(tk) - 1),"
+                    " (x, i) -> struct(x AS a, tk[i+1] AS b))"
+                )
+            ).alias("p"),
+        )
+        .select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    )
+    c2 = bg.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n2"))
+    c1 = bg.groupBy("a").agg(F.count(F.lit(1)).alias("n1"))
+    v = docs.select(F.explode("tk").alias("t")).agg(F.countDistinct("t").alias("vocab"))
+    terms = (
+        bg.join(c2, ["a", "b"])
+        .join(c1, "a")
+        .crossJoin(F.broadcast(v))
+        .select(
+            "doc_id",
+            F.round(
+                F.log(
+                    (F.col("n2").cast("double") + 1.0)
+                    / (F.col("n1").cast("double") + F.col("vocab"))
+                ),
+                12,
+            )
+            .cast("decimal(20,12)")
+            .alias("lp"),
+        )
+    )
+    ppl = terms.groupBy("doc_id").agg(
+        F.round(
+            F.exp(-(F.sum("lp").cast("double") / F.count(F.lit(1)))), 4
+        ).alias("p")
+    )
+    r = (
+        ppl.join(docs.select("doc_id", "lang"), "doc_id")
+        .withColumn(
+            "rn",
+            F.row_number().over(Window.partitionBy("lang").orderBy("p", "doc_id")),
+        )
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("lang")))
+    )
+    b = r.select(
+        "lang",
+        "p",
+        F.when(F.expr("rn <= (n + 2) div 3"), F.lit("head"))
+        .when(F.expr("rn <= (2 * n + 2) div 3"), F.lit("middle"))
+        .otherwise(F.lit("tail"))
+        .alias("bucket"),
+    )
+    return (
+        b.groupBy("lang", "bucket")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.min("p").alias("min_ppl"),
+            F.max("p").alias("max_ppl"),
+        )
+        .orderBy("lang", "bucket")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q357 — domain mixture reweighting (DoReMi-style multiplicative
+# weights, LINEARIZED): each source's sampling weight starts at its
+# corpus share w0 and is updated by 1 + eta * excess, where excess is
+# the source's relative deviation of a per-doc signal (mean document
+# length as the loss proxy) from the corpus mean; weights are floored
+# at 0.2*w0 (no domain starves) and renormalized. The linear update
+# replaces DoReMi's exp(eta·excess) so the arithmetic stays a single
+# shared double expression on both engines (exp differs in the last
+# ulp across libm implementations — the engine's determinism contract
+# forbids it).
+#
+# Determinism: per-source raw weights ROUND(.,8) → DECIMAL(18,8)
+# before the exact normalization sum.
+#
+# Shape (100 TB): one map-combinable shuffle keyed by source (20
+# groups); the corpus totals and the normalizer are 1-row frames
+# broadcast back — three tiny joins, zero full-data rescans.
+# ---------------------------------------------------------------------------
+_DR_ETA = 0.5
+_DR_FLOOR = 0.2
+
+
+@register(
+    "q357_domain_reweight",
+    oracle=f"""
+    WITH per AS (
+      SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(CAST(n_chars AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
+               AS proxy
+      FROM documents GROUP BY source),
+    tot AS (
+      SELECT CAST(SUM(n) AS DOUBLE) AS n_total,
+             CAST(SUM(CAST(proxy * n AS DECIMAL(18,4))) AS DOUBLE) / SUM(n)
+               AS proxy_all
+      FROM per),
+    raw AS (
+      SELECT p.source, p.n,
+             CAST(ROUND(
+               CASE WHEN (p.n / t.n_total) * (1 + {_DR_ETA} * ((p.proxy - t.proxy_all) / t.proxy_all))
+                         > {_DR_FLOOR} * (p.n / t.n_total)
+                    THEN (p.n / t.n_total) * (1 + {_DR_ETA} * ((p.proxy - t.proxy_all) / t.proxy_all))
+                    ELSE {_DR_FLOOR} * (p.n / t.n_total) END, 8)
+               AS DECIMAL(18,8)) AS w_raw
+      FROM per p, tot t)
+    SELECT source, n AS n_docs,
+           ROUND(CAST(w_raw AS DOUBLE), 8) AS w_raw,
+           ROUND(CAST(w_raw AS DOUBLE)
+                 / CAST((SELECT SUM(w_raw) FROM raw) AS DOUBLE), 6) AS weight
+    FROM raw ORDER BY source
+    """,
+)
+def q357_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
+    per = docs.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        (
+            F.sum(F.col("n_chars").cast("decimal(18,2)")).cast("double")
+            / F.count(F.lit(1))
+        ).alias("proxy"),
+    )
+    tot = per.agg(
+        F.sum("n").cast("double").alias("n_total"),
+        (
+            F.sum((F.col("proxy") * F.col("n")).cast("decimal(18,4)")).cast("double")
+            / F.sum("n")
+        ).alias("proxy_all"),
+    )
+    w0 = F.col("n") / F.col("n_total")
+    upd = w0 * (
+        F.lit(1) + F.lit(_DR_ETA) * ((F.col("proxy") - F.col("proxy_all")) / F.col("proxy_all"))
+    )
+    raw = per.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "n",
+        F.round(F.greatest(upd, F.lit(_DR_FLOOR) * w0), 8)
+        .cast("decimal(18,8)")
+        .alias("w_raw"),
+    )
+    norm = raw.agg(F.sum("w_raw").alias("w_sum"))
+    return (
+        raw.crossJoin(F.broadcast(norm))
+        .select(
+            "source",
+            F.col("n").alias("n_docs"),
+            F.round(F.col("w_raw").cast("double"), 8).alias("w_raw"),
+            F.round(
+                F.col("w_raw").cast("double") / F.col("w_sum").cast("double"), 6
+            ).alias("weight"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q366 — dataset card (per-source corpus summary): the one-page table a
+# dataset release ships — documents, token totals, language spread,
+# EXACT-duplICATE rate (md5-of-text within source), and mean length.
+# A composition capstone over the engine's dedup + textstats families.
+#
+# Determinism: counts and md5 groupings are exact; mean length via
+# DECIMAL sum then one divide+round.
+#
+# Shape (100 TB): ONE pass computes tokens/langs/lengths (map-
+# combinable, keyed by source); the dup rate needs its own (source,
+# md5) collapse — a second map-combinable shuffle whose key includes
+# the fingerprint, joined back at |sources| rows. No rescans beyond
+# those two aggregations.
+# ---------------------------------------------------------------------------
+@register(
+    "q366_dataset_card",
+    oracle=f"""
+    WITH t AS (
+      SELECT source, lang, n_chars, md5(text) AS fp,
+             len({TOKS_SQL})
+               AS n_tok
+      FROM documents),
+    base AS (
+      SELECT source,
+             CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+             CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
+             ROUND(CAST(SUM(CAST(n_chars AS DECIMAL(18,2))) AS DOUBLE)
+                   / COUNT(*), 4) AS avg_chars
+      FROM t GROUP BY source),
+    dup AS (
+      SELECT source,
+             CAST(SUM(c - 1) AS BIGINT) AS n_dup_docs
+      FROM (SELECT source, fp, COUNT(*) AS c FROM t GROUP BY source, fp)
+      GROUP BY source)
+    SELECT b.source, b.n_docs, b.n_tokens, b.n_langs, b.avg_chars,
+           d.n_dup_docs,
+           ROUND(CAST(d.n_dup_docs AS DOUBLE) / b.n_docs, 6) AS dup_rate
+    FROM base b JOIN dup d ON b.source = d.source
+    ORDER BY b.source
+    """,
+)
+def q366_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = load_table(spark, sf_dir, "documents").select(
+        "source",
+        "lang",
+        "n_chars",
+        F.md5("text").alias("fp"),
+        F.size(tokens("text")).alias("n_tok"),
+    )
+    base = t.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("n_tok").cast("bigint").alias("n_tokens"),
+        F.countDistinct("lang").cast("bigint").alias("n_langs"),
+        F.round(
+            F.sum(F.col("n_chars").cast("decimal(18,2)")).cast("double")
+            / F.count(F.lit(1)),
+            4,
+        ).alias("avg_chars"),
+    )
+    dup = (
+        t.groupBy("source", "fp")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("source")
+        .agg(F.sum(F.col("c") - 1).cast("bigint").alias("n_dup_docs"))
+    )
+    return (
+        base.join(F.broadcast(dup), "source")
+        .select(
+            "source", "n_docs", "n_tokens", "n_langs", "avg_chars", "n_dup_docs",
+            F.round(F.col("n_dup_docs").cast("double") / F.col("n_docs"), 6).alias(
+                "dup_rate"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q397 — Gopher quality rules: the 5-rule document filter from the
+# Gopher data pipeline (word-count band, mean-word-length band, minimum
+# stop-word fraction, minimum type-token ratio, maximum single-token
+# dominance), with thresholds calibrated so each rule discriminates on
+# this corpus (non-degeneracy discipline, tests/test_round9b2).
+# Every rule is an exact integer cross-multiplication — no per-document
+# division exists anywhere, so both engines agree bit-for-bit. The
+# complement of q267 (which covers Gopher's REPETITION rules).
+#
+# Shape (100 TB): scan-local per-doc token math inside codegen, then ONE
+# map-combinable groupBy(source). The dominance term is O(distinct x n)
+# per row — bounded by document length, no shuffle.
+# ---------------------------------------------------------------------------
+_GQ_WC_MIN, _GQ_WC_MAX = 15, 85  # word-count band
+_GQ_MWL_LO, _GQ_MWL_HI = 42, 48  # mean token length in [4.2, 4.8] (x10)
+_GQ_STOP_PCT = 3  # stop-word fraction >= 3%
+_GQ_TTR_PCT = 35  # type-token ratio >= 35%
+_GQ_DOM_PCT = 13  # top token <= 13% of tokens
+_GQ_STOPWORDS = ("the", "a")
+
+
+@register(
+    "q397_gopher_quality_rules",
+    oracle=f"""
+    WITH t AS (
+      SELECT source, {TOKS_SQL} AS tk FROM documents),
+    m AS (
+      SELECT source,
+             CAST(len(tk) AS BIGINT) AS n,
+             CAST(list_sum(list_transform(tk, x -> len(x))) AS BIGINT) AS sumlen,
+             CAST(len(list_filter(tk, x -> x = '{_GQ_STOPWORDS[0]}'
+                                        OR x = '{_GQ_STOPWORDS[1]}')) AS BIGINT)
+               AS nstop,
+             CAST(len(list_distinct(tk)) AS BIGINT) AS nd,
+             CAST(list_max(list_transform(list_distinct(tk),
+                    t2 -> len(list_filter(tk, x -> x = t2)))) AS BIGINT) AS topc
+      FROM t),
+    r AS (
+      SELECT source,
+             CASE WHEN n < {_GQ_WC_MIN} OR n > {_GQ_WC_MAX} THEN 1 ELSE 0 END AS f_wc,
+             CASE WHEN 10 * sumlen < {_GQ_MWL_LO} * n
+                    OR 10 * sumlen > {_GQ_MWL_HI} * n THEN 1 ELSE 0 END AS f_mwl,
+             CASE WHEN 100 * nstop < {_GQ_STOP_PCT} * n THEN 1 ELSE 0 END AS f_stop,
+             CASE WHEN 100 * nd < {_GQ_TTR_PCT} * n THEN 1 ELSE 0 END AS f_ttr,
+             CASE WHEN 100 * topc > {_GQ_DOM_PCT} * n THEN 1 ELSE 0 END AS f_dom
+      FROM m)
+    SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(f_wc) AS BIGINT) AS fail_wordcount,
+           CAST(SUM(f_mwl) AS BIGINT) AS fail_meanwordlen,
+           CAST(SUM(f_stop) AS BIGINT) AS fail_stopword,
+           CAST(SUM(f_ttr) AS BIGINT) AS fail_ttr,
+           CAST(SUM(f_dom) AS BIGINT) AS fail_dominance,
+           CAST(SUM(CASE WHEN f_wc + f_mwl + f_stop + f_ttr + f_dom = 0
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
+           ROUND(CAST(SUM(CASE WHEN f_wc + f_mwl + f_stop + f_ttr + f_dom = 0
+                               THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4)
+             AS pass_rate
+    FROM r GROUP BY source ORDER BY source
+    """,
+)
+def q397_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = load_table(spark, sf_dir, "documents").select(
+        "source", tokens("text").alias("tk")
+    )
+    stop_pred = " OR ".join(f"x = '{s}'" for s in _GQ_STOPWORDS)
+    m = t.select(
+        "source",
+        F.size("tk").cast("bigint").alias("n"),
+        F.expr("aggregate(tk, 0L, (a, x) -> a + length(x))").alias("sumlen"),
+        F.expr(f"size(filter(tk, x -> {stop_pred}))").cast("bigint").alias("nstop"),
+        F.size(F.array_distinct("tk")).cast("bigint").alias("nd"),
+        F.expr(
+            "array_max(transform(array_distinct(tk), "
+            "t2 -> size(filter(tk, x -> x = t2))))"
+        )
+        .cast("bigint")
+        .alias("topc"),
+    )
+    f = lambda c: F.when(c, F.lit(1)).otherwise(F.lit(0))  # noqa: E731
+    r = m.select(
+        "source",
+        f((F.col("n") < _GQ_WC_MIN) | (F.col("n") > _GQ_WC_MAX)).alias("f_wc"),
+        f(
+            (10 * F.col("sumlen") < _GQ_MWL_LO * F.col("n"))
+            | (10 * F.col("sumlen") > _GQ_MWL_HI * F.col("n"))
+        ).alias("f_mwl"),
+        f(100 * F.col("nstop") < _GQ_STOP_PCT * F.col("n")).alias("f_stop"),
+        f(100 * F.col("nd") < _GQ_TTR_PCT * F.col("n")).alias("f_ttr"),
+        f(100 * F.col("topc") > _GQ_DOM_PCT * F.col("n")).alias("f_dom"),
+    )
+    all_pass = (
+        F.col("f_wc") + F.col("f_mwl") + F.col("f_stop") + F.col("f_ttr") + F.col("f_dom")
+        == 0
+    )
+    return (
+        r.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("f_wc").cast("bigint").alias("fail_wordcount"),
+            F.sum("f_mwl").cast("bigint").alias("fail_meanwordlen"),
+            F.sum("f_stop").cast("bigint").alias("fail_stopword"),
+            F.sum("f_ttr").cast("bigint").alias("fail_ttr"),
+            F.sum("f_dom").cast("bigint").alias("fail_dominance"),
+            F.sum(f(all_pass)).cast("bigint").alias("n_pass"),
+        )
+        .withColumn(
+            "pass_rate",
+            F.round(F.col("n_pass").cast("double") / F.col("n_docs"), 4),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q399 — document stitching (crawl-continuation detection): find docs
+# whose LAST k tokens equal another doc's FIRST k tokens — the
+# suffix/prefix adjacency that marks one document split across crawl
+# records (pagination, chunked extraction). The standard corpus
+# reconstruction primitive before packing: stitch candidates get merged
+# or deduplicated so the training corpus doesn't contain split halves.
+# Distinct from q186 containment (bag overlap) and q263 span excision
+# (repeated interior grams): this keys on ORDERED boundary grams.
+#
+# Output is the per-document audit view (count of continuation
+# candidates + the first candidate id), NOT the raw pair list — pairs
+# grow with gram-collision mass while this stays O(matched docs),
+# the scale-stable contract (the q33/q35 row-contract lesson applied
+# at design time).
+#
+# Shape (100 TB): scan-local boundary-gram projection (slice +
+# array_join inside codegen), ONE hash-shuffle equi-join on the gram
+# string, one map-combinable groupBy. Docs shorter than 2k tokens are
+# excluded at the scan so pre/suf never overlap.
+# ---------------------------------------------------------------------------
+_ST_K = 3
+
+
+@register(
+    "q399_doc_stitching",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
+    e AS (
+      SELECT doc_id,
+             array_to_string(tk[1:{_ST_K}], ' ') AS pre,
+             array_to_string(tk[len(tk)-{_ST_K}+1:len(tk)], ' ') AS suf
+      FROM t WHERE len(tk) >= {2 * _ST_K})
+    SELECT a.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_candidates,
+           CAST(MIN(b.doc_id) AS BIGINT) AS first_candidate,
+           any_value(a.suf) AS boundary_gram
+    FROM e a JOIN e b ON a.suf = b.pre AND a.doc_id <> b.doc_id
+    GROUP BY a.doc_id ORDER BY a.doc_id
+    """,
+)
+def q399_doc_stitching(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = load_table(spark, sf_dir, "documents").select(
+        "doc_id", tokens("text").alias("tk")
+    )
+    e = t.filter(F.size("tk") >= 2 * _ST_K).select(
+        "doc_id",
+        F.array_join(F.slice("tk", 1, _ST_K), " ").alias("pre"),
+        F.array_join(F.slice("tk", -_ST_K, _ST_K), " ").alias("suf"),
+    )
+    a = e.select(F.col("doc_id"), F.col("suf"))
+    b = e.select(F.col("doc_id").alias("b_id"), F.col("pre"))
+    return (
+        a.join(b, (a["suf"] == b["pre"]) & (a["doc_id"] != b["b_id"]))
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
+            F.min("b_id").cast("bigint").alias("first_candidate"),
+            F.any_value("suf").alias("boundary_gram"),
+        )
+        .orderBy("doc_id")
+    )

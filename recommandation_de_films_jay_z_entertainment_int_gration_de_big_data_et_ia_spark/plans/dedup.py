@@ -1,18 +1,26 @@
-"""Dedup query catalog: exact, MinHash+LSH, n-gram Jaccard, SimHash —
+"""Dedup query catalog: exact, MinHash+LSH, n-gram Jaccard, SimHash, and
+the audits over them (containment, keep-best, duplicate rates, LSH
+S-curve) —
 each oracle-mirrored in DuckDB SQL sharing the engine's exact hash/shingle
 spec (md5-hex, 3-word shingles, 8 hashes × 4 bands, 32-bit simhash)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
     MD5_SPLIT_BUCKET_SQL,
     NORM_SQL,
     SHINGLES_SQL,
+    SPLIT_SQL,
+    STOP_SQL,
+    STOPWORDS,
     TOKS_SQL,
+    md5_hex,
+    md5_split,
     md5_split_bucket,
+    normalize_text,
     tokens,
 )
 from ..operators import dedup as D
@@ -210,10 +218,10 @@ def q78_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hygiene check for training corpora, composed from the dedup + split
 # operators.
 # ---------------------------------------------------------------------------
-_SPLIT_SQL = f"""
+_SPLITS_CTE = f"""
 splits AS (
   SELECT doc_id,
-         CASE WHEN h < 204 THEN 'train' WHEN h < 230 THEN 'val' ELSE 'test' END AS split
+         {SPLIT_SQL} AS split
   FROM (SELECT doc_id,
                {MD5_SPLIT_BUCKET_SQL} AS h
         FROM documents))
@@ -224,7 +232,7 @@ splits AS (
     "q81_split_contamination",
     oracle=f"""
     {LSH_PAIRS_CTE},
-    {_SPLIT_SQL}
+    {_SPLITS_CTE}
     SELECT id_a, id_b, sa2.split AS split_a, sb2.split AS split_b,
            ROUND(CAST(len(list_intersect(sha.sh, shb.sh)) AS DOUBLE)
                  / CAST(len(list_distinct(list_concat(sha.sh, shb.sh))) AS DOUBLE), 4) AS jaccard
@@ -248,7 +256,7 @@ def q81_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = md5_split_bucket()
     splits = docs.select(
         "doc_id",
-        F.when(h < 204, "train").when(h < 230, "val").otherwise("test").alias("split"),
+        md5_split(h).alias("split"),
     )
     sa = splits.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a"))
     sb = splits.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b"))
@@ -441,3 +449,388 @@ def q252_ppjoin_high_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.array_distinct(tokens("text")).alias("s"))
     )
     return D.ppjoin_pairs(docs, "doc_id", "s", threshold=0.9).orderBy("id_a", "id_b")
+
+
+# ---------------------------------------------------------------------------
+# q36 — dedup applied: materialize the deduplicated corpus (keep-first)
+# ---------------------------------------------------------------------------
+@register(
+    "q36_dedup_apply",
+    oracle=f"""
+    WITH u AS (SELECT doc_id, text FROM documents
+               UNION ALL SELECT doc_id + 10000, text FROM documents),
+    survivors AS (
+      SELECT MIN(doc_id) AS doc_id
+      FROM u GROUP BY md5({NORM_SQL}))
+    SELECT u.doc_id, strlen(u.text) AS n_bytes
+    FROM u JOIN survivors s ON u.doc_id = s.doc_id
+    """,
+)
+def q36_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    doubled = docs.unionAll(docs.select((F.col("doc_id") + 10000).alias("doc_id"), "text"))
+    survivors = D.exact_dedup_groups(doubled, "doc_id", "text").select(
+        F.col("survivor_id").alias("doc_id")
+    )
+    # keep-first realization: semi-join the corpus to its survivor ids
+    return doubled.join(survivors, "doc_id", "left_semi").select(
+        "doc_id", F.length(F.encode("text", "UTF-8")).cast("bigint").alias("n_bytes")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q186 — asymmetric containment on the LSH candidate pairs (catches
+# quote/subset duplication that symmetric Jaccard under-scores): for
+# each q32 candidate pair, containment_a = |A∩B|/|A| and the mirror for
+# B, flagged when either side >= 0.8. Reuses the exact q32/q33 banding
+# machinery (operators.dedup) — same single bucket shuffle, two id-keyed
+# shingle joins for the verify.
+# ---------------------------------------------------------------------------
+@register(
+    "q186_containment_pairs",
+    oracle=f"""
+    {LSH_PAIRS_CTE}
+    SELECT id_a, id_b,
+           ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+                 / CAST(len(sa.sh) AS DOUBLE), 4) AS containment_a,
+           ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+                 / CAST(len(sb.sh) AS DOUBLE), 4) AS containment_b,
+           (CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+              / CAST(len(sa.sh) AS DOUBLE) >= 0.8
+            OR CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+              / CAST(len(sb.sh) AS DOUBLE) >= 0.8) AS contained
+    FROM pairs JOIN s sa ON sa.doc_id = id_a JOIN s sb ON sb.doc_id = id_b
+    """,
+)
+def q186_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    sh = D.doc_shingles(docs, "doc_id", "text", 3)
+    cand = lsh_pairs(sh)
+    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("__sa"))
+    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("__sb"))
+    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
+    ca = inter / F.size("__sa").cast("double")
+    cb = inter / F.size("__sb").cast("double")
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.round(ca, 4).alias("containment_a"),
+            F.round(cb, 4).alias("containment_b"),
+            ((ca >= 0.8) | (cb >= 0.8)).alias("contained"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q199 — dedup with BEST-quality survivor selection (the curation-aware
+# ending of the dedup story: q32 candidates -> q78 clusters -> keep the
+# highest-quality member instead of q90's min-id convention): for every
+# multi-member near-dup cluster, the keeper is argmax by (q42's rounded
+# quality score, then min doc_id) — ROUNDED quality feeds the ordering
+# so both engines rank identically. Reuses the exact banding/cluster
+# machinery (operators.dedup) and the q42 quality formula; the quality
+# join touches only clustered docs (candidate-pair nodes), not the
+# whole corpus.
+# ---------------------------------------------------------------------------
+@register(
+    "q199_dedup_keep_best",
+    oracle=f"""
+    {COMPONENTS_CTE},
+    comp AS (
+      SELECT node, {CLUSTER_ID_SQL} AS cluster_id
+      FROM reach GROUP BY node),
+    quality AS (
+      SELECT doc_id,
+             ROUND(0.5 * least(CAST(len(tk) AS DOUBLE) / 100.0, 1.0)
+                   + 0.5 * least((CAST(len(list_filter(tk, x -> list_contains({STOP_SQL}, x))) AS DOUBLE)
+                                  / CAST(len(tk) AS DOUBLE)) * 10.0, 1.0), 4) AS quality
+      FROM t),
+    ranked AS (
+      SELECT c.cluster_id, c.node, q.quality,
+             ROW_NUMBER() OVER (PARTITION BY c.cluster_id
+                                ORDER BY q.quality DESC, c.node ASC) AS rn
+      FROM comp c JOIN quality q ON c.node = q.doc_id)
+    SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members,
+           CAST(MAX(CASE WHEN rn = 1 THEN node END) AS BIGINT) AS kept_doc_id,
+           MAX(CASE WHEN rn = 1 THEN quality END) AS kept_quality
+    FROM ranked GROUP BY cluster_id
+    HAVING COUNT(*) >= 2
+    """,
+)
+def q199_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    docs = load_table(spark, sf_dir, "documents")
+    clusters = lsh_clusters(docs)  # (node, cluster_id)
+    tk = docs.select("doc_id", tokens("text").alias("tk"))
+    n_tokens = F.size("tk")
+    nstop = F.size(F.filter(F.col("tk"), lambda t: t.isin(*STOPWORDS)))
+    quality = F.round(
+        F.lit(0.5) * F.least(n_tokens.cast("double") / F.lit(100.0), F.lit(1.0))
+        + F.lit(0.5)
+        * F.least((nstop.cast("double") / n_tokens.cast("double")) * F.lit(10.0), F.lit(1.0)),
+        4,
+    )
+    q = tk.select("doc_id", quality.alias("quality"))
+    members = clusters.join(q, clusters.node == q.doc_id).select(
+        "cluster_id", "node", "quality"
+    )
+    w = Window.partitionBy("cluster_id").orderBy(F.desc("quality"), F.asc("node"))
+    ranked = members.withColumn("rn", F.row_number().over(w))
+    return (
+        ranked.groupBy("cluster_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_members"),
+            F.max(F.when(F.col("rn") == 1, F.col("node"))).cast("bigint").alias("kept_doc_id"),
+            F.max(F.when(F.col("rn") == 1, F.col("quality"))).alias("kept_quality"),
+        )
+        .filter(F.col("n_members") >= 2)
+    )
+
+
+# ---------------------------------------------------------------------------
+# q222 — duplicate rate by source (the curation decision table the
+# dedup family feeds: which ingestion source is worth its storage):
+# per source, exact-content-hash (md5, q31's spec) duplicate counts —
+# docs whose text also appears elsewhere IN THE SAME SOURCE vs
+# cross-source collisions. Two aggregates over the hash frame.
+# ---------------------------------------------------------------------------
+@register(
+    "q222_dup_rate_by_source",
+    oracle=f"""
+    WITH h AS (
+      SELECT doc_id, source,
+             md5({NORM_SQL}) AS ch
+      FROM documents),
+    within AS (
+      SELECT source, ch, COUNT(*) AS n FROM h GROUP BY source, ch),
+    global_h AS (SELECT ch, COUNT(DISTINCT source) AS n_sources FROM h GROUP BY ch)
+    SELECT w.source,
+           CAST(SUM(w.n) AS BIGINT) AS n_docs,
+           CAST(SUM(w.n - 1) AS BIGINT) AS n_within_dups,
+           ROUND(CAST(SUM(w.n - 1) AS DOUBLE) / SUM(w.n), 6) AS within_dup_rate,
+           CAST(SUM(CASE WHEN g.n_sources > 1 THEN w.n ELSE 0 END) AS BIGINT) AS n_cross_source
+    FROM within w JOIN global_h g ON w.ch = g.ch
+    GROUP BY w.source
+    """,
+)
+def q222_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    h = docs.select("doc_id", "source", md5_hex(normalize_text(F.col("text"))).alias("ch"))
+    within = h.groupBy("source", "ch").agg(F.count(F.lit(1)).alias("n"))
+    global_h = h.groupBy("ch").agg(F.countDistinct("source").alias("n_sources"))
+    return (
+        within.join(global_h, "ch")
+        .groupBy("source")
+        .agg(
+            F.sum("n").cast("bigint").alias("n_docs"),
+            F.sum(F.col("n") - 1).cast("bigint").alias("n_within_dups"),
+            F.round(F.sum(F.col("n") - 1).cast("double") / F.sum("n"), 6).alias("within_dup_rate"),
+            F.sum(F.when(F.col("n_sources") > 1, F.col("n")).otherwise(0)).cast("bigint").alias("n_cross_source"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q229 — cross-source near-duplication matrix (who copies whom; the
+# pairwise drill-down of q222): q32's LSH candidate pairs joined to
+# their documents' sources, canonicalized (least/greatest) and counted
+# per source pair — exact-hash dups never cross sources in this corpus,
+# so the matrix is built on the NEAR-dup candidate graph, which does.
+# Reuses the banding machinery: one bucket shuffle + two id-keyed
+# source joins.
+# ---------------------------------------------------------------------------
+@register(
+    "q229_source_overlap",
+    oracle=f"""
+    {LSH_PAIRS_CTE},
+    src AS (SELECT doc_id, source FROM documents)
+    SELECT least(sa.source, sb.source) AS source_a,
+           greatest(sa.source, sb.source) AS source_b,
+           CAST(COUNT(*) AS BIGINT) AS n_neardup_pairs
+    FROM pairs JOIN src sa ON pairs.id_a = sa.doc_id
+               JOIN src sb ON pairs.id_b = sb.doc_id
+    WHERE sa.source != sb.source
+    GROUP BY source_a, source_b
+    """,
+)
+def q229_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    sh = D.doc_shingles(docs, "doc_id", "text", n=3)
+    pairs = lsh_pairs(sh)
+    sa = docs.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa"))
+    sb = docs.select(F.col("doc_id").alias("id_b"), F.col("source").alias("sb"))
+    return (
+        pairs.join(F.broadcast(sa), "id_a")
+        .join(F.broadcast(sb), "id_b")
+        .filter(F.col("sa") != F.col("sb"))
+        .groupBy(
+            F.least("sa", "sb").alias("source_a"),
+            F.greatest("sa", "sb").alias("source_b"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_neardup_pairs"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# q233 — near-dup cluster size histogram (the shape-of-duplication
+# readout over q78's connected components): cluster sizes (singletons
+# excluded — they never entered a pair) bucketed, with member totals.
+# The recursive-CTE oracle mirrors the iterative min-label clusters.
+# ---------------------------------------------------------------------------
+@register(
+    "q233_cluster_size_histogram",
+    oracle=f"""
+    {COMPONENTS_CTE},
+    comp AS (
+      SELECT node, {CLUSTER_ID_SQL} AS cluster_id
+      FROM reach GROUP BY node),
+    sizes AS (SELECT cluster_id, COUNT(*) AS size FROM comp GROUP BY cluster_id)
+    SELECT CAST(size AS BIGINT) AS size,
+           CAST(COUNT(*) AS BIGINT) AS n_clusters,
+           CAST(COUNT(*) * size AS BIGINT) AS n_members
+    FROM sizes GROUP BY size
+    """,
+)
+def q233_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    clusters = lsh_clusters(load_table(spark, sf_dir, "documents"))
+    sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("size"))
+    return sizes.groupBy("size").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_clusters"),
+        (F.count(F.lit(1)) * F.col("size")).cast("bigint").alias("n_members"),
+    ).select(F.col("size").cast("bigint").alias("size"), "n_clusters", "n_members")
+
+
+# ---------------------------------------------------------------------------
+# q358 — MinHash LSH band-configuration audit (the S-curve tuning step
+# every LSH dedup deployment runs before picking b×r): for each
+# candidate config, the detection probability 1 - (1 - s^r)^b over the
+# OBSERVED 3-shingle Jaccard distribution of a deterministic pair
+# sample (adjacent doc_ids — an unbiased, coordination-free probe of
+# the corpus's similarity profile). Reports, per config, the
+# mean detection probability and how many sampled pairs clear p >= 0.5
+# — the numbers that decide which (bands, rows) q32/q38 should run
+# with at the corpus's actual similarity profile.
+#
+# Determinism: s is an exact integer-ratio double; the S-curve is
+# GENERATED as an explicit multiplication chain (s*s*...*s), never
+# pow() (libm-dependent); per-pair p is ROUND(.,8) → DECIMAL(18,8)
+# before the exact cross-pair mean.
+#
+# Shape (100 TB): the pair sample joins on doc_id+1 — key-co-
+# partitioned equi-join, one shuffle, |docs| pairs max (never
+# all-pairs); the 4-config explode is row-local; final agg is 4 rows.
+# ---------------------------------------------------------------------------
+_SC_CONFIGS = ((2, 8), (4, 4), (8, 2), (16, 1))  # (bands, rows_per_band)
+
+
+def _schain(base: str, k: int) -> str:
+    return "(" + " * ".join([base] * k) + ")" if k > 1 else base
+
+
+def _scurve_case(s_col: str, bands_col: str) -> str:
+    """CASE over configs: 1 - (1 - s^r)^b as explicit product chains."""
+    whens = []
+    for b_, r_ in _SC_CONFIGS:
+        sr = _schain(s_col, r_)
+        whens.append(
+            f"WHEN {bands_col} = {b_} THEN 1 - " + _schain(f"(1 - {sr})", b_)
+        )
+    return "CASE " + " ".join(whens) + " END"
+
+
+_SC_VALUES = ", ".join(f"({b_}, {r_})" for b_, r_ in _SC_CONFIGS)
+
+
+@register(
+    "q358_lsh_s_curve_audit",
+    oracle=f"""
+    WITH t AS (
+      SELECT source, doc_id,
+             {TOKS_SQL} AS tk
+      FROM documents),
+    g AS (
+      SELECT doc_id,
+             list_distinct(list_transform(range(1, len(tk) - 1), i ->
+               tk[i] || ' ' || tk[i + 1] || ' ' || tk[i + 2])) AS gr
+      FROM t WHERE len(tk) >= 3),
+    pairs AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+             CAST(len(list_intersect(a.gr, b.gr)) AS DOUBLE)
+               / len(list_distinct(list_concat(a.gr, b.gr))) AS s
+      FROM g a JOIN g b ON b.doc_id = a.doc_id + 1),
+    curves AS (
+      SELECT c.bands, c.rpb, p.s,
+             CAST(ROUND({_scurve_case("p.s", "c.bands")}, 8)
+                  AS DECIMAL(18,8)) AS detect_p
+      FROM pairs p, (VALUES {_SC_VALUES}) AS c(bands, rpb))
+    SELECT CAST(bands AS INT) AS bands, CAST(rpb AS INT) AS rows_per_band,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           ROUND(CAST(SUM(detect_p) AS DOUBLE) / COUNT(*), 6) AS avg_detect_p,
+           CAST(COUNT(*) FILTER (WHERE CAST(detect_p AS DOUBLE) >= 0.5) AS BIGINT)
+             AS n_detectable
+    FROM curves GROUP BY bands, rpb ORDER BY bands
+    """,
+)
+def q358_lsh_s_curve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = load_table(spark, sf_dir, "documents").select(
+        "doc_id", tokens("text").alias("tk")
+    )
+    g = t.filter(F.size("tk") >= 3).select(
+        "doc_id",
+        F.expr(
+            "array_distinct(transform(sequence(1, size(tk) - 2), i -> "
+            "concat_ws(' ', element_at(tk, CAST(i AS INT)), "
+            "element_at(tk, CAST(i + 1 AS INT)), element_at(tk, CAST(i + 2 AS INT)))))"
+        ).alias("gr"),
+    )
+    a = g.select(F.col("doc_id").alias("id_a"), F.col("gr").alias("ga"))
+    b = g.select(
+        (F.col("doc_id") - 1).alias("id_a"),
+        F.col("doc_id").alias("id_b"),
+        F.col("gr").alias("gb"),
+    )
+    pairs = a.join(b, ["id_a"]).select(
+        "id_a",
+        "id_b",
+        (
+            F.size(F.array_intersect("ga", "gb")).cast("double")
+            / F.size(F.array_union("ga", "gb"))
+        ).alias("s"),
+    )
+    cfg = F.explode(
+        F.array(*[F.struct(F.lit(b_).alias("bands"), F.lit(r_).alias("rpb"))
+                  for b_, r_ in _SC_CONFIGS])
+    )
+    # per-config S-curve as an explicit multiplication chain (no pow)
+    curves = (
+        pairs.select("s", cfg.alias("c"))
+        .select(
+            F.col("c.bands").alias("bands"),
+            F.col("c.rpb").alias("rows_per_band"),
+            "s",
+        )
+        .select(
+            "bands",
+            "rows_per_band",
+            F.expr(
+                f"CAST(ROUND({_scurve_case('s', 'bands')}, 8) AS DECIMAL(18,8))"
+            ).alias("detect_p"),
+        )
+    )
+    return (
+        curves.groupBy("bands", "rows_per_band")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            F.round(
+                F.sum("detect_p").cast("double") / F.count(F.lit(1)), 6
+            ).alias("avg_detect_p"),
+            F.count_if(F.col("detect_p").cast("double") >= 0.5)
+            .cast("bigint")
+            .alias("n_detectable"),
+        )
+        .orderBy("bands")
+    )

@@ -1,6 +1,7 @@
-"""Round-4 extension batch: blocked entity resolution, incremental
-materialized-aggregate maintenance, and a mergeable Misra-Gries
-heavy-hitters sketch with an exactness guarantee.
+"""Entity resolution and incremental aggregates: blocked entity
+resolution, fuzzy blocked and sorted-neighbourhood matching, name edit
+pairs, incremental materialized-aggregate maintenance, and a mergeable
+Misra-Gries heavy-hitters sketch with an exactness guarantee.
 
 These extend the LLM-data-pipeline surface (SURVEY §2.8): record linkage
 is the entity-level cousin of document dedup; incremental aggregate
@@ -348,4 +349,181 @@ def q144_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)")).cast("double"), 2
             ).alias("rev"),
         )
+    )
+
+
+_FUZZY_MAX_DIST = 4
+
+
+# ---------------------------------------------------------------------------
+# q171 — blocked fuzzy join (entity-matching primitive the q140
+# resolution pipeline assumes): candidate pairs of *distinct* part names
+# whose edit distance is <= 4, generated ONLY within a blocking key (the
+# head noun of the name), never all-pairs. At 100 TB the block key keeps
+# the self-join linear in block sizes: Exchange on the noun, in-block
+# pair comparison, and levenshtein runs JVM-side (built-in, codegen) —
+# no UDF. Both engines compute exact Levenshtein, so `dist` matches
+# bit-for-bit.
+# ---------------------------------------------------------------------------
+@register(
+    "q171_fuzzy_blocked_join",
+    oracle=f"""
+    WITH names AS (
+      SELECT DISTINCT p_name, string_split(p_name, ' ')[-1] AS block
+      FROM part)
+    SELECT a.p_name AS name_a, b.p_name AS name_b,
+           CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
+    FROM names a JOIN names b
+      ON a.block = b.block AND a.p_name < b.p_name
+    WHERE levenshtein(a.p_name, b.p_name) <= {_FUZZY_MAX_DIST}
+    """,
+)
+def q171_fuzzy_blocked_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    names = (
+        load_table(spark, sf_dir, "part")
+        .select("p_name")
+        .distinct()
+        .withColumn("block", F.element_at(F.split("p_name", " "), -1))
+    )
+    a = names.select(F.col("p_name").alias("name_a"), F.col("block").alias("ba"))
+    b = names.select(F.col("p_name").alias("name_b"), F.col("block").alias("bb"))
+    return (
+        a.join(b, (F.col("ba") == F.col("bb")) & (F.col("name_a") < F.col("name_b")))
+        .withColumn("dist", F.levenshtein("name_a", "name_b").cast("int"))
+        .filter(F.col("dist") <= _FUZZY_MAX_DIST)
+        .select("name_a", "name_b", "dist")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q179 — sorted-neighborhood near-dup detection (the sort-based
+# alternative to q32's LSH blocking, classic Hernandez-Stolfo SNM):
+# documents are ordered by their normalized text, and each doc is
+# compared ONLY to its next `_SNM_WINDOW` neighbors in that order (LEAD
+# windows — linear work, never all-pairs). Pairs with token-Jaccard >=
+# `_SNM_THRESHOLD` survive. The window is partitioned by the first
+# character of the sort key, so at 100 TB the sort is a bounded
+# per-prefix-block range sort (lengthen the prefix to shrink blocks) —
+# the documented SNM trade-off: boundary pairs across blocks are missed,
+# exactly as bucket-boundary pairs are missed by LSH banding.
+# Token/normalization spec is shared with the dedup family
+# (functions.text.normalize_text / NORM_SQL).
+# ---------------------------------------------------------------------------
+_SNM_WINDOW = 3
+_SNM_THRESHOLD = 0.2
+
+
+@register(
+    "q179_sorted_neighborhood",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, {NORM_SQL} AS sk,
+             list_distinct({TOKS_SQL}) AS tk
+      FROM documents),
+    p AS (
+      SELECT doc_id AS id_a, tk AS tk_a,
+             {" , ".join(
+               f"LEAD(doc_id, {o}) OVER w AS id_b{o}, LEAD(tk, {o}) OVER w AS tk_b{o}"
+               for o in range(1, _SNM_WINDOW + 1)
+             )}
+      FROM t
+      WINDOW w AS (PARTITION BY substr(sk, 1, 1) ORDER BY sk, doc_id)),
+    pairs AS (
+      {" UNION ALL ".join(
+        f"SELECT id_a, id_b{o} AS id_b, {o} AS nbr_offset, tk_a, tk_b{o} AS tk_b FROM p WHERE id_b{o} IS NOT NULL"
+        for o in range(1, _SNM_WINDOW + 1)
+      )})
+    SELECT id_a, id_b, CAST(nbr_offset AS INT) AS nbr_offset,
+           ROUND(CAST(len(list_intersect(tk_a, tk_b)) AS DOUBLE)
+                 / CAST(len(list_distinct(list_concat(tk_a, tk_b))) AS DOUBLE), 4) AS jaccard
+    FROM pairs
+    WHERE CAST(len(list_intersect(tk_a, tk_b)) AS DOUBLE)
+          / CAST(len(list_distinct(list_concat(tk_a, tk_b))) AS DOUBLE) >= {_SNM_THRESHOLD}
+    """,
+)
+def q179_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        normalize_text(F.col("text")).alias("sk"),
+        F.array_distinct(tokens(F.col("text"))).alias("tk"),
+    )
+    w = Window.partitionBy(F.substring("sk", 1, 1)).orderBy("sk", "doc_id")
+    p = docs.select(
+        F.col("doc_id").alias("id_a"),
+        F.col("tk").alias("tk_a"),
+        *[F.lead("doc_id", o).over(w).alias(f"id_b{o}") for o in range(1, _SNM_WINDOW + 1)],
+        *[F.lead("tk", o).over(w).alias(f"tk_b{o}") for o in range(1, _SNM_WINDOW + 1)],
+    )
+    arms = []
+    for o in range(1, _SNM_WINDOW + 1):
+        arms.append(
+            p.filter(F.col(f"id_b{o}").isNotNull()).select(
+                "id_a",
+                F.col(f"id_b{o}").alias("id_b"),
+                F.lit(o).cast("int").alias("nbr_offset"),
+                "tk_a",
+                F.col(f"tk_b{o}").alias("tk_b"),
+            )
+        )
+    pairs = arms[0]
+    for arm in arms[1:]:
+        pairs = pairs.unionAll(arm)
+    jac = F.size(F.array_intersect("tk_a", "tk_b")).cast("double") / F.size(
+        F.array_union("tk_a", "tk_b")
+    ).cast("double")
+    return (
+        pairs.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= _SNM_THRESHOLD)
+        .select("id_a", "id_b", "nbr_offset", F.round("jaccard", 4).alias("jaccard"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# q337 — edit-distance near-duplicate audit over the part-name
+# VOCABULARY: distinct p_name values whose Levenshtein distance is
+# <= 2 (Spark's levenshtein == DuckDB's — unit-cost ops). Pairing runs
+# over DISTINCT names, not rows — the name vocabulary is bounded
+# (adjective x noun), so the pair stage is scale-CONSTANT while the
+# dedup signal still covers every row; a |length difference| <= 1
+# filter prunes before the quadratic distance.
+#
+# Shape (100 TB): one distinct shuffle collapses rows to the bounded
+# vocabulary; the vocabulary self-join is broadcast (tiny by
+# construction). This is the ES fuzzy-dedup analog of q251's
+# term-dictionary expansion.
+# ---------------------------------------------------------------------------
+_ED_MAX = 2
+
+
+@register(
+    "q337_name_edit_pairs",
+    oracle=f"""
+    WITH v AS (SELECT DISTINCT p_name FROM part)
+    SELECT a.p_name AS name_a, b.p_name AS name_b,
+           CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
+    FROM v a JOIN v b
+      ON a.p_name < b.p_name
+     AND abs(len(a.p_name) - len(b.p_name)) <= 1
+    WHERE levenshtein(a.p_name, b.p_name) <= {_ED_MAX}
+    ORDER BY name_a, name_b
+    """,
+)
+def q337_name_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    v = load_table(spark, sf_dir, "part").select("p_name").distinct()
+    a = v.select(F.col("p_name").alias("name_a"))
+    b = v.select(F.col("p_name").alias("name_b"))
+    pairs = a.join(
+        F.broadcast(b),
+        (F.col("name_a") < F.col("name_b"))
+        & (
+            F.abs(F.length("name_a") - F.length("name_b")) <= 1
+        ),
+    )
+    return (
+        pairs.select(
+            "name_a", "name_b",
+            F.levenshtein("name_a", "name_b").cast("bigint").alias("dist"),
+        )
+        .filter(F.col("dist") <= _ED_MAX)
+        .orderBy("name_a", "name_b")
     )

@@ -3,6 +3,8 @@
 Every ES-DSL construct from the reference's API (``src/api.py:91-221``) is
 a Spark-native query with a DuckDB oracle. Both sides share one text
 analysis spec: lower → non-alphanumerics→space → trim → split on spaces.
+Scoring and compound queries are in ``relevance``, span and intervals
+queries in ``spans``.
 """
 
 from __future__ import annotations
@@ -10,8 +12,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import NORM_SQL, TOKS_SQL, normalize_text, tokens, toks_sql
+from ..functions.text import (
+    NORM_SQL,
+    TOKS_SQL,
+    distinct_tokens_sorted,
+    normalize_text,
+    tokens,
+    toks_sql,
+)
 from ..operators import search as S
+from ..operators.querystring import KeywordField, TokenField, compile_query_string
 from ..sources.readers import load_table
 from .catalog import register
 
@@ -269,8 +279,6 @@ def q68_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q69_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..operators.textindex import build_docfreq_index
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1650,4 +1658,821 @@ def q285_top_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
         .orderBy("lang")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q297 — ES `regexp` term query: documents whose token set contains a
+# match of the regex s[a-z]*[knt] (ES regexp queries are implicitly
+# anchored — the TERM must match in full, hence ^...$ on both engines;
+# tokens are [a-z0-9]+ so Java-regex and RE2 class semantics coincide).
+# Surfaces the q283 wildcard shape for the full-regex DSL entry point.
+#
+# Shape (100 TB): scan-local higher-order filter, no shuffle before the
+# output sort; with the q68 postings index this becomes a term-
+# dictionary walk exactly like ES's automaton intersection.
+# ---------------------------------------------------------------------------
+_REGEXP_Q = "^s[a-z]*[knt]$"
+
+
+@register(
+    "q297_regexp_query",
+    oracle=f"""
+    WITH d AS (SELECT doc_id, list_sort(list_filter(list_distinct({TOKS_SQL}),
+                 x -> regexp_matches(x, '{_REGEXP_Q}'))) AS hits
+               FROM documents)
+    SELECT doc_id,
+           CAST(len(hits) AS BIGINT) AS n_terms,
+           array_to_string(hits, ',') AS matched_terms
+    FROM d WHERE len(hits) > 0
+    ORDER BY doc_id
+    """,
+)
+def q297_regexp_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    hits = F.array_sort(
+        F.filter(F.array_distinct(tokens("text")), lambda x: x.rlike(_REGEXP_Q))
+    )
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(hits).cast("bigint").alias("n_terms"),
+        F.concat_ws(",", hits).alias("matched_terms"),
+    )
+    return d.filter(F.col("n_terms") > 0).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# q298 — ES `match_bool_prefix` query: "merge st" analyzes to the full
+# term `merge` (must match as a term) plus the LAST token treated as a
+# prefix `st*` (type-ahead semantics). Output: matching docs with the
+# sorted distinct prefix-completed terms.
+#
+# Shape (100 TB): scan-local predicates (array_contains + a
+# higher-order startswith filter); the indexed variant walks the q68
+# term dictionary for the prefix expansion like ES does.
+# ---------------------------------------------------------------------------
+_MBP_FULL = "merge"
+_MBP_PREFIX = "st"
+
+
+@register(
+    "q298_match_bool_prefix",
+    oracle=f"""
+    WITH d AS (
+      SELECT doc_id,
+             list_distinct({TOKS_SQL}) AS ts
+      FROM documents),
+    m AS (
+      SELECT doc_id,
+             list_sort(list_filter(ts, x -> x LIKE '{_MBP_PREFIX}%')) AS pref_hits
+      FROM d WHERE list_contains(ts, '{_MBP_FULL}'))
+    SELECT doc_id,
+           CAST(len(pref_hits) AS BIGINT) AS n_prefix_terms,
+           array_to_string(pref_hits, ',') AS prefix_terms
+    FROM m WHERE len(pref_hits) > 0
+    ORDER BY doc_id
+    """,
+)
+def q298_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ts = F.array_distinct(tokens("text"))
+    pref = F.array_sort(F.filter(ts, lambda x: x.startswith(_MBP_PREFIX)))
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        ts.alias("ts"),
+        F.size(pref).cast("bigint").alias("n_prefix_terms"),
+        F.concat_ws(",", pref).alias("prefix_terms"),
+    )
+    return (
+        d.filter(F.array_contains("ts", _MBP_FULL) & (F.col("n_prefix_terms") > 0))
+        .drop("ts")
+        .orderBy("doc_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q311 — ES `terms` lookup query: the term list is FETCHED FROM ANOTHER
+# DOCUMENT (index/id/path) rather than inlined — here, the distinct
+# token set of doc_id 42. Docs (other than the source) matching ANY
+# looked-up term, with their overlap counts.
+#
+# Shape (100 TB): the lookup doc reduces to a 1-row array broadcast
+# (exactly ES's coordinating-node term fetch); the match is then a
+# scan-local array_intersect — no shuffle before the output sort.
+# ---------------------------------------------------------------------------
+_LOOKUP_DOC = 42
+
+
+@register(
+    "q311_terms_lookup",
+    oracle=f"""
+    WITH lu AS (
+      SELECT list_distinct({TOKS_SQL}) AS terms
+      FROM documents WHERE doc_id = {_LOOKUP_DOC}),
+    d AS (
+      SELECT doc_id,
+             CAST(len(list_intersect(list_distinct({TOKS_SQL}),
+               lu.terms)) AS BIGINT) AS n_overlap
+      FROM documents, lu WHERE doc_id <> {_LOOKUP_DOC})
+    SELECT doc_id, n_overlap FROM d WHERE n_overlap > 0 ORDER BY doc_id
+    """,
+)
+def q311_terms_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    lu = docs.filter(F.col("doc_id") == _LOOKUP_DOC).select(
+        distinct_tokens_sorted("text").alias("terms")
+    )
+    d = (
+        docs.filter(F.col("doc_id") != _LOOKUP_DOC)
+        .crossJoin(F.broadcast(lu))
+        .select(
+            "doc_id",
+            F.size(F.array_intersect(distinct_tokens_sorted("text"), F.col("terms")))
+            .cast("bigint")
+            .alias("n_overlap"),
+        )
+    )
+    return d.filter(F.col("n_overlap") > 0).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# q332 — ES `simple_query_string` with the fixed grammar query
+# `+fast -slow "hash join"`: documents must contain "fast", must NOT
+# contain "slow", and must contain the exact adjacent phrase
+# "hash join". Score: tf(fast) + phrase occurrence count (the naive-tf
+# discipline of q314/q324). The grammar parse happens at plan-build
+# time (the query string is a constant); execution is one scan-local
+# predicate + TakeOrdered.
+#
+# Determinism: integer tf and adjacency counts; adjacency is the
+# (x, i) single-pass idiom on the materialized token array (phrase
+# hit at i when toks[i]='hash' and toks[i+1]='join').
+# ---------------------------------------------------------------------------
+_SQS_PLUS = "fast"
+_SQS_MINUS = "slow"
+_SQS_PHRASE = ("hash", "join")
+
+
+@register(
+    "q332_simple_query_string",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
+    s AS (
+      SELECT doc_id,
+             CAST(len(list_filter(toks, x -> x = '{_SQS_PLUS}')) AS BIGINT) AS plus_tf,
+             len(list_filter(toks, x -> x = '{_SQS_MINUS}')) > 0 AS has_minus,
+             CAST(len(list_filter(list_transform(toks, (x, i) ->
+               CASE WHEN x = '{_SQS_PHRASE[0]}'
+                         AND i < len(toks)
+                         AND toks[i + 1] = '{_SQS_PHRASE[1]}'
+                    THEN 1 END), h -> h IS NOT NULL)) AS BIGINT) AS phrase_tf
+      FROM t)
+    SELECT doc_id, plus_tf, phrase_tf,
+           CAST(plus_tf + phrase_tf AS BIGINT) AS score
+    FROM s WHERE plus_tf > 0 AND NOT has_minus AND phrase_tf > 0
+    ORDER BY score DESC, doc_id LIMIT 20
+    """,
+)
+def q332_simple_query_string(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.plan import with_once
+
+    # with_once barrier (functions/plan.py, the q318 lesson): pin the
+    # tokenization; the three clause expressions and the combined
+    # filter would otherwise each re-tokenize inside the Filter.
+    t = with_once(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        "toks",
+        tokens("text"),
+    )
+    # NB: Spark's transform index i is 0-based (element i+1 in SQL
+    # element_at terms), so the "next token" probe is element_at(i+2);
+    # DuckDB's 1-based lambda index probes toks[i+1] — same neighbor.
+    phrase_tf = F.expr(
+        f"size(filter(transform(toks, (x, i) ->"
+        f" IF(x = '{_SQS_PHRASE[0]}' AND i + 1 < size(toks)"
+        f"    AND element_at(toks, i + 2) = '{_SQS_PHRASE[1]}', 1, NULL)),"
+        f" h -> h IS NOT NULL))"
+    ).cast("bigint")
+    s = t.select(
+        "doc_id",
+        F.size(F.filter("toks", lambda x: x == F.lit(_SQS_PLUS)))
+        .cast("bigint")
+        .alias("plus_tf"),
+        (F.size(F.filter("toks", lambda x: x == F.lit(_SQS_MINUS))) > 0).alias(
+            "has_minus"
+        ),
+        phrase_tf.alias("phrase_tf"),
+    )
+    return (
+        s.filter((F.col("plus_tf") > 0) & (~F.col("has_minus")) & (F.col("phrase_tf") > 0))
+        .select(
+            "doc_id", "plus_tf", "phrase_tf",
+            (F.col("plus_tf") + F.col("phrase_tf")).cast("bigint").alias("score"),
+        )
+        .orderBy(F.desc("score"), "doc_id")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# q341 — ES `significant_text` aggregation: tokens over-represented in
+# a FOREGROUND document set (lang = 'en') relative to the whole corpus,
+# scored with ES's JLH: (fgp - bgp) * (fgp / bgp), document-frequency
+# based (each doc counts a token once), requiring fgp > bgp. Completes
+# q254 (significant_terms over keyword fields) with the free-text
+# surface.
+#
+# Determinism: fg/bg document frequencies are exact integers; the two
+# totals are exact; the score is one shared double expression, rounded
+# to 6 with (df, token) tiebreaks.
+#
+# Shape (100 TB): one distinct-token explode + map-combinable shuffle
+# keyed by token; the fg/bg doc totals come from a second 1-column
+# scan that aggregates to ONE broadcast row (never a per-token join).
+# ---------------------------------------------------------------------------
+_ST_FG_LANG = "en"
+
+
+@register(
+    "q341_significant_text",
+    oracle=f"""
+    WITH tok AS (
+      SELECT doc_id, lang = '{_ST_FG_LANG}' AS fg, UNNEST(list_distinct({TOKS_SQL})) AS token
+      FROM documents),
+    df AS (
+      SELECT token,
+             CAST(SUM(CASE WHEN fg THEN 1 ELSE 0 END) AS BIGINT) AS fg_df,
+             CAST(COUNT(*) AS BIGINT) AS bg_df
+      FROM tok GROUP BY token),
+    tot AS (
+      SELECT CAST(SUM(CASE WHEN lang = '{_ST_FG_LANG}' THEN 1 ELSE 0 END) AS BIGINT) AS fg_total,
+             CAST(COUNT(*) AS BIGINT) AS bg_total
+      FROM documents)
+    SELECT token, fg_df, bg_df,
+           ROUND((CAST(fg_df AS DOUBLE) / fg_total - CAST(bg_df AS DOUBLE) / bg_total)
+                 * (CAST(fg_df AS DOUBLE) / fg_total)
+                 / (CAST(bg_df AS DOUBLE) / bg_total), 6) AS jlh
+    FROM df CROSS JOIN tot
+    WHERE CAST(fg_df AS DOUBLE) / fg_total > CAST(bg_df AS DOUBLE) / bg_total
+    ORDER BY jlh DESC, bg_df DESC, token LIMIT 20
+    """,
+)
+def q341_significant_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    tok = docs.select(
+        (F.col("lang") == _ST_FG_LANG).alias("fg"),
+        F.explode(F.array_distinct(tokens("text"))).alias("token"),
+    )
+    df = tok.groupBy("token").agg(
+        F.sum(F.when(F.col("fg"), 1).otherwise(0)).cast("bigint").alias("fg_df"),
+        F.count(F.lit(1)).cast("bigint").alias("bg_df"),
+    )
+    tot = F.broadcast(
+        docs.agg(
+            F.sum(F.when(F.col("lang") == _ST_FG_LANG, 1).otherwise(0))
+            .cast("bigint")
+            .alias("fg_total"),
+            F.count(F.lit(1)).cast("bigint").alias("bg_total"),
+        )
+    )
+    fgp = F.col("fg_df").cast("double") / F.col("fg_total")
+    bgp = F.col("bg_df").cast("double") / F.col("bg_total")
+    return (
+        df.crossJoin(tot)
+        .filter(fgp > bgp)
+        .select(
+            "token", "fg_df", "bg_df",
+            F.round((fgp - bgp) * fgp / bgp, 6).alias("jlh"),
+        )
+        .orderBy(F.desc("jlh"), F.desc("bg_df"), "token")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# q360 — ES `_termvectors` API (term_statistics=true): for a requested
+# set of documents, each document's top-5 terms by term frequency,
+# with the corpus-wide document frequency attached per term. The
+# per-doc tf side is scan-local; the df side is the corpus statistic
+# the API returns when term_statistics is on.
+#
+# Shape (100 TB): the tf explode is restricted to the REQUESTED doc
+# ids by a pushed-down `doc_id IN (...)` filter (a parquet row-group
+# skip); the corpus df explode computes distinct (token, doc) once,
+# then a LEFT-SEMI join against the <=15 candidate terms (broadcast)
+# collapses it before the count shuffle — the full df table is never
+# materialized for terms nobody asked about.
+# ---------------------------------------------------------------------------
+_TV_DOCS = (0, 1, 2)
+_TV_K = 5
+
+
+@register(
+    "q360_term_vectors",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id,
+             {TOKS_SQL} AS tk
+      FROM documents),
+    tf AS (
+      SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
+      FROM (SELECT doc_id, unnest(tk) AS tok FROM t
+            WHERE doc_id IN {_TV_DOCS})
+      GROUP BY doc_id, tok),
+    top AS (
+      SELECT doc_id, tok, tf,
+             ROW_NUMBER() OVER (PARTITION BY doc_id
+               ORDER BY tf DESC, tok) AS rk
+      FROM tf),
+    cand AS (SELECT DISTINCT tok FROM top WHERE rk <= {_TV_K}),
+    df AS (
+      SELECT tok, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
+      FROM (SELECT doc_id, unnest(tk) AS tok FROM t) u
+      WHERE tok IN (SELECT tok FROM cand)
+      GROUP BY tok)
+    SELECT p.doc_id, CAST(p.rk AS INT) AS rank, p.tok AS term, p.tf, d.df
+    FROM top p JOIN df d ON p.tok = d.tok
+    WHERE p.rk <= {_TV_K}
+    ORDER BY p.doc_id, p.rk
+    """,
+)
+def q360_term_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", tokens("text").alias("tk")
+    )
+    req = docs.filter(F.col("doc_id").isin(*_TV_DOCS))
+    tf = (
+        req.select("doc_id", F.explode("tk").alias("tok"))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tf"), F.asc("tok"))
+    top = tf.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _TV_K)
+    cand = top.select("tok").distinct()
+    df = (
+        docs.select("doc_id", F.explode(F.array_distinct("tk")).alias("tok"))
+        .join(F.broadcast(cand), "tok", "leftsemi")
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    )
+    return (
+        top.join(F.broadcast(df), "tok")
+        .select("doc_id", F.col("rk").cast("int").alias("rank"),
+                F.col("tok").alias("term"), "tf", "df")
+        .orderBy("doc_id", "rank")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q370 — ES `ids` query + `exists` query: retrieve documents by
+# explicit _id list (pushed down to the scan as an IN filter — parquet
+# row-group skipping at scale) and flag, per hit, whether optional
+# JSON fields EXIST (ES `exists` = field has a non-null value; here
+# props.k is always present and props.m never is, so both branches of
+# the semantics are exercised).
+#
+# Shape (100 TB): the IN(3 ids) predicate reaches PushedFilters; the
+# JSON probes are scan-local; no shuffle beyond the 3-row display sort.
+# ---------------------------------------------------------------------------
+_IDS_SET = (10, 20, 30)
+
+
+@register(
+    "q370_ids_exists_query",
+    oracle=f"""
+    SELECT event_id, event_type,
+           json_extract_string(props, '$.k') IS NOT NULL AS has_k,
+           json_extract_string(props, '$.m') IS NOT NULL AS has_m
+    FROM events WHERE event_id IN {_IDS_SET}
+    ORDER BY event_id
+    """,
+)
+def q370_ids_exists_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.filter(F.col("event_id").isin(*_IDS_SET))
+        .select(
+            "event_id",
+            "event_type",
+            F.get_json_object("props", "$.k").isNotNull().alias("has_k"),
+            F.get_json_object("props", "$.m").isNotNull().alias("has_m"),
+        )
+        .orderBy("event_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q372 — ES `percolate`: the REVERSE search — queries are stored
+# documents and each incoming document is matched against the whole
+# registered-query set (alerting / saved-search fan-out). Five stored
+# queries (term, term-on-source, range, bool, terms) are evaluated per
+# document; output is one row per stored query with its match count
+# and matched-id range.
+#
+# Shape (100 TB): ES percolates by running the query set per shard;
+# here the (tiny, fixed) query set is evaluated as a scan-local
+# 5-struct explode per document — no broadcast table needed because
+# the predicates compile into the projection — and one map-combinable
+# groupBy on query_id (5 groups). The document corpus is never
+# shuffled.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "q372_percolate",
+    oracle="""
+    WITH m AS (
+      SELECT doc_id, q.query_id,
+             CASE q.query_id
+               WHEN 'p1_term_lang_en' THEN lang = 'en'
+               WHEN 'p2_term_source'  THEN source = 'src3'
+               WHEN 'p3_range_chars'  THEN n_chars >= 200 AND n_chars < 400
+               WHEN 'p4_bool_fr_long' THEN lang = 'fr' AND n_chars >= 300
+               ELSE lang IN ('de', 'zh')
+             END AS matched
+      FROM documents,
+           (SELECT UNNEST(['p1_term_lang_en', 'p2_term_source',
+                           'p3_range_chars', 'p4_bool_fr_long',
+                           'p5_terms_lang']) AS query_id) q)
+    SELECT query_id,
+           CAST(COUNT(*) FILTER (WHERE matched) AS BIGINT) AS n_matches,
+           MIN(doc_id) FILTER (WHERE matched) AS first_doc,
+           MAX(doc_id) FILTER (WHERE matched) AS last_doc
+    FROM m GROUP BY query_id ORDER BY query_id
+    """,
+)
+def q372_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "n_chars"
+    )
+    preds = [
+        ("p1_term_lang_en", F.col("lang") == "en"),
+        ("p2_term_source", F.col("source") == "src3"),
+        ("p3_range_chars", (F.col("n_chars") >= 200) & (F.col("n_chars") < 400)),
+        ("p4_bool_fr_long", (F.col("lang") == "fr") & (F.col("n_chars") >= 300)),
+        ("p5_terms_lang", F.col("lang").isin("de", "zh")),
+    ]
+    m = docs.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(qid).alias("query_id"), p.alias("matched"))
+                    for qid, p in preds
+                ]
+            )
+        ).alias("q"),
+    ).select("doc_id", "q.query_id", "q.matched")
+    return (
+        m.groupBy("query_id")
+        .agg(
+            F.count_if(F.col("matched")).cast("bigint").alias("n_matches"),
+            F.min(F.when(F.col("matched"), F.col("doc_id"))).alias("first_doc"),
+            F.max(F.when(F.col("matched"), F.col("doc_id"))).alias("last_doc"),
+        )
+        .orderBy("query_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q382 — ES `query_string`: the full Lucene grammar — AND/OR/NOT,
+# parenthesized grouping with group boosts, per-field terms
+# (keyword fields lang/source and the analyzed text field), quoted
+# phrases, per-clause ^boosts. The grammar is parsed ONCE at plan-build
+# time by operators/querystring.py (recursive descent, Lucene
+# precedence NOT > AND > OR, adjacency = default OR) and compiled to a
+# pure SQL predicate/score tree — the executed plan is one scan-local
+# projection + filter + TakeOrdered, zero per-row Python.
+#
+# The DuckDB oracle below is GENERATED from the SAME parse via the
+# compiler's duck backend, so parser/compiler bugs cannot hide from
+# the parity gate; tests/test_querystring.py additionally proves the
+# grammar subset `fast AND NOT slow AND "hash join"` result-equivalent
+# to q332_simple_query_string's fixed `+fast -slow "hash join"`.
+#
+# Scoring: Lucene sum-of-matching-subscores in the catalog's naive-tf
+# discipline (integer tf × literal boost — exact in doubles).
+# ---------------------------------------------------------------------------
+_QS_FIELDS: dict[str, TokenField | KeywordField] = {
+    "text": TokenField("toks"),
+    "lang": KeywordField("lang"),
+    "source": KeywordField("source"),
+}
+_QS_QUERY = (
+    '(hash AND "sort key")^2 OR (merge^3 AND NOT lang:fr) OR source:src7'
+)
+_QS_MATCH_SPARK, _QS_SCORE_SPARK = compile_query_string(
+    _QS_QUERY, _QS_FIELDS, "text", "spark"
+)
+_QS_MATCH_DUCK, _QS_SCORE_DUCK = compile_query_string(
+    _QS_QUERY, _QS_FIELDS, "text", "duck"
+)
+
+
+@register(
+    "q382_query_string",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, lang, source, {TOKS_SQL} AS toks FROM documents)
+    SELECT doc_id, ROUND({_QS_SCORE_DUCK}, 4) AS score
+    FROM t WHERE {_QS_MATCH_DUCK}
+    ORDER BY score DESC, doc_id LIMIT 20
+    """,
+)
+def q382_query_string(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.plan import with_once
+
+    # with_once barrier (functions/plan.py, the q318 lesson): the
+    # compiled match predicate references `toks` once per query term,
+    # and pushdown would otherwise re-tokenize the text at every
+    # reference inside the interpreted Filter.
+    t = with_once(
+        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "text"),
+        "toks",
+        tokens("text"),
+    )
+    return (
+        t.filter(F.expr(_QS_MATCH_SPARK))
+        .select("doc_id", F.round(F.expr(_QS_SCORE_SPARK), 4).alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# q383 — ES `match_phrase_prefix`: type-ahead PHRASE search — "sort k"
+# matches docs where token 'sort' is immediately followed by a token
+# starting with 'k' (the positional sibling of q298's bag-of-words
+# match_bool_prefix). Surfaces per doc the number of phrase-prefix
+# positions and the sorted distinct completions of the prefix at those
+# positions (ES's expanded terms, max_expansions unbounded here — the
+# corpus vocabulary is tiny; an indexed variant would walk the q68 term
+# dictionary exactly like ES's first-50 expansion).
+#
+# Shape (100 TB): scan-local — one indexed transform per row, no join,
+# no shuffle before the display sort.
+# ---------------------------------------------------------------------------
+_MPP_FIRST = "sort"
+_MPP_PREFIX = "k"
+
+
+@register(
+    "q383_match_phrase_prefix",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, {TOKS_SQL} AS tk FROM documents),
+    h AS (
+      SELECT doc_id,
+             list_filter(list_transform(tk, (x, i) ->
+               CASE WHEN x = '{_MPP_FIRST}' AND i + 1 <= len(tk)
+                         AND tk[i + 1] LIKE '{_MPP_PREFIX}%'
+                    THEN tk[i + 1] END),
+               c -> c IS NOT NULL) AS comps
+      FROM t)
+    SELECT doc_id,
+           CAST(len(comps) AS BIGINT) AS n_hits,
+           array_to_string(list_sort(list_distinct(comps)), ',')
+             AS completions
+    FROM h WHERE len(comps) > 0
+    ORDER BY doc_id
+    """,
+)
+def q383_match_phrase_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", tokens("text").alias("tk")
+    )
+    # Spark transform index is 0-based; the "next token" probe is the
+    # 1-based element_at(tk, i + 2) — the q332/q353 idiom.
+    comps = F.expr(
+        f"filter(transform(tk, (x, i) -> "
+        f"CASE WHEN x = '{_MPP_FIRST}' AND i + 1 < size(tk) "
+        f"AND element_at(tk, i + 2) LIKE '{_MPP_PREFIX}%' "
+        f"THEN element_at(tk, i + 2) END), c -> c IS NOT NULL)"
+    )
+    from ..functions.plan import with_once
+
+    # with_once barrier (functions/plan.py, the q318 lesson): the comps
+    # construction otherwise inlines into the size() filter AND the two
+    # output expressions — three interpreted evaluations per row.
+    h = with_once(docs, "comps", comps).filter(F.size("comps") > 0)
+    return h.select(
+        "doc_id",
+        F.size("comps").cast("bigint").alias("n_hits"),
+        F.concat_ws(",", F.array_sort(F.array_distinct("comps"))).alias(
+            "completions"
+        ),
+    ).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# q396 — ES `phrase` suggester: correct a whole query phrase, not a
+# single term. Mechanics mirror ES's direct-generator + LM re-rank:
+# every position proposes vocabulary candidates within edit distance 2
+# (length-band prefiltered, the q244 pattern); with max_errors=1 a
+# candidate phrase replaces EXACTLY one position; phrases are re-ranked
+# by the corpus bigram count sum — the deterministic integer surrogate
+# for ES's smoothed-LM likelihood (same argsort on this corpus, no
+# transcendentals, cross-engine exact) — with total unigram frequency
+# then lexicographic order as tiebreaks.
+#
+# Shape (100 TB): two map-combinable corpus reductions (bigram counts,
+# unigram counts — both vocabulary-bounded outputs), then all candidate
+# work happens on broadcast-size frames: positions x vocab candidate
+# join, two broadcast bigram lookups, three broadcast unigram lookups.
+# The corpus is scanned twice and never joined row-to-row. The candidate
+# join is a deliberate BroadcastNestedLoopJoin (levenshtein is non-equi)
+# with a 3-row broadcast side against the vocabulary frame — the q244
+# documented-BNLJ shape, pinned in PLAN_BUDGET.json.
+# ---------------------------------------------------------------------------
+_PS_PHRASE = ["fast", "kay", "order"]  # "kay" is the typo (-> "key")
+_PS_MAX_DIST = 2
+_PS_TOP = 5
+
+
+def _ps_oracle() -> str:
+    pos_rows = ", ".join(f"({i}, '{t}')" for i, t in enumerate(_PS_PHRASE))
+    return f"""
+    WITH t AS MATERIALIZED (SELECT {TOKS_SQL} AS tk FROM documents),
+    uni AS MATERIALIZED (
+      SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
+      FROM (SELECT unnest(tk) AS tok FROM t) GROUP BY 1),
+    bi AS MATERIALIZED (
+      SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM (
+        SELECT tk[CAST(i AS INTEGER)] AS w1, tk[CAST(i AS INTEGER) + 1] AS w2
+        FROM t, UNNEST(generate_series(1, len(tk) - 1)) AS g(i)) GROUP BY 1, 2),
+    pos AS (SELECT * FROM (VALUES {pos_rows}) AS v(p, orig)),
+    cand AS MATERIALIZED (
+      SELECT pos.p, pos.orig, uni.tok AS repl
+      FROM pos JOIN uni
+        ON abs(len(uni.tok) - len(pos.orig)) <= {_PS_MAX_DIST}
+       AND uni.tok <> pos.orig
+       AND levenshtein(uni.tok, pos.orig) <= {_PS_MAX_DIST}),
+    ph AS MATERIALIZED (
+      SELECT p AS changed_pos, repl,
+             CASE WHEN p = 0 THEN repl ELSE '{_PS_PHRASE[0]}' END AS c1,
+             CASE WHEN p = 1 THEN repl ELSE '{_PS_PHRASE[1]}' END AS c2,
+             CASE WHEN p = 2 THEN repl ELSE '{_PS_PHRASE[2]}' END AS c3
+      FROM cand),
+    sc AS (
+      SELECT ph.changed_pos, ph.repl, ph.c1 || ' ' || ph.c2 || ' ' || ph.c3 AS suggestion,
+             CAST(COALESCE(b12.c, 0) + COALESCE(b23.c, 0) AS BIGINT) AS score,
+             CAST(COALESCE(u1.c, 0) + COALESCE(u2.c, 0) + COALESCE(u3.c, 0)
+                  AS BIGINT) AS freq_sum
+      FROM ph
+      LEFT JOIN bi b12 ON b12.w1 = ph.c1 AND b12.w2 = ph.c2
+      LEFT JOIN bi b23 ON b23.w1 = ph.c2 AND b23.w2 = ph.c3
+      LEFT JOIN uni u1 ON u1.tok = ph.c1
+      LEFT JOIN uni u2 ON u2.tok = ph.c2
+      LEFT JOIN uni u3 ON u3.tok = ph.c3)
+    SELECT suggestion, CAST(changed_pos AS BIGINT) AS changed_pos, repl,
+           score, freq_sum,
+           CAST(ROW_NUMBER() OVER (ORDER BY score DESC, freq_sum DESC,
+                                   suggestion) AS BIGINT) AS rank
+    FROM sc
+    ORDER BY rank LIMIT {_PS_TOP}
+    """
+
+
+@register("q396_phrase_suggest", oracle=_ps_oracle())
+def q396_phrase_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = load_table(spark, sf_dir, "documents").select(tokens("text").alias("tk"))
+    # r12 surgery: BOTH corpus reductions in ONE pass + ONE shuffle —
+    # unigrams ride the same explode/aggregate as bigrams with w2=NULL
+    # (a NULL second word can't collide with any real bigram), where r11
+    # ran two separate corpus scans + two shuffles behind two EAGER
+    # checkpoints (two serialized jobs before the main query even
+    # started). The combined aggregate is vocabulary-bounded; the lazy
+    # pin materializes it inside the first broadcast build and every
+    # later consumer reads it back (sequential-consumer rule).
+    grams = F.expr(
+        "concat("
+        " transform(tk, x -> struct(x AS w1, CAST(NULL AS STRING) AS w2)),"
+        " if(size(tk) >= 2,"
+        "    transform(sequence(1, size(tk) - 1),"
+        "      i -> struct(tk[i - 1] AS w1, tk[i] AS w2)),"
+        "    array()))"
+    )
+    ab = (
+        t.select(F.explode(grams).alias("g"))
+        .groupBy(F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .localCheckpoint(eager=False)
+    )
+    uni = ab.filter(F.col("w2").isNull()).select(F.col("w1").alias("tok"), "c")
+    bi = ab.filter(F.col("w2").isNotNull())
+    # the scoring lookups fold into TWO one-row broadcast maps (bigram
+    # key = "w1 w2") instead of five broadcast joins: element_at on a
+    # unique-keyed map is value-identical to the left equi-joins, and
+    # the per-request plan drops 3 broadcast exchanges.
+    unimap = uni.agg(
+        F.map_from_entries(F.collect_list(F.struct("tok", "c"))).alias("um")
+    )
+    bimap = bi.agg(
+        F.map_from_entries(
+            F.collect_list(F.struct(F.concat_ws(" ", "w1", "w2").alias("k"), F.col("c")))
+        ).alias("bm")
+    )
+    pos = spark.range(1).select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(i).alias("p"), F.lit(tkn).alias("orig"))
+                    for i, tkn in enumerate(_PS_PHRASE)
+                ]
+            )
+        ).alias("v")
+    ).select("v.p", "v.orig")
+    cand = uni.join(
+        F.broadcast(pos),
+        (F.abs(F.length("tok") - F.length("orig")) <= _PS_MAX_DIST)
+        & (F.col("tok") != F.col("orig"))
+        & (F.levenshtein("tok", "orig") <= _PS_MAX_DIST),
+    ).select("p", "orig", F.col("tok").alias("repl"))
+    ph = cand.select(
+        F.col("p").alias("changed_pos"),
+        "repl",
+        F.when(F.col("p") == 0, F.col("repl")).otherwise(F.lit(_PS_PHRASE[0])).alias("c1"),
+        F.when(F.col("p") == 1, F.col("repl")).otherwise(F.lit(_PS_PHRASE[1])).alias("c2"),
+        F.when(F.col("p") == 2, F.col("repl")).otherwise(F.lit(_PS_PHRASE[2])).alias("c3"),
+    )
+    lk_b = lambda a, b: F.coalesce(  # noqa: E731
+        F.element_at(F.col("bm"), F.concat_ws(" ", a, b)), F.lit(0)
+    )
+    lk_u = lambda cc: F.coalesce(F.element_at(F.col("um"), F.col(cc)), F.lit(0))  # noqa: E731
+    sc = (
+        ph.crossJoin(F.broadcast(unimap))
+        .crossJoin(F.broadcast(bimap))
+        .select(
+            F.concat_ws(" ", "c1", "c2", "c3").alias("suggestion"),
+            F.col("changed_pos").cast("bigint").alias("changed_pos"),
+            "repl",
+            (lk_b(F.col("c1"), F.col("c2")) + lk_b(F.col("c2"), F.col("c3")))
+            .cast("bigint")
+            .alias("score"),
+            (lk_u("c1") + lk_u("c2") + lk_u("c3")).cast("bigint").alias("freq_sum"),
+        )
+    )
+    w = Window.orderBy(F.col("score").desc(), F.col("freq_sum").desc(), "suggestion")
+    return (
+        sc.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= _PS_TOP)
+        .orderBy("rank")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q398 — ES runtime fields (`runtime_mappings`): a field computed at
+# query time from stored fields — here chars-per-token x100 as an
+# integer DIV (exact in both engines) — drives a range query and a
+# per-source stats aggregation, without ever being materialized in the
+# source table. The ES semantics under test: the runtime field is
+# visible to query, filter, and aggregation alike within one request.
+#
+# Shape (100 TB): scan-local projection + filter inside codegen, ONE
+# map-combinable groupBy(source). The runtime expression rides the same
+# scan as the stored fields — zero extra passes, exactly like ES
+# evaluating the script per matched document.
+# ---------------------------------------------------------------------------
+_RT_LO, _RT_HI = 530, 565  # cpt_x100 range filter
+
+
+@register(
+    "q398_runtime_fields",
+    oracle=f"""
+    WITH t AS (
+      SELECT source,
+             (100 * CAST(n_chars AS BIGINT)) // CAST(len({TOKS_SQL}) AS BIGINT)
+               AS cpt_x100
+      FROM documents),
+    h AS (SELECT * FROM t WHERE cpt_x100 BETWEEN {_RT_LO} AND {_RT_HI})
+    SELECT source, CAST(COUNT(*) AS BIGINT) AS hits,
+           CAST(MIN(cpt_x100) AS BIGINT) AS min_cpt,
+           CAST(MAX(cpt_x100) AS BIGINT) AS max_cpt,
+           ROUND(CAST(SUM(cpt_x100) AS DOUBLE) / COUNT(*), 4) AS avg_cpt
+    FROM h GROUP BY source ORDER BY source
+    """,
+)
+def q398_runtime_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            "source",
+            F.col("n_chars").cast("bigint").alias("nch"),
+            F.size(tokens("text")).cast("bigint").alias("n"),
+        )
+        # true integer DIV (floor on positives), matching DuckDB's `//`;
+        # a double divide + cast would truncate on a rounding boundary.
+        .select("source", F.expr("(100 * nch) div n").alias("cpt_x100"))
+    )
+    h = t.filter(F.col("cpt_x100").between(_RT_LO, _RT_HI))
+    return (
+        h.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("hits"),
+            F.min("cpt_x100").cast("bigint").alias("min_cpt"),
+            F.max("cpt_x100").cast("bigint").alias("max_cpt"),
+            F.round(
+                F.sum("cpt_x100").cast("double") / F.count(F.lit(1)), 4
+            ).alias("avg_cpt"),
+        )
+        .orderBy("source")
     )

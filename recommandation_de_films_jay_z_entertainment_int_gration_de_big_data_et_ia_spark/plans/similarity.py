@@ -15,8 +15,7 @@ from ..operators import similarity as SIM
 from ..operators.similarity import cosine
 from ..sources.readers import load_table
 from .catalog import register
-from .search import _BM25_TERMS as _HY_TERMS
-from .search import _bm25_term_sql as _hy_term_sql
+from .search import _BM25_TERMS, _bm25_term_sql
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -135,8 +134,6 @@ def q82_embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q83_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     emb = load_table(spark, sf_dir, "embeddings")
     return (
         SIM.ivf_index(emb, "vec_id", "embedding", nlist=8)
@@ -239,11 +236,11 @@ _RRF_K0, _RRF_DEPTH = 60, 100
                 FROM documents WHERE doc_id != 0),
     stats AS (
       SELECT COUNT(*) AS n, SUM(dl) AS sumdl,
-             {', '.join(f"SUM(CASE WHEN list_contains(toks, '{t}') THEN 1 ELSE 0 END) AS df{i}" for i, t in enumerate(_HY_TERMS))}
+             {', '.join(f"SUM(CASE WHEN list_contains(toks, '{t}') THEN 1 ELSE 0 END) AS df{i}" for i, t in enumerate(_BM25_TERMS))}
       FROM dd),
     scored AS (
       SELECT doc_id,
-             ROUND(({' + '.join(_hy_term_sql(t, i) for i, t in enumerate(_HY_TERMS))}) * 1.0, 4) AS score
+             ROUND(({' + '.join(_bm25_term_sql(t, i) for i, t in enumerate(_BM25_TERMS))}) * 1.0, 4) AS score
       FROM dd CROSS JOIN stats),
     pb AS (SELECT doc_id, score FROM scored ORDER BY score DESC, doc_id ASC LIMIT {_RRF_DEPTH}),
     rb AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS r FROM pb),
@@ -267,7 +264,7 @@ def q105_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") != 0)
     emb = load_table(spark, sf_dir, "embeddings")
     pb = (
-        SRCH.bm25_score(docs, "text", list(_HY_TERMS))
+        SRCH.bm25_score(docs, "text", list(_BM25_TERMS))
         .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(_RRF_DEPTH)
@@ -1074,4 +1071,752 @@ def q287_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.count("hit").cast("double") / 5, 4).alias("recall_at_5"),
         )
         .orderBy("qid")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q74 — vectorized Arrow scalar UDF (@pandas_udf): L2-normalize embeddings.
+# The engine's second sanctioned Python boundary (besides mapInPandas) —
+# Arrow-batched, numpy-vectorized, never per-row. Output rounded to 4 so
+# numpy's pairwise summation and SQL's sequential fold agree.
+# ---------------------------------------------------------------------------
+@register(
+    "q74_pandas_udf_normalize",
+    oracle="""
+    WITH e AS (SELECT vec_id, embedding AS v FROM embeddings WHERE vec_id < 100),
+    n AS (SELECT vec_id, sqrt(list_reduce(list_transform(range(1, len(v)+1),
+                 i -> CAST(v[i] AS DOUBLE) * CAST(v[i] AS DOUBLE)), (x, y) -> x + y)) AS nrm, v
+          FROM e)
+    SELECT vec_id,
+           ROUND(CAST(v[1] AS DOUBLE) / nrm, 4) AS e0,
+           ROUND(CAST(v[2] AS DOUBLE) / nrm, 4) AS e1,
+           ROUND(nrm, 4) AS l2norm
+    FROM n
+    """,
+)
+def q74_pandas_udf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _norm_head(v):
+        arrs = np.stack([np.asarray(x, dtype="float64") for x in v])
+        # sequential-fold norm to match the oracle's list_reduce exactly
+        nrm = np.sqrt(np.add.reduce(arrs * arrs, axis=1))
+        # raw values out; rounding happens in Spark (np.round is
+        # half-even, SQL ROUND is half-away — a latent tie-flip)
+        return pd.DataFrame(
+            {"e0": arrs[:, 0] / nrm, "e1": arrs[:, 1] / nrm, "l2norm": nrm}
+        )
+
+    # Type-hint pandas UDF form (Series → DataFrame ≡ the old SCALAR
+    # struct UDF, no deprecated PandasUDFType). Annotations are assigned
+    # as REAL objects because `from __future__ import annotations`
+    # stringifies inline hints and pd/np live in function scope, which
+    # get_type_hints cannot resolve from module globals.
+    _norm_head.__annotations__ = {"v": pd.Series, "return": pd.DataFrame}
+    norm_head = pandas_udf(_norm_head, "struct<e0: double, e1: double, l2norm: double>")
+
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100)
+    out = emb.select("vec_id", norm_head("embedding").alias("s"))
+    return out.select(
+        "vec_id",
+        F.round("s.e0", 4).alias("e0"),
+        F.round("s.e1", 4).alias("e1"),
+        F.round("s.l2norm", 4).alias("l2norm"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q177 — int8 scalar quantization ANN (the memory-bound companion to
+# the q148/q149 product-quantization path): per-dimension min/max over
+# the corpus (one posexplode aggregate -> a broadcast 1-row stats
+# frame; never a driver collect), each float quantized to one of 256
+# levels, reconstructed at the level midpoint, and ranked by cosine
+# against the FULL-precision query vector (asymmetric distance). The
+# exact score rides along so the quantization error is visible per hit.
+# At 100 TB the codes are 4x smaller than float32 and the stats frame
+# is 64 doubles — the scan is the only distributed work.
+# Determinism: floor/least/midpoint arithmetic is identically shaped in
+# both engines; folds are array-ordered (operators.similarity.dot).
+# ---------------------------------------------------------------------------
+_SQ_RECON = (
+    "list_transform(range(1, len(v)+1), i -> mins[i] +"
+    " (least(floor((CAST(v[i] AS DOUBLE) - mins[i]) / (maxs[i] - mins[i]) * 256.0),"
+    " 255.0) + 0.5) * (maxs[i] - mins[i]) / 256.0)"
+)
+
+
+@register(
+    "q177_int8_quantized_ann",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+    d AS (SELECT i, MIN(CAST(v[i] AS DOUBLE)) AS mn, MAX(CAST(v[i] AS DOUBLE)) AS mx
+          -- dim is fixed at 64 (embeddings schema); DuckDB's range() table
+          -- function cannot take the lateral len(v)
+          FROM e, range(1, 65) t(i) GROUP BY i),
+    s AS (SELECT list(mn ORDER BY i) AS mins, list(mx ORDER BY i) AS maxs FROM d),
+    r AS (SELECT vec_id, v, {_SQ_RECON} AS rv FROM e CROSS JOIN s),
+    q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+    SELECT vec_id,
+           ROUND({_cos_sql('rv', 'qv')}, 4) AS score_q,
+           ROUND({_cos_sql('v', 'qv')}, 4) AS score_exact
+    FROM r CROSS JOIN q
+    WHERE vec_id != 0
+    ORDER BY score_q DESC, vec_id ASC
+    LIMIT 10
+    """,
+)
+def q177_int8_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.similarity import dot, norm
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("v")
+    )
+    stats = (
+        emb.select(F.posexplode("v").alias("pos", "x"))
+        .groupBy("pos")
+        .agg(
+            F.min(F.col("x").cast("double")).alias("mn"),
+            F.max(F.col("x").cast("double")).alias("mx"),
+        )
+        .groupBy()
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "mn"))), lambda s: s.mn
+            ).alias("mins"),
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "mx"))), lambda s: s.mx
+            ).alias("maxs"),
+        )
+    )
+
+    def _recon(v):  # mirrors _SQ_RECON
+        def level(x, i):
+            mn = F.element_at("mins", i + 1)
+            mx = F.element_at("maxs", i + 1)
+            code = F.least(
+                F.floor((x.cast("double") - mn) / (mx - mn) * 256.0).cast("double"),
+                F.lit(255.0),
+            )
+            return mn + (code + F.lit(0.5)) * (mx - mn) / 256.0
+
+        return F.transform(v, level)
+
+    r = emb.crossJoin(F.broadcast(stats)).withColumn("rv", _recon(F.col("v")))
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    return (
+        r.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .select(
+            "vec_id",
+            F.round(dot(F.col("rv"), F.col("qv")) / (norm(F.col("rv")) * norm(F.col("qv"))), 4).alias("score_q"),
+            F.round(dot(F.col("v"), F.col("qv")) / (norm(F.col("v")) * norm(F.col("qv"))), 4).alias("score_exact"),
+        )
+        .orderBy(F.desc("score_q"), F.asc("vec_id"))
+        .limit(10)
+    )
+
+
+# ---------------------------------------------------------------------------
+# q194 — embedding column profile (q112's column-profile idea lifted to
+# array<float>): per-dimension min / max / mean / std in ONE posexplode
+# aggregate (64 output rows regardless of corpus size; mean/std from
+# exact decimal sums so both engines agree bit-for-bit), plus each
+# dimension's zero-fraction — the pre-flight check before the q177
+# quantizer or q138's k-means commits to a 100 TB corpus.
+# ---------------------------------------------------------------------------
+@register(
+    "q194_embedding_profile",
+    oracle="""
+    WITH e AS (SELECT embedding AS v FROM embeddings),
+    d AS (SELECT i AS dim, CAST(v[i] AS DOUBLE) AS x
+          FROM e, range(1, 65) t(i)),
+    s AS (
+      SELECT dim, COUNT(*) AS n,
+             MIN(x) AS mn, MAX(x) AS mx,
+             CAST(SUM(CAST(x AS DECIMAL(18,9))) AS DOUBLE) AS sv,
+             CAST(SUM(CAST(x AS DECIMAL(18,9)) * CAST(x AS DECIMAL(18,9))) AS DOUBLE) AS svv,
+             SUM(CASE WHEN x = 0 THEN 1 ELSE 0 END) AS zeros
+      FROM d GROUP BY dim)
+    SELECT CAST(dim AS INT) AS dim, CAST(n AS BIGINT) AS n,
+           ROUND(mn, 6) AS mn, ROUND(mx, 6) AS mx,
+           ROUND(sv / n, 6) AS mean,
+           ROUND(sqrt((svv - sv * sv / n) / (n - 1)), 6) AS std,
+           ROUND(CAST(zeros AS DOUBLE) / n, 6) AS zero_frac
+    FROM s
+    """,
+)
+def q194_embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    d = emb.select(F.posexplode("embedding").alias("pos", "xf")).select(
+        (F.col("pos") + 1).alias("dim"), F.col("xf").cast("double").alias("x")
+    )
+    xd = F.col("x").cast("decimal(18,9)")
+    s = d.groupBy("dim").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("x").alias("mn"),
+        F.max("x").alias("mx"),
+        F.sum(xd).cast("double").alias("sv"),
+        F.sum(xd * xd).cast("double").alias("svv"),
+        F.sum(F.when(F.col("x") == 0, 1).otherwise(0)).alias("zeros"),
+    )
+    return s.select(
+        F.col("dim").cast("int").alias("dim"),
+        F.col("n").cast("bigint").alias("n"),
+        F.round("mn", 6).alias("mn"),
+        F.round("mx", 6).alias("mx"),
+        F.round(F.col("sv") / F.col("n"), 6).alias("mean"),
+        F.round(F.sqrt((F.col("svv") - F.col("sv") * F.col("sv") / F.col("n")) / (F.col("n") - 1)), 6).alias("std"),
+        F.round(F.col("zeros").cast("double") / F.col("n"), 6).alias("zero_frac"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q221 — embedding cluster cohesion/separation by label (clustering
+# eval over the labeled corpus; the readout q138's k-means lacks): per
+# label, the centroid (per-dim decimal-exact means via one posexplode
+# agg), mean member distance to OWN centroid (cohesion), and distance
+# to the NEAREST other centroid (separation) — the Davies-Bouldin
+# ingredients. Distances fold array-ordered (q177's discipline); the
+# per-member distance terms go through rounded-decimal sums so the
+# per-label mean is fold-order-proof. Centroid count is label-bounded:
+# the centroid frame broadcasts everywhere.
+# ---------------------------------------------------------------------------
+@register(
+    "q221_cluster_cohesion",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, label, embedding AS v FROM embeddings),
+    d AS (SELECT label, i, AVG(CAST(v[i] AS DOUBLE)) AS m,
+                 CAST(SUM(CAST(v[i] AS DECIMAL(18,9))) AS DOUBLE) AS sv,
+                 COUNT(*) AS n
+          FROM e, range(1, 65) t(i) GROUP BY label, i),
+    c AS (SELECT label, list(sv / n ORDER BY i) AS centroid FROM d GROUP BY label),
+    dist AS (
+      SELECT e.vec_id, e.label AS mlabel, c.label AS clabel,
+             sqrt(list_reduce(list_transform(range(1, 65),
+               i -> (CAST(e.v[i] AS DOUBLE) - c.centroid[i]) * (CAST(e.v[i] AS DOUBLE) - c.centroid[i])),
+               (x, y) -> x + y)) AS dd
+      FROM e CROSS JOIN c),
+    own AS (
+      SELECT mlabel AS label,
+             CAST(SUM(CAST(ROUND(dd, 12) AS DECIMAL(20,12))) AS DOUBLE) / COUNT(*) AS cohesion
+      FROM dist WHERE mlabel = clabel GROUP BY mlabel),
+    cent_pairs AS (
+      SELECT a.label AS la, b.label AS lb,
+             sqrt(list_reduce(list_transform(range(1, 65),
+               i -> (a.centroid[i] - b.centroid[i]) * (a.centroid[i] - b.centroid[i])),
+               (x, y) -> x + y)) AS cd
+      FROM c a JOIN c b ON a.label != b.label),
+    sep AS (SELECT la AS label, MIN(cd) AS separation FROM cent_pairs GROUP BY la)
+    SELECT o.label, ROUND(o.cohesion, 6) AS cohesion,
+           ROUND(s.separation, 6) AS separation,
+           ROUND(o.cohesion / s.separation, 6) AS db_ratio
+    FROM own o JOIN sep s ON o.label = s.label
+    """,
+)
+def q221_cluster_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", F.col("embedding").alias("v"))
+    d = (
+        emb.select("label", F.posexplode("v").alias("pos", "x"))
+        .groupBy("label", "pos")
+        .agg(F.sum(F.col("x").cast("decimal(18,9)")).cast("double").alias("sv"), F.count(F.lit(1)).alias("n"))
+    )
+    c = d.groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", (F.col("sv") / F.col("n")).alias("m")))),
+            lambda s: s.m,
+        ).alias("centroid")
+    )
+    cc = F.broadcast(c.select(F.col("label").alias("clabel"), "centroid"))
+    diff_sq = F.zip_with(
+        F.col("v"), F.col("centroid"), lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
+    )
+    dd = F.sqrt(F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x))
+    dist = emb.crossJoin(cc).select(
+        F.col("label").alias("mlabel"), "clabel", dd.alias("dd")
+    )
+    own = (
+        dist.filter(F.col("mlabel") == F.col("clabel"))
+        .select(F.col("mlabel").alias("label"), F.round("dd", 12).cast("decimal(20,12)").alias("t"))
+        .groupBy("label")
+        .agg((F.sum("t").cast("double") / F.count(F.lit(1))).alias("cohesion"))
+    )
+    a = c.select(F.col("label").alias("la"), F.col("centroid").alias("ca"))
+    b = c.select(F.col("label").alias("lb"), F.col("centroid").alias("cb"))
+    cdiff = F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: (x - y) * (x - y))
+    cd = F.sqrt(F.aggregate(cdiff, F.lit(0.0), lambda acc, x: acc + x))
+    sep = (
+        a.join(F.broadcast(b), F.col("la") != F.col("lb"))
+        .select(F.col("la").alias("label"), cd.alias("cd"))
+        .groupBy("label")
+        .agg(F.min("cd").alias("separation"))
+    )
+    return own.join(sep, "label").select(
+        "label",
+        F.round("cohesion", 6).alias("cohesion"),
+        F.round("separation", 6).alias("separation"),
+        F.round(F.col("cohesion") / F.col("separation"), 6).alias("db_ratio"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q317 — matryoshka-embedding truncation audit: for each truncation
+# dimension d ∈ {4, 8, 16, 32, 64}, the average fraction of a vector's
+# energy (sum of squared components) retained by its first d
+# components, per label. The standard readiness check before serving
+# truncated MRL embeddings: if energy@16 ≈ 1.0 the index can run at
+# 1/4 the dimensionality.
+#
+# Determinism: per-vector double folds are left-to-right identical
+# (F.aggregate ↔ list_reduce, same CAST placement as q37's cosine);
+# each per-vector fraction is ROUND(.,6) → DECIMAL(18,6) before the
+# cross-row average (exact decimal sum, then one division and round).
+#
+# Shape (100 TB): the dims explode is a 5× row-local expansion BEFORE
+# the groupBy, so the plan is one map-combinable shuffle keyed by
+# (label, d) — 5 × |labels| result rows regardless of input size.
+# ---------------------------------------------------------------------------
+_MRL_DIMS = (4, 8, 16, 32, 64)
+
+
+def _ssq_sql(v: str, d: str) -> str:
+    return (
+        f"list_reduce(list_transform(range(1, {d}+1),"
+        f" i -> CAST({v}[i] AS DOUBLE) * CAST({v}[i] AS DOUBLE)), (x, y) -> x + y)"
+    )
+
+
+@register(
+    "q317_matryoshka_energy",
+    oracle=f"""
+    WITH x AS (
+      SELECT label, CAST(d AS BIGINT) AS d,
+             ROUND({_ssq_sql("embedding", "least(d, len(embedding))")}
+                   / {_ssq_sql("embedding", "len(embedding)")}, 6) AS frac
+      FROM embeddings, (SELECT UNNEST({list(_MRL_DIMS)!r}) AS d))
+    SELECT label, d,
+           CAST(COUNT(*) AS BIGINT) AS n_vec,
+           ROUND(CAST(SUM(CAST(frac AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6)
+             AS avg_energy_frac
+    FROM x GROUP BY label, d ORDER BY label, d
+    """,
+)
+def q317_matryoshka_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+
+    def ssq(col: F.Column) -> F.Column:
+        return F.aggregate(
+            col,
+            F.lit(0.0),
+            lambda acc, x: acc + x.cast("double") * x.cast("double"),
+        )
+
+    x = (
+        emb.withColumn("d", F.explode(F.array(*[F.lit(d) for d in _MRL_DIMS])))
+        .withColumn("d", F.col("d").cast("bigint"))
+        .select(
+            "label",
+            "d",
+            # least() guard: for vectors shorter than d both engines now
+            # agree on frac = 1.0 (without it Spark's slice clamps while
+            # the oracle's out-of-range index yields NULL — see ADVICE r7)
+            F.round(
+                ssq(
+                    F.slice(
+                        "embedding",
+                        F.lit(1),
+                        F.least(F.col("d"), F.size("embedding")).cast("int"),
+                    )
+                )
+                / ssq(F.slice("embedding", F.lit(1), F.size("embedding"))),
+                6,
+            ).alias("frac"),
+        )
+    )
+    return (
+        x.groupBy("label", "d")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_vec"),
+            F.round(
+                F.sum(F.col("frac").cast("decimal(18,6)")).cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("avg_energy_frac"),
+        )
+        .orderBy("label", "d")
+    )
+
+
+# ---------------------------------------------------------------------------
+# q321 — binary (1-bit sign) embedding-quantization audit: hamming
+# distance between sign patterns vs exact cosine, probe vec_id=0
+# against the corpus. The readiness check before serving sign-quantized
+# vectors: if hamming rank order tracks cosine rank order, a 64x
+# smaller index (1 bit/dim) can serve first-stage retrieval.
+#
+# Determinism: hamming is an exact integer fold over sign mismatches;
+# cosine is the shared left-to-right double fold (operators.similarity
+# ↔ _cos_sql) rounded to 6.
+#
+# Shape (100 TB): 1-row broadcast probe (never a shuffled join) +
+# scan-local folds + TakeOrdered(20) — the q37 brute-force shape; the
+# LSH/IVF entries (q38/q82) are the sub-linear path.
+# ---------------------------------------------------------------------------
+_SQ_PROBE = 0
+
+
+def _hamming_sql(a: str, b: str) -> str:
+    return (
+        f"list_reduce(list_transform(range(1, len({a})+1),"
+        f" i -> CASE WHEN ({a}[i] >= 0) != ({b}[i] >= 0) THEN 1 ELSE 0 END),"
+        f" (x, y) -> x + y)"
+    )
+
+
+@register(
+    "q321_sign_quantization",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+    q AS (SELECT v AS qv FROM e WHERE vec_id = {_SQ_PROBE})
+    SELECT vec_id,
+           CAST({_hamming_sql("v", "qv")} AS BIGINT) AS hamming,
+           ROUND({_dot_sql("v", "qv")}
+                 / (sqrt({_dot_sql("v", "v")}) * sqrt({_dot_sql("qv", "qv")})),
+                 6) AS cos
+    FROM e CROSS JOIN q
+    WHERE vec_id != {_SQ_PROBE}
+    ORDER BY hamming, vec_id LIMIT 20
+    """,
+)
+def q321_sign_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("v")
+    )
+    probe = F.broadcast(
+        e.filter(F.col("vec_id") == _SQ_PROBE).select(F.col("v").alias("qv"))
+    )
+    mism = F.zip_with(
+        "v", "qv",
+        lambda x, y: ((x >= 0) != (y >= 0)).cast("int"),
+    )
+    hamming = F.aggregate(mism, F.lit(0), lambda acc, x: acc + x).cast("bigint")
+    return (
+        e.filter(F.col("vec_id") != _SQ_PROBE)
+        .crossJoin(probe)
+        .select(
+            "vec_id",
+            hamming.alias("hamming"),
+            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos"),
+        )
+        .orderBy("hamming", "vec_id")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# q335 — ColBERT-style late-interaction scoring (MaxSim): a probe SET
+# of vectors (vec_ids 0-2, the "query tokens") against each label's
+# vector set (the "document"): score(label) = Σ_q max_v cos(q, v).
+# The standard multi-vector retrieval operator RAG rerankers use.
+#
+# Determinism: per-pair cosines are the shared left-to-right double
+# fold ROUND(.,6); max is order-free; the 3-probe sum goes through
+# DECIMAL(18,6). Probe vectors participate in their own label's set
+# (documented; they contribute cos=1 to their own max).
+#
+# Shape (100 TB): the probe set is a 3-row broadcast (never a
+# shuffled join); per-pair scoring is scan-local; two map-combinable
+# shuffles (max per (label, probe), sum per label). Candidate
+# generation at real scale plugs into the IVF/LSH entries (q82/q38).
+# ---------------------------------------------------------------------------
+_MX_PROBES = (0, 1, 2)
+
+
+@register(
+    "q335_colbert_maxsim",
+    oracle=f"""
+    WITH q AS (
+      SELECT vec_id AS qid, embedding AS qv FROM embeddings
+      WHERE vec_id IN {_MX_PROBES!r}),
+    pair AS (
+      SELECT e.label, q.qid,
+             MAX(ROUND({_dot_sql("e.embedding", "q.qv")}
+                 / (sqrt({_dot_sql("e.embedding", "e.embedding")})
+                    * sqrt({_dot_sql("q.qv", "q.qv")})), 6)) AS best
+      FROM embeddings e CROSS JOIN q
+      GROUP BY e.label, q.qid)
+    SELECT label,
+           ROUND(CAST(SUM(CAST(best AS DECIMAL(18,6))) AS DOUBLE), 6)
+             AS maxsim_score,
+           CAST(COUNT(*) AS BIGINT) AS n_probes
+    FROM pair GROUP BY label ORDER BY maxsim_score DESC, label LIMIT 10
+    """,
+)
+def q335_colbert_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = F.broadcast(
+        emb.filter(F.col("vec_id").isin(*_MX_PROBES)).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+        )
+    )
+    pair = (
+        emb.crossJoin(probes)
+        .select(
+            "label", "qid",
+            F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("cos"),
+        )
+        .groupBy("label", "qid")
+        .agg(F.max("cos").alias("best"))
+    )
+    return (
+        pair.groupBy("label")
+        .agg(
+            F.round(
+                F.sum(F.col("best").cast("decimal(18,6)")).cast("double"), 6
+            ).alias("maxsim_score"),
+            F.count(F.lit(1)).cast("bigint").alias("n_probes"),
+        )
+        .orderBy(F.desc("maxsim_score"), "label")
+        .limit(10)
+    )
+
+
+# ---------------------------------------------------------------------------
+# q342 — ES 8 filtered kNN (`knn` clause with `filter`): exact cosine
+# top-k against the probe vector, restricted by a METADATA predicate
+# evaluated BEFORE scoring (ES semantics: the filter narrows the
+# candidate set, it does not post-filter the top-k — a post-filter
+# could return fewer than k). Filter here: label != the probe's label
+# (the cross-class retrieval shape hard-negative mining uses).
+#
+# Shape (100 TB): the filter prunes at the scan (predicate pushdown),
+# the probe is a 1-row broadcast, scoring is scan-local, and the top-k
+# is TakeOrdered — the q37 brute-force shape with the candidate-set
+# contract made explicit. q38/q82 remain the sub-linear path.
+# ---------------------------------------------------------------------------
+_KF_PROBE = 0
+
+
+@register(
+    "q342_filtered_knn",
+    oracle=f"""
+    WITH q AS (
+      SELECT embedding AS qv, label AS qlabel FROM embeddings
+      WHERE vec_id = {_KF_PROBE})
+    SELECT e.vec_id, e.label,
+           ROUND({_dot_sql("e.embedding", "q.qv")}
+                 / (sqrt({_dot_sql("e.embedding", "e.embedding")})
+                    * sqrt({_dot_sql("q.qv", "q.qv")})), 6) AS score
+    FROM embeddings e CROSS JOIN q
+    WHERE e.label != q.qlabel
+    ORDER BY score DESC, e.vec_id LIMIT 10
+    """,
+)
+def q342_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    probe = F.broadcast(
+        emb.filter(F.col("vec_id") == _KF_PROBE).select(
+            F.col("embedding").alias("qv"), F.col("label").alias("qlabel")
+        )
+    )
+    return (
+        emb.crossJoin(probe)
+        .filter(F.col("label") != F.col("qlabel"))
+        .select(
+            "vec_id", "label",
+            F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("score"),
+        )
+        .orderBy(F.desc("score"), "vec_id")
+        .limit(10)
+    )
+
+
+@register(
+    "q364_ivf_balance_audit",
+    oracle=f"""
+    WITH {_IVF_ASSIGN_SQL},
+    h AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n FROM a GROUP BY cell)
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
+           CAST(SUM(n) AS BIGINT) AS n_vecs,
+           CAST(MIN(n) AS BIGINT) AS min_cell,
+           CAST(MAX(n) AS BIGINT) AS max_cell,
+           ROUND(CAST(MAX(n) AS DOUBLE) * COUNT(*) / SUM(n), 4)
+             AS imbalance_factor,
+           ROUND(sqrt((CAST(SUM(n * n) AS DOUBLE)
+                       - CAST(SUM(n) AS DOUBLE) * SUM(n) / COUNT(*)) / COUNT(*))
+                 / (CAST(SUM(n) AS DOUBLE) / COUNT(*)), 6) AS cv
+    FROM h
+    """,
+)
+def q364_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    h = (
+        SIM.ivf_index(emb, "vec_id", "embedding", nlist=8)
+        .groupBy("__cell")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    k = F.count(F.lit(1))
+    sum_n = F.sum("n")
+    sum_n2 = F.sum(F.col("n") * F.col("n"))
+    mean = sum_n.cast("double") / k
+    return h.agg(
+        k.cast("bigint").alias("n_cells"),
+        sum_n.cast("bigint").alias("n_vecs"),
+        F.min("n").cast("bigint").alias("min_cell"),
+        F.max("n").cast("bigint").alias("max_cell"),
+        F.round(F.max("n").cast("double") * k / sum_n, 4).alias("imbalance_factor"),
+        F.round(
+            F.sqrt((sum_n2.cast("double") - sum_n.cast("double") * sum_n / k) / k)
+            / mean,
+            6,
+        ).alias("cv"),
+    )
+
+
+@register(
+    "q365_metric_divergence",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+    scored AS (
+      SELECT vec_id,
+             ROUND({_cos_sql("v", "qv")}, 6) AS cos_s,
+             ROUND({_dot_sql("v", "qv")}, 6) AS dot_s
+      FROM e CROSS JOIN q WHERE vec_id != 0),
+    tc AS (SELECT vec_id, cos_s FROM scored ORDER BY cos_s DESC, vec_id LIMIT 10),
+    td AS (SELECT vec_id, dot_s FROM scored ORDER BY dot_s DESC, vec_id LIMIT 10),
+    c1 AS (SELECT vec_id FROM tc ORDER BY cos_s DESC, vec_id LIMIT 1),
+    d1 AS (SELECT vec_id FROM td ORDER BY dot_s DESC, vec_id LIMIT 1)
+    SELECT CAST((SELECT COUNT(*) FROM tc JOIN td ON tc.vec_id = td.vec_id)
+                AS BIGINT) AS n_common,
+           ROUND(CAST((SELECT COUNT(*) FROM tc JOIN td ON tc.vec_id = td.vec_id)
+                      AS DOUBLE)
+                 / (20 - (SELECT COUNT(*) FROM tc JOIN td
+                          ON tc.vec_id = td.vec_id)), 4) AS jaccard,
+           (SELECT vec_id FROM c1) = (SELECT vec_id FROM d1) AS top1_same
+    """,
+)
+def q365_metric_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.similarity import dot
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("v")
+    )
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    scored = (
+        emb.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .select(
+            "vec_id",
+            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos_s"),
+            F.round(dot(F.col("v"), F.col("qv")), 6).alias("dot_s"),
+        )
+    )
+    tc = scored.orderBy(F.desc("cos_s"), F.asc("vec_id")).limit(10)
+    td = scored.orderBy(F.desc("dot_s"), F.asc("vec_id")).limit(10)
+    common = tc.join(td, "vec_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_common")
+    )
+    c1 = tc.orderBy(F.desc("cos_s"), F.asc("vec_id")).limit(1).select(
+        F.col("vec_id").alias("c1")
+    )
+    d1 = td.orderBy(F.desc("dot_s"), F.asc("vec_id")).limit(1).select(
+        F.col("vec_id").alias("d1")
+    )
+    return (
+        common.crossJoin(F.broadcast(c1))
+        .crossJoin(F.broadcast(d1))
+        .select(
+            "n_common",
+            F.round(
+                F.col("n_common").cast("double") / (20 - F.col("n_common")), 4
+            ).alias("jaccard"),
+            (F.col("c1") == F.col("d1")).alias("top1_same"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q380 — embedding isotropy audit (the "are my embeddings collapsing"
+# pre-training check — Ethayarajh 2019-style): per label, the mean
+# cosine of each vector to its label CENTROID. Near-1 means the label
+# cluster has collapsed to a ray (anisotropic); the audit flags
+# representation collapse before a retrieval model ships. Centroids
+# are exact: per-dimension DECIMAL sums over ROUND(x,6) components,
+# divided once and rounded to 8 — both engines fold the same numbers
+# in the same order (explicit dim-sorted list rebuild).
+#
+# Shape (100 TB): one posexplode (64 rows/vec, scan-local) + one
+# (label, dim)-keyed map-combinable aggregate; the |labels|-row
+# centroid frame broadcast-joins back; per-row cosine is a JVM-side
+# ordered fold; final |labels|-group aggregate. Nothing all-pairs —
+# isotropy via centroid needs only two passes.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "q380_embedding_isotropy",
+    oracle="""
+    WITH dims AS (
+      SELECT label, u.d AS d,
+             CAST(ROUND(CAST(embedding[u.d] AS DOUBLE), 6)
+                  AS DECIMAL(18,6)) AS x
+      FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(d)),
+    cent AS (
+      SELECT label, d,
+             ROUND(CAST(SUM(x) AS DOUBLE) / COUNT(*), 8) AS c
+      FROM dims GROUP BY label, d),
+    carr AS (
+      SELECT label, list(c ORDER BY d) AS cv FROM cent GROUP BY label),
+    cos AS (
+      SELECT e.label,
+             CAST(ROUND(
+               list_reduce(list_transform(range(1, len(e.embedding) + 1),
+                 i -> CAST(e.embedding[i] AS DOUBLE) * carr.cv[i]),
+                 (x, y) -> x + y)
+               / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
+                    i -> CAST(e.embedding[i] AS DOUBLE)
+                         * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
+                  * sqrt(list_reduce(list_transform(range(1, len(carr.cv) + 1),
+                      i -> carr.cv[i] * carr.cv[i]), (x, y) -> x + y))),
+               6) AS DECIMAL(18,6)) AS cc
+      FROM embeddings e JOIN carr ON e.label = carr.label)
+    SELECT label,
+           CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           ROUND(CAST(SUM(cc) AS DOUBLE) / COUNT(*), 6) AS mean_centroid_cos
+    FROM cos GROUP BY label ORDER BY label
+    """,
+)
+def q380_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
+    dims = e.select(
+        "label", F.posexplode("embedding").alias("d0", "x0")
+    ).select(
+        "label",
+        (F.col("d0") + 1).alias("d"),
+        F.round(F.col("x0").cast("double"), 6).cast("decimal(18,6)").alias("x"),
+    )
+    cent = dims.groupBy("label", "d").agg(
+        F.round(F.sum("x").cast("double") / F.count(F.lit(1)), 8).alias("c")
+    )
+    carr = cent.groupBy("label").agg(
+        F.expr("transform(sort_array(collect_list(struct(d, c))), s -> s.c)")
+        .alias("cv")
+    )
+    cos = e.join(F.broadcast(carr), "label").select(
+        "label",
+        F.round(cosine(F.col("embedding"), F.col("cv")), 6)
+        .cast("decimal(18,6)")
+        .alias("cc"),
+    )
+    return (
+        cos.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
+            F.round(F.sum("cc").cast("double") / F.count(F.lit(1)), 6).alias(
+                "mean_centroid_cos"
+            ),
+        )
+        .orderBy("label")
     )

@@ -1,4 +1,6 @@
-"""Table-maintenance operators: column profiling and CDC merge/upsert.
+"""Table-maintenance operators: column profiling, CDC merge/upsert, table
+diff, snapshot compaction, data-quality, reconciliation and k-anonymity
+checks.
 
 The reference maintains its movie corpus with overwrite-style Spark ETL
 (`/root/reference/src/preprocessing.py:10-26`) and re-indexes the whole
@@ -27,11 +29,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
 from .catalog import register
+from .timeseries import LATEST_PER_KEY_ORACLE
 
 # ---------------------------------------------------------------------------
 # q112 — column profile of lineitem: per column null count, exact
@@ -265,8 +268,6 @@ def q119_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q120_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return (
@@ -372,3 +373,314 @@ def q136_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.lit("v2").alias("snapshot"), "o_orderpriority"
     )
     return v1.unionByName(v2, allowMissingColumns=True)
+
+
+# ---------------------------------------------------------------------------
+# q158 — table diff (snapshot reconciliation, the data-eng "what changed
+# between loads" tool): snapshot A = orders as-is; snapshot B = a
+# deterministic mutation (rows with key % 101 == 0 dropped; status
+# flipped to 'X' for key % 97 == 0; keys shifted by +10M appended for
+# key % 103 == 0). One full-outer join on the key comparing a row
+# fingerprint (md5 of the '|'-joined business columns) classifies every
+# key as added / removed / changed / unchanged; output is the per-class
+# count plus min/max affected key — the audit summary a 100 TB
+# reconciliation job would emit (the join is the only shuffle; row
+# fingerprints are scan-local).
+# ---------------------------------------------------------------------------
+_DIFF_FP = "md5(CAST(o_orderkey AS VARCHAR) || '|' || o_orderstatus || '|' || CAST(ROUND(o_totalprice, 2) AS VARCHAR))"
+
+
+@register(
+    "q158_table_diff",
+    oracle=f"""
+    WITH a AS (
+      SELECT o_orderkey AS k, {_DIFF_FP} AS fp FROM orders),
+    b_base AS (
+      SELECT o_orderkey,
+             CASE WHEN o_orderkey % 97 = 0 THEN 'X' ELSE o_orderstatus END AS o_orderstatus,
+             o_totalprice
+      FROM orders WHERE o_orderkey % 101 <> 0),
+    b_added AS (
+      SELECT o_orderkey + 10000000 AS o_orderkey, o_orderstatus, o_totalprice
+      FROM orders WHERE o_orderkey % 103 = 0),
+    b_all AS (SELECT * FROM b_base UNION ALL SELECT * FROM b_added),
+    b AS (SELECT o_orderkey AS k, {_DIFF_FP} AS fp FROM b_all),
+    d AS (
+      SELECT COALESCE(a.k, b.k) AS k,
+             CASE WHEN a.k IS NULL THEN 'added'
+                  WHEN b.k IS NULL THEN 'removed'
+                  WHEN a.fp <> b.fp THEN 'changed'
+                  ELSE 'unchanged' END AS class
+      FROM a FULL OUTER JOIN b ON a.k = b.k)
+    SELECT class, COUNT(*) AS n, MIN(k) AS min_key, MAX(k) AS max_key
+    FROM d GROUP BY class
+    """,
+)
+def q158_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+
+    def fingerprint(df: DataFrame) -> DataFrame:
+        fp = F.md5(
+            F.concat_ws(
+                "|",
+                F.col("o_orderkey").cast("string"),
+                F.col("o_orderstatus"),
+                F.round("o_totalprice", 2).cast("string"),
+            )
+        )
+        return df.select(F.col("o_orderkey").alias("k"), fp.alias("fp"))
+
+    a = fingerprint(orders)
+    b_base = orders.filter(F.col("o_orderkey") % 101 != 0).select(
+        "o_orderkey",
+        F.when(F.col("o_orderkey") % 97 == 0, F.lit("X"))
+        .otherwise(F.col("o_orderstatus"))
+        .alias("o_orderstatus"),
+        "o_totalprice",
+    )
+    b_added = orders.filter(F.col("o_orderkey") % 103 == 0).select(
+        (F.col("o_orderkey") + 10000000).alias("o_orderkey"), "o_orderstatus", "o_totalprice"
+    )
+    b = fingerprint(b_base.unionAll(b_added))
+    d = (
+        a.select(F.col("k").alias("ak"), F.col("fp").alias("afp"))
+        .join(
+            b.select(F.col("k").alias("bk"), F.col("fp").alias("bfp")),
+            F.col("ak") == F.col("bk"),
+            "full_outer",
+        )
+        .select(
+            F.coalesce("ak", "bk").alias("k"),
+            F.when(F.col("ak").isNull(), "added")
+            .when(F.col("bk").isNull(), "removed")
+            .when(F.col("afp") != F.col("bfp"), "changed")
+            .otherwise("unchanged")
+            .alias("class"),
+        )
+    )
+    return d.groupBy("class").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("k").alias("min_key"),
+        F.max("k").alias("max_key"),
+    )
+
+
+@register("q170_snapshot_compaction", oracle=LATEST_PER_KEY_ORACLE)
+def q170_snapshot_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id", "event_type").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        ev.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "user_id",
+            "event_type",
+            F.col("event_id").alias("last_event_id"),
+            (F.unix_micros("ts") / 1000000).cast("bigint").alias("last_ts_s"),
+            F.round("value", 6).alias("last_value"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q187 — declarative data-quality check suite (the Deequ/dbt-test
+# pattern): one row per constraint with its violation count and pass
+# flag — uniqueness of o_orderkey, null/blank keys, referential
+# integrity orphans (orders->customer, lineitem->orders), domain checks
+# (rating-like value bounds, accepted status codes), and a freshness
+# probe (events newer than the latest order). Each check is an
+# independent aggregate over ONE table scan + (for RI) a broadcast/
+# key-partitioned anti-join — the checks union into a single result so
+# a 100 TB audit is one job, not one job per rule.
+# ---------------------------------------------------------------------------
+@register(
+    "q187_dq_checks",
+    oracle="""
+    SELECT 'orders_pk_unique' AS check_name,
+           CAST((SELECT COUNT(*) FROM (
+              SELECT o_orderkey FROM orders GROUP BY o_orderkey HAVING COUNT(*) > 1)) AS BIGINT)
+             AS violations
+    UNION ALL
+    SELECT 'orders_custkey_not_null',
+           CAST((SELECT COUNT(*) FROM orders WHERE o_custkey IS NULL) AS BIGINT)
+    UNION ALL
+    SELECT 'orders_status_domain',
+           CAST((SELECT COUNT(*) FROM orders
+                 WHERE o_orderstatus NOT IN ('O', 'F', 'P')) AS BIGINT)
+    UNION ALL
+    SELECT 'orders_customer_ri',
+           CAST((SELECT COUNT(*) FROM orders o
+                 WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
+                AS BIGINT)
+    UNION ALL
+    SELECT 'lineitem_orders_ri',
+           CAST((SELECT COUNT(*) FROM lineitem l
+                 WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
+                AS BIGINT)
+    UNION ALL
+    SELECT 'lineitem_qty_positive',
+           CAST((SELECT COUNT(*) FROM lineitem WHERE l_quantity <= 0) AS BIGINT)
+    UNION ALL
+    SELECT 'events_value_nonnegative',
+           CAST((SELECT COUNT(*) FROM events WHERE value < 0) AS BIGINT)
+    """,
+)
+def q187_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    ev = load_table(spark, sf_dir, "events")
+
+    def one(name: str, df: DataFrame) -> DataFrame:
+        return df.groupBy().agg(F.count(F.lit(1)).cast("bigint").alias("violations")).select(
+            F.lit(name).alias("check_name"), "violations"
+        )
+
+    dup_pk = orders.groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > 1)
+    null_fk = orders.filter(F.col("o_custkey").isNull())
+    bad_status = orders.filter(~F.col("o_orderstatus").isin("O", "F", "P"))
+    orphan_orders = orders.join(
+        F.broadcast(cust.select("c_custkey")), orders.o_custkey == cust.c_custkey, "left_anti"
+    )
+    orphan_lines = li.join(orders.select("o_orderkey"), li.l_orderkey == orders.o_orderkey, "left_anti")
+    bad_qty = li.filter(F.col("l_quantity") <= 0)
+    bad_value = ev.filter(F.col("value") < 0)
+    checks = [
+        one("orders_pk_unique", dup_pk),
+        one("orders_custkey_not_null", null_fk),
+        one("orders_status_domain", bad_status),
+        one("orders_customer_ri", orphan_orders),
+        one("lineitem_orders_ri", orphan_lines),
+        one("lineitem_qty_positive", bad_qty),
+        one("events_value_nonnegative", bad_value),
+    ]
+    out = checks[0]
+    for c in checks[1:]:
+        out = out.unionAll(c)
+    return out
+
+
+# ---------------------------------------------------------------------------
+# q213 — order/lineitem reconciliation audit (the cross-table
+# consistency check q187's suite points at but doesn't drill into):
+# per order, |o_totalprice - sum(line net revenue)| relative to the
+# header total, bucketed into consistency bands. Exact-DECIMAL line
+# sums; the relative diff is double only at the final compare. One
+# key-partitioned join+agg, then a 4-row rollup.
+# (The synthetic fixture isn't constructed to reconcile — the audit's
+# OUTPUT DISTRIBUTION is the deterministic artifact under test.)
+# ---------------------------------------------------------------------------
+@register(
+    "q213_reconciliation_audit",
+    oracle="""
+    WITH line_sum AS (
+      SELECT l_orderkey,
+             SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS net
+      FROM lineitem GROUP BY l_orderkey),
+    d AS (
+      SELECT o.o_orderkey,
+             abs(o.o_totalprice - CAST(ls.net AS DOUBLE)) / o.o_totalprice AS rel_diff
+      FROM orders o JOIN line_sum ls ON o.o_orderkey = ls.l_orderkey
+      WHERE o.o_totalprice > 0),
+    b AS (
+      SELECT CASE WHEN rel_diff < 0.001 THEN 'exact_0.1pct'
+                  WHEN rel_diff < 0.01 THEN 'within_1pct'
+                  WHEN rel_diff < 0.10 THEN 'within_10pct'
+                  ELSE 'mismatch' END AS band
+      FROM d),
+    t AS (SELECT COUNT(*) AS total FROM b)
+    SELECT band, CAST(COUNT(*) AS BIGINT) AS n,
+           ROUND(CAST(COUNT(*) AS DOUBLE) / t.total, 6) AS share
+    FROM b CROSS JOIN t GROUP BY band, t.total
+    """,
+)
+def q213_reconciliation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
+    line_sum = li.groupBy("l_orderkey").agg(
+        F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).alias("net")
+    )
+    d = (
+        orders.filter(F.col("o_totalprice") > 0)
+        .join(line_sum, orders.o_orderkey == line_sum.l_orderkey)
+        .select(
+            (F.abs(F.col("o_totalprice") - F.col("net").cast("double")) / F.col("o_totalprice")).alias("rel_diff")
+        )
+    )
+    b = d.select(
+        F.when(F.col("rel_diff") < 0.001, "exact_0.1pct")
+        .when(F.col("rel_diff") < 0.01, "within_1pct")
+        .when(F.col("rel_diff") < 0.10, "within_10pct")
+        .otherwise("mismatch")
+        .alias("band")
+    )
+    t = b.groupBy().agg(F.count(F.lit(1)).alias("total"))
+    return (
+        b.groupBy("band")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .crossJoin(F.broadcast(t))
+        .select(
+            "band",
+            F.col("n").cast("bigint").alias("n"),
+            F.round(F.col("n").cast("double") / F.col("total"), 6).alias("share"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q248 — k-anonymity audit (privacy/governance family): group rows by
+# quasi-identifiers (nation, market segment, account-balance decile) and
+# report, per equivalence-class size band, how many classes and rows sit
+# below the k=5 re-identification floor. The decile uses the exact
+# global rank (q120's convention — bit-stable deciles for the oracle);
+# at 100 TB swap in q160's rank-bounded approx percentile cutpoints,
+# which changes only the decile boundaries, not the audit shape.
+# ---------------------------------------------------------------------------
+@register(
+    "q248_k_anonymity",
+    oracle="""
+    WITH r AS (
+      SELECT c_nationkey, c_mktsegment,
+             CAST(ceil(10.0 * ROW_NUMBER() OVER (ORDER BY c_acctbal, c_custkey)
+                  / COUNT(*) OVER ()) AS INT) AS bal_decile
+      FROM customer),
+    classes AS (
+      SELECT c_nationkey, c_mktsegment, bal_decile, COUNT(*) AS class_size
+      FROM r GROUP BY c_nationkey, c_mktsegment, bal_decile)
+    SELECT class_size < 5 AS below_k,
+           CAST(COUNT(*) AS BIGINT) AS n_classes,
+           CAST(SUM(class_size) AS BIGINT) AS n_rows,
+           CAST(MIN(class_size) AS BIGINT) AS min_class,
+           CAST(MAX(class_size) AS BIGINT) AS max_class
+    FROM classes GROUP BY below_k ORDER BY below_k
+    """,
+)
+def q248_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = load_table(spark, sf_dir, "customer")
+    w = Window.orderBy("c_acctbal", "c_custkey")
+    r = cust.select(
+        "c_nationkey", "c_mktsegment",
+        F.ceil(
+            F.lit(10.0) * F.row_number().over(w)
+            / F.count(F.lit(1)).over(Window.partitionBy())
+        ).cast("int").alias("bal_decile"),
+    )
+    classes = r.groupBy("c_nationkey", "c_mktsegment", "bal_decile").agg(
+        F.count(F.lit(1)).alias("class_size")
+    )
+    return (
+        classes.groupBy((F.col("class_size") < 5).alias("below_k"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_classes"),
+            F.sum("class_size").cast("bigint").alias("n_rows"),
+            F.min("class_size").cast("bigint").alias("min_class"),
+            F.max("class_size").cast("bigint").alias("max_class"),
+        )
+        .orderBy("below_k")
+    )

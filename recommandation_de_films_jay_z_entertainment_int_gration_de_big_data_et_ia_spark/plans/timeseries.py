@@ -1,4 +1,5 @@
-"""Time-series / event-stream query catalog over ``events``.
+"""Time-series / event-stream query catalog over ``events`` (and orders),
+including the Structured Streaming queries.
 
 Uses Spark's native time-window operators (``F.window`` tumbling/sliding,
 ``F.session_window`` gap sessions) — the *same* expressions run under
@@ -13,18 +14,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
-from ..streaming.windows import session_stats
-from .analytics_ext import TUMBLING_ORACLE
+from ..streaming.windows import session_stats, sum_value, tumbling_counts
 from .catalog import register
-
-DEC = "decimal(18,4)"
-
-
-def _sum_value() -> F.Column:
-    return F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2)
-
+from .core import _dec, _money
 
 SUM_VALUE_SQL = "ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)"
+
+
+# The oracle of q44 (batch) and q66 (streaming): both run
+# ``streaming.windows.tumbling_counts``.
+TUMBLING_ORACLE = f"""
+    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start_s, event_type,
+           COUNT(*) AS n_events,
+           {SUM_VALUE_SQL} AS sum_value
+    FROM events
+    GROUP BY window_start_s, event_type
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -32,17 +37,7 @@ SUM_VALUE_SQL = "ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)"
 # ---------------------------------------------------------------------------
 @register("q44_tumbling_window", oracle=TUMBLING_ORACLE)
 def q44_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), _sum_value().alias("sum_value"))
-        .select(
-            F.col("w.start").cast("long").alias("window_start_s"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +58,7 @@ def q45_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), _sum_value().alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), sum_value().alias("sum_value"))
         .select(F.col("w.start").cast("long").alias("window_start_s"), "n_events", "sum_value")
     )
 
@@ -161,7 +156,7 @@ def q84_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         joined.groupBy("w_start_s")
-        .agg(F.count(F.lit(1)).alias("n_events"), _sum_value().alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), sum_value().alias("sum_value"))
         .orderBy("w_start_s")
     )
 
@@ -1225,3 +1220,630 @@ def q276_es_pipeline_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("mov7_avg"),
     ).orderBy("day")
+
+
+# ---------------------------------------------------------------------------
+# q53 — date part extraction + grouped revenue by month
+# ---------------------------------------------------------------------------
+@register(
+    "q53_date_parts",
+    oracle=f"""
+    SELECT CAST(date_part('year', o_orderdate) AS INT) AS yr,
+           CAST(date_part('month', o_orderdate) AS INT) AS mo,
+           COUNT(*) AS n_orders,
+           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS total
+    FROM orders
+    GROUP BY yr, mo
+    """,
+)
+def q53_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    return (
+        orders.groupBy(
+            F.year("o_orderdate").alias("yr"), F.month("o_orderdate").alias("mo")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            _money(F.sum(_dec("o_totalprice")), "total"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q59 — as-of join: each event annotated with the timestamp of the user's
+# most recent prior (or simultaneous) 'signup' event. Implemented as a
+# running window max — the single-table as-of form; the two-table form is
+# a union + same window (no row-by-row lookup, no range join explosion).
+# ---------------------------------------------------------------------------
+@register(
+    "q59_asof_join",
+    oracle="""
+    SELECT event_id, user_id,
+           CAST(floor(epoch(ts)) AS BIGINT) AS ts_s,
+           CAST(floor(epoch(
+             MAX(CASE WHEN event_type = 'signup' THEN ts END)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           )) AS BIGINT) AS last_signup_s
+    FROM events
+    """,
+)
+def q59_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    last_signup = F.max(
+        F.when(F.col("event_type") == "signup", F.col("ts"))
+    ).over(w)
+    return ev.select(
+        "event_id",
+        "user_id",
+        F.col("ts").cast("long").alias("ts_s"),
+        last_signup.cast("long").alias("last_signup_s"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q65 — window frames: running total + lead/lag deltas per customer
+# ---------------------------------------------------------------------------
+@register(
+    "q65_running_window",
+    oracle="""
+    SELECT o_custkey, o_orderkey,
+           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+                 OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS running_total,
+           CAST(LAG(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS prev_order
+    FROM orders WHERE o_custkey <= 100
+    """,
+)
+def q65_running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") <= 100)
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return orders.select(
+        "o_custkey",
+        "o_orderkey",
+        F.round(
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(wf).cast("double"), 2
+        ).alias("running_total"),
+        F.lag("o_orderkey").over(w).cast("bigint").alias("prev_order"),
+    )
+
+
+# q66 drives the actual Structured Streaming path (readStream → watermarked
+# tumbling agg → availableNow drain in COMPLETE mode) and returns the
+# drained result as a batch frame. Complete mode emits every window, and
+# the streaming agg uses the exact-DECIMAL sum discipline, so the drained
+# output is bit-identical to batch q44, whose oracle it shares;
+# tests/test_streaming.py proves the equivalence end-to-end.
+@register("q66_streaming_tumbling", oracle=TUMBLING_ORACLE)
+def q66_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid
+
+    from ..streaming.windows import run_stream_to_memory, stream_events
+
+    name = f"q66_sink_{uuid.uuid4().hex[:8]}"
+    run_stream_to_memory(tumbling_counts(stream_events(spark, sf_dir)), name)
+    return spark.table(name)
+
+
+# ---------------------------------------------------------------------------
+# q114 — streaming exact dedup: dropDuplicatesWithinWatermark over the
+# events stream, drained with availableNow. The fixture spans ~1 month,
+# so a 90-day horizon makes the streaming result provably equal to batch
+# DISTINCT — which is the oracle (the one streaming query in the catalog
+# with a full hash-checked oracle, not rows-only). Bounded state at
+# scale: per-key state evicts once the watermark passes first-seen + 90d.
+# ---------------------------------------------------------------------------
+@register(
+    "q114_streaming_dedup",
+    oracle="SELECT DISTINCT user_id, event_type FROM events",
+)
+def q114_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid
+
+    from ..streaming.windows import dedup_stream, run_stream_to_memory, stream_events
+
+    name = f"q114_sink_{uuid.uuid4().hex[:8]}"
+    run_stream_to_memory(
+        dedup_stream(stream_events(spark, sf_dir), watermark="90 days"),
+        name,
+        output_mode="append",
+    )
+    return spark.table(name)
+
+
+# ---------------------------------------------------------------------------
+# q124 — stream-static enrichment join: the events STREAM joins the
+# static customer dimension per micro-batch (stateless; the dim is
+# re-read each trigger so dim updates flow without restart). Drained
+# with availableNow the result equals the batch join exactly, so this
+# streaming query carries a full hash oracle (q114's pattern).
+# ---------------------------------------------------------------------------
+@register(
+    "q124_stream_static_join",
+    oracle="""
+    SELECT e.event_id, e.event_type, c.c_nationkey
+    FROM events e JOIN customer c ON e.user_id = c.c_custkey
+    """,
+)
+def q124_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid
+
+    from ..sources.readers import load_table as _lt
+    from ..streaming.windows import enrich_stream, run_stream_to_memory, stream_events
+
+    dim = _lt(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    joined = enrich_stream(
+        stream_events(spark, sf_dir), dim, key="user_id", dim_key="c_custkey"
+    ).select("event_id", "event_type", "c_nationkey")
+    name = f"q124_sink_{uuid.uuid4().hex[:8]}"
+    run_stream_to_memory(joined, name, output_mode="append")
+    return spark.table(name)
+
+
+# ---------------------------------------------------------------------------
+# q164 — week-over-week growth: weekly exact-decimal revenue with lag
+# deltas and percent change (the reporting rollup every finance
+# dashboard runs). Week = epoch-day // 7 (timezone-free, no calendar
+# ambiguity); pct change NULL for the first week, rounded from a single
+# double division.
+# ---------------------------------------------------------------------------
+@register(
+    "q164_wow_growth",
+    oracle="""
+    WITH w AS (
+      SELECT (epoch_us(o_orderdate) // 86400000000) // 7 AS week,
+             SUM(CAST(ROUND(o_totalprice, 2) AS DECIMAL(18,2))) AS rev
+      FROM orders GROUP BY week)
+    SELECT week, ROUND(CAST(rev AS DOUBLE), 2) AS rev,
+           ROUND(CAST(rev - LAG(rev) OVER (ORDER BY week) AS DOUBLE), 2) AS delta,
+           ROUND(CAST(rev - LAG(rev) OVER (ORDER BY week) AS DOUBLE)
+                 / CAST(LAG(rev) OVER (ORDER BY week) AS DOUBLE), 6) AS pct_change
+    FROM w
+    """,
+)
+def q164_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    # o_orderdate arrives as TIMESTAMP_NTZ (parquet without UTC
+    # adjustment); pure NTZ arithmetic == DuckDB's epoch_us of a naive
+    # timestamp, with no session-timezone coercion (readers.py lesson).
+    micros = F.expr(
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', o_orderdate)"
+    )
+    week = (micros / F.lit(86400000000)).cast("bigint") / 7
+    w = (
+        orders.groupBy(week.cast("bigint").alias("week"))
+        .agg(F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)")).alias("rev"))
+    )
+    lag = F.lag("rev").over(Window.orderBy("week"))
+    return w.select(
+        "week",
+        F.round(F.col("rev").cast("double"), 2).alias("rev"),
+        F.round((F.col("rev") - lag).cast("double"), 2).alias("delta"),
+        F.round((F.col("rev") - lag).cast("double") / lag.cast("double"), 6).alias(
+            "pct_change"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q168 — out-of-order (late-data) audit: the observability metric every
+# event-time streaming pipeline tracks to SIZE ITS WATERMARK — per
+# event_type, how many events arrive behind the per-user running
+# maximum event time (ordered by event_id as arrival order), the p95 of
+# that lateness, and the max. Lateness in whole seconds from
+# full-precision microsecond running maxima; exact interpolated p95.
+# ---------------------------------------------------------------------------
+@register(
+    "q168_lateness_audit",
+    oracle="""
+    WITH o AS (
+      SELECT event_type, epoch_us(ts) AS t,
+             MAX(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
+      FROM events),
+    lat AS (
+      SELECT event_type,
+             CASE WHEN prev_max IS NOT NULL AND prev_max > t
+                  THEN (prev_max - t) // 1000000 ELSE 0 END AS late_s,
+             CASE WHEN prev_max IS NOT NULL AND prev_max > t THEN 1 ELSE 0 END AS is_late
+      FROM o)
+    SELECT event_type, COUNT(*) AS n,
+           CAST(SUM(is_late) AS BIGINT) AS n_late,
+           ROUND(CAST(SUM(is_late) AS DOUBLE) / COUNT(*), 6) AS late_share,
+           ROUND(quantile_cont(late_s, 0.95), 6) AS p95_late_s,
+           CAST(MAX(late_s) AS BIGINT) AS max_late_s
+    FROM lat GROUP BY event_type
+    """,
+)
+def q168_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    t = F.unix_micros("ts")
+    o = ev.select("event_type", t.alias("t"), F.max(t).over(w).alias("prev_max"))
+    is_late = F.col("prev_max").isNotNull() & (F.col("prev_max") > F.col("t"))
+    lat = o.select(
+        "event_type",
+        F.when(is_late, ((F.col("prev_max") - F.col("t")) / 1000000).cast("bigint"))
+        .otherwise(F.lit(0).cast("bigint"))
+        .alias("late_s"),
+        F.when(is_late, 1).otherwise(0).alias("is_late"),
+    )
+    return lat.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("is_late").cast("bigint").alias("n_late"),
+        F.round(F.sum("is_late").cast("double") / F.count(F.lit(1)), 6).alias("late_share"),
+        F.round(F.expr("percentile(late_s, 0.95)"), 6).alias("p95_late_s"),
+        F.max("late_s").cast("bigint").alias("max_late_s"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q191 — lagged feature matrix for forecasting (the feature-engineering
+# feeder for the q52/q131 model family): per event_type daily
+# exact-DECIMAL value sums on the integer UTC day axis, with lag-1,
+# lag-7 and a 7-day trailing mean (current day excluded) as features,
+# emitted only for rows where all features exist. ROWS-window semantics
+# are deliberate (the daily axis is dense per type in this corpus; a
+# production variant composes with q118's gap fill first — documented
+# trade-off). One key-partitioned window stack over the tiny rollup.
+# The trailing mean divides the exact DECIMAL 7-day sum by 7 in double.
+# ---------------------------------------------------------------------------
+@register(
+    "q191_lag_features",
+    oracle="""
+    WITH daily AS (
+      SELECT event_type,
+             CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+             SUM(CAST(value AS DECIMAL(18,4))) AS y
+      FROM events GROUP BY event_type, day),
+    f AS (
+      SELECT event_type, day,
+             CAST(y AS DOUBLE) AS y,
+             CAST(LAG(y, 1) OVER w AS DOUBLE) AS lag1,
+             CAST(LAG(y, 7) OVER w AS DOUBLE) AS lag7,
+             CAST(SUM(y) OVER (w ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS DOUBLE) / 7.0
+               AS ma7,
+             COUNT(*) OVER (w ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS nprev
+      FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day))
+    SELECT event_type, day, ROUND(y, 2) AS y, ROUND(lag1, 2) AS lag1,
+           ROUND(lag7, 2) AS lag7, ROUND(ma7, 6) AS ma7
+    FROM f WHERE lag7 IS NOT NULL AND nprev = 7
+    """,
+)
+def q191_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type", (F.col("ts").cast("long") / 86400).cast("bigint").alias("day")
+    ).agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("y"))
+    w = Window.partitionBy("event_type").orderBy("day")
+    w7 = w.rowsBetween(-7, -1)
+    f = daily.select(
+        "event_type",
+        "day",
+        F.col("y").cast("double").alias("yd"),
+        F.lag("y", 1).over(w).cast("double").alias("lag1"),
+        F.lag("y", 7).over(w).cast("double").alias("lag7"),
+        (F.sum("y").over(w7).cast("double") / 7.0).alias("ma7"),
+        F.count(F.lit(1)).over(w7).alias("nprev"),
+    )
+    return f.filter(F.col("lag7").isNotNull() & (F.col("nprev") == 7)).select(
+        "event_type",
+        "day",
+        F.round("yd", 2).alias("y"),
+        F.round("lag1", 2).alias("lag1"),
+        F.round("lag7", 2).alias("lag7"),
+        F.round("ma7", 6).alias("ma7"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q198 — interval-overlap seconds between session sets (ad-viewability
+# / co-activity algebra; the pairwise-overlap complement of q145's
+# sweep-line concurrency): per user, 30-minute-gap sessions built
+# separately from 'view' and 'click' events (q46's session_window), then
+# every overlapping (view-session, click-session) pair contributes
+# (session intervals extend 1800s past the last event — the activity
+# window includes the inactivity timeout, the standard viewability
+# convention; without it singleton sessions are zero-length points)
+# max(0, min(ends) - max(starts)) whole seconds. The pair join is
+# user-partitioned (session counts per user are small and bounded by
+# the sessionizer) — never a global interval cross join. Session
+# bounds use floored-epoch seconds in BOTH engines.
+# ---------------------------------------------------------------------------
+@register(
+    "q198_interval_overlap",
+    oracle="""
+    WITH base AS (
+      SELECT user_id, event_type, epoch(ts) AS t, event_id FROM events
+      WHERE event_type IN ('view', 'click')),
+    o AS (
+      SELECT user_id, event_type, t, event_id,
+             LAG(t) OVER (PARTITION BY user_id, event_type ORDER BY t, event_id) AS prev_t
+      FROM base),
+    f AS (SELECT *, CASE WHEN prev_t IS NULL OR t - prev_t >= 1800 THEN 1 ELSE 0 END AS new_s
+          FROM o),
+    g AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id, event_type
+                                     ORDER BY t, event_id) AS sid
+          FROM f),
+    sess AS (
+      SELECT user_id, event_type, sid,
+             CAST(floor(MIN(t)) AS BIGINT) AS s,
+             CAST(floor(MAX(t)) AS BIGINT) + 1800 AS e
+      FROM g GROUP BY user_id, event_type, sid),
+    pairs AS (
+      SELECT v.user_id,
+             greatest(0, least(v.e, c.e) - greatest(v.s, c.s)) AS ov
+      FROM sess v JOIN sess c
+        ON v.user_id = c.user_id AND v.event_type = 'view' AND c.event_type = 'click'
+      WHERE least(v.e, c.e) >= greatest(v.s, c.s))
+    SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_overlapping_pairs,
+           CAST(SUM(ov) AS BIGINT) AS overlap_s
+    FROM pairs GROUP BY user_id
+    """,
+)
+def q198_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("view", "click")
+    )
+    sess = (
+        ev.groupBy("user_id", "event_type", F.session_window("ts", "30 minutes"))
+        .agg(
+            F.min(F.col("ts").cast("long")).alias("s"),
+            (F.max(F.col("ts").cast("long")) + F.lit(1800)).alias("e"),
+        )
+        .select("user_id", "event_type", "s", "e")
+    )
+    v = sess.filter(F.col("event_type") == "view").select(
+        "user_id", F.col("s").alias("vs"), F.col("e").alias("ve")
+    )
+    c = sess.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("s").alias("cs"), F.col("e").alias("ce")
+    )
+    lo = F.greatest(F.col("vs"), F.col("cs"))
+    hi = F.least(F.col("ve"), F.col("ce"))
+    pairs = v.join(c, "user_id").filter(hi >= lo).select(
+        "user_id", F.greatest(F.lit(0), hi - lo).alias("ov")
+    )
+    return pairs.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_overlapping_pairs"),
+        F.sum("ov").cast("bigint").alias("overlap_s"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# q170 — latest-snapshot compaction (the Kafka-log-compaction /
+# CDC-read pattern): per (user_id, event_type) key, keep only the most
+# recent record by full-precision (ts, event_id). One window top-1 per
+# key — at 100 TB this is the nightly compaction that bounds table
+# growth; at read time the same window is the "current state" view.
+# ---------------------------------------------------------------------------
+LATEST_PER_KEY_ORACLE = """
+    SELECT user_id, event_type, event_id AS last_event_id,
+           epoch_us(ts) // 1000000 AS last_ts_s,
+           ROUND(value, 6) AS last_value
+    FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
+                                   ORDER BY ts DESC, event_id DESC) AS rn
+      FROM events)
+    WHERE rn = 1
+    """
+
+
+# ---------------------------------------------------------------------------
+# q211 — STREAMING latest-value materialization, hash-oracled (the
+# incremental twin of q170, via applyInPandasWithState — see
+# streaming/stateful.latest_per_key): drain the update stream with
+# availableNow into a memory sink, compact the update log by
+# max-(ts_us, event_id) per key (the CDC-log read pattern; a no-op for
+# a single-batch drain), and the result is bit-identical to batch
+# q170 — which IS the oracle.
+# ---------------------------------------------------------------------------
+@register("q211_streaming_latest", oracle=LATEST_PER_KEY_ORACLE)
+def q211_streaming_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid
+
+    from ..streaming.stateful import latest_per_key
+    from ..streaming.windows import run_stream_to_memory, stream_events
+
+    name = f"q211_sink_{uuid.uuid4().hex[:8]}"
+    # shuffle_partitions=None: this drain is PYTHON-stateful
+    # (applyInPandasWithState), so its cost is Arrow-batch work across
+    # Python workers — parallelism-bound, not state-store-bound; the
+    # low-partition default that speeds the JVM-stateful drains (q87 et
+    # al.) would serialize it onto 8 workers (measured +27% at sf1).
+    run_stream_to_memory(
+        latest_per_key(stream_events(spark, sf_dir)),
+        name,
+        output_mode="update",
+        shuffle_partitions=None,
+    )
+    log = spark.table(name)
+    w = Window.partitionBy("user_id", "event_type").orderBy(
+        F.desc("ts_us"), F.desc("last_event_id")
+    )
+    return (
+        log.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "user_id",
+            "event_type",
+            "last_event_id",
+            (F.col("ts_us") / 1000000).cast("bigint").alias("last_ts_s"),
+            F.round("last_value", 6).alias("last_value"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q225 — activity punch card (DOW x hour intensity matrix; epoch
+# arithmetic only — day-of-week = (epoch_day + 4) % 7 with 0=Sunday,
+# anchored at 1970-01-01 being a Thursday — never a session-tz
+# dayofweek()): counts and exact-decimal value sums per cell. One
+# groupBy; 168 output rows at any scale.
+# ---------------------------------------------------------------------------
+@register(
+    "q225_punchcard",
+    oracle=f"""
+    SELECT CAST((CAST(floor(epoch(ts)) AS BIGINT) // 86400 + 4) % 7 AS INT) AS dow,
+           CAST((CAST(floor(epoch(ts)) AS BIGINT) % 86400) // 3600 AS INT) AS hour,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           {SUM_VALUE_SQL} AS sum_value
+    FROM events GROUP BY dow, hour
+    """,
+)
+def q225_punchcard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    es = F.col("ts").cast("long")
+    return (
+        ev.groupBy(
+            (((es / 86400).cast("bigint") + 4) % 7).cast("int").alias("dow"),
+            ((es % 86400) / 3600).cast("int").alias("hour"),
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            sum_value().alias("sum_value"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q227 — inter-arrival time distribution per event_type (the latency
+# histogram that sizes q143/q168's watermarks): full-precision lag
+# deltas, log2-binned (floor(log2(gap_s)) with a <1s bucket), counts
+# and share per bin. One per-key lag window + one groupBy.
+# ---------------------------------------------------------------------------
+@register(
+    "q227_interarrival_histogram",
+    oracle="""
+    WITH d AS (
+      SELECT event_type,
+             epoch(ts) - LAG(epoch(ts)) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS gap
+      FROM events),
+    b AS (
+      SELECT event_type,
+             CASE WHEN gap < 1 THEN -1
+                  ELSE CAST(floor(ln(gap) / ln(2)) AS INT) END AS bin
+      FROM d WHERE gap IS NOT NULL),
+    t AS (SELECT event_type, COUNT(*) AS total FROM b GROUP BY event_type)
+    SELECT b.event_type, CAST(b.bin AS INT) AS log2_bin,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           ROUND(CAST(COUNT(*) AS DOUBLE) / t.total, 6) AS share
+    FROM b JOIN t ON b.event_type = t.event_type
+    GROUP BY b.event_type, b.bin, t.total
+    """,
+)
+def q227_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    t = F.unix_micros(F.col("ts")).cast("double") / 1e6
+    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
+    d = ev.select("event_type", (t - F.lag(t).over(w)).alias("gap")).filter(
+        F.col("gap").isNotNull()
+    )
+    b = d.select(
+        "event_type",
+        F.when(F.col("gap") < 1, -1)
+        .otherwise(F.floor(F.log(F.col("gap")) / F.log(F.lit(2.0))).cast("int"))
+        .alias("log2_bin"),
+    )
+    tt = b.groupBy("event_type").agg(F.count(F.lit(1)).alias("total"))
+    return (
+        b.groupBy("event_type", "log2_bin")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .join(F.broadcast(tt), "event_type")
+        .select(
+            "event_type",
+            F.col("log2_bin").cast("int").alias("log2_bin"),
+            F.col("n").cast("bigint").alias("n"),
+            F.round(F.col("n").cast("double") / F.col("total"), 6).alias("share"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# q242 — streaming foreachBatch UPSERT SINK, hash-oracled: the
+# exactly-once-shaped sink pattern q211's stateful operator feeds in
+# production. The event log is first re-sharded into 3 time-sliced
+# files (so the SAME keys recur across micro-batches and the merge
+# genuinely overwrites), then drained one file per trigger; each batch
+# merges latest-per-(user,event_type) into a parquet state table. The
+# merge is an idempotent fold (replay-safe — proven by re-applying a
+# batch in tests/test_streaming.py), so the final state equals batch
+# q211/q170 semantics — which IS the oracle.
+# ---------------------------------------------------------------------------
+@register("q242_stream_upsert_sink", oracle=LATEST_PER_KEY_ORACLE)
+def q242_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
+    import uuid
+
+    from ..streaming.windows import foreachbatch_upsert_run
+
+    base = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+        ".tmp", f"q242_{uuid.uuid4().hex[:8]}",
+    )
+    src, state = os.path.join(base, "src"), os.path.join(base, "state")
+    ev = load_table(spark, sf_dir, "events")
+    # 3 time slices -> 3 micro-batches touching the SAME keys
+    ev.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
+    foreachbatch_upsert_run(spark, src, state)
+    out = (
+        spark.read.parquet(state)
+        .select(
+            "user_id", "event_type",
+            F.col("event_id").alias("last_event_id"),
+            F.col("ts").cast("long").alias("last_ts_s"),
+            F.round("value", 6).alias("last_value"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    shutil.rmtree(base, ignore_errors=True)
+    return out
+
+
+# ---------------------------------------------------------------------------
+# q361 — Structured Streaming HOPPING window (1h size / 30m slide):
+# each event contributes to exactly two overlapping windows; counts per
+# (window, event_type) drained complete-mode from a real readStream →
+# memory-sink run (streaming/windows.py:hopping_counts). The oracle
+# reproduces the double assignment arithmetically: window starts are
+# (epoch DIV 1800)*1800 and the slot before it. Completes the
+# streaming-window family (q66 tumbling, q143 session, q44/q45 batch
+# forms) with the sliding/hopping shape.
+#
+# Shape (100 TB stream): state per key is bounded by the watermark
+# horizon × 2 live windows per slide; the memory sink is the test
+# harness — production writes the same frame to parquet/Kafka.
+# ---------------------------------------------------------------------------
+@register(
+    "q361_stream_hopping",
+    oracle="""
+    WITH e AS (
+      SELECT event_type,
+             CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 AS s0 FROM events),
+    w AS (
+      SELECT event_type, s0 - off AS window_start_s
+      FROM e, (SELECT UNNEST([0, 1800]) AS off))
+    SELECT CAST(window_start_s AS BIGINT) AS window_start_s, event_type,
+           COUNT(*) AS n_events
+    FROM w GROUP BY 1, 2
+    """,
+)
+def q361_stream_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid
+
+    from ..streaming.windows import hopping_counts, run_stream_to_memory, stream_events
+
+    name = f"q361_sink_{uuid.uuid4().hex[:8]}"
+    run_stream_to_memory(hopping_counts(stream_events(spark, sf_dir)), name)
+    return spark.table(name)

@@ -46,20 +46,21 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """1-hour tumbling count+sum per event_type — the q44 expression with a
-    watermark bound for streaming state cleanup. The sum goes through the
-    catalog's exact-DECIMAL discipline so the drained complete-mode
-    output is bit-identical to batch q44 (and hash-oracle-able: q66)."""
+def sum_value() -> Column:
+    """Exact-DECIMAL sum of ``value``, cast to double and rounded to 2
+    places: the catalog's money-sum rule, so a drained stream and the
+    batch query agree bit-for-bit."""
+    return F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 2)
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """1-hour tumbling count and ``sum_value`` per event_type: batch q44
+    over ``load_table``'s events, q66 over ``stream_events``. The 2-hour
+    watermark bounds streaming state; Spark drops it on a batch frame."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 2).alias(
-                "sum_value"
-            ),
-        )
+        .agg(F.count(F.lit(1)).alias("n_events"), sum_value().alias("sum_value"))
         .select(
             F.col("w.start").cast("long").alias("window_start_s"),
             "event_type",

@@ -760,7 +760,7 @@ def test_basket_pairs_equal_combinations(spark, arrays):
     Spark job."""
     from itertools import combinations
 
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext import (
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.ml import (
         basket_pairs,
     )
 

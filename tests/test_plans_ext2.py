@@ -1,6 +1,8 @@
-"""Physical-plan and behavior guards for the q171-q192 additions
-(plans/analytics_ext2.py): the scale properties each docstring claims
-must be visible in the executed plan, not just asserted in prose."""
+"""Physical-plan and behavior guards for the q171-q192 additions (in
+the topic modules under plans/: stats, cohorts, resolution, textstats,
+similarity, dedup, tables, core, timeseries and forecasting): the scale
+properties each docstring claims must be visible in the executed plan,
+not just asserted in prose."""
 
 from __future__ import annotations
 

@@ -770,7 +770,7 @@ def test_cms_sketch_is_mergeable(spark, sf_dir):
     """Count-min cells built on two disjoint halves sum cellwise to the
     full-corpus sketch — the property that makes CMS shardable at 100 TB."""
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_orderkey")
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext2 import (
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.stats import (
         _CMS_D,
         _cms_bucket_col,
     )

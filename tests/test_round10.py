@@ -13,7 +13,7 @@ from decimal import Decimal
 import pytest
 
 import __spark_entry__ as entrymod
-from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext9 import (
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.spans import (
     _IV2_ALT1,
     _IV2_ALT2,
     _IV2_MAX_GAPS,

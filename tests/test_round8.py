@@ -18,9 +18,13 @@ from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_s
     scripted_metric,
     top_hits,
 )
-from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext5 import (
-    _GS_POLY,
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.dedup import (
     _SC_CONFIGS,
+)
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.spatial import (
+    _GS_POLY,
+)
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.training import (
     _TB_BUDGET,
 )
 
@@ -354,7 +358,7 @@ def test_crossdoc_gram_hash_collision_free(spark, sf_dir):
 # independent pure-Python packer
 # ---------------------------------------------------------------------------
 def test_q371_chat_packing_planted(spark, tmp_path):
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext5 import (
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.training import (
         _CP_CTX,
         _CP_HDR,
         _CP_SYS,

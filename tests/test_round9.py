@@ -15,10 +15,14 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
-from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext6 import (
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.bucket_aggs import (
+    _RS_CUT,
+)
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.search import (
     _MPP_FIRST,
     _MPP_PREFIX,
-    _RS_CUT,
+)
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.spans import (
     _SM_ANCHOR,
     _SM_PREFIX,
     _SM_SLOP,

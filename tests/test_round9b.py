@@ -17,8 +17,10 @@ from collections import Counter
 import pytest
 
 import __spark_entry__ as entrymod
-from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext7 import (
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.ml import (
     _BT_ITERS,
+)
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.relevance import (
     _RF_SAT_PIVOT,
     _RF_SIG_PIVOT_SQ,
     _RF_TERM,
@@ -277,7 +279,7 @@ def test_q395_matches_python(spark, sf_dir, docs):
 # Batch 3 (q396-q398): ES phrase suggester, Gopher quality rules,
 # runtime fields.
 # ---------------------------------------------------------------------------
-from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext8 import (  # noqa: E402
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.corpus import (  # noqa: E402
     _GQ_DOM_PCT,
     _GQ_MWL_HI,
     _GQ_MWL_LO,
@@ -286,6 +288,8 @@ from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_s
     _GQ_TTR_PCT,
     _GQ_WC_MAX,
     _GQ_WC_MIN,
+)
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.search import (  # noqa: E402
     _PS_MAX_DIST,
     _PS_PHRASE,
     _PS_TOP,
@@ -415,7 +419,7 @@ def test_q398_matches_python(spark, sf_dir, docs):
 
 
 def test_q399_matches_python(spark, sf_dir, docs):
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.analytics_ext8 import (
+    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.plans.corpus import (
         _ST_K,
     )
 

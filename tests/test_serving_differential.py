@@ -281,6 +281,42 @@ def test_index_without_variant_file_is_refused(spark, raw, tmp_path):
         movierec.load_movie_index(spark, out)
 
 
+_PUBLISH = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import pyarrow.dataset as ds
+from pyspark.sql import SparkSession
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import pipelines
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
+    movieindex, movierec)
+spark = SparkSession.builder.master("local[1]").appName("publish-outside").getOrCreate()
+out = sys.argv[3]
+for _ in range(2):  # a republish replaces the variant file
+    movierec.write_movie_index(movierec.build_movie_index_tables(
+        pipelines.build_movie_index(spark, sys.argv[2])), out)
+terms = ds.dataset(out + "/postings.parquet", format="parquet").to_table(columns=["term"])
+published = ds.dataset(out + "/variants.parquet", format="parquet").to_table()
+rows = [("key", "ascending"), ("term", "ascending"), ("deletions", "ascending")]
+want = movieindex.variant_table(set(terms["term"].to_pylist()))
+assert published.sort_by(rows).equals(want.sort_by(rows))
+print(len(movierec.load_movie_index(spark, out).ids))
+"""
+
+
+def test_publish_outside_the_checkout(catalog, tmp_path):
+    """The publish runs from a working directory outside the checkout,
+    with the package on the driver's ``sys.path`` only: no step of it may
+    need a Spark Python worker to import the package. Publishing twice
+    into one directory leaves exactly the variant rows of its terms."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _PUBLISH, root, catalog[0], str(tmp_path / "index")],
+        capture_output=True, text=True, timeout=600, cwd=tmp_path, env=env)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert int(proc.stdout.split()[-1]) == N_MOVIES
+
+
 def _jobs(spark, label: str, fn) -> int:
     """Spark jobs ``fn`` starts, counted by job group."""
     sc = spark.sparkContext

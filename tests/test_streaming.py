@@ -26,16 +26,8 @@ def test_streaming_tumbling_equals_batch(spark, sf_dir):
         (r.window_start_s, r.event_type): (r.n_events, r.sum_value)
         for r in spark.table("t_tumbling").collect()
     }
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 2).alias("s"),
-        )
-        .select(F.col("w.start").cast("long").alias("ws"), "event_type", "n", "s")
-    )
-    want = {(r.ws, r.event_type): (r.n, r.s) for r in batch.collect()}
+    batch = tumbling_counts(load_table(spark, sf_dir, "events"))
+    want = {(r.window_start_s, r.event_type): (r.n_events, r.sum_value) for r in batch.collect()}
     assert got == want and len(got) > 0
 
 
