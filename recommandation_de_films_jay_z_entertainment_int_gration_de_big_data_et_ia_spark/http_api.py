@@ -32,7 +32,7 @@ from . import serving
 def create_app(movies: Any):
     """App factory: ``movies`` is a loaded
     :class:`~.operators.movieindex.MovieIndex` (production: publish the
-    index offline, ``movierec.load_movie_index`` it once, pass it here;
+    index offline, map it once with ``movieindex.load``, pass it here;
     every request is answered by the :mod:`.operators.movieindex` flows
     from process memory without a Spark job) or the raw movies DataFrame
     (the :mod:`.operators.movierec` oracle flows plan Spark frames per

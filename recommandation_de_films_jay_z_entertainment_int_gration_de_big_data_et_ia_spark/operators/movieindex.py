@@ -1,24 +1,36 @@
-"""The loaded serving index and the reference API's flows over it,
-without Spark: this module imports numpy, and pyarrow to load.
+"""The serving index, whole: its published format, the load that maps
+it, and the reference API's flows over it, without Spark (numpy and
+pyarrow only).
 
-:func:`.movierec.load_movie_index` reads a published index into a
-:class:`MovieIndex` of ``int32`` postings over document positions
-(movieIds ascending, so position order is the movieId tie-break), with
-the documents left in the loaded Arrow columns and decoded only for the
-hits a flow returns. Each flow takes only that index and answers from
-process memory:
-:func:`lookup_title` and the two recommend flows (``POST /recommend``,
-api.py:91-149), :func:`search_page` (``GET /search``, api.py:197-221) and
+:func:`publish` turns the Arrow docs and postings tables that Spark wrote
+into the serving tables (:func:`serving_tables`), one uncompressed Arrow
+IPC file each (:data:`FILES`), each renamed over the old file once
+written, so a process that mapped the old one keeps its snapshot:
+
+- ``docs.arrow`` — the documents by position, movieIds ascending, so
+  position order is the movieId tie-break, their genres
+  dictionary-encoded;
+- ``terms.arrow`` — the sorted terms dictionary both search fields share,
+  with a ``list<int32>`` column of document positions per field;
+- ``genres.arrow`` — the sorted genres and the positions listing each;
+- ``variants.arrow`` — every term's deletion variants (FastSS: Bocek,
+  Hunt and Stiller, 2007) by key, with the term's row in ``terms.arrow``.
+
+:func:`load` maps them into a :class:`MovieIndex` of numpy and memoryview
+views, with no sort, grouping or per-term object. Each flow takes only
+that index and answers from process memory: :func:`lookup_title` and the
+two recommend flows (``POST /recommend``, api.py:91-149),
+:func:`search_page` (``GET /search``, api.py:197-221) and
 :func:`movie_by_id` (``GET /movie/<id>``). Every flow is one ``bincount``
-over the concatenated postings of the query's terms or genres
-(:func:`_bincount`) and one ``argpartition`` top-k (:func:`_top`). The
-title probe intersects the postings of the phrase's tokens before any
-substring test. Fuzzy expansion probes the deletion variants that the
-publish wrote for every term (:class:`Variants`, FastSS: Bocek, Hunt and
-Stiller, 2007) with the query term's own variants, one ``searchsorted``,
-and verifies each candidate with the banded edit-distance check
-:func:`_lev_le` (:func:`_expand`); no request scans the terms
-dictionary. All ranking is score desc, movieId asc.
+over the position lists of the query's terms or genres (:func:`_bincount`)
+and one ``argpartition`` top-k (:func:`_top`); a term or a genre is found
+by binary search in its sorted dictionary (:func:`_code`). The title
+probe intersects the lists of the phrase's tokens before any substring
+test. Fuzzy expansion (:func:`_expand`) probes the published variants
+with the query term's own, one ``searchsorted``, and verifies each
+candidate with the banded edit-distance check :func:`_lev_le`; no request
+scans the terms dictionary. A document is decoded only for a returned
+hit. All ranking is score desc, movieId asc.
 
 The raw-frame oracle flows in :mod:`.movierec` import the rules both
 backends share from here: the fuzziness bands, the boosts, the query
@@ -27,18 +39,22 @@ terms and the keywords.
 
 from __future__ import annotations
 
+import os
 import re
 import zlib
 from bisect import bisect_left
 from collections import Counter
-from collections.abc import Iterable
 from dataclasses import dataclass
 from itertools import islice
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 SEARCH_FIELDS: dict[str, float] = {"title": 3.0, "genres_text": 1.0}
+FILES = ("docs", "terms", "genres", "variants")  # the published files, ``<name>.arrow``
+_STAMP = "publish"  # the schema metadata key of a file's publish id
+DOC_COLUMNS = ("title", "release_date", "genres", "__title_norm")
 _NONE = np.empty(0, np.int32)
 
 
@@ -114,148 +130,276 @@ def deletion_variants(term: str, d: int = MAX_DELETIONS) -> dict[str, int]:
     return found
 
 
-def variant_table(terms: Iterable[str]) -> pa.Table:
+def variant_table(terms: list[str]) -> pa.Table:
     """The publish's rule: a ``(key, term, deletions)`` row for each of
     the :func:`deletion_variants` of each term of at most
-    :data:`MAX_VARIANT_LEN` code points, sorted by key."""
-    rows = [(variant_key(v), t, k) for t in terms if len(t) <= MAX_VARIANT_LEN
+    :data:`MAX_VARIANT_LEN` code points, ``term`` being the term's row in
+    ``terms``, sorted by key."""
+    rows = [(variant_key(v), c, k) for c, t in enumerate(terms) if len(t) <= MAX_VARIANT_LEN
             for v, k in deletion_variants(t).items()]
     key, term, deletions = zip(*rows) if rows else ((), (), ())
-    return pa.table({"key": pa.array(key, pa.int64()), "term": pa.array(term, pa.string()),
+    return pa.table({"key": pa.array(key, pa.int64()), "term": pa.array(term, pa.int32()),
                      "deletions": pa.array(deletions, pa.int8())}).sort_by("key")
 
 
-class _Column:
-    """A zero-copy view of a loaded Arrow string or ``list<string>``
-    column: its offsets, its values (the UTF-8 data buffer, or the list
-    values as codes into ``names``, their dictionary) and its validity, as
-    memoryviews, whose reads give Python objects without numpy scalars. A
-    value is decoded when its position is read; a null reads ``None``."""
+def _lists(codes: np.ndarray, pos: np.ndarray, n: int) -> pa.ListArray:
+    """For each code ``0..n-1``, the sorted distinct ``pos`` paired with
+    it, as a ``list<int32>`` column: one ``np.unique`` over
+    ``code << 32 | pos`` sorts and deduplicates them."""
+    u = np.unique((codes.astype(np.int64) << 32) | pos)
+    offsets = np.searchsorted(u >> 32, np.arange(n + 1)).astype(np.int32)
+    return pa.ListArray.from_arrays(offsets, (u & 0xFFFFFFFF).astype(np.int32))
 
-    __slots__ = ("offsets", "values", "names", "valid")
+
+def _dictionary(words) -> tuple[pa.Array, np.ndarray]:
+    """The sorted distinct ``words`` and the row of each word in them."""
+    keys = pc.unique(words).sort()
+    return keys, pc.index_in(words, value_set=keys).to_numpy()
+
+
+def serving_tables(docs: pa.Table, postings: pa.Table) -> dict[str, pa.Table]:
+    """The published tables (:data:`FILES`) of the Arrow ``docs`` (movieId
+    and :data:`DOC_COLUMNS`) and ``postings`` (``field``, ``term``,
+    movieId) tables. Documents take dense positions in movieId order: the
+    first row of a repeated movieId wins and a row without one is dropped;
+    a posting of an unknown movieId and a null genre are dropped."""
+    docs = docs.filter(docs["movieId"].is_valid()).sort_by("movieId")
+    mids = docs["movieId"].to_numpy()
+    first = np.ones(len(mids), bool)
+    first[1:] = mids[1:] != mids[:-1]
+    ids = mids[first].astype(np.int64)
+    docs = docs.filter(first).select(list(DOC_COLUMNS)).add_column(0, "movieId", pa.array(ids))
+    pmids = postings["movieId"].to_numpy()
+    pos = np.searchsorted(ids, pmids)
+    known = pos < len(ids)
+    known[known] = ids[pos[known]] == pmids[known]
+    postings, pos = postings.filter(known), pos[known]
+    terms, codes = _dictionary(postings["term"])
+    fields = {f: pc.equal(postings["field"], f).to_numpy() for f in SEARCH_FIELDS}
+    genres = docs["genres"].combine_chunks()
+    flat = pc.list_flatten(genres)
+    named = flat.is_valid()
+    names, gcodes = _dictionary(flat.filter(named))
+    return {
+        # a document's genres as codes into their (null-including) dictionary
+        "docs": docs.set_column(docs.schema.get_field_index("genres"), "genres", pa.ListArray.from_arrays(
+            genres.offsets, pc.dictionary_encode(genres.values, null_encoding="encode"), mask=genres.is_null())),
+        "terms": pa.table({"term": terms, **{f: _lists(codes[m], pos[m], len(terms)) for f, m in fields.items()}}),
+        "genres": pa.table({"genre": names, "docs": _lists(
+            gcodes, pc.list_parent_indices(genres).filter(named).to_numpy(), len(names))}),
+        "variants": variant_table(terms.to_pylist()),
+    }
+
+
+def _path(index_dir: str, name: str) -> str:
+    return os.path.join(index_dir, f"{name}.arrow")
+
+
+def publish(docs: pa.Table, postings: pa.Table, index_dir: str) -> None:
+    """Write the :func:`serving_tables` of ``docs`` and ``postings`` into
+    ``index_dir`` as uncompressed Arrow IPC files of one record batch
+    each, stamped with one publish id. Each file is written under a
+    temporary name and renamed over the old one: a process that mapped the
+    old file keeps its snapshot, and a load after the publish sees the new
+    file."""
+    os.makedirs(index_dir, exist_ok=True)
+    stamp = {_STAMP: os.urandom(8).hex()}
+    for name, table in serving_tables(docs, postings).items():
+        path = _path(index_dir, name)
+        table = table.combine_chunks().replace_schema_metadata(stamp)
+        with pa.OSFile(f"{path}.tmp", "wb") as sink, pa.ipc.new_file(sink, table.schema) as writer:
+            writer.write_table(table)
+        os.replace(f"{path}.tmp", path)
+
+
+class _Column:
+    """A zero-copy view of a loaded Arrow string column: its offsets, its
+    UTF-8 data buffer and its validity, as memoryviews, whose reads give
+    Python objects without numpy scalars. A value is decoded when its
+    position is read; a null reads ``None``."""
+
+    __slots__ = ("offsets", "data", "valid")
+
+    def __init__(self, arr):
+        _validity, offsets, data = arr.buffers()
+        self.valid = memoryview(arr.is_valid().to_numpy(zero_copy_only=False))
+        self.offsets = memoryview(np.frombuffer(offsets, np.int32, len(arr) + 1, arr.offset * 4))
+        self.data = memoryview(data or b"")
+
+    def __len__(self) -> int:
+        return len(self.offsets) - 1
+
+    def __getitem__(self, p: int) -> str | None:
+        return str(self.data[self.offsets[p]:self.offsets[p + 1]], "utf-8") if self.valid[p] else None
+
+
+class _ListColumn(_Column):
+    """A :class:`_Column` of a ``list<dictionary<string>>`` column: its
+    ``data`` are the list values' dictionary codes, ``names`` the
+    dictionary; a value reads as a list."""
+
+    __slots__ = ("names",)
 
     def __init__(self, arr):
         self.valid = memoryview(arr.is_valid().to_numpy(zero_copy_only=False))
-        if arr.type.num_fields:  # list<string>
-            values = arr.values.dictionary_encode(null_encoding="encode")
-            self.offsets, self.values = memoryview(arr.offsets.to_numpy()), memoryview(values.indices.to_numpy())
-            self.names = tuple(values.dictionary.to_pylist())
-        else:
-            _validity, offsets, data = arr.buffers()
-            self.offsets = memoryview(np.frombuffer(offsets, np.int32, len(arr) + 1, arr.offset * 4))
-            self.values, self.names = memoryview(data), None
+        self.offsets, self.data = memoryview(arr.offsets.to_numpy()), memoryview(arr.values.indices.to_numpy())
+        self.names = tuple(arr.values.dictionary.to_pylist())
 
-    def __getitem__(self, p: int) -> str | list | None:
-        if not self.valid[p]:
-            return None
-        v = self.values[self.offsets[p]:self.offsets[p + 1]]
-        return str(v, "utf-8") if self.names is None else [self.names[c] for c in v.tolist()]
+    def __getitem__(self, p: int) -> list | None:
+        return [self.names[c] for c in self.data[self.offsets[p]:self.offsets[p + 1]]] if self.valid[p] else None
+
+
+def _code(words: _Column, word: str) -> int | None:
+    """The row of ``word`` in the sorted dictionary ``words``, or
+    ``None``: a binary search that decodes about ``log2(len(words))``
+    entries. Arrow sorts strings by their UTF-8 bytes, which is the code
+    point order Python compares by."""
+    c = bisect_left(words, word)
+    return c if c < len(words) and words[c] == word else None
+
+
+class _Lists:
+    """A zero-copy view of a loaded ``list<int32>`` column of sorted
+    document positions: list ``c`` is ``values[offsets[c]:offsets[c + 1]]``,
+    a read-only numpy view (``offsets`` is a memoryview)."""
+
+    __slots__ = ("offsets", "values")
+
+    def __init__(self, arr):
+        self.offsets, self.values = memoryview(arr.offsets.to_numpy()), arr.values.to_numpy()
+
+    def __getitem__(self, c: int) -> np.ndarray:
+        return self.values[self.offsets[c]:self.offsets[c + 1]]
+
+    def union(self, codes: list[int]) -> np.ndarray:
+        """The sorted distinct positions of the lists ``codes``."""
+        lists = [hits for c in codes if len(hits := self[c])]
+        return lists[0] if len(lists) == 1 else np.unique(np.concatenate([_NONE, *lists]))
 
 
 @dataclass(frozen=True)
 class Variants:
-    """The terms dictionary's deletion variants (FastSS), as zero-copy
-    views of the loaded variant table: ``keys`` (:func:`variant_key`,
-    ascending, ``int64``), ``codes`` (each variant's term, ``int32``
-    codes into ``words``, the distinct terms as a :class:`_Column`) and
-    ``deletions`` (``int8``); ``long``, the terms longer than
-    :data:`MAX_VARIANT_LEN`, which have none; and ``longest``, the
-    length of the longest term with variants, or -1."""
+    """The deletion variants (FastSS) of the terms dictionary ``words``,
+    as zero-copy views of the loaded variant table: ``keys``
+    (:func:`variant_key`, ascending, ``int64``), ``codes`` (each variant's
+    term as its ``int32`` row in ``words``) and ``deletions`` (``int8``);
+    ``long``, the rows of the terms of more than :data:`MAX_VARIANT_LEN`
+    UTF-8 bytes, which hold every term too long to have variants; and
+    ``longest``, the length of the longest term with variants, or -1."""
 
     keys: np.ndarray
     codes: np.ndarray
     deletions: np.ndarray
     words: _Column
-    long: tuple[str, ...]
+    long: np.ndarray
     longest: int
 
 
-def _variants(table: pa.Table, terms: list[str]) -> Variants:
-    """:class:`Variants` over a ``(key, term, deletions)`` variant table
-    sorted by key, and ``terms``, the postings' terms dictionary."""
-    keys = table["key"].combine_chunks().to_numpy()
-    if np.any(keys[1:] < keys[:-1]):
-        raise ValueError("the variant table is not sorted by key")
-    term = table["term"].combine_chunks().dictionary_encode()
-    return Variants(
-        keys=keys, codes=term.indices.to_numpy(), deletions=table["deletions"].combine_chunks().to_numpy(),
-        words=_Column(term.dictionary),
-        long=tuple(t for t in terms if len(t) > MAX_VARIANT_LEN),
-        longest=int(keys[-1] >> 32) if len(keys) else -1,
-    )
-
-
-def _expand(variants: Variants, qt: str, d: int) -> list[str]:
-    """The terms within ``d`` edits of ``qt``, each once — exactly the
-    terms :func:`_lev_le` accepts. A term within ``d`` edits of ``qt``
-    shares a string with it that each reaches by at most ``d`` deletions,
-    so the candidates are the terms with a variant of at most ``d``
-    deletions keyed as one of ``qt``'s own variants (one ``searchsorted``),
-    and :func:`_lev_le` verifies each. The long terms are verified
-    directly; a query term more than ``d`` longer than every term with
-    variants generates none."""
+def _expand(variants: Variants, qt: str, d: int) -> list[int]:
+    """The rows in ``variants.words`` of the terms within ``d`` edits of
+    ``qt``, ascending — exactly the terms :func:`_lev_le` accepts. A term
+    within ``d`` edits of ``qt`` shares a string with it that each reaches
+    by at most ``d`` deletions, so the candidates are the terms with a
+    variant of at most ``d`` deletions keyed as one of ``qt``'s own
+    variants (one ``searchsorted``), plus the long terms, and
+    :func:`_lev_le` verifies each once. A query term more than ``d``
+    longer than every term with variants generates none."""
     if d > MAX_DELETIONS:
         raise ValueError(f"fuzziness {d}: the variant table holds at most {MAX_DELETIONS} deletions")
-    hits = [t for t in variants.long if _lev_le(t, qt, d)]
-    if len(qt) - d > variants.longest:
-        return hits
-    q = np.fromiter(map(variant_key, deletion_variants(qt, d)), np.int64)
-    lo, hi = np.split(np.searchsorted(variants.keys, np.concatenate([q, q + 1])), 2)
-    n = hi - lo
-    rows = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
-    codes = np.unique(variants.codes[rows[variants.deletions[rows] <= d]])
-    return hits + [t for t in map(variants.words.__getitem__, codes.tolist()) if _lev_le(t, qt, d)]
+    codes = variants.long
+    if len(qt) - d <= variants.longest:
+        q = np.fromiter(map(variant_key, deletion_variants(qt, d)), np.int64)
+        lo, hi = np.split(np.searchsorted(variants.keys, np.concatenate([q, q + 1])), 2)
+        n = hi - lo
+        rows = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
+        codes = np.concatenate([codes, variants.codes[rows[variants.deletions[rows] <= d]]])
+    return [c for c in np.unique(codes).tolist() if _lev_le(variants.words[c], qt, d)]
 
 
 @dataclass(frozen=True)
 class MovieIndex:
-    """The LOADED form: a published index held in serving-process memory,
-    the way Lucene holds its terms dictionary and postings. Every request
-    is answered by numpy kernels over document positions, with no Spark
-    job and no scan of every document.
+    """The LOADED form: a published index mapped into serving-process
+    memory, the way Lucene maps its segment files. Every request is
+    answered by numpy kernels over document positions, with no Spark job
+    and no scan of every document.
 
     - ``ids`` — the movieId at each document position, ascending, as
       ``int64``;
-    - ``columns`` — the published docs columns by name (``title``,
-      ``release_date``, ``genres`` and the ``__title_norm`` phrase-probe
-      string) as :class:`_Column` views over the loaded Arrow buffers; a
-      document is decoded only when it is returned (:func:`_document`);
-    - ``postings`` — ``(field, term)`` → the sorted ``int32`` positions
-      of the documents holding the term; its keys are ``terms``, the
-      terms dictionary;
-    - ``genres`` — genre → the sorted ``int32`` positions of the
-      documents listing it;
-    - ``variants`` — the terms dictionary's published deletion variants,
-      which fuzzy expansion probes (:class:`Variants`);
-    - ``docs`` — a Spark frame over exactly the docs files the load read,
-      for offline inspection, or ``None``; no request touches it.
+    - ``columns`` — the documents' :data:`DOC_COLUMNS` (``__title_norm``
+      is the phrase-probe string) as :class:`_Column` views; a document is
+      decoded only when it is returned (:func:`_document`);
+    - ``words`` — the sorted terms dictionary of both search fields;
+    - ``fields`` — per search field, the positions of the documents
+      holding each term of ``words`` (:class:`_Lists`, by term row);
+    - ``genre_names`` and ``genres`` — the sorted genres and the
+      positions of the documents listing each;
+    - ``variants`` — the published deletion variants of ``words``, which
+      fuzzy expansion probes (:class:`Variants`);
+    - ``docs`` — a Spark frame over the docs files Spark published, for
+      offline inspection, or ``None``; no request touches it.
 
-    At 25k movies (7.1k terms, 116k postings, 161k variants) the index
-    holds 2.7 MB of Python heap (tracemalloc), most of it the terms
-    dictionary and its postings; the document columns and the variant
-    arrays stay in Arrow memory. The structures
-    are never mutated after the load, so concurrent request threads share
-    them without locks, and the copy is its own point-in-time snapshot: a
-    later rebuild or append of the index directory is invisible until the
-    next load.
+    Every array is a view of the mapped files, which the structures never
+    mutate, so concurrent request threads share them without locks; the
+    index is its own point-in-time snapshot, as a republish renames new
+    files over the ones it mapped.
     """
 
     docs: object
     ids: np.ndarray
     columns: dict[str, _Column]
-    postings: dict[tuple[str, str], np.ndarray]
-    genres: dict[str, np.ndarray]
+    words: _Column
+    fields: dict[str, _Lists]
+    genre_names: _Column
+    genres: _Lists
     variants: Variants
 
     @property
-    def terms(self):
-        """The terms dictionary: every ``(field, term)`` pair."""
-        return self.postings.keys()
+    def terms(self) -> list[tuple[str, str]]:
+        """Every ``(field, term)`` pair with a posting, decoded at each
+        read; no flow reads it."""
+        return [(field, self.words[c]) for field, lists in self.fields.items()
+                for c in np.flatnonzero(np.diff(lists.offsets)).tolist()]
+
+
+def _loaded(tables: dict[str, pa.Table]) -> MovieIndex:
+    """The :class:`MovieIndex` of the published tables (:data:`FILES`)."""
+    def col(name: str, column: str) -> pa.Array:
+        c = tables[name][column]  # a published file's one record batch, not copied
+        return c.chunk(0) if c.num_chunks == 1 else c.combine_chunks()
+
+    words = _Column(col("terms", "term"))
+    keys = col("variants", "key").to_numpy()
+    return MovieIndex(
+        docs=None,
+        ids=col("docs", "movieId").to_numpy(),
+        columns={c: (_ListColumn if c == "genres" else _Column)(col("docs", c)) for c in DOC_COLUMNS},
+        words=words,
+        fields={f: _Lists(col("terms", f)) for f in SEARCH_FIELDS},
+        genre_names=_Column(col("genres", "genre")),
+        genres=_Lists(col("genres", "docs")),
+        variants=Variants(
+            keys=keys, codes=col("variants", "term").to_numpy(), deletions=col("variants", "deletions").to_numpy(),
+            words=words, long=np.flatnonzero(np.diff(words.offsets) > MAX_VARIANT_LEN),
+            longest=int(keys[-1] >> 32) if len(keys) else -1),
+    )
+
+
+def load(index_dir: str) -> MovieIndex:
+    """Map the index that :func:`publish` wrote into ``index_dir``. A
+    missing file raises ``FileNotFoundError`` naming it, and files of two
+    publishes (a load between the renames of one) raise ``RuntimeError``.
+    At 25k movies a warm load takes about 1.5 ms and 18 KB of Python
+    heap (tracemalloc)."""
+    tables = {name: pa.ipc.open_file(pa.memory_map(_path(index_dir, name))).read_all() for name in FILES}
+    if len({t.schema.metadata[_STAMP.encode()] for t in tables.values()}) > 1:
+        raise RuntimeError(f"{index_dir} holds the files of two publishes: one is under way, load again")
+    return _loaded(tables)
 
 
 def _bincount(n: int, groups, weights=None) -> np.ndarray:
     """The scoring kernel of every flow: per document position, how many
-    of the postings ``groups`` hold it, or the sum of their ``weights``."""
+    of the position lists ``groups`` hold it, or the sum of their
+    ``weights``."""
     ids = np.concatenate([_NONE, *groups])
     if weights is not None:
         weights = np.repeat(np.asarray(weights, np.float64), [len(g) for g in groups])
@@ -314,8 +458,8 @@ def _without(index: MovieIndex, scores: np.ndarray, movie_id: int) -> np.ndarray
 def lookup_title(index: MovieIndex, title_query: str, size: int = 5) -> tuple[str, list[dict]]:
     """Phrase-match a title; returns (:func:`match_status`, hits).
 
-    This is Lucene's phrase plan: the title postings of the phrase's
-    tokens are intersected first, and only the surviving documents get
+    This is Lucene's phrase plan: the title position lists of the
+    phrase's tokens are intersected first, and only the surviving documents get
     the substring test on the stored ``__title_norm`` — exactly the
     normalized haystack the oracle's ``phrase_match`` builds per request.
     The hits are the first ``size`` documents in movieId order. An empty
@@ -323,7 +467,9 @@ def lookup_title(index: MovieIndex, title_query: str, size: int = 5) -> tuple[st
     title."""
     norm = normalize_phrase(title_query)
     needle = f" {norm} "
-    lists = sorted((index.postings.get(("title", t), _NONE) for t in set(norm.split(" "))), key=len)
+    title = index.fields["title"]
+    lists = sorted((_NONE if (c := _code(index.words, t)) is None else title[c] for t in set(norm.split(" "))),
+                   key=len)
     pos = lists[0]
     for other in lists[1:]:
         pos = np.intersect1d(pos, other, assume_unique=True)
@@ -335,9 +481,9 @@ def lookup_title(index: MovieIndex, title_query: str, size: int = 5) -> tuple[st
 def recommend_by_genre_overlap(index: MovieIndex, movie_id: int, genres: list[str], k: int = 5) -> list[dict]:
     """bool{must: terms(genres), must_not: term(movieId)} ranked by genre
     overlap size (deterministic stand-in for ES relevance): one
-    :func:`_bincount` over the genre postings of the distinct query
+    :func:`_bincount` over the position lists of the distinct query
     genres."""
-    groups = [index.genres[g] for g in set(genres) if g in index.genres]
+    groups = [index.genres[c] for g in set(genres) if (c := _code(index.genre_names, g)) is not None]
     scores = _without(index, _bincount(len(index.ids), groups), movie_id)
     return _hits(index, scores, _top(scores, k)[0])
 
@@ -346,10 +492,10 @@ def recommend_by_title_keywords(index: MovieIndex, movie_id: int, title: str, k:
                                 min_len: int = 4) -> list[dict]:
     """Fallback when the source movie has no genres: any :func:`keywords`
     word matches (minimum_should_match=1), ranked by #matching words — one
-    :func:`_bincount` over the title postings of the words; a repeated
-    word counts once per occurrence."""
-    groups = [index.postings[("title", w)] for w in keywords(title, min_len)
-              if ("title", w) in index.postings]
+    :func:`_bincount` over the title position lists of the words; a
+    repeated word counts once per occurrence."""
+    postings = index.fields["title"]
+    groups = [postings[c] for w in keywords(title, min_len) if (c := _code(index.words, w)) is not None]
     scores = _without(index, _bincount(len(index.ids), groups), movie_id)
     return _hits(index, scores, _top(scores, k)[0])
 
@@ -359,17 +505,18 @@ def _search_scores(index: MovieIndex, query: str) -> np.ndarray:
 
     This is Lucene's fuzzy plan: each distinct query term expands once
     against the terms dictionary's deletion variants (:func:`_expand`),
-    and a doc scores boost × (#query-term occurrences fuzzily present in the
-    field) — the oracle's semantics — through one :func:`_bincount`. The
+    each field's position lists of the expanded terms are sliced by term
+    row, and a doc scores boost × (#query-term occurrences fuzzily present
+    in the field) — the oracle's semantics — through one
+    :func:`_bincount`. The
     scores are sums of 3.0 and 1.0, exact in binary float, so they equal
     the oracle's 4-digit rounding."""
     groups, weights = [], []
     for qt, count in Counter(query_terms(query)).items():
-        terms = _expand(index.variants, qt, auto_fuzziness(qt))
+        codes = _expand(index.variants, qt, auto_fuzziness(qt))
         for field, boost in SEARCH_FIELDS.items():
-            lists = [p for t in terms if (p := index.postings.get((field, t))) is not None]
-            if lists:
-                groups.append(lists[0] if len(lists) == 1 else np.unique(np.concatenate(lists)))
+            if len(hits := index.fields[field].union(codes)):
+                groups.append(hits)
                 weights.append(boost * count)
     return _bincount(len(index.ids), groups, weights)
 
@@ -391,53 +538,3 @@ def movie_by_id(index: MovieIndex, movie_id: int) -> dict | None:
 def ping(index: MovieIndex) -> bool:
     """A loaded index is live by construction."""
     return True
-
-
-def _grouped(keys: np.ndarray, pos: np.ndarray) -> tuple[list[int], list[np.ndarray]]:
-    """The distinct ``keys`` and, for each, its distinct ``pos`` values as
-    a sorted read-only ``int32`` array: one ``np.unique`` over
-    ``key << 32 | pos`` sorts and deduplicates, and a split at each change
-    of key groups, with no per-posting Python loop."""
-    u = np.unique((keys.astype(np.int64) << 32) | pos)
-    k = u >> 32
-    vals = (u & 0xFFFFFFFF).astype(np.int32)
-    vals.flags.writeable = False
-    starts = np.flatnonzero(np.diff(k, prepend=-1))
-    return k[starts].tolist(), np.split(vals, starts[1:])
-
-
-def _index_arrays(docs, postings, variants=None) -> dict:
-    """Every :class:`MovieIndex` field but ``docs``, from the Arrow docs,
-    postings and variant tables. Documents take dense positions in movieId
-    order (the first row of a repeated movieId wins, a row without one is
-    dropped); a posting of an unknown movieId is dropped. The postings and
-    genres are grouped by their dictionary codes (:func:`_grouped`). An
-    index assembled without Spark passes no ``variants``, and gets the
-    :func:`variant_table` of its postings' terms, the publish's rule."""
-    docs = docs.filter(docs["movieId"].is_valid()).sort_by("movieId")
-    mids = docs["movieId"].to_numpy()
-    first = np.ones(len(mids), bool)
-    first[1:] = mids[1:] != mids[:-1]
-    docs, ids = docs.filter(first), mids[first].astype(np.int64)
-    columns = {name: _Column(docs[name].combine_chunks())
-               for name in ("title", "release_date", "genres", "__title_norm")}
-    pmids = postings["movieId"].to_numpy()
-    pos = np.searchsorted(ids, pmids)
-    known = pos < len(ids)
-    known[known] = ids[pos[known]] == pmids[known]
-    field, term = (postings[k].combine_chunks().dictionary_encode() for k in ("field", "term"))
-    nt = len(term.dictionary)
-    keys, lists = _grouped((field.indices.to_numpy().astype(np.int64) * nt + term.indices.to_numpy())[known],
-                           pos[known])
-    fields, terms = field.dictionary.to_pylist(), term.dictionary.to_pylist()
-    postings = {(fields[k // nt], terms[k % nt]): v for k, v in zip(keys, lists)}
-    g = columns["genres"]
-    keys, lists = _grouped(np.asarray(g.values[g.offsets[0]:g.offsets[-1]]),
-                           np.repeat(np.arange(len(ids)), np.diff(g.offsets)))
-    return {
-        "ids": ids,
-        "columns": columns,
-        "postings": postings,
-        "genres": {g.names[k]: v for k, v in zip(keys, lists)},
-        "variants": _variants(variant_table(terms) if variants is None else variants, terms),
-    }

@@ -1,9 +1,9 @@
 """The Spark half of the reference API's recommendation flows.
 
-Spark builds and publishes the serving index
-(:func:`build_movie_index_tables` → :func:`write_movie_index`), and
-:func:`load_movie_index` reads it into the
-:class:`~.movieindex.MovieIndex` that :mod:`.movieindex`'s flows serve.
+Spark builds the serving index's tables (:func:`build_movie_index_tables`)
+and writes them (:func:`write_movie_index`), and :mod:`.movieindex`
+publishes them in its serving layout; :func:`load_movie_index` maps that
+into the :class:`~.movieindex.MovieIndex` its flows serve.
 The flows here are their oracle: the same names over the raw movies
 DataFrame, each the reference's Elasticsearch query (``src/api.py``)
 planned as Spark operators, returning the collected documents.
@@ -13,18 +13,17 @@ hit; :func:`movie_frame` is their payload projection.
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokens
+from . import movieindex
 from . import search as S
-from .movieindex import SEARCH_FIELDS, MovieIndex, _index_arrays, keywords, match_status, query_terms, variant_table
+from .movieindex import SEARCH_FIELDS, MovieIndex, keywords, match_status, query_terms
 from .movieindex import _lev_le  # noqa: F401 — re-exported: the edit-distance rule callers read here
 
 
@@ -63,43 +62,26 @@ def build_movie_index_tables(movies: DataFrame) -> MovieIndexTables:
 
 
 def write_movie_index(tables: MovieIndexTables, index_dir: str) -> None:
-    """Publish the built index as ``docs.parquet``, ``postings.parquet``
-    and ``variants.parquet`` under ``index_dir`` (the offline build step).
-    The variants are ``movieindex.variant_table`` over the distinct terms
-    of the postings just written, read back with pyarrow and written by
-    the driver as one file sorted by key: no Spark Python worker, so the
+    """Write the built index as ``docs.parquet`` and ``postings.parquet``
+    under ``index_dir`` (the offline build step), and publish what they
+    hold, read back with pyarrow, in the serving layout
+    (``movieindex.publish``). No step runs a Spark Python worker, so the
     publish runs from any working directory."""
-    tables.docs.write.mode("overwrite").parquet(f"{index_dir}/docs.parquet")
-    tables.postings.write.mode("overwrite").parquet(f"{index_dir}/postings.parquet")
-    terms = ds.dataset(f"{index_dir}/postings.parquet", format="parquet").to_table(columns=["term"])
-    os.makedirs(f"{index_dir}/variants.parquet", exist_ok=True)
-    pq.write_table(variant_table(pc.unique(terms["term"]).to_pylist()),
-                   f"{index_dir}/variants.parquet/part-0.parquet")
+    for name, frame in (("docs", tables.docs), ("postings", tables.postings)):
+        frame.write.mode("overwrite").parquet(f"{index_dir}/{name}.parquet")
+    movieindex.publish(pq.read_table(f"{index_dir}/docs.parquet"),
+                       pq.read_table(f"{index_dir}/postings.parquet"), index_dir)
 
 
 def load_movie_index(spark, index_dir: str) -> MovieIndex:
-    """Read a published index once, with pyarrow, into serving-process
-    memory (``movieindex._index_arrays``). The docs, postings and variants
-    (their terms as the Parquet dictionary) are read from one file listing
-    each, so the loaded copy is a point-in-time snapshot of the directory;
-    one without ``variants.parquet`` raises ``FileNotFoundError`` naming
-    it. At 25k movies the arrays take about 0.05 s warm, and Spark's
-    ``docs`` frame 0.04-0.06 s more."""
+    """The published index, mapped (``movieindex.load``), with ``docs``
+    a Spark frame over the files of ``docs.parquet`` at this load."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     docs = ds.dataset(f"{index_dir}/docs.parquet", format="parquet")
-    postings = ds.dataset(f"{index_dir}/postings.parquet", format="parquet")
-    variants = ds.dataset(f"{index_dir}/variants.parquet",
-                          format=ds.ParquetFileFormat(read_options={"dictionary_columns": ["term"]}))
-    return MovieIndex(
-        # the Arrow schema spares Spark a footer read to infer it
-        docs=spark.read.schema(from_arrow_schema(docs.schema)).parquet(*docs.files),
-        **_index_arrays(
-            docs.to_table(columns=["movieId", "title", "release_date", "genres", "__title_norm"]),
-            postings.to_table(columns=["field", "term", "movieId"]),
-            variants.to_table(columns=["key", "term", "deletions"]),
-        ),
-    )
+    # the Arrow schema spares Spark a footer read to infer it
+    frame = spark.read.schema(from_arrow_schema(docs.schema)).parquet(*docs.files)
+    return replace(movieindex.load(index_dir), docs=frame)
 
 
 def movie_frame(movies: DataFrame) -> DataFrame:

@@ -8,8 +8,7 @@ Spark-side design for image/audio/video at 100 TB:
 - partitioning: payload frames repartition by a size-aware key upstream so
   batches stay within executor memory.
 
-The actual image/audio codecs are NOT in this container, so
-:func:`decode_real` is an explicit stub (NotImplementedError) and
+The actual image/audio codecs are not installed, so
 :func:`extract_features` computes a deterministic fake feature vector —
 the Spark plumbing (schema, batch iteration, UDF signature) is real and
 oracle-tested; swapping in PIL/librosa is a one-function change.
@@ -45,63 +44,6 @@ def to_binary_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(F.col(id_col), payload.alias("payload"), meta.alias("meta"))
 
 
-def decode_real(payload: bytes, mime: str):
-    """Real decode hook: PIL for ``image/*`` when importable (returns
-    ``{"width", "height", "mode"}``); NotImplementedError otherwise —
-    audio/video codecs (librosa/av) are not installed in this
-    environment, and environments without PIL keep the explicit stub
-    behavior the fake-decoder tests rely on."""
-    if mime.startswith("image/"):
-        try:
-            from PIL import Image
-        except ImportError as e:  # pragma: no cover - env-dependent
-            raise NotImplementedError(
-                "PIL unavailable in this environment; install pillow to decode images"
-            ) from e
-        import io
-
-        with Image.open(io.BytesIO(bytes(payload))) as img:
-            return {"width": img.width, "height": img.height, "mode": img.mode}
-    raise NotImplementedError(
-        f"no codec for {mime!r}; audio/video libs unavailable in this environment"
-    )
-
-
-DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mode", T.StringType()),
-    ]
-)
-
-
-def decode_images(binary_docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL image decode over the same Arrow-batched ``mapInPandas`` path
-    the fake extractor exercises: per batch, each ``image/*`` payload is
-    decoded via :func:`decode_real` into (width, height, mode). Requires
-    PIL on the executors (pytest-skips where absent); the batch shape,
-    schema, and partitioning are identical to :func:`extract_features`,
-    so swapping fake→real decode changes no plumbing."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [
-                decode_real(p, m) for p, m in zip(pdf["payload"], pdf["meta"].map(lambda s: s["mime"]))
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": pd.Series([d["width"] for d in decoded], dtype="int32"),
-                    "height": pd.Series([d["height"] for d in decoded], dtype="int32"),
-                    "mode": [d["mode"] for d in decoded],
-                }
-            )
-
-    return binary_docs.mapInPandas(_decode, schema=DECODE_SCHEMA)
-
-
 def extract_features(binary_docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
@@ -134,15 +76,6 @@ def extract_features(binary_docs: DataFrame, id_col: str = "doc_id") -> DataFram
     return binary_docs.mapInPandas(_extract, schema=FEATURE_SCHEMA)
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized_fp", T.StringType()),
-    ]
-)
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -150,32 +83,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_fp", T.StringType()),
     ]
 )
-
-
-def resize_images(binary_docs: DataFrame, width: int = 224, height: int = 224,
-                  id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched image resize plumbing (1 row → 1 row).
-
-    Deterministic fake: output dims are the targets, fingerprint is
-    md5(payload-head + dims) — a real deployment swaps the body for
-    PIL's resize while the batch path, schema, and partitioning stay.
-    """
-    import hashlib
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": pd.Series([width] * len(pdf), dtype="int32"),
-                    "height": pd.Series([height] * len(pdf), dtype="int32"),
-                    "resized_fp": pdf["payload"].map(
-                        lambda b: hashlib.md5(bytes(b[:8]) + f"{width}x{height}".encode()).hexdigest()
-                    ),
-                }
-            )
-
-    return binary_docs.mapInPandas(_resize, schema=RESIZE_SCHEMA)
 
 
 def sample_frames(binary_docs: DataFrame, stride: int = 24, id_col: str = "doc_id") -> DataFrame:

@@ -19,6 +19,7 @@ from ..functions.text import TOKS_SQL, md5_hex_int_sql, tokens
 from ..operators import recommend as REC
 from ..sources.readers import load_table
 from .catalog import register
+from .core import REVENUE_SQL, _dec, _revenue
 
 
 def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,11 +500,10 @@ def q200_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q201_ranking_agreement",
-    oracle="""
+    oracle=f"""
     WITH per_part AS (
       SELECT l_partkey AS partkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS rev,
+             {REVENUE_SQL} AS rev,
              SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty
       FROM lineitem GROUP BY l_partkey),
     ra AS (SELECT partkey, ROW_NUMBER() OVER (ORDER BY rev DESC, partkey ASC) AS r
@@ -525,12 +525,11 @@ def q200_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q201_ranking_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
     # both rankings consume this aggregate: pin it so the fact scan +
     # per-part shuffle run once instead of once per ranking branch
     per_part = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
-        F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).alias("rev"),
-        F.sum(dec("l_quantity")).alias("qty"),
+        _revenue().alias("rev"),
+        F.sum(_dec("l_quantity")).alias("qty"),
     ).localCheckpoint(eager=False)
     ra = per_part.select(
         "partkey", F.row_number().over(Window.orderBy(F.desc("rev"), F.asc("partkey"))).alias("r_rev")
@@ -716,11 +715,10 @@ def q224_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q226_effective_catalog",
-    oracle="""
+    oracle=f"""
     WITH per_part AS (
       SELECT l_partkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS rev
+             {REVENUE_SQL} AS rev
       FROM lineitem GROUP BY l_partkey),
     tot AS (SELECT SUM(rev) AS total, COUNT(*) AS n_parts FROM per_part),
     t AS (
@@ -737,10 +735,7 @@ def q224_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q226_effective_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).alias("rev")
-    )
+    per_part = li.groupBy("l_partkey").agg(_revenue().alias("rev"))
     tot = per_part.groupBy().agg(F.sum("rev").alias("total"), F.count(F.lit(1)).alias("n_parts"))
     share = F.col("rev").cast("double") / F.col("total").cast("double")
     t = per_part.crossJoin(F.broadcast(tot)).select(

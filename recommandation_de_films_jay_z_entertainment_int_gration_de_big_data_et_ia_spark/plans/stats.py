@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..functions.text import MD5_SPLIT_BUCKET_SQL, SPLIT_SQL, md5_hex_int_sql, md5_split
 from ..sources.readers import load_table
 from .catalog import register
+from .core import REVENUE_SQL, _revenue
 
 
 # Bounded oracle: HyperLogLog sketches are engine-specific (Spark HLL++
@@ -829,11 +830,10 @@ def q178_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q180_pareto_coverage",
-    oracle="""
+    oracle=f"""
     WITH per_part AS (
       SELECT l_partkey AS partkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS rev
+             {REVENUE_SQL} AS rev
       FROM lineitem GROUP BY l_partkey),
     ranked AS (
       SELECT partkey, rev,
@@ -853,10 +853,7 @@ def q178_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q180_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    per_part = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
-        F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).alias("rev")
-    )
+    per_part = li.groupBy(F.col("l_partkey").alias("partkey")).agg(_revenue().alias("rev"))
     w_order = Window.orderBy(F.desc("rev"), F.asc("partkey"))
     w_cum = w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_all = Window.partitionBy()

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
 from .catalog import register
+from .core import REVENUE_SQL, _revenue
 from .timeseries import LATEST_PER_KEY_ORACLE
 
 # ---------------------------------------------------------------------------
@@ -576,11 +577,10 @@ def q187_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q213_reconciliation_audit",
-    oracle="""
+    oracle=f"""
     WITH line_sum AS (
       SELECT l_orderkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS net
+             {REVENUE_SQL} AS net
       FROM lineitem GROUP BY l_orderkey),
     d AS (
       SELECT o.o_orderkey,
@@ -602,10 +602,7 @@ def q187_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q213_reconciliation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    line_sum = li.groupBy("l_orderkey").agg(
-        F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).alias("net")
-    )
+    line_sum = li.groupBy("l_orderkey").agg(_revenue().alias("net"))
     d = (
         orders.filter(F.col("o_totalprice") > 0)
         .join(line_sum, orders.o_orderkey == line_sum.l_orderkey)

@@ -205,39 +205,3 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_b
     w.parquet(path)
 
 
-def read_delimited_with_rejects(
-    spark: SparkSession, path: str, schema: T.StructType, sep: str = ",",
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """S1/S2 hardening: PERMISSIVE delimited scan that splits clean rows
-    from rejects instead of silently nulling or aborting the job.
-
-    Returns ``(good, bad)`` over ONE read definition: the declared schema
-    is extended with Spark's ``columnNameOfCorruptRecord`` column, rows
-    that fail schema coercion land there verbatim, and the two outputs
-    are complementary filters (cache the read before splitting at scale
-    so the file is scanned once). FAILFAST remains available by passing
-    ``mode`` through ``spark.read`` directly — at 100 TB the rejects
-    path is the operational default: a single bad row must quarantine,
-    not kill a 6-hour load or vanish.
-
-    Spark requires the corrupt column to be selected alongside a real
-    column for it to populate (lazy parse), which the split filters do.
-    """
-    full = T.StructType(schema.fields + [T.StructField(corrupt_col, T.StringType())])
-    raw = (
-        spark.read.schema(full)
-        .option("sep", sep)
-        .option("header", "false")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .csv(path)
-        # cache REQUIRED, not just an optimization: Spark refuses plans
-        # that project only the corrupt column from a raw CSV
-        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); the cached frame also makes
-        # the good/bad split one file scan instead of two.
-        .cache()
-    )
-    good = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = raw.filter(F.col(corrupt_col).isNotNull()).select(F.col(corrupt_col).alias("raw_line"))
-    return good, bad

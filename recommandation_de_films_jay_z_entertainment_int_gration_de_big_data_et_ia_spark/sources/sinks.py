@@ -4,8 +4,6 @@ row, elasticsearch_ingest.py:84,112-143 / model.py:18-24).
 
 Every sink here writes from the executors in parallel:
 - parquet (canonical, see readers.write_parquet),
-- JSON lines (the ES-document shape, but written as a distributed file
-  sink — a search service would bulk-ingest these),
 - ``foreach_partition_bulk``: the generic pattern for pushing to an
   external system — one connection + batched requests per partition,
   never per row, never through the driver.
@@ -17,26 +15,6 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Documents-as-JSON sink (one JSON object per line, one file per
-    partition — the bulk-ingestable form of the reference's ES rows)."""
-    df.write.mode(mode).json(path)
-
-
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink (Spark-native, no extra package): the columnar format a
-    Hive/Trino-side consumer of this lake would hand us. Same
-    partition-pruning contract as the parquet sink; losslessness is
-    proven by the roundtrip test (tests/test_sinks.py)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
 
 
 def foreach_partition_bulk(
@@ -65,27 +43,3 @@ def foreach_partition_bulk(
     df.foreachPartition(_handler)
 
 
-def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Idempotent partition-scoped backfill: replace ONLY the partitions
-    present in ``df``, leaving every other partition untouched — the
-    standard reprocess/backfill primitive for a partitioned 100 TB lake
-    table (static-mode ``overwrite`` would WIPE the whole table; append
-    would duplicate the backfilled days).
-
-    Implemented with Spark's dynamic partition-overwrite mode, set for
-    the duration of this write and restored afterwards (the session
-    default stays whatever the caller runs with). Exactly-once per
-    partition under retries: re-running the same backfill rewrites the
-    same partitions to the same content.
-    """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)

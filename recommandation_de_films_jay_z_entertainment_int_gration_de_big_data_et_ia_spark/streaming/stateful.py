@@ -2,9 +2,9 @@
 
 The engine's escape hatch for operators Spark's built-in windows can't
 express: arbitrary per-key state machines with Arrow-batched user code.
-Demonstrated with a running per-user event counter (state = one long per
-key — bounded, no timeout) whose availableNow drain must equal the batch
-groupBy count (tests/test_streaming.py).
+Demonstrated with a latest-value view per (user, event type) (state =
+one bounded record per key, no timeout) whose availableNow drain must
+equal the batch window (tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -14,69 +14,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def running_user_counts(events: DataFrame) -> DataFrame:
-    """Per-user running event count as an update stream."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update_counts(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update_counts,
-        outputStructType="user_id long, n_events long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def ewma_per_key(events: DataFrame, alpha: float = 0.3) -> DataFrame:
-    """Per-event-type exponentially-weighted moving average of ``value``
-    as an update stream — the classic operator Spark's built-in windows
-    CANNOT express (each output depends recursively on all prior inputs,
-    not on a bounded window). State per key is two doubles (current ewma,
-    count); within a batch rows fold in event-time order so replaying the
-    same data gives identical results batch-to-batch.
-
-    100 TB posture: state is O(|keys|), Arrow-batched per key; the
-    recursion is the irreducible serial dependency per key, but keys
-    process in parallel.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update_ewma(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        ewma, n = (state.get[0], state.get[1]) if state.exists else (None, 0)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for v in rows["value"].astype(float):
-            ewma = v if ewma is None else alpha * v + (1.0 - alpha) * ewma
-            n += 1
-        state.update((float(ewma), int(n)))
-        yield pd.DataFrame(
-            {"event_type": [key[0]], "ewma": [round(float(ewma), 6)], "n": [int(n)]}
-        )
-
-    from pyspark.sql import functions as F
-
-    return events.select("event_type", "ts", "event_id", "value").filter(
-        F.col("value").isNotNull()
-    ).groupBy("event_type").applyInPandasWithState(
-        update_ewma,
-        outputStructType="event_type string, ewma double, n long",
-        stateStructType="ewma double, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def latest_per_key(events: DataFrame) -> DataFrame:

@@ -3,7 +3,6 @@ hold regardless of data."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
@@ -256,16 +255,13 @@ def test_ann_batch_matches_single_query_path(spark, sf_dir):
 
 
 def test_multimodal_resize_and_frames_plumbing(spark, sf_dir):
-    """Resize is 1→1; frame sampling is 1→N with frame_idx striding."""
+    """Frame sampling is 1→N with frame_idx striding."""
     from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
         multimodal as MM,
     )
 
     docs = load_table(spark, sf_dir, "documents").limit(50)
     b = MM.to_binary_docs(docs, "doc_id", "text")
-    rz = MM.resize_images(b, width=64, height=48)
-    assert rz.count() == 50
-    assert {(r.width, r.height) for r in rz.limit(5).collect()} == {(64, 48)}
     fr = MM.sample_frames(b, stride=24)
     per_doc = {r.doc_id: r.n for r in fr.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
     assert len(per_doc) == 50 and all(n >= 1 for n in per_doc.values())
@@ -482,43 +478,6 @@ def test_ann_lsh_recall_floor_on_clustered_corpus(spark):
     r4 = recall(4)
     assert r4 >= 0.9, f"clustered-corpus LSH recall floor broken: {r4}"
     emb.unpersist()
-
-
-# A minimal valid 1x1 grayscale PNG (public fixed bytes, all chunk CRCs
-# verified; no image lib needed to CONSTRUCT it — only to decode it).
-_PNG_1x1 = bytes.fromhex(
-    "89504e470d0a1a0a0000000d49484452000000010000000108000000003a7e9b55"
-    "0000000a4944415478da6360000000020001e527defc0000000049454e44ae426082"
-)
-
-
-def test_multimodal_real_decode_when_pil_present(spark):
-    """The REAL decode path through the same mapInPandas plumbing as the
-    fake extractor: a 1x1 PNG payload decodes to (1, 1, 'L'). Skips
-    where PIL is absent (this container), in which case decode_real must
-    keep its explicit NotImplementedError stub behavior."""
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
-        multimodal as MM,
-    )
-
-    try:
-        import PIL  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-
-    if not have_pil:
-        with pytest.raises(NotImplementedError):
-            MM.decode_real(_PNG_1x1, "image/png")
-        pytest.skip("PIL not installed; real-decode stub behavior verified")
-
-    docs = spark.createDataFrame(
-        [(1, bytearray(_PNG_1x1), {"n_bytes": len(_PNG_1x1), "mime": "image/png"})],
-        "doc_id long, payload binary, meta struct<n_bytes: int, mime: string>",
-    )
-    rows = MM.decode_images(docs).collect()
-    assert [(r.doc_id, r.width, r.height, r.mode) for r in rows] == [(1, 1, 1, "L")]
 
 
 def test_entity_resolution_links_to_true_entity(spark, sf_dir):

@@ -22,7 +22,6 @@ import gc
 import json
 import os
 import re
-import shutil
 import subprocess
 import sys
 import threading
@@ -32,7 +31,7 @@ from operator import itemgetter
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -259,11 +258,11 @@ def test_oversized_tokens_equal_raw_path(spark, tmp_path):
         [(1, f"Alpha {token} (1990)", None, ["Drama"]), (2, "Alpha Beta", None, None)],
         "movieId int, title string, release_date string, genres array<string>")
     movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path))
-    published = ds.dataset(f"{tmp_path}/variants.parquet", format="parquet").to_table()
-    assert published.num_rows > 0
-    assert max(len(t) for t in published["term"].to_pylist()) <= movieindex.MAX_VARIANT_LEN
     index = movierec.load_movie_index(spark, str(tmp_path))
-    assert index.variants.long == (token,)
+    variants = index.variants
+    assert len(variants.keys) > 0
+    assert max(len(variants.words[c]) for c in variants.codes.tolist()) <= movieindex.MAX_VARIANT_LEN
+    assert [variants.words[c] for c in variants.long.tolist()] == [token]
     for q in (token, "x" + token[1:], token[:-2], "alpha " + "b" * 10_000, "c" * 10_000):
         got = _call(index, "search", {"q": q})
         assert got == _call(raw, "search", {"q": q}), q[:12]
@@ -272,34 +271,43 @@ def test_oversized_tokens_equal_raw_path(spark, tmp_path):
 
 
 def test_index_without_variant_file_is_refused(spark, raw, tmp_path):
-    """An index directory published without ``variants.parquet`` does not
-    load: the error names the missing file."""
+    """An index directory that lacks any one of the published serving
+    files does not load: the error names the missing file."""
     out = str(tmp_path / "index")
     movierec.write_movie_index(movierec.build_movie_index_tables(raw.limit(20)), out)
-    shutil.rmtree(f"{out}/variants.parquet")
-    with pytest.raises(FileNotFoundError, match="variants.parquet"):
-        movierec.load_movie_index(spark, out)
+    for name in movieindex.FILES:
+        os.rename(f"{out}/{name}.arrow", f"{out}/{name}.moved")
+        with pytest.raises(FileNotFoundError, match=f"{name}.arrow"):
+            movierec.load_movie_index(spark, out)
+        with pytest.raises(FileNotFoundError, match=f"{name}.arrow"):
+            movieindex.load(out)
+        os.rename(f"{out}/{name}.moved", f"{out}/{name}.arrow")
+    assert len(movieindex.load(out).ids) == 20
 
 
 _PUBLISH = """
 import sys
 sys.path.insert(0, sys.argv[1])
-import pyarrow.dataset as ds
+import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import pipelines
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
     movieindex, movierec)
 spark = SparkSession.builder.master("local[1]").appName("publish-outside").getOrCreate()
 out = sys.argv[3]
-for _ in range(2):  # a republish replaces the variant file
+for _ in range(2):  # a republish replaces every serving file
     movierec.write_movie_index(movierec.build_movie_index_tables(
         pipelines.build_movie_index(spark, sys.argv[2])), out)
-terms = ds.dataset(out + "/postings.parquet", format="parquet").to_table(columns=["term"])
-published = ds.dataset(out + "/variants.parquet", format="parquet").to_table()
-rows = [("key", "ascending"), ("term", "ascending"), ("deletions", "ascending")]
-want = movieindex.variant_table(set(terms["term"].to_pylist()))
-assert published.sort_by(rows).equals(want.sort_by(rows))
-print(len(movierec.load_movie_index(spark, out).ids))
+index = movierec.load_movie_index(spark, out)
+words = [index.words[c] for c in range(len(index.words))]
+assert words == sorted(set(pq.read_table(out + "/postings.parquet")["term"].to_pylist()))
+want = movieindex.variant_table(words)
+order = np.lexsort((index.variants.deletions, index.variants.codes, index.variants.keys))
+got = [index.variants.keys[order], index.variants.codes[order], index.variants.deletions[order]]
+want = want.sort_by([("key", "ascending"), ("term", "ascending"), ("deletions", "ascending")])
+assert all((g == want[c].to_numpy()).all() for g, c in zip(got, ("key", "term", "deletions")))
+print(len(index.ids))
 """
 
 
@@ -307,7 +315,8 @@ def test_publish_outside_the_checkout(catalog, tmp_path):
     """The publish runs from a working directory outside the checkout,
     with the package on the driver's ``sys.path`` only: no step of it may
     need a Spark Python worker to import the package. Publishing twice
-    into one directory leaves exactly the variant rows of its terms."""
+    into one directory leaves exactly the terms of the written postings
+    and the variant rows of those terms."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
@@ -379,18 +388,15 @@ def test_concurrent_requests_share_the_index(index, catalog):
 
 
 def test_loaded_index_heap_per_movie(index_dir):
-    """The loaded index keeps its documents in the Arrow columns it read:
-    the Python heap it holds (tracemalloc) stays under 320 bytes per movie
-    of the test catalog (about 170 here), so per-document Python objects
-    cannot come back unnoticed (a dict, a title and a genre list per movie
-    took about 810)."""
-    tables = [ds.dataset(f"{index_dir}/{name}.parquet", format="parquet").to_table(columns=cols)
-              for name, cols in (("docs", ["movieId", "title", "release_date", "genres", "__title_norm"]),
-                                 ("postings", ["field", "term", "movieId"]))]
+    """The loaded index keeps its documents and position lists in the
+    Arrow files it mapped: the Python heap it holds (tracemalloc) stays
+    under 320 bytes per movie of the test catalog (about 9 here), so
+    per-document Python objects cannot come back unnoticed (a dict, a
+    title and a genre list per movie took about 810)."""
     gc.collect()
     tracemalloc.start()
     try:
-        loaded = movieindex.MovieIndex(docs=None, **movieindex._index_arrays(*tables))
+        loaded = movieindex.load(index_dir)
         gc.collect()
         held = tracemalloc.get_traced_memory()[0]
     finally:
@@ -401,9 +407,9 @@ def test_loaded_index_heap_per_movie(index_dir):
 
 def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
     """A loaded index keeps answering from its load-time snapshot while the
-    index directory is appended to — the paginated-session guarantee
-    (page N and N+1 see the same corpus) — and its ``docs`` frame reads
-    exactly the files the load read. A fresh load sees the append."""
+    index directory is appended to and republished — the paginated-session
+    guarantee (page N and N+1 see the same corpus) — and its ``docs`` frame
+    reads exactly the files the load read. A fresh load sees the append."""
     tables = movierec.build_movie_index_tables(raw)
     idx_dir = str(tmp_path / "movieindex")
     movierec.write_movie_index(tables, idx_dir)
@@ -421,6 +427,9 @@ def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
     for name, frame in (("docs", tables.docs), ("postings", tables.postings)):
         frame.filter(F.col("movieId").isin(ids)).withColumn("movieId", bump).write.mode(
             "append").parquet(f"{idx_dir}/{name}.parquet")
+    # republish the appended tables into the directory the served index mapped
+    movieindex.publish(pq.read_table(f"{idx_dir}/docs.parquet"), pq.read_table(f"{idx_dir}/postings.parquet"),
+                       idx_dir)
 
     status, page2 = serving.search_endpoint(served, {"q": q, "page": "2", "size": "5"})
     assert status == 200
@@ -428,6 +437,7 @@ def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
     assert all(m["movieId"] < 100000 for m in page2["movies"])
     assert {m["movieId"] for m in page1["movies"]}.isdisjoint(
         {m["movieId"] for m in page2["movies"]})
+    assert serving.search_endpoint(served, {"q": q, "page": "1", "size": "5"}) == (200, page1)
     assert served.docs.count() == N_MOVIES
 
     fresh = movierec.load_movie_index(spark, idx_dir)
@@ -438,15 +448,11 @@ def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
 _NO_SPARK = """
 import json, sys
 sys.modules["pyspark"] = None  # any pyspark import now raises ImportError
-import pyarrow.dataset as ds
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import http_api
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
     movieindex)
 index_dir, (calls, requests) = sys.argv[1], json.load(sys.stdin)
-tables = [ds.dataset(f"{index_dir}/{name}.parquet", format="parquet").to_table(columns=cols)
-          for name, cols in (("docs", ["movieId", "title", "release_date", "genres", "__title_norm"]),
-                             ("postings", ["field", "term", "movieId"]))]
-index = movieindex.MovieIndex(docs=None, **movieindex._index_arrays(*tables))
+index = movieindex.load(index_dir)
 client = http_api.create_app(index).test_client()
 print(json.dumps([[getattr(movieindex, flow)(index, *args) for flow, args in calls],
                   [[r.status_code, r.get_json()] for r in (client.open(path, method=m, query_string=q, json=b)
@@ -455,8 +461,8 @@ print(json.dumps([[getattr(movieindex, flow)(index, *args) for flow, args in cal
 
 
 def test_index_flows_need_no_pyspark(index_dir, index, catalog, words):
-    """A process where ``pyspark`` cannot be imported builds the index
-    from the published directory with pyarrow, and its flows, and the
+    """A process where ``pyspark`` cannot be imported loads the published
+    directory (``movieindex.load``), and its flows, and the
     HTTP app's /search, /recommend, /movie/<id> and /health, answer
     exactly as on the index that ``movierec.load_movie_index`` loaded."""
     pytest.importorskip("flask")
@@ -590,26 +596,35 @@ def test_empty_catalog_file_answers(spark, tmp_path):
     raw = pipelines.build_movie_index(spark, str(tmp_path / "u.item"))
     movierec.write_movie_index(movierec.build_movie_index_tables(raw), str(tmp_path / "index"))
     index = movierec.load_movie_index(spark, str(tmp_path / "index"))
-    assert not index.postings and not index.variants.long
+    assert not index.terms and not len(index.variants.long)
     assert len(index.variants.keys) == len(index.variants.codes) == len(index.variants.deletions) == 0
     got = _call(index, "search", {"q": "alpha"})
     assert got == _call(raw, "search", {"q": "alpha"}) == (
         200, {"movies": [], "page": 1, "size": 10, "total": 0})
 
 
+# the docs table Spark's build writes
+_DOCS_SCHEMA = pa.schema([("movieId", pa.int32()), ("title", pa.string()), ("release_date", pa.string()),
+                          ("genres", pa.list_(pa.string())), ("__title_norm", pa.string())])
+
+
 def _variant_index(terms) -> movieindex.Variants:
-    """The variant index of a terms dictionary, built by the publish's
-    rule (``variant_table``) as ``_index_arrays`` builds it for
-    :func:`_python_index`."""
+    """The variant index of a terms dictionary, published by the
+    publish's rule (``serving_tables``) as the title terms of one
+    document."""
     terms = sorted(set(terms))
-    return movieindex._variants(movieindex.variant_table(terms), terms)
+    return _loaded(
+        pa.Table.from_pylist([{"movieId": 1}], _DOCS_SCHEMA),
+        pa.table({"field": ["title"] * len(terms), "term": terms, "movieId": pa.array([1] * len(terms), pa.int32())}),
+    ).variants
 
 
 def _assert_expansion_exact(terms, qt: str) -> None:
     """The probe's expansion of ``qt`` equals the scalar scan's, with no
     term twice."""
     d = search.auto_fuzziness(qt)
-    got = movieindex._expand(_variant_index(terms), qt, d)
+    variants = _variant_index(terms)
+    got = [variants.words[c] for c in movieindex._expand(variants, qt, d)]
     assert len(got) == len(set(got)), qt
     assert set(got) == {t for t in terms if movierec._lev_le(t, qt, d)}, (qt, d)
 
@@ -655,7 +670,7 @@ def test_vectorized_expansion_on_generated_catalog(index, catalog):
     for qt in sorted(qts):
         for variant in (qt, qt[:-1] + "q", "z" + qt[1:] + "é", "\ud800" + qt[2:]):
             d = search.auto_fuzziness(variant)
-            got = movieindex._expand(index.variants, variant, d)
+            got = [index.words[c] for c in movieindex._expand(index.variants, variant, d)]
             assert sorted(got) == sorted(t for t in terms if movierec._lev_le(t, variant, d)), variant
 
 
@@ -681,7 +696,7 @@ def test_prefiltered_expansion_matches_lev_le(words, qt, perms, d):
     anagrams = ["".join(qt[i] for i in p if i < len(qt)) for p in perms]
     terms = set(words + anagrams + [qt])
     variants = _variant_index(terms)
-    got = movieindex._expand(variants, qt, d)
+    got = [variants.words[c] for c in movieindex._expand(variants, qt, d)]
     assert len(got) == len(set(got))
     assert set(got) == {t for t in terms if movierec._lev_le(t, qt, d)}, (qt, d)
     with pytest.raises(ValueError):
@@ -697,8 +712,7 @@ def _python_index(docs: list[tuple]) -> movieindex.MovieIndex:
     published tables built in Python the way the Spark build writes them:
     distinct tokens of the normalized title and genres text (an empty
     text is the one token ``""``), ``" " + normalized title + " "``, and
-    the variants of the terms by the publish's rule (``_index_arrays``
-    builds them when it is given no variant table)."""
+    the serving tables by the publish's rule (``serving_tables``)."""
     rows = [
         {"movieId": mid, "title": title, "release_date": None, "genres": genres,
          "__title_norm": None if title is None else f" {_norm(title)} "}
@@ -711,13 +725,16 @@ def _python_index(docs: list[tuple]) -> movieindex.MovieIndex:
         if text is not None
         for term in sorted(set(_norm(text).split(" ")))
     ]
-    schema = pa.schema([("movieId", pa.int32()), ("title", pa.string()),
-                        ("release_date", pa.string()), ("genres", pa.list_(pa.string())),
-                        ("__title_norm", pa.string())])
-    post = pa.table({"field": [p[0] for p in postings], "term": [p[1] for p in postings],
+    post = pa.table({"field": pa.array([p[0] for p in postings], pa.string()),
+                     "term": pa.array([p[1] for p in postings], pa.string()),
                      "movieId": pa.array([p[2] for p in postings], pa.int32())})
-    return movieindex.MovieIndex(
-        docs=None, **movieindex._index_arrays(pa.Table.from_pylist(rows, schema), post))
+    return _loaded(pa.Table.from_pylist(rows, _DOCS_SCHEMA), post)
+
+
+def _loaded(docs: pa.Table, postings: pa.Table) -> movieindex.MovieIndex:
+    """The index that a publish of ``docs`` and ``postings`` loads, built
+    in memory."""
+    return movieindex._loaded(movieindex.serving_tables(docs, postings))
 
 
 def test_rows_without_movie_id_hold_no_document():
@@ -727,7 +744,7 @@ def test_rows_without_movie_id_hold_no_document():
     assert index.ids.tolist() == [1, 2]
     assert [d["movieId"] for d in movieindex.search_page(index, "beta", 0, 10)[0]] == [2]
     assert movieindex.lookup_title(index, "beta")[0] == "unique"
-    assert index.genres["Drama"].tolist() == [1]
+    assert index.genres[movieindex._code(index.genre_names, "Drama")].tolist() == [1]
 
 
 _GENRES = ["Action", "Comedy", "Drama", "Sci-Fi", "Children's"]
@@ -803,8 +820,8 @@ def test_search_page_matches_scan(docs, q, page, size):
     for qt in query.split():
         d = search.auto_fuzziness(qt)
         for field, boost in (("title", 3.0), ("genres_text", 1.0)):
-            hit = set().union(*(index.postings[k] for k in index.terms
-                                if k[0] == field and movierec._lev_le(k[1], qt, d)))
+            hit = set().union(*(index.fields[field][c].tolist() for c in range(len(index.words))
+                                if movierec._lev_le(index.words[c], qt, d)))
             for p in hit:
                 scores[index.ids[p]] += boost
     ranked = sorted(scores, key=lambda mid: (-scores[mid], mid))
@@ -882,3 +899,34 @@ def test_query_term_cap_on_both_backends(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(movieindex, "_expand", lambda v, qt, d: expanded.append(qt) or kernel(v, qt, d))
     assert _call(index, "search", {"q": "drama Drama alpha drama"})[1]["total"] == 1
     assert sorted(expanded) == ["alpha", "drama"]
+
+
+def test_load_between_the_renames_of_a_publish_is_refused(tmp_path, monkeypatch):
+    """A load that finds the renamed files of a new publish beside those
+    of the old one refuses the mix instead of reading one publish's
+    positions against the other's documents; once the publish ends, the
+    load sees the new index whole."""
+    out = str(tmp_path)
+
+    def tables(docs):
+        rows = [{"movieId": m, "title": t, "genres": g, "__title_norm": f" {_norm(t)} "} for m, t, g in docs]
+        post = pa.table({"field": ["title"] * len(docs), "term": [_norm(t) for _m, t, _g in docs],
+                         "movieId": pa.array([m for m, _t, _g in docs], pa.int32())})
+        return pa.Table.from_pylist(rows, _DOCS_SCHEMA), post
+
+    movieindex.publish(*tables([(1, "Alpha", ["Drama"]), (2, "Beta", ["Drama"])]), out)
+    replace, errors = os.replace, []
+
+    def load_after_each_rename(src, dst):
+        replace(src, dst)
+        try:
+            movieindex.load(out)
+        except RuntimeError as e:
+            errors.append(str(e))
+
+    monkeypatch.setattr(os, "replace", load_after_each_rename)
+    movieindex.publish(*tables([(0, "Gamma", ["Drama"]), (1, "Alpha", ["Drama"]), (2, "Beta", ["Drama"])]), out)
+    monkeypatch.undo()
+    assert len(errors) == len(movieindex.FILES) - 1 and "two publishes" in errors[0]
+    index = movieindex.load(out)
+    assert [d["title"] for d in movieindex.search_page(index, "beta", 0, 10)[0]] == ["Beta"]

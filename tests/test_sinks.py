@@ -7,30 +7,14 @@ import json
 import os
 import shutil
 
-from pyspark.sql import functions as F
-
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources.readers import (
     load_table,
 )
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources.sinks import (
     foreach_partition_bulk,
-    write_jsonl,
 )
 
 TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-
-
-def test_jsonl_sink_roundtrip(spark, sf_dir):
-    out = os.path.join(TMP, "docs_jsonl")
-    shutil.rmtree(out, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    write_jsonl(docs, out)
-    # distributed write: one file per partition, driver never materialized rows
-    assert glob.glob(os.path.join(out, "part-*"))
-    back = spark.read.json(out)
-    assert back.count() == docs.count()
-    assert back.exceptAll(docs.select("doc_id", "lang", "n_chars")).count() == 0
-    shutil.rmtree(out, ignore_errors=True)
 
 
 def test_foreach_partition_bulk_batches(spark, sf_dir):
@@ -59,105 +43,3 @@ def test_foreach_partition_bulk_batches(spark, sf_dir):
     shutil.rmtree(out, ignore_errors=True)
 
 
-def test_read_delimited_with_rejects_splits_good_and_bad(spark, tmp_path):
-    """A malformed row (wrong arity / uncastable int) must land in the
-    rejects frame verbatim while clean rows parse fully — one read, two
-    complementary outputs (sources/readers.py:read_delimited_with_rejects)."""
-    from pyspark.sql import types as T
-
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources.readers import (
-        read_delimited_with_rejects,
-    )
-
-    p = tmp_path / "ratings_dirty.tsv"
-    p.write_text(
-        "1\t10\t5\t874965758\n"
-        "2\tnot_an_int\t3\t874965758\n"  # uncastable movieId
-        "3\t30\t4\t874965758\n"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("userId", T.IntegerType()),
-            T.StructField("movieId", T.IntegerType()),
-            T.StructField("rating", T.IntegerType()),
-            T.StructField("ts", T.LongType()),
-        ]
-    )
-    good, bad = read_delimited_with_rejects(spark, str(p), schema, sep="\t")
-    good_rows = sorted((r.userId, r.movieId) for r in good.collect())
-    assert good_rows == [(1, 10), (3, 30)]
-    bad_rows = [r.raw_line for r in bad.collect()]
-    assert bad_rows == ["2\tnot_an_int\t3\t874965758"]
-    assert good.columns == ["userId", "movieId", "rating", "ts"]
-
-
-def test_overwrite_partitions_backfill(spark, tmp_path):
-    """Dynamic partition overwrite: backfilling one day replaces ONLY
-    that day's partition; other partitions are byte-untouched; replaying
-    the same backfill is a no-op (idempotent)."""
-    from pyspark.sql import functions as F
-
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources.sinks import (
-        overwrite_partitions,
-    )
-
-    path = str(tmp_path / "t")
-    full = spark.createDataFrame(
-        [("2024-01-01", 1, 10.0), ("2024-01-01", 2, 20.0),
-         ("2024-01-02", 3, 30.0), ("2024-01-02", 4, 40.0)],
-        "day string, k int, v double",
-    )
-    overwrite_partitions(full, path, ["day"])
-
-    # backfill day 2 with corrected values (and a dropped row)
-    fix = spark.createDataFrame([("2024-01-02", 3, 99.0)], "day string, k int, v double")
-    overwrite_partitions(fix, path, ["day"])
-    def read_state():
-        # partition-column values round-trip as DATE via partition
-        # inference; stringify for comparison
-        return {
-            (r["day"], r["k"], r["v"])
-            for r in spark.read.parquet(path)
-            .select(F.col("day").cast("string").alias("day"), "k", "v")
-            .collect()
-        }
-
-    got = read_state()
-    assert got == {("2024-01-01", 1, 10.0), ("2024-01-01", 2, 20.0), ("2024-01-02", 3, 99.0)}
-
-    # replay the identical backfill — state unchanged (idempotent)
-    overwrite_partitions(fix, path, ["day"])
-    assert read_state() == got
-
-    # the conf did not leak into the session
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode", None) in (None, "STATIC", "static")
-
-
-def test_orc_sink_roundtrip_lossless_and_pruned(spark, sf_dir):
-    from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.sources.sinks import (
-        write_orc,
-    )
-
-    out = os.path.join(TMP, "docs_orc")
-    shutil.rmtree(out, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-    write_orc(docs, out, partition_by=["lang"])
-    back = spark.read.orc(out)
-    # lossless roundtrip (column order may differ under partitionBy)
-    assert back.count() == docs.count()
-    assert (
-        back.select("doc_id", "lang", "source", "n_chars")
-        .exceptAll(docs)
-        .count()
-        == 0
-    )
-    # partition pruning reaches the ORC scan exactly like parquet
-    plan = (
-        back.filter(F.col("lang") == "en")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan and "lang" in plan.split("PartitionFilters")[1][:120]
