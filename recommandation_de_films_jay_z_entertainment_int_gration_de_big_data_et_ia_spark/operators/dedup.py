@@ -157,7 +157,7 @@ def _shingle_jaccard() -> Column:
 
 def jaccard_verify(
     pairs: DataFrame, shingles_df: DataFrame, id_col: str,
-    shingle_col: str = "shingles", score_col: str = "jaccard",
+    shingle_col: str = "shingles",
     threshold: float = 0.0,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs (the verify step): joins the
@@ -185,8 +185,8 @@ def jaccard_verify(
         .join(sa.hint("shuffle_hash"), "id_a")
         .join(sb.hint("shuffle_hash"), "id_b")
     )
-    jac = _shingle_jaccard().alias(score_col)
-    return joined.select("id_a", "id_b", jac).filter(F.col(score_col) >= threshold)
+    jac = _shingle_jaccard().alias("jaccard")
+    return joined.select("id_a", "id_b", jac).filter(F.col("jaccard") >= threshold)
 
 
 def build_dedup_index(

@@ -212,6 +212,22 @@ def publish(docs: pa.Table, postings: pa.Table, index_dir: str) -> None:
         os.replace(f"{path}.tmp", path)
 
 
+def _view(arr: pa.Array, dtype, extra: int) -> np.ndarray:
+    """``len(arr) + extra`` values (1 extra for offsets) of the buffer after ``arr``'s
+    validity, from its offset, as a numpy view (``Array.to_numpy`` imports pandas)."""
+    dtype = np.dtype(dtype)
+    return np.frombuffer(arr.buffers()[1] or b"", dtype, len(arr) + extra, arr.offset * dtype.itemsize)
+
+
+def _valid(arr: pa.Array) -> memoryview:
+    """The validity of each value of ``arr``: its bitmap, or a zero-stride ``True``."""
+    bitmap = arr.buffers()[0]
+    if bitmap is None:
+        return memoryview(np.broadcast_to(True, len(arr)))
+    bits = np.unpackbits(np.frombuffer(bitmap, np.uint8), bitorder="little")
+    return memoryview(bits[arr.offset:arr.offset + len(arr)].view(bool))
+
+
 class _Column:
     """A zero-copy view of a loaded Arrow string column: its offsets, its
     UTF-8 data buffer and its validity, as memoryviews, whose reads give
@@ -221,10 +237,9 @@ class _Column:
     __slots__ = ("offsets", "data", "valid")
 
     def __init__(self, arr):
-        _validity, offsets, data = arr.buffers()
-        self.valid = memoryview(arr.is_valid().to_numpy(zero_copy_only=False))
-        self.offsets = memoryview(np.frombuffer(offsets, np.int32, len(arr) + 1, arr.offset * 4))
-        self.data = memoryview(data or b"")
+        self.valid = _valid(arr)
+        self.offsets = memoryview(_view(arr, np.int32, 1))
+        self.data = memoryview(arr.buffers()[2] or b"")
 
     def __len__(self) -> int:
         return len(self.offsets) - 1
@@ -241,8 +256,8 @@ class _ListColumn(_Column):
     __slots__ = ("names",)
 
     def __init__(self, arr):
-        self.valid = memoryview(arr.is_valid().to_numpy(zero_copy_only=False))
-        self.offsets, self.data = memoryview(arr.offsets.to_numpy()), memoryview(arr.values.indices.to_numpy())
+        self.valid = _valid(arr)
+        self.offsets, self.data = memoryview(_view(arr, np.int32, 1)), memoryview(_view(arr.values.indices, np.int32, 0))
         self.names = tuple(arr.values.dictionary.to_pylist())
 
     def __getitem__(self, p: int) -> list | None:
@@ -266,7 +281,7 @@ class _Lists:
     __slots__ = ("offsets", "values")
 
     def __init__(self, arr):
-        self.offsets, self.values = memoryview(arr.offsets.to_numpy()), arr.values.to_numpy()
+        self.offsets, self.values = memoryview(_view(arr, np.int32, 1)), _view(arr.values, np.int32, 0)
 
     def __getitem__(self, c: int) -> np.ndarray:
         return self.values[self.offsets[c]:self.offsets[c + 1]]
@@ -368,17 +383,18 @@ def _loaded(tables: dict[str, pa.Table]) -> MovieIndex:
         return c.chunk(0) if c.num_chunks == 1 else c.combine_chunks()
 
     words = _Column(col("terms", "term"))
-    keys = col("variants", "key").to_numpy()
+    keys = _view(col("variants", "key"), np.int64, 0)
     return MovieIndex(
         docs=None,
-        ids=col("docs", "movieId").to_numpy(),
+        ids=_view(col("docs", "movieId"), np.int64, 0),
         columns={c: (_ListColumn if c == "genres" else _Column)(col("docs", c)) for c in DOC_COLUMNS},
         words=words,
         fields={f: _Lists(col("terms", f)) for f in SEARCH_FIELDS},
         genre_names=_Column(col("genres", "genre")),
         genres=_Lists(col("genres", "docs")),
         variants=Variants(
-            keys=keys, codes=col("variants", "term").to_numpy(), deletions=col("variants", "deletions").to_numpy(),
+            keys=keys, codes=_view(col("variants", "term"), np.int32, 0),
+            deletions=_view(col("variants", "deletions"), np.int8, 0),
             words=words, long=np.flatnonzero(np.diff(words.offsets) > MAX_VARIANT_LEN),
             longest=int(keys[-1] >> 32) if len(keys) else -1),
     )
@@ -388,7 +404,7 @@ def load(index_dir: str) -> MovieIndex:
     """Map the index that :func:`publish` wrote into ``index_dir``. A
     missing file raises ``FileNotFoundError`` naming it, and files of two
     publishes (a load between the renames of one) raise ``RuntimeError``.
-    At 25k movies a warm load takes about 1.5 ms and 18 KB of Python
+    At 25k movies a warm load takes about 1 ms and 18 KB of Python
     heap (tracemalloc)."""
     tables = {name: pa.ipc.open_file(pa.memory_map(_path(index_dir, name))).read_all() for name in FILES}
     if len({t.schema.metadata[_STAMP.encode()] for t in tables.values()}) > 1:

@@ -274,7 +274,6 @@ def ann_factor_topk(
     m: int = 2,
     user_col: str = "user",
     item_col: str = "item",
-    score_col: str = "predicted_rating",
     kcodes: int | None = None,
     lloyd_iters: int = 2,
     train_sample: int = 65536,
@@ -407,14 +406,14 @@ def ann_factor_topk(
         F.col("id").alias(item_col),
         F.col("features").alias("__if"),
     )
-    out_schema = f"{user_col} int, {item_col} int, {score_col} double"
+    out_schema = f"{user_col} int, {item_col} int, predicted_rating double"
 
     def _cell_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
             return pd.DataFrame(
                 {user_col: pd.Series(dtype="int32"),
                  item_col: pd.Series(dtype="int32"),
-                 score_col: pd.Series(dtype="float64")}
+                 "predicted_rating": pd.Series(dtype="float64")}
             )
         right = right.sort_values(item_col)
         U = np.stack([np.asarray(v, dtype=np.float64) for v in left["__uf"]])
@@ -428,7 +427,7 @@ def ann_factor_topk(
             {
                 user_col: left[user_col].to_numpy()[uidx],
                 item_col: right[item_col].to_numpy()[iidx],
-                score_col: S[uidx, iidx],
+                "predicted_rating": S[uidx, iidx],
             }
         )
 
@@ -437,7 +436,7 @@ def ann_factor_topk(
         .cogroup(items_side.groupBy("cell_key"))
         .applyInPandas(_cell_topk, out_schema)
     )
-    w = Window.partitionBy(user_col).orderBy(F.desc(score_col), F.asc(item_col))
+    w = Window.partitionBy(user_col).orderBy(F.desc("predicted_rating"), F.asc(item_col))
     return (
         exact.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)

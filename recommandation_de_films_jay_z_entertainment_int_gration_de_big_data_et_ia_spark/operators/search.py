@@ -123,10 +123,9 @@ def bm25_score(
     query_terms: Sequence[str],
     k1: float = 1.2,
     b: float = 0.75,
-    score_col: str = "score",
     boost: float = 1.0,
 ) -> DataFrame:
-    """Append a BM25 ``score_col`` for ``query_terms`` over ``text_col``.
+    """Append a BM25 ``score`` column for ``query_terms`` over ``text_col``.
 
     df stats (N, df_t per term, total token length) are computed in ONE
     aggregate pass and broadcast — no per-term scans, no shuffle of the
@@ -158,7 +157,7 @@ def bm25_score(
             tf, F.col(f"__df_{i}").cast("double"), F.col("__n").cast("double"), avgdl, k1, b
         )
         total = total + idf * (num / denom)
-    scored = scored.withColumn(score_col, F.round(total * F.lit(boost), 4))
+    scored = scored.withColumn("score", F.round(total * F.lit(boost), 4))
     drop = [toks, "__dl", "__n", "__sumdl"] + [f"__df_{i}" for i in range(len(query_terms))]
     return scored.drop(*drop)
 
@@ -168,7 +167,6 @@ def multi_match_score(
     fields: dict[str, float],
     query_terms: Sequence[str],
     fuzzy: bool = True,
-    score_col: str = "score",
 ) -> DataFrame:
     """Q6 ``multi_match`` with per-field boosts (api.py:210-221 uses
     ``title^3, genres``): per field, each query term contributes its boost
@@ -197,7 +195,7 @@ def multi_match_score(
         return acc.withField("s", s)
 
     total = F.aggregate(q, zero, add_term, lambda acc: acc["s"])
-    return df.withColumn(score_col, F.round(total, 4))
+    return df.withColumn("score", F.round(total, 4))
 
 
 def fuzzy_expand_terms(
@@ -282,7 +280,7 @@ def fuzzy_expand_terms(
 
 
 def _multi_field_bm25_fold(
-    matched: DataFrame, fields: dict[str, float], id_col: str, k1: float, b: float, score_col: str
+    matched: DataFrame, fields: dict[str, float], id_col: str, k1: float, b: float
 ) -> DataFrame:
     """The shared tail of the ``multi_match_bm25*`` paths: ``matched``
     carries ``(__id, f, term, tf, __dl, df, n, sumdl)`` per matched
@@ -308,7 +306,7 @@ def _multi_field_bm25_fold(
             F.col("__id").alias(id_col),
             F.round(
                 F.aggregate("__cs", F.lit(0.0), lambda acc, s: acc + s["contrib"]), 4
-            ).alias(score_col),
+            ).alias("score"),
         )
     )
 
@@ -321,7 +319,6 @@ def multi_match_bm25(
     fuzzy: bool = True,
     k1: float = 1.2,
     b: float = 0.75,
-    score_col: str = "score",
     prefix_length: int = 0,
     max_expansions: int | None = 50,
 ) -> DataFrame:
@@ -399,7 +396,7 @@ def multi_match_bm25(
         tfs.join(F.broadcast(exp), ["f", "term"])
         .join(F.broadcast(stats), ["f"])
     )
-    return _multi_field_bm25_fold(matched, fields, id_col, k1, b, score_col)
+    return _multi_field_bm25_fold(matched, fields, id_col, k1, b)
 
 
 def field_tokens(df: DataFrame, id_col: str, fields: dict[str, float]) -> DataFrame:
@@ -437,7 +434,6 @@ def multi_match_bm25_indexed(
     fuzzy: bool = True,
     k1: float = 1.2,
     b: float = 0.75,
-    score_col: str = "score",
     prefix_length: int = 0,
     max_expansions: int | None = 50,
 ) -> DataFrame:
@@ -497,7 +493,7 @@ def multi_match_bm25_indexed(
         .filter(F.col("tf") > 0)
         .join(F.broadcast(stats), ["f"])
     )
-    return _multi_field_bm25_fold(matched, fields, id_col, k1, b, score_col)
+    return _multi_field_bm25_fold(matched, fields, id_col, k1, b)
 
 
 def more_like_this(

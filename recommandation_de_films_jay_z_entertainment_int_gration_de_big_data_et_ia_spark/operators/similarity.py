@@ -44,7 +44,7 @@ def query_vector(df: DataFrame, id_col: str, vec_col: str, target_id) -> DataFra
 
 
 def _query_cosine_topk(
-    cand: DataFrame, id_col: str, vec_col: str, k: int, score_col: str
+    cand: DataFrame, id_col: str, vec_col: str, k: int
 ) -> DataFrame:
     """Rank ``cand`` (rows carrying the broadcast ``__qvec`` / ``__qnorm``
     query row) by cosine to the query rounded to 4: the top ``k`` by
@@ -53,13 +53,13 @@ def _query_cosine_topk(
     score = F.round(
         dot(F.col(vec_col), F.col("__qvec")) / (norm(F.col(vec_col)) * F.col("__qnorm")), 4
     )
-    return cand.select(id_col, score.alias(score_col)).orderBy(
-        F.desc(score_col), F.asc(id_col)
+    return cand.select(id_col, score.alias("score")).orderBy(
+        F.desc("score"), F.asc(id_col)
     ).limit(k)
 
 
 def cosine_topk(
-    df: DataFrame, id_col: str, vec_col: str, target_id, k: int = 10, score_col: str = "score"
+    df: DataFrame, id_col: str, vec_col: str, target_id, k: int = 10
 ) -> DataFrame:
     """Brute-force exact cosine top-k vs one stored vector (the baseline).
 
@@ -70,7 +70,7 @@ def cosine_topk(
     """
     q = query_vector(df, id_col, vec_col, target_id)
     cand = df.filter(F.col(id_col) != F.lit(target_id)).crossJoin(F.broadcast(q))
-    return _query_cosine_topk(cand, id_col, vec_col, k, score_col)
+    return _query_cosine_topk(cand, id_col, vec_col, k)
 
 
 def hyperplane_bucket(vec_col: Column, planes: int = 4, table: int = 0) -> Column:
@@ -101,7 +101,7 @@ def _plane_term(p: int):
 
 def cosine_topk_lsh(
     df: DataFrame, id_col: str, vec_col: str, target_id, k: int = 5,
-    planes: int = 4, tables: int = 1, score_col: str = "score",
+    planes: int = 4, tables: int = 1,
 ) -> DataFrame:
     """ANN top-k: restrict the scan to the query's LSH bucket(s), then
     exact cosine rank inside. With ``tables`` independent hash tables a
@@ -124,7 +124,7 @@ def cosine_topk_lsh(
     cand = bucketed.crossJoin(F.broadcast(q)).filter(
         any_table_match & (F.col(id_col) != F.lit(target_id))
     )
-    return _query_cosine_topk(cand, id_col, vec_col, k, score_col)
+    return _query_cosine_topk(cand, id_col, vec_col, k)
 
 
 def _centroid_frame(df: DataFrame, id_col: str, vec_col: str, nlist: int) -> DataFrame:
@@ -171,7 +171,7 @@ def ivf_index(df: DataFrame, id_col: str, vec_col: str, nlist: int = 8) -> DataF
 
 def cosine_topk_ivf(
     df: DataFrame, id_col: str, vec_col: str, target_id, k: int = 10,
-    nlist: int = 8, nprobe: int = 2, score_col: str = "score",
+    nlist: int = 8, nprobe: int = 2,
 ) -> DataFrame:
     """IVF ANN top-k: scan only the query's ``nprobe`` nearest cells,
     exact cosine rank inside — the inverted-file counterpart to the
@@ -203,12 +203,12 @@ def cosine_topk_ivf(
         F.array_contains(F.col("__qprobes"), F.col("__cell"))
         & (F.col(id_col) != F.lit(target_id))
     )
-    return _query_cosine_topk(cand, id_col, vec_col, k, score_col)
+    return _query_cosine_topk(cand, id_col, vec_col, k)
 
 
 def embedding_neardup_pairs(
     df: DataFrame, id_col: str, vec_col: str, threshold: float,
-    planes: int = 4, score_col: str = "score", max_bucket: int | None = None,
+    planes: int = 4, max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH bucketing: candidate
     pairs share a sign-pattern bucket (equality join — shuffle on bucket,
@@ -289,19 +289,19 @@ def embedding_neardup_pairs(
                 m["id"].alias("id_b"),
                 F.round(
                     dot(F.col("a.v"), m["v"]) / (F.col("a.nrm") * m["nrm"]), 4
-                ).alias(score_col),
+                ).alias("score"),
             ),
         )
     )
     scored = anchors.select(F.col("a.id").alias("id_a"), pair_score.alias("p")).select(
-        "id_a", F.col("p.id_b").alias("id_b"), F.col(f"p.{score_col}").alias(score_col)
+        "id_a", F.col("p.id_b").alias("id_b"), F.col("p.score").alias("score")
     )
-    return scored.filter(F.col(score_col) >= threshold)
+    return scored.filter(F.col("score") >= threshold)
 
 
 def cosine_topk_lsh_batch(
     df: DataFrame, id_col: str, vec_col: str, target_ids, k: int = 5,
-    planes: int = 4, tables: int = 2, score_col: str = "score",
+    planes: int = 4, tables: int = 2,
     exclude_same: str | None = None,
     require_same: str | None = None,
 ) -> DataFrame:
@@ -370,10 +370,10 @@ def cosine_topk_lsh_batch(
                 dot(F.col(vec_col), F.col("__qv"))
                 / (norm(F.col(vec_col)) * F.col("__qn")),
                 4,
-            ).alias(score_col),
+            ).alias("score"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc(score_col), F.asc(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)

@@ -94,7 +94,6 @@ def bm25_with_index(
     query_terms: Sequence[str],
     k1: float = 1.2,
     b: float = 0.75,
-    score_col: str = "score",
 ) -> DataFrame:
     """BM25 scoring against a prebuilt index — same formula (and bitwise
     the same scores) as ``search.bm25_score``, but corpus statistics come
@@ -123,7 +122,7 @@ def bm25_with_index(
         idf, num, denom = _bm25_parts(tf, dfreq, F.col("n_docs").cast("double"), avgdl, k1, b)
         total = total + idf * (num / denom)
     return (
-        scored.withColumn(score_col, F.round(total, 4))
+        scored.withColumn("score", F.round(total, 4))
         .drop("__tk", "__dl", "n_docs", "sum_dl", "__dfmap")
     )
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum, exact_sum_sql
 from ..functions.text import TOKS_SQL, md5_hex_int_sql, tokens
 from ..sources.readers import load_table
 from .catalog import register
@@ -415,8 +416,8 @@ def q339_histogram_empty_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # family: q264/q265 (has_child/has_parent queries), q266 (nested
 # query), q333 (children agg) — this is the child→parent agg direction.
 #
-# Determinism: parent average via exact DECIMAL(18,4) sum then one
-# division + ROUND(.,4).
+# Determinism: parent average via the exact sum of ``functions.exact``
+# then one division + ROUND(.,4).
 #
 # Shape (100 TB): the distinct (orderkey, flag) pairs collapse ~4x in
 # a map-side partial before one shuffle; the orders join is key-co-
@@ -426,7 +427,7 @@ def q339_histogram_empty_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q349_reverse_nested",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT l_returnflag AS returnflag, CAST(COUNT(*) AS BIGINT) AS nested_hits
       FROM lineitem GROUP BY 1),
@@ -435,7 +436,7 @@ def q339_histogram_empty_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa AS (
       SELECT p.l_returnflag AS returnflag,
              CAST(COUNT(*) AS BIGINT) AS parent_count,
-             ROUND(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+             ROUND({exact_sum_sql("o.o_totalprice")}
                    / COUNT(*), 4) AS avg_parent_price
       FROM p JOIN orders o ON p.l_orderkey = o.o_orderkey GROUP BY 1)
     SELECT b.returnflag, b.nested_hits, pa.parent_count, pa.avg_parent_price
@@ -455,11 +456,7 @@ def q349_reverse_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_returnflag").alias("returnflag"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("parent_count"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1)),
-                4,
-            ).alias("avg_parent_price"),
+            F.round(exact_sum("o_totalprice") / F.count(F.lit(1)), 4).alias("avg_parent_price"),
         )
     )
     return (
@@ -956,7 +953,7 @@ def q387_ip_prefix_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q400_parent_agg",
-    oracle="""
+    oracle=f"""
     WITH ch AS (
       SELECT l_linestatus AS linestatus, CAST(COUNT(*) AS BIGINT) AS n_children
       FROM lineitem GROUP BY 1),
@@ -965,7 +962,7 @@ def q387_ip_prefix_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa AS (
       SELECT p.l_linestatus AS linestatus, o.o_orderstatus AS orderstatus,
              CAST(COUNT(*) AS BIGINT) AS parent_count,
-             ROUND(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+             ROUND({exact_sum_sql("o.o_totalprice")}
                    / COUNT(*), 4) AS avg_parent_price
       FROM p JOIN orders o ON p.l_orderkey = o.o_orderkey
       GROUP BY 1, 2)
@@ -991,11 +988,7 @@ def q400_parent_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("linestatus", F.col("o_orderstatus").alias("orderstatus"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("parent_count"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1)),
-                4,
-            ).alias("avg_parent_price"),
+            F.round(exact_sum("o_totalprice") / F.count(F.lit(1)), 4).alias("avg_parent_price"),
         )
     )
     return (

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec, dec_sql
 from ..sources.readers import load_table
 from .catalog import register
 
@@ -217,12 +218,12 @@ def q163_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q172_rfm_segments",
-    oracle="""
+    oracle=f"""
     WITH per_cust AS (
       SELECT o_custkey AS custkey,
              MAX(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))) AS last_day,
              COUNT(*) AS frequency,
-             SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS monetary_dec
+             SUM({dec_sql("o_totalprice")}) AS monetary_dec
       FROM orders GROUP BY o_custkey),
     g AS (SELECT MAX(last_day) AS global_day FROM per_cust),
     scored AS (
@@ -250,7 +251,7 @@ def q172_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("last_day"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("monetary_dec"),
+        F.sum(dec("o_totalprice")).alias("monetary_dec"),
     )
     g = per_cust.groupBy().agg(F.max("last_day").alias("global_day"))
     scored = per_cust.crossJoin(F.broadcast(g)).withColumn(
@@ -422,10 +423,10 @@ def q188_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q192_cohort_ltv",
-    oracle="""
+    oracle=f"""
     WITH om AS (
       SELECT o_custkey AS custkey,
-             CAST(o_totalprice AS DECIMAL(18,4)) AS rev,
+             {dec_sql("o_totalprice")} AS rev,
              date_diff('month', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS mo
       FROM orders),
     first_mo AS (SELECT custkey, MIN(mo) AS cohort FROM om GROUP BY custkey),
@@ -450,7 +451,7 @@ def q192_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     om = orders.select(
         F.col("o_custkey").alias("custkey"),
-        F.col("o_totalprice").cast("decimal(18,4)").alias("rev"),
+        dec("o_totalprice").alias("rev"),
         (
             (F.year("o_orderdate") - F.lit(1970)) * 12 + F.month("o_orderdate") - 1
         ).alias("mo"),

@@ -16,29 +16,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec, dec_sql, exact_sum, exact_sum_sql
 from ..functions.text import md5_hex_int_sql
 from ..operators import relational as R
 from ..sources.readers import load_table
 from .catalog import register
 
-# Exact-sum trick: float64 → DECIMAL(18,4) makes sums order-independent and
-# engine-identical; final cast-to-double + round(2) is then deterministic.
-DEC = "decimal(18,4)"
-
-
-def _dec(c: str) -> F.Column:
-    return F.col(c).cast(DEC)
-
-
-def _money(col: F.Column, alias: str, nd: int = 2) -> F.Column:
-    return F.round(col.cast("double"), nd).alias(alias)
-
 
 def _revenue() -> F.Column:
-    return F.sum(_dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount")))
+    """The exact revenue sum: the product form of ``functions.exact``."""
+    return F.sum(dec("l_extendedprice") * (dec(F.lit(1)) - dec("l_discount")))
 
 
-REVENUE_SQL = "SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))"
+REVENUE_SQL = f"SUM({dec_sql('l_extendedprice')} * ({dec_sql('1')} - {dec_sql('l_discount')}))"
 
 
 # ---------------------------------------------------------------------------
@@ -48,8 +38,8 @@ REVENUE_SQL = "SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(1
     "q01_pricing_summary",
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_qty,
-           ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_base_price,
+           {exact_sum_sql("l_quantity", 2)} AS sum_qty,
+           {exact_sum_sql("l_extendedprice", 2)} AS sum_base_price,
            ROUND(CAST({REVENUE_SQL} AS DOUBLE), 2) AS sum_disc_price,
            COUNT(*) AS count_order
     FROM lineitem
@@ -64,9 +54,9 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= cutoff)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _money(F.sum(_dec("l_quantity")), "sum_qty"),
-            _money(F.sum(_dec("l_extendedprice")), "sum_base_price"),
-            _money(_revenue(), "sum_disc_price"),
+            exact_sum("l_quantity", 2).alias("sum_qty"),
+            exact_sum("l_extendedprice", 2).alias("sum_base_price"),
+            F.round(_revenue().cast("double"), 2).alias("sum_disc_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -107,7 +97,7 @@ def q02_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.select("o_orderkey", "o_custkey"), per_order.l_orderkey == orders.o_orderkey
         )
         .groupBy("o_custkey")
-        .agg(_money(F.sum("__rev"), "revenue"), F.sum("__n").alias("n_items"))
+        .agg(F.round(F.sum("__rev").cast("double"), 2).alias("revenue"), F.sum("__n").alias("n_items"))
     )
     joined = R.join_broadcast_dim(
         per_cust, customer.select("c_custkey", "c_name"), on=[per_cust.o_custkey == customer.c_custkey]
@@ -147,7 +137,9 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         on=[li.l_orderkey == F.col("o_orderkey")],
     )
-    agg = joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(_money(_revenue(), "revenue"))
+    agg = joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(
+        F.round(_revenue().cast("double"), 2).alias("revenue")
+    )
     return R.topk_global(
         agg.select(
             "l_orderkey", "revenue", F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"), "o_orderpriority"
@@ -189,7 +181,7 @@ def q05_region_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "n_name")
     fact = li.join(orders, li.l_orderkey == orders.o_orderkey)
     joined = R.join_broadcast_dim(fact, dims, on=[F.col("o_custkey") == dims.c_custkey])
-    return joined.groupBy("n_name").agg(_money(_revenue(), "revenue"))
+    return joined.groupBy("n_name").agg(F.round(_revenue().cast("double"), 2).alias("revenue"))
 
 
 # ---------------------------------------------------------------------------
@@ -228,9 +220,9 @@ def q06_project_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q07_null_drop_filter",
-    oracle="""
+    oracle=f"""
     SELECT event_type, COUNT(*) AS cnt,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
+           {exact_sum_sql("value", 2)} AS sum_value
     FROM events
     WHERE event_id IS NOT NULL AND ts IS NOT NULL AND user_id IS NOT NULL
       AND event_type IS NOT NULL AND value IS NOT NULL AND props IS NOT NULL
@@ -242,7 +234,7 @@ def q07_null_drop_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = R.null_drop(load_table(spark, sf_dir, "events")).filter(F.col("value") > 5.0)
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"),
-        _money(F.sum(_dec("value")), "sum_value"),
+        exact_sum("value", 2).alias("sum_value"),
     )
 
 
@@ -446,9 +438,9 @@ def q17_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q18_cube",
-    oracle="""
+    oracle=f"""
     SELECT COALESCE(r_name, 'ALL') AS region, COALESCE(c_mktsegment, 'ALL') AS segment,
-           COUNT(*) AS n, CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_bal
+           COUNT(*) AS n, {exact_sum_sql("c_acctbal")} AS sum_bal
     FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
                     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY CUBE(r_name, c_mktsegment)
@@ -467,7 +459,7 @@ def q18_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.cube("r_name", "c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(_dec("c_acctbal")).cast("double").alias("sum_bal"),
+            exact_sum("c_acctbal").alias("sum_bal"),
         )
         .select(
             F.coalesce("r_name", F.lit("ALL")).alias("region"),
@@ -513,9 +505,9 @@ def q19_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q54_pivot",
     oracle=f"""
     SELECT o_orderpriority,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) FILTER (WHERE o_orderstatus = 'F') AS DOUBLE), 2) AS F,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE), 2) AS O,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) FILTER (WHERE o_orderstatus = 'P') AS DOUBLE), 2) AS P
+           ROUND(CAST(SUM({dec_sql("o_totalprice")}) FILTER (WHERE o_orderstatus = 'F') AS DOUBLE), 2) AS F,
+           ROUND(CAST(SUM({dec_sql("o_totalprice")}) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE), 2) AS O,
+           ROUND(CAST(SUM({dec_sql("o_totalprice")}) FILTER (WHERE o_orderstatus = 'P') AS DOUBLE), 2) AS P
     FROM orders GROUP BY o_orderpriority
     """,
 )
@@ -524,7 +516,7 @@ def q54_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.round(F.sum(_dec("o_totalprice")).cast("double"), 2))
+        .agg(exact_sum("o_totalprice", 2))
     )
 
 
@@ -540,13 +532,13 @@ def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
 # Predicate "price > 2 × customer avg" is evaluated EXACTLY as
 # price·count > 2·sum over decimals (float avg would be summation-order
 # dependent and could flip boundary rows between engines).
-_Q56_SQL = """
+_Q56_SQL = f"""
 SELECT o_orderkey, o_custkey,
-       ROUND(CAST(CAST(o_totalprice AS DECIMAL(18,4)) AS DOUBLE), 2) AS price
+       ROUND(CAST({dec_sql("o_totalprice")} AS DOUBLE), 2) AS price
 FROM orders o
-WHERE CAST(o_totalprice AS DECIMAL(18,4))
+WHERE {dec_sql("o_totalprice")}
       * (SELECT COUNT(*) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-      > 2 * (SELECT SUM(CAST(o3.o_totalprice AS DECIMAL(18,4)))
+      > 2 * (SELECT SUM({dec_sql("o3.o_totalprice")})
              FROM orders o3 WHERE o3.o_custkey = o.o_custkey)
 """
 
@@ -615,10 +607,10 @@ def q58_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q62_salted_agg",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag AS flag,
            CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 2) AS total_qty,
+           {exact_sum_sql("l_quantity", 2)} AS total_qty,
            strftime(l_shipdate_max, '%Y-%m-%d') AS l_shipdate_max
     FROM (SELECT l_returnflag, l_quantity,
                  MAX(l_shipdate) OVER (PARTITION BY l_returnflag) AS l_shipdate_max
@@ -631,7 +623,7 @@ def q62_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
-        F.col("l_quantity").cast("decimal(18,4)").alias("qty_dec"),
+        dec("l_quantity").alias("qty_dec"),
         "l_shipdate",
     )
     out = salted_agg(
@@ -718,9 +710,9 @@ def q64_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q67_salted_join",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderpriority, COUNT(*) AS n,
-           ROUND(CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,4))) AS DOUBLE), 2) AS qty
+           {exact_sum_sql("l.l_quantity", 2)} AS qty
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderpriority
     """,
@@ -735,7 +727,7 @@ def q67_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double"), 2).alias("qty"),
+        exact_sum("l_quantity", 2).alias("qty"),
     )
 
 
@@ -842,8 +834,8 @@ def q92_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window plan the DataFrame API would build. Tie-broken on c_custkey so
 # the LIMIT cut is deterministic in both engines.
 # ---------------------------------------------------------------------------
-_Q133_SQL = """
-SELECT n.n_name, t.c_custkey, ROUND(CAST(CAST(t.c_acctbal AS DECIMAL(18,4)) AS DOUBLE), 2) AS acctbal
+_Q133_SQL = f"""
+SELECT n.n_name, t.c_custkey, ROUND(CAST({dec_sql("t.c_acctbal")} AS DOUBLE), 2) AS acctbal
 FROM nation n,
      LATERAL (SELECT c_custkey, c_acctbal FROM customer c
               WHERE c.c_nationkey = n.n_nationkey

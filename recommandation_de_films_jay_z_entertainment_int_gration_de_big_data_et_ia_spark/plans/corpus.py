@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum, exact_sum_sql
 from ..functions.text import (
     MD5_SPLIT_BUCKET_SQL,
     TOKS_SQL,
@@ -1802,7 +1803,7 @@ _DR_FLOOR = 0.2
       FROM documents GROUP BY source),
     tot AS (
       SELECT CAST(SUM(n) AS DOUBLE) AS n_total,
-             CAST(SUM(CAST(proxy * n AS DECIMAL(18,4))) AS DOUBLE) / SUM(n)
+             {exact_sum_sql("proxy * n")} / SUM(n)
                AS proxy_all
       FROM per),
     raw AS (
@@ -1832,10 +1833,7 @@ def q357_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = per.agg(
         F.sum("n").cast("double").alias("n_total"),
-        (
-            F.sum((F.col("proxy") * F.col("n")).cast("decimal(18,4)")).cast("double")
-            / F.sum("n")
-        ).alias("proxy_all"),
+        (exact_sum(F.col("proxy") * F.col("n")) / F.sum("n")).alias("proxy_all"),
     )
     w0 = F.col("n") / F.col("n_total")
     upd = w0 * (

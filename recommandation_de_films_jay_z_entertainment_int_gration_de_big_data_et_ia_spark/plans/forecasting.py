@@ -8,9 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec, dec_sql, exact_sum, exact_sum_sql
 from ..sources.readers import load_table
 from .catalog import register
-from .core import _dec, _money
 
 
 # ---------------------------------------------------------------------------
@@ -20,7 +20,7 @@ from .core import _dec, _money
 @register(
     "q52_forecast_revenue",
     oracle=f"""
-    SELECT ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE), 2) AS promo_revenue,
+    SELECT ROUND(CAST(SUM({dec_sql("l_extendedprice")} * {dec_sql("l_discount")}) AS DOUBLE), 2) AS promo_revenue,
            COUNT(*) AS n
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -41,7 +41,7 @@ def q52_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            _money(F.sum(_dec("l_extendedprice") * _dec("l_discount")), "promo_revenue"),
+            F.round(F.sum(dec("l_extendedprice") * dec("l_discount")).cast("double"), 2).alias("promo_revenue"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -64,16 +64,16 @@ def q52_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q183_cusum_drift",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE hourly AS (
       SELECT event_type,
              CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_s,
-             CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
+             {exact_sum_sql("value")} AS x
       FROM events GROUP BY event_type, hour_s),
     stats AS (
       SELECT event_type, COUNT(*) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) AS sv,
-             CAST(SUM(CAST(x AS DECIMAL(18,4)) * CAST(x AS DECIMAL(18,4))) AS DOUBLE) AS svv
+             {exact_sum_sql("x")} AS sv,
+             CAST(SUM({dec_sql("x")} * {dec_sql("x")}) AS DOUBLE) AS svv
       FROM hourly GROUP BY event_type),
     param AS (
       SELECT event_type, sv / n AS mean,
@@ -105,15 +105,13 @@ def q183_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_trunc("hour", F.col("ts")).cast("long").alias("hour_s"),
         )
-        .agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("x_dec"))
+        .agg(F.sum(dec("value")).alias("x_dec"))
         .select("event_type", "hour_s", F.col("x_dec").cast("double").alias("x"))
     )
     stats = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast("decimal(18,4)")).cast("double").alias("sv"),
-        F.sum(F.col("x").cast("decimal(18,4)") * F.col("x").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("svv"),
+        exact_sum("x").alias("sv"),
+        F.sum(dec("x") * dec("x")).cast("double").alias("svv"),
     )
     param = stats.select(
         "event_type",
@@ -154,10 +152,10 @@ def q183_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q210_peak_detection",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-             SUM(CAST(value AS DECIMAL(18,4))) AS y
+             SUM({dec_sql("value")}) AS y
       FROM events GROUP BY event_type, day),
     f AS (
       SELECT event_type, day, y,
@@ -178,7 +176,7 @@ def q210_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", (F.col("ts").cast("long") / 86400).cast("bigint").alias("day")
-    ).agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("y"))
+    ).agg(F.sum(dec("value")).alias("y"))
     w = Window.partitionBy("event_type").orderBy("day")
     w7 = w.rowsBetween(-7, -1)
     f = daily.select(
@@ -214,10 +212,10 @@ def q210_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q218_autocorrelation",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-             CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS y
+             {dec_sql(f"SUM({dec_sql('value')})")} AS y
       FROM events GROUP BY event_type, day),
     lags AS (SELECT 1 AS lag UNION ALL SELECT 2 UNION ALL SELECT 7),
     j AS (
@@ -241,7 +239,7 @@ def q218_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", (F.col("ts").cast("long") / 86400).cast("bigint").alias("day")
-    ).agg(F.sum(F.col("value").cast("decimal(18,4)")).cast("decimal(18,4)").alias("y"))
+    ).agg(dec(F.sum(dec("value"))).alias("y"))
     lags = spark.range(1).select(F.explode(F.array(F.lit(1), F.lit(2), F.lit(7))).alias("lag"))
     a = daily.select("event_type", "day", F.col("y").alias("x"))
     b = daily.select(F.col("event_type").alias("et2"), F.col("day").alias("day2"), F.col("y").alias("z"))
@@ -284,10 +282,10 @@ def q218_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q219_seasonal_backtest",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-             SUM(CAST(value AS DECIMAL(18,4))) AS y
+             SUM({dec_sql("value")}) AS y
       FROM events GROUP BY event_type, day),
     j AS (
       SELECT a.event_type, l.lag, a.y AS actual, b.y AS fc
@@ -311,7 +309,7 @@ def q219_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", (F.col("ts").cast("long") / 86400).cast("bigint").alias("day")
-    ).agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("y"))
+    ).agg(F.sum(dec("value")).alias("y"))
     lags = spark.range(1).select(F.explode(F.array(F.lit(1), F.lit(7))).alias("lag"))
     a = daily.filter(F.col("y") > 0).select("event_type", "day", F.col("y").alias("actual"))
     b = daily.select(F.col("event_type").alias("et2"), F.col("day").alias("day2"), F.col("y").alias("fc"))
@@ -359,7 +357,7 @@ _HOLT_A, _HOLT_B = 0.5, 0.25
     WITH RECURSIVE daily AS (
       SELECT event_type,
              CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_s,
-             CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
+             {exact_sum_sql("value")} AS x
       FROM events GROUP BY event_type, day_s),
     seq AS (
       SELECT event_type, day_s, x,
@@ -389,7 +387,7 @@ def q239_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(
             "event_type", F.date_trunc("day", F.col("ts")).cast("long").alias("day_s")
         )
-        .agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("x_dec"))
+        .agg(F.sum(dec("value")).alias("x_dec"))
         .select("event_type", "day_s", F.col("x_dec").cast("double").alias("x"))
     )
 

@@ -15,11 +15,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec, dec_sql
 from ..functions.text import TOKS_SQL, md5_hex_int_sql, tokens
 from ..operators import recommend as REC
 from ..sources.readers import load_table
 from .catalog import register
-from .core import REVENUE_SQL, _dec, _revenue
+from .core import REVENUE_SQL, _revenue
 
 
 def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,7 +505,7 @@ def q200_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH per_part AS (
       SELECT l_partkey AS partkey,
              {REVENUE_SQL} AS rev,
-             SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty
+             SUM({dec_sql("l_quantity")}) AS qty
       FROM lineitem GROUP BY l_partkey),
     ra AS (SELECT partkey, ROW_NUMBER() OVER (ORDER BY rev DESC, partkey ASC) AS r
            FROM per_part QUALIFY r <= 50),
@@ -529,7 +530,7 @@ def q201_ranking_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-part shuffle run once instead of once per ranking branch
     per_part = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
         _revenue().alias("rev"),
-        F.sum(_dec("l_quantity")).alias("qty"),
+        F.sum(dec("l_quantity")).alias("qty"),
     ).localCheckpoint(eager=False)
     ra = per_part.select(
         "partkey", F.row_number().over(Window.orderBy(F.desc("rev"), F.asc("partkey"))).alias("r_rev")
@@ -644,12 +645,12 @@ def q216_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q224_rank_movers",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT p.p_brand AS brand,
              CAST(floor(floor(epoch(o.o_orderdate)) / 604800) AS BIGINT) AS wk,
-             CAST(l.l_extendedprice AS DECIMAL(18,4))
-               * (CAST(1 AS DECIMAL(18,4)) - CAST(l.l_discount AS DECIMAL(18,4))) AS rev
+             {dec_sql("l.l_extendedprice")}
+               * ({dec_sql("1")} - {dec_sql("l.l_discount")}) AS rev
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
                       JOIN part p ON l.l_partkey = p.p_partkey),
     mx AS (SELECT MAX(wk) AS w1 FROM base),
@@ -674,7 +675,6 @@ def q224_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
     # o_orderdate is TIMESTAMP_NTZ: pure NTZ arithmetic (readers.py lesson)
     micros = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', o_orderdate)"
@@ -686,7 +686,7 @@ def q224_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("p_brand").alias("brand"),
             wk.alias("wk"),
-            (dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).alias("rev"),
+            (dec("l_extendedprice") * (dec(F.lit(1)) - dec("l_discount"))).alias("rev"),
         )
     )
     mx = base.groupBy().agg(F.max("wk").alias("w1"))
@@ -756,10 +756,10 @@ def q226_effective_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q228_basket_sizes",
-    oracle="""
+    oracle=f"""
     WITH per_order AS (
       SELECT l_orderkey, COUNT(*) AS n_lines,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS gross
+             SUM({dec_sql("l_extendedprice")}) AS gross
       FROM lineitem GROUP BY l_orderkey),
     b AS (
       SELECT CASE WHEN n_lines = 1 THEN '1' WHEN n_lines = 2 THEN '2'
@@ -778,7 +778,7 @@ def q228_basket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     per_order = li.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).alias("gross"),
+        F.sum(dec("l_extendedprice")).alias("gross"),
     )
     bucket = (
         F.when(F.col("n_lines") == 1, "1")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec, dec_sql, exact_sum, exact_sum_sql
 from ..functions.text import MD5_SPLIT_BUCKET_SQL, SPLIT_SQL, md5_hex_int_sql, md5_split
 from ..sources.readers import load_table
 from .catalog import register
@@ -78,12 +79,12 @@ def q60_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q71_zscore_outliers",
-    oracle="""
+    oracle=f"""
     WITH stats AS (
       SELECT event_type,
              CAST(COUNT(*) AS DOUBLE) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS s,
-             CAST(SUM(CAST(value AS DECIMAL(18,4)) * CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sq
+             {exact_sum_sql("value")} AS s,
+             CAST(SUM({dec_sql("value")} * {dec_sql("value")}) AS DOUBLE) AS sq
       FROM events GROUP BY event_type)
     SELECT e.event_id, e.event_type,
            ROUND((e.value - (s / n)) / sqrt((sq / n) - ((s / n) * (s / n))), 4) AS z
@@ -93,11 +94,10 @@ def q60_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q71_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    dec = F.col("value").cast("decimal(18,4)")
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dec).cast("double").alias("s"),
-        F.sum(dec * dec).cast("double").alias("sq"),
+        exact_sum("value").alias("s"),
+        F.sum(dec("value") * dec("value")).cast("double").alias("sq"),
     )
     joined = ev.join(F.broadcast(stats), "event_type")
     mean = F.col("s") / F.col("n")
@@ -114,12 +114,12 @@ def q71_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q72_rank_distribution",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey, o_orderkey,
            CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
            ROUND(PERCENT_RANK() OVER w, 4) AS pr,
            ROUND(CUME_DIST() OVER w, 4) AS cd,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
+           ROUND(CAST(SUM({dec_sql("o_totalprice")}) OVER (
              PARTITION BY o_custkey ORDER BY date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
              RANGE BETWEEN 7 PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS spend_7d
     FROM orders
@@ -138,7 +138,7 @@ def q72_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ntile(4).over(w).cast("bigint").alias("quartile"),
         F.round(F.percent_rank().over(w), 4).alias("pr"),
         F.round(F.cume_dist().over(w), 4).alias("cd"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(wr).cast("double"), 2).alias("spend_7d"),
+        F.round(F.sum(dec("o_totalprice")).over(wr).cast("double"), 2).alias("spend_7d"),
     )
 
 
@@ -508,8 +508,8 @@ def q167_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q174 — Welch's t-test between two event cohorts (the A/B-test
 # primitive behind q139's CUPED): per-cohort n / mean / variance from
-# EXACT decimal sums (sum, sum-of-squares of the DECIMAL(18,4)-cast
-# value — decimal x decimal products are exact, so both engines feed
+# EXACT decimal sums (sum, sum-of-squares of the ``functions.exact``
+# decimal value — decimal x decimal products are exact, so both engines feed
 # bit-identical doubles into the final formula), then the Welch
 # statistic and Satterthwaite df in identically-shaped double
 # arithmetic, single-rounded. One scan, one 2-group aggregate — the
@@ -517,12 +517,12 @@ def q167_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q174_welch_ttest",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT event_type,
              COUNT(*) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sv,
-             CAST(SUM(CAST(value AS DECIMAL(18,4)) * CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS svv
+             {exact_sum_sql("value")} AS sv,
+             CAST(SUM({dec_sql("value")} * {dec_sql("value")}) AS DOUBLE) AS svv
       FROM events WHERE event_type IN ('click', 'view')
       GROUP BY event_type),
     m AS (
@@ -552,11 +552,10 @@ def q174_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view")
     )
-    vdec = F.col("value").cast("decimal(18,4)")
     s = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(vdec).cast("double").alias("sv"),
-        F.sum(vdec * vdec).cast("double").alias("svv"),
+        exact_sum("value").alias("sv"),
+        F.sum(dec("value") * dec("value")).cast("double").alias("svv"),
     )
     m = s.select(
         "event_type",
@@ -664,7 +663,7 @@ _CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 def _corr_oracle() -> str:
     sums = ["COUNT(*) AS n"]
     for c in _CORR_COLS:
-        sums.append(f"CAST(SUM(CAST({c} AS DECIMAL(18,4))) AS DOUBLE) AS s_{c}")
+        sums.append(f"{exact_sum_sql(c)} AS s_{c}")
     for i, a in enumerate(_CORR_COLS):
         for b in _CORR_COLS[i:]:
             # DECIMAL(28,4) operands force int128 storage in DuckDB —
@@ -691,14 +690,10 @@ def q176_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count(F.lit(1)).alias("n")]
     for c in _CORR_COLS:
-        aggs.append(F.sum(F.col(c).cast("decimal(18,4)")).cast("double").alias(f"s_{c}"))
+        aggs.append(exact_sum(c).alias(f"s_{c}"))
     for i, a in enumerate(_CORR_COLS):
         for b in _CORR_COLS[i:]:
-            aggs.append(
-                F.sum(F.col(a).cast("decimal(18,4)") * F.col(b).cast("decimal(18,4)"))
-                .cast("double")
-                .alias(f"p_{a}_{b}")
-            )
+            aggs.append(F.sum(dec(a) * dec(b)).cast("double").alias(f"p_{a}_{b}"))
     s = li.groupBy().agg(*aggs)
     # ONE projection exploding an array of per-pair structs — a UNION of
     # per-pair selects would re-plan (and re-scan) the aggregate subtree
@@ -885,9 +880,9 @@ def q180_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q181_gini_revenue",
-    oracle="""
+    oracle=f"""
     WITH per_cust AS (
-      SELECT o_custkey AS custkey, SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS rev
+      SELECT o_custkey AS custkey, SUM({dec_sql("o_totalprice")}) AS rev
       FROM orders GROUP BY o_custkey),
     ranked AS (
       SELECT rev, ROW_NUMBER() OVER (ORDER BY rev ASC, custkey ASC) AS i
@@ -907,7 +902,7 @@ def q180_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q181_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("rev")
+        F.sum(dec("o_totalprice")).alias("rev")
     )
     ranked = per_cust.select(
         "rev", F.row_number().over(Window.orderBy(F.asc("rev"), F.asc("custkey"))).alias("i")
@@ -1092,10 +1087,10 @@ def q197_group_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q202_weighted_median",
-    oracle="""
+    oracle=f"""
     WITH j AS (
       SELECT c.c_mktsegment AS segment, l.l_extendedprice AS v,
-             CAST(l.l_quantity AS DECIMAL(18,4)) AS w, l.l_orderkey
+             {dec_sql("l.l_quantity")} AS w, l.l_orderkey
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
                       JOIN customer c ON o.o_custkey = c.c_custkey),
     r AS (
@@ -1109,7 +1104,7 @@ def q197_group_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
              ROW_NUMBER() OVER (PARTITION BY segment ORDER BY cum_w, v) AS rn
       FROM r WHERE cum_w * 2 >= total_w)
     SELECT segment,
-           CAST(CAST(total_w AS DECIMAL(18,4)) AS DOUBLE) AS total_weight,
+           CAST({dec_sql("total_w")} AS DOUBLE) AS total_weight,
            ROUND(v, 2) AS weighted_median_price
     FROM hit WHERE rn = 1
     """,
@@ -1124,7 +1119,7 @@ def q202_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("c_mktsegment").alias("segment"),
             F.col("l_extendedprice").alias("v"),
-            F.col("l_quantity").cast("decimal(18,4)").alias("w"),
+            dec("l_quantity").alias("w"),
             "l_orderkey",
         )
     )
@@ -1154,9 +1149,9 @@ def q202_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q203_lorenz_deciles",
-    oracle="""
+    oracle=f"""
     WITH per_cust AS (
-      SELECT o_custkey AS custkey, SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS rev
+      SELECT o_custkey AS custkey, SUM({dec_sql("o_totalprice")}) AS rev
       FROM orders GROUP BY o_custkey),
     d AS (SELECT custkey, rev,
                  NTILE(10) OVER (ORDER BY rev ASC, custkey ASC) AS decile
@@ -1176,7 +1171,7 @@ def q202_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q203_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("rev")
+        F.sum(dec("o_totalprice")).alias("rev")
     )
     d = per_cust.select(
         "rev", F.ntile(10).over(Window.orderBy(F.asc("rev"), F.asc("custkey"))).alias("decile")
@@ -1474,7 +1469,7 @@ def q214_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q223_winsorize",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT event_type, value,
              ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
@@ -1493,8 +1488,8 @@ def q214_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
            ROUND(MAX(p1), 2) AS p1, ROUND(MAX(p99), 2) AS p99,
            CAST(SUM(CASE WHEN value != wv THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / MAX(n), 6) AS mean_before,
-           ROUND(CAST(SUM(CAST(wv AS DECIMAL(18,4))) AS DOUBLE) / MAX(n), 6) AS mean_after
+           ROUND({exact_sum_sql("value")} / MAX(n), 6) AS mean_before,
+           ROUND({exact_sum_sql("wv")} / MAX(n), 6) AS mean_after
     FROM w GROUP BY event_type
     """,
 )
@@ -1524,8 +1519,8 @@ def q223_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.max("p1"), 2).alias("p1"),
         F.round(F.max("p99"), 2).alias("p99"),
         F.sum(F.when(F.col("value") != F.col("wv"), 1).otherwise(0)).cast("bigint").alias("n_clamped"),
-        F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double") / F.max("n"), 6).alias("mean_before"),
-        F.round(F.sum(F.col("wv").cast("decimal(18,4)")).cast("double") / F.max("n"), 6).alias("mean_after"),
+        F.round(exact_sum("value") / F.max("n"), 6).alias("mean_before"),
+        F.round(exact_sum("wv") / F.max("n"), 6).alias("mean_after"),
     )
 
 
@@ -1540,11 +1535,11 @@ def q223_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q245_theil_sen",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
              CAST(epoch(date_trunc('day', ts)) // 86400 AS BIGINT) AS d,
-             CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
+             {exact_sum_sql("value")} AS x
       FROM events GROUP BY event_type, d),
     slopes AS (
       SELECT a.event_type, (b.x - a.x) / (b.d - a.d) AS slope
@@ -1570,7 +1565,7 @@ def q245_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("d"),
         )
-        .agg(F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("x"))
+        .agg(exact_sum("value").alias("x"))
     )
     a = daily.select("event_type", F.col("d").alias("da"), F.col("x").alias("xa"))
     b = daily.select("event_type", F.col("d").alias("db"), F.col("x").alias("xb"))
@@ -1626,7 +1621,7 @@ _BOOT_T = (24113, 48226, 60281, 64292)
                   WHEN {md5_hex_int_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)", 4)} < {_BOOT_T[2]} THEN 2
                   WHEN {md5_hex_int_sql("CAST(o_orderkey AS VARCHAR) || '|' || CAST(rep.r AS VARCHAR)", 4)} < {_BOOT_T[3]} THEN 3
                   ELSE 4 END AS cnt,
-             CAST(o_totalprice AS DECIMAL(18,4)) AS price
+             {dec_sql("o_totalprice")} AS price
       FROM orders o CROSS JOIN rep),
     means AS (
       SELECT o_orderpriority, r,
@@ -1643,7 +1638,7 @@ _BOOT_T = (24113, 48226, 60281, 64292)
       FROM ranked GROUP BY o_orderpriority),
     pt AS (
       SELECT o_orderpriority,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS point_mean
+             {exact_sum_sql("o_totalprice")} / COUNT(*) AS point_mean
       FROM orders GROUP BY o_orderpriority)
     SELECT pt.o_orderpriority, ROUND(pt.point_mean, 4) AS point_mean,
            ROUND(ci.lo, 4) AS ci_lo, ROUND(ci.hi, 4) AS ci_hi
@@ -1685,7 +1680,7 @@ def q249_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     drawn = orders.select(
         F.col("o_orderkey").cast("string").alias("__k"),
         "o_orderpriority",
-        F.col("o_totalprice").cast("decimal(18,4)").alias("price"),
+        dec("o_totalprice").alias("price"),
     ).select("o_orderpriority", rep, "price", "__k").select(
         "o_orderpriority", "r", h.alias("__h"), "price"
     ).select("o_orderpriority", "r", cnt.alias("cnt"), "price")
@@ -1707,10 +1702,7 @@ def q249_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pt = orders.groupBy("o_orderpriority").agg(
-        (
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("point_mean")
+        (exact_sum("o_totalprice") / F.count(F.lit(1))).alias("point_mean")
     )
     return (
         pt.join(ci, "o_orderpriority")

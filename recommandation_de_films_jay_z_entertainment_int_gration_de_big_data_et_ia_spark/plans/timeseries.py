@@ -13,12 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec, dec_sql, exact_sum, exact_sum_sql
 from ..sources.readers import load_table
-from ..streaming.windows import session_stats, sum_value, tumbling_counts
+from ..streaming.windows import session_stats, tumbling_counts
 from .catalog import register
-from .core import _dec, _money
-
-SUM_VALUE_SQL = "ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)"
 
 
 # The oracle of q44 (batch) and q66 (streaming): both run
@@ -26,7 +24,7 @@ SUM_VALUE_SQL = "ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)"
 TUMBLING_ORACLE = f"""
     SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start_s, event_type,
            COUNT(*) AS n_events,
-           {SUM_VALUE_SQL} AS sum_value
+           {exact_sum_sql("value", 2)} AS sum_value
     FROM events
     GROUP BY window_start_s, event_type
     """
@@ -50,7 +48,7 @@ def q44_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 1800) * 1800 AS ws, value FROM events
       UNION ALL
       SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 1800) * 1800 - 1800 AS ws, value FROM events)
-    SELECT ws AS window_start_s, COUNT(*) AS n_events, {SUM_VALUE_SQL} AS sum_value
+    SELECT ws AS window_start_s, COUNT(*) AS n_events, {exact_sum_sql("value", 2)} AS sum_value
     FROM assigned GROUP BY ws
     """,
 )
@@ -58,7 +56,7 @@ def q45_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), sum_value().alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), exact_sum("value", 2).alias("sum_value"))
         .select(F.col("w.start").cast("long").alias("window_start_s"), "n_events", "sum_value")
     )
 
@@ -137,7 +135,7 @@ _JAN1_2024 = 1704067200  # 2024-01-01 00:00:00 UTC
           JOIN iv ON ts_s >= w_start_s AND ts_s < w_end_s)
     SELECT CAST(w_start_s AS BIGINT) AS w_start_s,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           {SUM_VALUE_SQL} AS sum_value
+           {exact_sum_sql("value", 2)} AS sum_value
     FROM j GROUP BY w_start_s ORDER BY w_start_s
     """,
 )
@@ -156,7 +154,7 @@ def q84_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         joined.groupBy("w_start_s")
-        .agg(F.count(F.lit(1)).alias("n_events"), sum_value().alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), exact_sum("value", 2).alias("sum_value"))
         .orderBy("w_start_s")
     )
 
@@ -1231,7 +1229,7 @@ def q276_es_pipeline_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(date_part('year', o_orderdate) AS INT) AS yr,
            CAST(date_part('month', o_orderdate) AS INT) AS mo,
            COUNT(*) AS n_orders,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS total
+           {exact_sum_sql("o_totalprice", 2)} AS total
     FROM orders
     GROUP BY yr, mo
     """,
@@ -1244,7 +1242,7 @@ def q53_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            _money(F.sum(_dec("o_totalprice")), "total"),
+            exact_sum("o_totalprice", 2).alias("total"),
         )
     )
 
@@ -1291,9 +1289,9 @@ def q59_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q65_running_window",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey, o_orderkey,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+           ROUND(CAST(SUM({dec_sql("o_totalprice")})
                  OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS running_total,
            CAST(LAG(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS prev_order
@@ -1308,7 +1306,7 @@ def q65_running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.round(
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(wf).cast("double"), 2
+            F.sum(dec("o_totalprice")).over(wf).cast("double"), 2
         ).alias("running_total"),
         F.lag("o_orderkey").over(w).cast("bigint").alias("prev_order"),
     )
@@ -1500,11 +1498,11 @@ def q168_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q191_lag_features",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
              CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-             SUM(CAST(value AS DECIMAL(18,4))) AS y
+             SUM({dec_sql("value")}) AS y
       FROM events GROUP BY event_type, day),
     f AS (
       SELECT event_type, day,
@@ -1524,7 +1522,7 @@ def q191_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", (F.col("ts").cast("long") / 86400).cast("bigint").alias("day")
-    ).agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("y"))
+    ).agg(F.sum(dec("value")).alias("y"))
     w = Window.partitionBy("event_type").orderBy("day")
     w7 = w.rowsBetween(-7, -1)
     f = daily.select(
@@ -1697,7 +1695,7 @@ def q211_streaming_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST((CAST(floor(epoch(ts)) AS BIGINT) // 86400 + 4) % 7 AS INT) AS dow,
            CAST((CAST(floor(epoch(ts)) AS BIGINT) % 86400) // 3600 AS INT) AS hour,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           {SUM_VALUE_SQL} AS sum_value
+           {exact_sum_sql("value", 2)} AS sum_value
     FROM events GROUP BY dow, hour
     """,
 )
@@ -1711,7 +1709,7 @@ def q225_punchcard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            sum_value().alias("sum_value"),
+            exact_sum("value", 2).alias("sum_value"),
         )
     )
 

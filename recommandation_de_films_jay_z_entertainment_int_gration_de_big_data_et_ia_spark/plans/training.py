@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum, exact_sum_sql
 from ..functions.text import TOKS_SQL, md5_hex_int_sql, tokens
 from ..sources.readers import load_table
 from .catalog import register
@@ -119,7 +120,7 @@ _CURR_STAGES = 4
     SELECT lang, CAST((cum - 1) * {_CURR_STAGES} // total AS BIGINT) AS stage,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_tok) AS BIGINT) AS tokens,
-           ROUND(CAST(SUM(CAST(ttr AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 6)
+           ROUND({exact_sum_sql("ttr")} / COUNT(*), 6)
              AS avg_ttr
     FROM c GROUP BY lang, stage ORDER BY lang, stage
     """,
@@ -153,11 +154,7 @@ def q304_quality_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("tokens"),
-            F.round(
-                F.sum(F.col("ttr").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_ttr"),
+            F.round(exact_sum("ttr") / F.count(F.lit(1)), 6).alias("avg_ttr"),
         )
         .orderBy("lang", "stage")
     )
@@ -626,7 +623,7 @@ _TB_FLOOR = 0.2
       FROM documents GROUP BY source),
     tot AS (
       SELECT CAST(SUM(n) AS DOUBLE) AS n_total,
-             CAST(SUM(CAST(proxy * n AS DECIMAL(18,4))) AS DOUBLE) / SUM(n)
+             {exact_sum_sql("proxy * n")} / SUM(n)
                AS proxy_all
       FROM per),
     raw AS (
@@ -665,10 +662,7 @@ def q362_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = per.agg(
         F.sum("n").cast("double").alias("n_total"),
-        (
-            F.sum((F.col("proxy") * F.col("n")).cast("decimal(18,4)")).cast("double")
-            / F.sum("n")
-        ).alias("proxy_all"),
+        (exact_sum(F.col("proxy") * F.col("n")) / F.sum("n")).alias("proxy_all"),
     )
     w0 = F.col("n") / F.col("n_total")
     upd = w0 * (

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.exact import exact_sum
 from ..sources.readers import normalize_event_ts
 
 
@@ -46,13 +47,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sum_value() -> Column:
-    """Exact-DECIMAL sum of ``value``, cast to double and rounded to 2
-    places: the catalog's money-sum rule, so a drained stream and the
-    batch query agree bit-for-bit."""
-    return F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 2)
-
-
 def tumbling_counts(events: DataFrame) -> DataFrame:
     """1-hour tumbling count and ``sum_value`` per event_type: batch q44
     over ``load_table``'s events, q66 over ``stream_events``. The 2-hour
@@ -60,7 +54,7 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
     return (
         events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), sum_value().alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), exact_sum("value", 2).alias("sum_value"))
         .select(
             F.col("w.start").cast("long").alias("window_start_s"),
             "event_type",

@@ -448,6 +448,7 @@ def test_persisted_index_pit_isolated_from_rebuild(spark, raw, words, tmp_path):
 _NO_SPARK = """
 import json, sys
 sys.modules["pyspark"] = None  # any pyspark import now raises ImportError
+sys.modules["pandas"] = None  # and so does any pandas import
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark import http_api
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
     movieindex)
