@@ -16,8 +16,12 @@ the north-star extension surface (BASELINE.json), built Spark-first.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..functions.text import (
     md5_hex,
@@ -406,20 +410,76 @@ def simhash_pairs(
     return cand.select("id_a", "id_b", ham).filter(F.col("hamming") <= max_hamming)
 
 
+# Largest symmetric edge set ``dedup_clusters`` resolves on the driver:
+# 1M int64 pairs are 16 MB of Arrow, and a union-find over them is a few
+# numpy passes; larger graphs keep the distributed label propagation.
+DRIVER_EDGE_BOUND = 1_000_000
+
+
+def _min_roots(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Min-root union-find over the code pairs ``(a, b)`` of ``n`` nodes:
+    ``root[x]`` is the smallest code in x's component. Each round hooks
+    every root that has a cross edge onto the smallest root it touches,
+    then compresses the pointers to roots, so the number of trees at
+    least halves per round."""
+    root = np.arange(n)
+    while True:
+        ra, rb = root[a], root[b]
+        cross = ra != rb
+        if not cross.any():
+            return root
+        np.minimum.at(root, np.maximum(ra, rb)[cross], np.minimum(ra, rb)[cross])
+        while not np.array_equal(nxt := root[root], root):
+            root = nxt
+
+
+def _driver_clusters(edges: pa.Table) -> pa.Table:
+    """``(node, cluster_id)`` of the symmetric edge table ``(a, b)``, with
+    the label propagation's answer for a null id: a null node takes the
+    smallest cluster id among its non-null neighbours (null when it has
+    none), and no label crosses a null node."""
+    a, b = (edges.column(c).combine_chunks() for c in ("a", "b"))
+    ids = np.unique(pc.drop_null(a).to_numpy(zero_copy_only=False))
+
+    def code(arr: pa.Array, mask: pa.Array) -> np.ndarray:
+        return np.searchsorted(ids, arr.filter(mask).to_numpy(zero_copy_only=False))
+
+    both = pc.and_(a.is_valid(), b.is_valid())
+    labels = ids[_min_roots(code(a, both), code(b, both), len(ids))]
+    nodes, clusters = pa.array(ids, a.type), pa.array(labels, a.type)
+    if a.null_count:
+        near = labels[code(b, pc.and_(a.is_null(), b.is_valid()))]
+        nodes = pa.concat_arrays([nodes, pa.nulls(1, a.type)])
+        clusters = pa.concat_arrays([clusters, pa.array([near.min() if len(near) else None], a.type)])
+    return pa.table({"node": nodes, "cluster_id": clusters})
+
+
 def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Resolve near-dup ``(id_a, id_b)`` pairs into clusters: connected
-    components by iterative min-label propagation (each node's label
-    converges to the smallest id reachable through the pair graph — the
-    cluster's keeper).
+    components, each node labeled with the smallest id reachable through
+    the pair graph (the cluster's keeper). Returns (node, cluster_id) for
+    every node that appears in a pair.
 
-    Iterative DataFrame algorithm (like ALS): each round is two joins +
-    an aggregate; rounds needed = graph diameter (near-dup clusters are
-    shallow, typically 2-4). Returns (node, cluster_id) for every node
-    that appears in a pair.
+    The upstream plan of ``pairs`` runs once, into a checkpointed
+    symmetric edge set. Two paths follow:
 
-    Always runs to convergence: a label only ever decreases and only
-    ever holds a node id of its component, so the loop terminates within
-    the longest-path length and never returns a split component.
+    - **Driver union-find** when the edge set holds at most
+      ``DRIVER_EDGE_BOUND`` rows (1M, 16 MB of int64 pairs): one
+      ``limit().toArrow()`` collect, ``_min_roots`` over the ids'
+      sorted codes, and the result frame built from the Arrow table.
+      Five Spark jobs, where the loop spends 15-20 on a few hundred
+      edges (Kiveris et al., SoCC 2014: a small graph is cheapest on
+      one machine).
+    - **Label propagation** above the bound, kept for the graphs that
+      outgrow the driver (q78, q90, q117, q199 and q233 call this at
+      sf10): each round is two joins + an aggregate, and pointer jumping cuts
+      the rounds from the graph diameter to about its log. It always
+      runs to convergence: a label only ever decreases and only ever
+      holds a node id of its component, so the loop terminates within
+      the longest-path length and never returns a split component.
+
+    Both paths return the same schema and the same rows, a null id
+    included (``_driver_clusters``).
     """
     edges = (
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
@@ -430,6 +490,12 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
         # re-executes rounds 1..N-1 (quadratic re-computation).
         .localCheckpoint(eager=True)
     )
+    head = edges.limit(DRIVER_EDGE_BOUND + 1).toArrow()
+    if head.num_rows <= DRIVER_EDGE_BOUND:
+        a = edges.schema["a"]
+        schema = StructType([StructField("node", a.dataType, a.nullable),
+                             StructField("cluster_id", a.dataType, True)])
+        return edges.sparkSession.createDataFrame(_driver_clusters(head), schema)
     # Round 1 fused into the init aggregate: propagating from the identity
     # labeling (label(x) = x) yields label(x) = min(x, min neighbor id),
     # which one groupBy over the edge set computes directly — the first

@@ -154,7 +154,14 @@ def _lists(codes: np.ndarray, pos: np.ndarray, n: int) -> pa.ListArray:
 def _dictionary(words) -> tuple[pa.Array, np.ndarray]:
     """The sorted distinct ``words`` and the row of each word in them."""
     keys = pc.unique(words).sort()
-    return keys, pc.index_in(words, value_set=keys).to_numpy()
+    return keys, _numpy(pc.index_in(words, value_set=keys), np.int32)
+
+
+def _numpy(arr, dtype) -> np.ndarray:
+    """The values of ``arr`` (an Array or ChunkedArray without nulls) as a
+    ``dtype`` numpy view, through :func:`_view`."""
+    arr = pc.cast(arr, pa.from_numpy_dtype(dtype))
+    return _view(arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr, dtype, 0)
 
 
 def serving_tables(docs: pa.Table, postings: pa.Table) -> dict[str, pa.Table]:
@@ -164,18 +171,21 @@ def serving_tables(docs: pa.Table, postings: pa.Table) -> dict[str, pa.Table]:
     first row of a repeated movieId wins and a row without one is dropped;
     a posting of an unknown movieId and a null genre are dropped."""
     docs = docs.filter(docs["movieId"].is_valid()).sort_by("movieId")
-    mids = docs["movieId"].to_numpy()
+    mids = _numpy(docs["movieId"], np.int64)
     first = np.ones(len(mids), bool)
     first[1:] = mids[1:] != mids[:-1]
-    ids = mids[first].astype(np.int64)
+    ids = mids[first]
     docs = docs.filter(first).select(list(DOC_COLUMNS)).add_column(0, "movieId", pa.array(ids))
-    pmids = postings["movieId"].to_numpy()
+    postings = postings.filter(postings["movieId"].is_valid())
+    pmids = _numpy(postings["movieId"], np.int64)
     pos = np.searchsorted(ids, pmids)
     known = pos < len(ids)
     known[known] = ids[pos[known]] == pmids[known]
     postings, pos = postings.filter(known), pos[known]
     terms, codes = _dictionary(postings["term"])
-    fields = {f: pc.equal(postings["field"], f).to_numpy() for f in SEARCH_FIELDS}
+    field = _numpy(pc.fill_null(pc.index_in(postings["field"], value_set=pa.array(list(SEARCH_FIELDS))), -1),
+                   np.int32)
+    fields = {f: field == i for i, f in enumerate(SEARCH_FIELDS)}
     genres = docs["genres"].combine_chunks()
     flat = pc.list_flatten(genres)
     named = flat.is_valid()
@@ -186,7 +196,7 @@ def serving_tables(docs: pa.Table, postings: pa.Table) -> dict[str, pa.Table]:
             genres.offsets, pc.dictionary_encode(genres.values, null_encoding="encode"), mask=genres.is_null())),
         "terms": pa.table({"term": terms, **{f: _lists(codes[m], pos[m], len(terms)) for f, m in fields.items()}}),
         "genres": pa.table({"genre": names, "docs": _lists(
-            gcodes, pc.list_parent_indices(genres).filter(named).to_numpy(), len(names))}),
+            gcodes, _numpy(pc.list_parent_indices(genres).filter(named), np.int64), len(names))}),
         "variants": variant_table(terms.to_pylist()),
     }
 

@@ -305,13 +305,17 @@ def cosine_topk_lsh_batch(
     exclude_same: str | None = None,
     require_same: str | None = None,
 ) -> DataFrame:
-    """Batched ANN: top-k for MANY stored query vectors in one pass.
+    """Batched ANN: top-k for MANY stored query vectors in one corpus pass.
 
     The single-query path (``cosine_topk_lsh``) broadcasts one query row
     and scans the corpus per query — fine interactively, wasteful for a
     query batch. Here candidate pairs come from a ``(table, bucket)``
-    equality join (one shuffle for the whole batch), deduped across
-    tables, then exact-cosine re-ranked per query with a window top-k.
+    equality join against ONE broadcast frame of the query rows, which
+    carries each query's vector and norm. A candidate row keeps its own
+    corpus vector, so it is scored where the join produces it (the
+    candidate-side norm runs only on candidate rows) and the corpus is
+    read once, with no shuffle of its vectors. The scored rows are
+    deduped across tables, then re-ranked per query with a window top-k.
     Returns (qid, id, score, rank<=k); ordering ties break on the
     rounded score then id, so results are deterministic.
 
@@ -326,18 +330,16 @@ def cosine_topk_lsh_batch(
     from pyspark.sql import Window
 
     extra = [c for c in {exclude_same, require_same} if c]
-    b = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        *extra,
-        norm(F.col(vec_col)).alias("__nrm"),
-        F.array(
-            *[hyperplane_bucket(F.col(vec_col), planes, table=t) for t in range(tables)]
-        ).alias("__buckets"),
+    buckets = F.array(
+        *[hyperplane_bucket(F.col(vec_col), planes, table=t) for t in range(tables)]
     )
-    exploded = b.select(id_col, *extra, F.posexplode("__buckets").alias("__t", "__b"))
+    exploded = df.select(
+        id_col, vec_col, *extra, F.posexplode(buckets).alias("__t", "__b")
+    )
     qe = exploded.filter(F.col(id_col).isin(list(target_ids))).select(
         F.col(id_col).alias("qid"),
+        F.col(vec_col).alias("__qv"),
+        norm(F.col(vec_col)).alias("__qn"),
         *[F.col(c).alias(f"__q_{c}") for c in extra],
         "__t",
         "__b",
@@ -350,29 +352,13 @@ def cosine_topk_lsh_batch(
         pairs = pairs.filter(F.col(exclude_same) != F.col(f"__q_{exclude_same}"))
     if require_same:
         pairs = pairs.filter(F.col(require_same) == F.col(f"__q_{require_same}"))
-    pairs = pairs.select("qid", id_col).distinct()
-    qv = b.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv"), F.col("__nrm").alias("__qn")
-    ).filter(F.col("qid").isin(list(target_ids)))
-    # Join candidates to the RAW vectors and compute the candidate-side
-    # norm AFTER the join: the old plan joined against `b`, whose __nrm
-    # projection re-ran the interpreted norm fold over the FULL corpus a
-    # second time; candidates are a tiny fraction of the corpus, so the
-    # fold now runs only where it is consumed (guide §2.3: project early,
-    # compute late). Same expression per row — identical scores.
-    scored = (
-        pairs.join(df.select(id_col, vec_col), on=id_col)
-        .join(F.broadcast(qv), on="qid")
-        .select(
-            "qid",
-            id_col,
-            F.round(
-                dot(F.col(vec_col), F.col("__qv"))
-                / (norm(F.col(vec_col)) * F.col("__qn")),
-                4,
-            ).alias("score"),
-        )
-    )
+    scored = pairs.select(
+        "qid",
+        id_col,
+        F.round(
+            dot(F.col(vec_col), F.col("__qv")) / (norm(F.col(vec_col)) * F.col("__qn")), 4
+        ).alias("score"),
+    ).distinct()
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))

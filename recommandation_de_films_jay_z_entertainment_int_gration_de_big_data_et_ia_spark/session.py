@@ -37,6 +37,17 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # lower()/upper()/initcap() by the JVM's String case mapping, as in
+    # Spark 3.5, not ICU's: the first ICU call in a JVM builds ICU's
+    # case-map table (CollationAwareUTF8String.<clinit>), which held one
+    # task thread 1.1-1.2 s in the batch pass's first lower()
+    # (exact_dedup_groups); per-row speed is the same either way. The two
+    # lower() alike on the non-ASCII sample that
+    # tests/test_text_rule_owner.py pins, but only under a JVM default
+    # locale without special casing rules: String.toLowerCase() follows the
+    # default locale, so under a Turkish one 'I' lowers to dotless 'ı'.
+    # initcap(), which no query calls, differs on 'İ' and a lone 'ß'.
+    "spark.sql.icu.caseMappings.enabled": "false",
     # Broadcast joins for dimension tables; 32 MB is conservative even for
     # the sf0.1 dims and far below executor memory on a real cluster.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),

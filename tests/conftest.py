@@ -23,6 +23,17 @@ def spark():
     yield s
 
 
+@pytest.fixture(params=["driver", "loop"])
+def cluster_path(request, monkeypatch):
+    """Runs a ``dedup_clusters`` test on both of its paths: the driver
+    union-find, and the label propagation, forced by an edge bound of 0."""
+    if request.param == "loop":
+        from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "DRIVER_EDGE_BOUND", 0)
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -11,6 +11,7 @@ in small buckets are still found.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
@@ -83,16 +84,35 @@ def test_end_to_end_pipeline_survives_adversarial_corpus(spark):
     assert all(0.0 <= r.jaccard <= 1.0 for r in rows)
 
 
-def test_dedup_clusters_runs_to_convergence_on_long_chain(spark):
+def test_dedup_clusters_runs_to_convergence_on_long_chain(spark, cluster_path):
     """A 60-node path graph has diameter 59 — far beyond the old fixed
-    20-iteration cap. Convergent-by-default labeling must collapse it to a
-    single cluster rooted at the minimum node."""
+    20-iteration cap. Both paths must collapse it to a single cluster
+    rooted at the minimum node."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "id_a long, id_b long"
     )
     labels = D.dedup_clusters(chain)
     got = {(r.node, r.cluster_id) for r in labels.collect()}
     assert got == {(i, 0) for i in range(61)}
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_dedup_clusters_paths_agree_on_schema_and_null_ids(spark, monkeypatch, id_type):
+    """The driver union-find returns the label propagation's schema and
+    rows. A null id takes the smallest cluster id among its non-null
+    neighbours, and no label passes through it: 1 and 3 stay apart."""
+    df = spark.createDataFrame(
+        [(1, None), (None, 3), (3, 4), (7, 8), (None, None), (9, None)],
+        f"id_a {id_type}, id_b {id_type}",
+    )
+    driver = D.dedup_clusters(df)
+    monkeypatch.setattr(D, "DRIVER_EDGE_BOUND", 0)
+    loop = D.dedup_clusters(df)
+    assert driver.schema == loop.schema
+    assert [f.dataType.simpleString() for f in driver.schema] == [id_type, id_type]
+    want = [(1, 1), (3, 3), (4, 3), (7, 7), (8, 7), (9, 9), (None, 1)]
+    for frame in (driver, loop):
+        assert sorted((tuple(r) for r in frame.collect()), key=str) == sorted(want, key=str)
 
 
 def test_incremental_dedup_gates(spark):

@@ -493,9 +493,10 @@ def test_range_join_bucketed_equals_bruteforce(spark, events, intervals, bucket,
 
 
 # ---------------------------------------------------------------------------
-# Connected-components fuzz: min-label propagation on random pair graphs
-# (self-loops, duplicate edges, chains, stars) must equal a Python
-# union-find — every node labeled with the smallest id in its component.
+# Connected-components fuzz: both ``dedup_clusters`` paths (driver
+# union-find, label propagation) on random pair graphs (self-loops,
+# duplicate edges, chains, stars) must equal a Python union-find — every
+# node labeled with the smallest id in its component.
 # ---------------------------------------------------------------------------
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
@@ -503,7 +504,7 @@ def test_range_join_bucketed_equals_bruteforce(spark, events, intervals, bucket,
         st.tuples(st.integers(0, 20), st.integers(0, 20)), min_size=1, max_size=25
     )
 )
-def test_dedup_clusters_equals_union_find(spark, edges):
+def test_dedup_clusters_equals_union_find(spark, cluster_path, edges):
     from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators.dedup import (
         dedup_clusters,
     )

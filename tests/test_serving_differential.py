@@ -709,11 +709,17 @@ def _norm(text: str) -> str:
 
 
 def _python_index(docs: list[tuple]) -> movieindex.MovieIndex:
-    """A loaded index over ``(movieId, title, genres)`` rows, with the
-    published tables built in Python the way the Spark build writes them:
-    distinct tokens of the normalized title and genres text (an empty
-    text is the one token ``""``), ``" " + normalized title + " "``, and
-    the serving tables by the publish's rule (``serving_tables``)."""
+    """A loaded index over ``(movieId, title, genres)`` rows: the serving
+    tables of :func:`_python_tables` by the publish's rule
+    (``serving_tables``)."""
+    return _loaded(*_python_tables(docs))
+
+
+def _python_tables(docs: list[tuple]) -> tuple[pa.Table, pa.Table]:
+    """The docs and postings tables over ``(movieId, title, genres)``
+    rows, built in Python the way the Spark build writes them: distinct
+    tokens of the normalized title and genres text (an empty text is the
+    one token ``""``) and ``" " + normalized title + " "``."""
     rows = [
         {"movieId": mid, "title": title, "release_date": None, "genres": genres,
          "__title_norm": None if title is None else f" {_norm(title)} "}
@@ -729,13 +735,59 @@ def _python_index(docs: list[tuple]) -> movieindex.MovieIndex:
     post = pa.table({"field": pa.array([p[0] for p in postings], pa.string()),
                      "term": pa.array([p[1] for p in postings], pa.string()),
                      "movieId": pa.array([p[2] for p in postings], pa.int32())})
-    return _loaded(pa.Table.from_pylist(rows, _DOCS_SCHEMA), post)
+    return pa.Table.from_pylist(rows, _DOCS_SCHEMA), post
 
 
 def _loaded(docs: pa.Table, postings: pa.Table) -> movieindex.MovieIndex:
     """The index that a publish of ``docs`` and ``postings`` loads, built
     in memory."""
     return movieindex._loaded(movieindex.serving_tables(docs, postings))
+
+
+# pandas made unimportable by an import hook, as where it is not installed:
+# ``sys.modules["pandas"] = None`` would not do here, because pyarrow's
+# compiled import then returns the ``None`` and every ``pa.array`` fails.
+_PUBLISH_NO_PANDAS = """
+import json, sys
+class NoPandas:
+    def find_spec(self, name, path=None, target=None):
+        if name.partition(".")[0] == "pandas":
+            raise ModuleNotFoundError(f"No module named {name!r}", name=name)
+sys.meta_path.insert(0, NoPandas())
+import pyarrow.parquet as pq
+from recommandation_de_films_jay_z_entertainment_int_gration_de_big_data_et_ia_spark.operators import (
+    movieindex)
+src, index_dir, calls = sys.argv[1], sys.argv[2], json.load(sys.stdin)
+movieindex.publish(pq.read_table(f"{src}/docs.parquet"), pq.read_table(f"{src}/postings.parquet"), index_dir)
+index = movieindex.load(index_dir)
+assert "pandas" not in sys.modules
+print(json.dumps([getattr(movieindex, flow)(index, *args) for flow, args in calls]))
+"""
+
+
+def test_publish_needs_no_pandas(tmp_path):
+    """A process where ``pandas`` cannot be imported publishes and loads an
+    index (a repeated, a null and an unknown movieId included) that
+    answers as the same tables' in-memory serving tables do."""
+    docs, post = _python_tables([(3, "Star Wars", ["Sci-Fi"]), (1, "Star Trek", ["Sci-Fi"]),
+                                 (3, "Star Wars copy", None), (None, "Nobody", ["Drama"]),
+                                 (2, "Toy Story", ["Children's", "Comedy"])])
+    post = pa.concat_tables([post, pa.table({"field": ["title", "title"], "term": ["star", "ghost"],
+                                             "movieId": pa.array([None, 99], pa.int32())})])
+    pq.write_table(docs, tmp_path / "docs.parquet")
+    pq.write_table(post, tmp_path / "postings.parquet")
+    calls = [("search_page", ["star", 0, 10]), ("search_page", ["stor", 0, 10]),
+             ("lookup_title", ["toy story"]), ("recommend_by_genre_overlap", [1, ["Sci-Fi"], 5]),
+             ("movie_by_id", [3]), ("movie_by_id", [99])]
+    proc = subprocess.run(
+        [sys.executable, "-c", _PUBLISH_NO_PANDAS, str(tmp_path), str(tmp_path / "index")],
+        input=json.dumps(calls), capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    index = _loaded(docs, post)
+    want = json.loads(json.dumps([getattr(movieindex, flow)(index, *args) for flow, args in calls]))
+    assert json.loads(proc.stdout) == want
+    assert index.ids.tolist() == [1, 2, 3] and want[0][1] == 2, want
 
 
 def test_rows_without_movie_id_hold_no_document():
